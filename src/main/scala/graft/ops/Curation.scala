@@ -22,7 +22,7 @@ object Curation {
     * The composite's RESULT must be aggregate-sized (a report, not row
     * data): it is collected so the persist has a sound release point —
     * the same contract as every other call-scoped persist in the
-    * library (TableOne.exactQuartiles, Clustering.kMeans). A result
+    * library (OrderStatistics.prefixOffsets, Clustering.kMeans). A result
     * larger than `maxResultRows` fails loudly instead of silently
     * hauling row data through the driver; such a composite should write
     * its corpus to a real checkpoint table instead.

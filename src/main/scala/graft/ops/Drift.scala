@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -191,21 +190,6 @@ object Drift {
         sum(col("__term")).as("psi"))
   }
 
-  /** Exact two-sample KS statistic: `sup_v |F_ref(v) − F_cur(v)|`,
-    * evaluated at every distinct value of either sample (where the sup
-    * of two step functions lives). Returns ONE row:
-    * (ks, at_value, n_ref, n_cur) — `at_value` the SMALLEST value
-    * attaining the sup, so ties have a total order.
-    *
-    * Scale shape: the corpus reduces to a per-distinct-value count
-    * pair (one map-side-combined aggregate over the tagged union —
-    * the shuffle carries distinct values, not rows); the cumulative
-    * sums that form both CDFs run INSIDE range partitions (window
-    * partitioned by partition id), stitched with driver prefix offsets
-    * of ≤ #partitions rows — the same construction as
-    * [[Quantiles.groupedQuantilesExact]], so no single-partition
-    * global window ever materializes. The final sup is a top-1
-    * TakeOrderedAndProject. */
   /** Exact 1-D Wasserstein-1 distance (earth-mover's) between the two
     * samples' empirical distributions: W₁ = ∫|F_ref(v) − F_cur(v)| dv —
     * the drift measure that weights HOW FAR mass moved, where KS only
@@ -215,14 +199,16 @@ object Drift {
     *
     * Scale shape: the [[ksStatistic]] construction exactly — one
     * map-side-combined (value, n_ref, n_cur) census, range-partitioned
-    * cumulative counts stitched with driver prefix offsets (≤
-    * #partitions rows collected), plus one extra ≤#partitions-sized
-    * driver map carrying each partition's successor value so the
-    * `lead` at partition edges never needs a global window. Every term
-    * folds as DECIMAL(38,6) off exact long counts and 6-dp-quantized
-    * values, so the sum is order-independent and an external engine
-    * replays it bit-for-bit; the single double division by
-    * n_ref·n_cur happens once on the final row.
+    * cumulative counts plus [[OrderStatistics.prefixOffsets]]. With
+    * D(v) = F_ref(v)·n_ref·n_cur − F_cur(v)·n_ref·n_cur (D = 0 below the
+    * first value and at the last), summation by parts turns
+    * Σ |D(vᵢ)|·(vᵢ₊₁ − vᵢ) into Σ vᵢ·(|D(vᵢ₋₁)| − |D(vᵢ)|), and
+    * D(vᵢ₋₁) is D(vᵢ) minus row i's own counts — every term is
+    * row-local, so no successor value is ever needed across a partition
+    * edge. Every term folds as DECIMAL(38,6) off exact long counts and
+    * 6-dp-quantized values, so the sum is exact and order-independent
+    * and an external engine replays it bit-for-bit; the single double
+    * division by n_ref·n_cur happens once on the final row.
     * Returns one row: (w1, n_ref, n_cur). */
   def wasserstein1(ref: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
     val spark = ref.sparkSession
@@ -232,59 +218,30 @@ object Drift {
         .select(col("v"), lit(r).as("r"), lit(c).as("c"))
     val counts = side(ref, 1L, 0L).unionByName(side(cur, 0L, 1L))
       .groupBy("v").agg(sum("r").as("n_ref"), sum("c").as("n_cur"))
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val pre = counts.persist()
-    val parts = pre.repartitionByRange(nParts, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    try {
-      val subtotals = parts.groupBy("pid")
-        .agg(sum("n_ref").as("tr"), sum("n_cur").as("tc"), min("v").as("mv"))
-        .collect().map(r => (r.getAs[Int]("pid"), r.getAs[Long]("tr"),
-          r.getAs[Long]("tc"), r.getAs[java.math.BigDecimal]("mv")))
-        .sortBy(_._1)
-      val nRef = subtotals.map(_._2).sum
-      val nCur = subtotals.map(_._3).sum
+    OrderStatistics.prefixOffsets(counts, Seq(col("v")),
+        Seq(col("n_ref"), col("n_cur"))) { (parts, off) =>
+      val (nRef, nCur) = (off.grand(0), off.grand(1))
       require(nRef > 0 && nCur > 0,
         s"wasserstein1 needs non-null values on both sides (ref=$nRef, cur=$nCur)")
-      val offR = subtotals.scanLeft(0L)(_ + _._2).init
-      val offC = subtotals.scanLeft(0L)(_ + _._3).init
-      val offRMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offR(i)))): _*)
-      val offCMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offC(i)))): _*)
-      // each partition's last row needs its SUCCESSOR value, which lives
-      // in the next non-empty partition — a ≤#partitions driver map
-      val nextV: Map[Int, java.math.BigDecimal] = subtotals.indices.init.map { i =>
-        subtotals(i)._1 -> subtotals(i + 1)._4
-      }.toMap
-      val nextVMap =
-        if (nextV.isEmpty) map()
-        else map(nextV.toSeq.flatMap { case (p, v) =>
-          Seq(lit(p), lit(v).cast("decimal(18,6)")) }: _*)
-      val w = Window.partitionBy("pid").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wLead = Window.partitionBy("pid").orderBy("v")
-      val gap = coalesce(lead(col("v"), 1).over(wLead),
-        element_at(nextVMap, col("pid"))) - col("v")
+      val w = OrderStatistics.cumulative(col("v"))
+      // D at a cumulative (ref, cur) count pair — decimal cross-products:
+      // long·long would overflow past ~3e9 rows per side, and the decimal
+      // fold keeps the sum exact
+      def d(cr: Column, cc: Column): Column =
+        cr.cast("decimal(19,0)") * lit(nCur) - cc.cast("decimal(19,0)") * lit(nRef)
       val total = parts
-        .withColumn("cr", sum("n_ref").over(w) + element_at(offRMap, col("pid")))
-        .withColumn("cc", sum("n_cur").over(w) + element_at(offCMap, col("pid")))
-        .withColumn("__term",
-          // decimal cross-products: long·long would overflow past ~3e9
-          // rows per side, and the decimal fold keeps the sum exact
-          when(gap.isNotNull,
-            abs(col("cr").cast("decimal(19,0)") * lit(nCur) -
-              col("cc").cast("decimal(19,0)") * lit(nRef)) * gap)
-            .otherwise(lit(java.math.BigDecimal.ZERO).cast("decimal(38,6)")))
+        .withColumn("cr", sum("n_ref").over(w) + off.startCol(0))
+        .withColumn("cc", sum("n_cur").over(w) + off.startCol(1))
+        .withColumn("__term", col("v") *
+          (abs(d(col("cr") - col("n_ref"), col("cc") - col("n_cur"))) -
+            abs(d(col("cr"), col("cc")))))
         .agg(sum("__term").as("__mass"))
         .select((col("__mass").cast("double") /
           lit(nRef.toDouble * nCur.toDouble)).as("w1"))
         .head()
       import spark.implicits._
       Seq((total.getDouble(0), nRef, nCur)).toDF("w1", "n_ref", "n_cur")
-    } finally { parts.unpersist(); pre.unpersist() }
+    }
   }
 
   /** Categorical drift: the chi-square homogeneity test of the 2×g
@@ -394,6 +351,19 @@ object Drift {
         "var_trace_ref", "var_trace_cur")
   }
 
+  /** Exact two-sample KS statistic: `sup_v |F_ref(v) − F_cur(v)|`,
+    * evaluated at every distinct value of either sample (where the sup
+    * of two step functions lives). Returns ONE row:
+    * (ks, at_value, n_ref, n_cur) — `at_value` the SMALLEST value
+    * attaining the sup, so ties have a total order.
+    *
+    * Scale shape: the corpus reduces to a per-distinct-value count
+    * pair (one map-side-combined aggregate over the tagged union —
+    * the shuffle carries distinct values, not rows); the cumulative
+    * sums that form both CDFs run INSIDE range partitions, plus the
+    * [[OrderStatistics.prefixOffsets]] of ≤ #partitions rows, so no
+    * single-partition global window ever materializes. The final sup
+    * is a top-1 TakeOrderedAndProject. */
   def ksStatistic(ref: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
     val spark = ref.sparkSession
     def side(df: DataFrame, r: Long, c: Long): DataFrame =
@@ -402,38 +372,17 @@ object Drift {
         .select(col("v"), lit(r).as("r"), lit(c).as("c"))
     val counts = side(ref, 1L, 0L).unionByName(side(cur, 0L, 1L))
       .groupBy("v").agg(sum("r").as("n_ref"), sum("c").as("n_cur"))
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // persist before repartitionByRange: the range sampler plus the two
-    // downstream actions would otherwise recompute the aggregate, and
-    // the offsets contract needs ONE stable set of range boundaries
-    val pre = counts.persist()
-    val parts = pre.repartitionByRange(nParts, col("v"))
-      .sortWithinPartitions("v")
-      .withColumn("pid", spark_partition_id())
-      .persist()
-    try {
-      val subtotals = parts.groupBy("pid")
-        .agg(sum("n_ref").as("tr"), sum("n_cur").as("tc"))
-        .collect().map(r => (r.getAs[Int]("pid"),
-          r.getAs[Long]("tr"), r.getAs[Long]("tc"))).sortBy(_._1)
-      val nRef = subtotals.map(_._2).sum
-      val nCur = subtotals.map(_._3).sum
+    OrderStatistics.prefixOffsets(counts, Seq(col("v")),
+        Seq(col("n_ref"), col("n_cur"))) { (parts, off) =>
+      val (nRef, nCur) = (off.grand(0), off.grand(1))
       require(nRef > 0 && nCur > 0,
         s"ksStatistic needs non-null values on both sides (ref=$nRef, cur=$nCur)")
-      // driver prefix offsets per partition id (≤ #partitions entries)
-      val offR = subtotals.scanLeft(0L)(_ + _._2).init
-      val offC = subtotals.scanLeft(0L)(_ + _._3).init
-      val offRMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offR(i)))): _*)
-      val offCMap = map(subtotals.indices.flatMap(i =>
-        Seq(lit(subtotals(i)._1), lit(offC(i)))): _*)
-      val w = Window.partitionBy("pid").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val w = OrderStatistics.cumulative(col("v"))
       // the sup is ONE row — materialize it inside the cache scope so
-      // the persists can be released here, not by the caller
+      // the persist is released here, not by the caller
       val top = parts
-        .withColumn("cr", sum("n_ref").over(w) + element_at(offRMap, col("pid")))
-        .withColumn("cc", sum("n_cur").over(w) + element_at(offCMap, col("pid")))
+        .withColumn("cr", sum("n_ref").over(w) + off.startCol(0))
+        .withColumn("cc", sum("n_cur").over(w) + off.startCol(1))
         .withColumn("diff",
           abs(col("cr").cast(DoubleType) / lit(nRef.toDouble) -
             col("cc").cast(DoubleType) / lit(nCur.toDouble)))
@@ -444,6 +393,6 @@ object Drift {
       import spark.implicits._
       Seq((top.getDouble(0), top.getDouble(1), nRef, nCur))
         .toDF("ks", "at_value", "n_ref", "n_cur")
-    } finally { parts.unpersist(); pre.unpersist() }
+    }
   }
 }

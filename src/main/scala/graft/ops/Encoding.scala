@@ -81,8 +81,8 @@ object Encoding {
     * (duplicate edges) — those simply don't appear in the census.
     *
     * Scale shape: edges come straight from the DISTRIBUTED exact
-    * order-statistics pass ([[Quantiles.groupedQuantilesExact]] — the
-    * a13 machinery; the gated router's sort-aggregate side is skipped
+    * order-statistics pass ([[Quantiles.groupedQuantilesExact]] on
+    * [[OrderStatistics.pick]]; the gated router's sort-aggregate side is skipped
     * because a single global group is its worst case, every row
     * funneling into one task's percentile buffer — 2× slower measured
     * at sf0.1), collected as k−1 doubles and attached

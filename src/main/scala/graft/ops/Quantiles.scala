@@ -5,13 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
-/** One (group, value) histogram row of the range-partitioned pick pass. */
-private[ops] case class QHistRow(g: String, v: Double, cnt: Long, pid: Int)
-
-/** One emitted order-statistic pick: the `rank`-th smallest value of
-  * group `g` (1-indexed over the group's non-null values). */
-private[ops] case class QPick(g: String, rank: Long, v: Double)
-
 /** Grouped EXACT interpolated quantiles (`percentile_cont` semantics:
   * position p·(n−1), linear interpolation between the two bracketing
   * order statistics) with a memory-gated physical plan.
@@ -31,14 +24,13 @@ private[ops] case class QPick(g: String, rank: Long, v: Double)
   *    most `maxBufferedPerGroup`.
   *  - FEW HUGE groups (the 100 TB shape: 3 return-flags × 10^10 rows):
   *    that buffer grows linearly with the group and OOMs an executor.
-  *    [[groupedQuantilesExact]] instead range-partitions the per-(group,
-  *    value) histogram, prefix-sums partition subtotals on the driver
-  *    (O(#groups × #partitions) — aggregate-sized in this regime), and
-  *    has each partition emit the order statistics whose global rank
-  *    falls inside it. Every stage is parallel in the number of range
-  *    partitions; per-executor memory is bounded by partition size, not
-  *    group size — the same construction as TableOne.exactQuartiles,
-  *    generalized to arbitrary p and interpolation.
+  *    [[groupedQuantilesExact]] instead hands the per-(group, value)
+  *    histogram to [[OrderStatistics.pick]]: range partitions, driver
+  *    prefix sums of partition subtotals (O(#groups × #partitions) —
+  *    aggregate-sized in this regime), and each partition emits the
+  *    order statistics whose global rank falls inside it. Every stage is
+  *    parallel in the number of range partitions; per-executor memory is
+  *    bounded by partition size, not group size.
   *
   * The pathological corpus with BOTH 10^6+ groups and a multi-billion-row
   * group would make the exact path's driver bookkeeping large; route such
@@ -97,102 +89,41 @@ object Quantiles {
                             ps: Seq[(String, Double)]): DataFrame = {
     requirePs(ps)
     val spark = df.sparkSession
-    import spark.implicits._
-    val vals = df.select(col(groupCol).cast("string").as("g"),
+    val hist = df.select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast(DoubleType).as("v"))
       .filter(col("v").isNotNull)
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // histPre cached: repartitionByRange samples its child for range
-    // boundaries before the real shuffle — uncached, the histogram
-    // aggregation would run twice. hist cached: the subtotal pass and
-    // the pick pass are two separate actions over the range-shuffled
-    // result, and AQE replans each — the cache is what guarantees the
-    // range shuffle happens once. Both released in finally.
-    val histPre = vals.groupBy("g", "v").agg(count(lit(1)).as("cnt")).persist()
-    val hist = histPre
-      .repartitionByRange(nParts, col("g"), col("v"))
-      .sortWithinPartitions("g", "v")
-      .withColumn("pid", spark_partition_id())
-      .as[QHistRow]
-      .persist()
-    try {
-      val subtotals: Array[((Int, String), Long)] = hist
-        .groupBy("pid", "g").agg(sum("cnt").as("t"))
-        .collect()
-        .map(r => (r.getAs[Int]("pid"), r.getAs[String]("g")) -> r.getAs[Long]("t"))
-      // driver prefix sums in pid order: the starting global rank offset
-      // of every (pid, group), plus each group's total n
-      val off = Map.newBuilder[(Int, String), Long]
-      val totB = Map.newBuilder[String, Long]
-      subtotals.groupBy(_._1._2).foreach { case (g, rows) =>
-        var acc = 0L
-        rows.sortBy(_._1._1).foreach { case ((pid, _), t) =>
-          off += ((pid, g) -> acc); acc += t
-        }
-        totB += (g -> acc)
+      .groupBy("g", "v").agg(count(lit(1)).as("w"))
+    // position p·(n−1) as (1-indexed order statistic at its floor, its
+    // fractional part): the pick brackets it with floor+1 and, when the
+    // fraction is nonzero, floor+2
+    def position(n: Long, p: Double): (Long, Double) = {
+      val r = p * (n - 1).toDouble
+      (math.floor(r).toLong + 1, r - math.floor(r))
+    }
+    val (totals, at) = OrderStatistics.pick[String](hist, col("g"), Seq(col("g"), col("v")),
+      n => ps.flatMap { case (_, p) =>
+        val (lo, frac) = position(n, p)
+        if (frac == 0.0) Seq(lo) else Seq(lo, lo + 1)
+      })
+    // null group key (a null stratum is a legitimate group) sorts last
+    val groupsSorted = totals.keys.toSeq.filter(_ != null).sorted ++
+      totals.keys.toSeq.filter(_ == null)
+    val rows: Seq[Row] = groupsSorted.map { g =>
+      val qs = ps.map { case (_, p) =>
+        val (lo, frac) = position(totals(g), p)
+        val vlo = at((g, lo))
+        // identical arithmetic as Spark's percentile and DuckDB's
+        // quantile_cont: lower + (higher − lower) · frac
+        java.lang.Double.valueOf(if (frac == 0.0) vlo else vlo + (at((g, lo + 1)) - vlo) * frac)
       }
-      val offsets = off.result(); val totals = totB.result()
-      // ranks to fish out per group: for each p, the 1-indexed order
-      // statistics bracketing position p·(n−1) — floor+1 always,
-      // floor+2 when the position has a fractional part
-      val ranksByGroup: Map[String, Array[Long]] = totals.map { case (g, n) =>
-        g -> ps.flatMap { case (_, p) =>
-          val r = p * (n - 1).toDouble
-          val lo = math.floor(r).toLong + 1
-          if (r == math.floor(r)) Seq(lo) else Seq(lo, lo + 1)
-        }.distinct.sorted.toArray
-      }
-      val picks: Array[QPick] = hist.mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[QPick]
-        val cum = scala.collection.mutable.Map.empty[String, Long]
-        it.foreach { h =>
-          val before = cum.getOrElse(h.g, offsets.getOrElse((h.pid, h.g), 0L))
-          val after = before + h.cnt
-          cum(h.g) = after
-          val ranks = ranksByGroup.getOrElse(h.g, Array.empty[Long])
-          var i = 0
-          while (i < ranks.length) {
-            val r = ranks(i)
-            if (before < r && r <= after) out += QPick(h.g, r, h.v)
-            i += 1
-          }
-        }
-        out.iterator
-      }.collect()
-      val vmap: Map[(String, Long), Double] =
-        picks.map(p => (p.g, p.rank) -> p.v).toMap
-      // null group key (a null stratum is a legitimate group) sorts last
-      val groupsSorted = totals.keys.toSeq.filter(_ != null).sorted ++
-        totals.keys.toSeq.filter(_ == null)
-      // a missed pick means the pick pass's partition-id contract broke
-      // (e.g. the cached range shuffle was recomputed with different
-      // boundaries) — fail with the group/rank, not a bare map miss
-      def pick(g: String, rank: Long): Double = vmap.getOrElse((g, rank),
-        throw new IllegalStateException(
-          s"groupedQuantilesExact: pick pass emitted no value for group " +
-            s"'$g' rank $rank (n=${totals.getOrElse(g, -1L)}) — " +
-            "range-partition offsets no longer match the cached histogram"))
-      val rows: Seq[Row] = groupsSorted.map { g =>
-        val n = totals(g)
-        val qs = ps.map { case (_, p) =>
-          val r = p * (n - 1).toDouble
-          val lo = math.floor(r).toLong
-          val frac = r - math.floor(r)
-          val vlo = pick(g, lo + 1)
-          // identical arithmetic as Spark's percentile and DuckDB's
-          // quantile_cont: lower + (higher − lower) · frac
-          val v = if (frac == 0.0) vlo else vlo + (pick(g, lo + 2) - vlo) * frac
-          java.lang.Double.valueOf(v)
-        }
-        Row.fromSeq(g +: qs)
-      }
-      val schema = StructType(
-        StructField(groupCol, StringType, nullable = true) +:
-          ps.map(p => StructField(p._1, DoubleType, nullable = true)))
-      spark.createDataFrame(
-        new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        schema)
-    } finally { hist.unpersist(); histPre.unpersist() }
+      Row.fromSeq(g +: qs)
+    }
+    val schema = StructType(
+      StructField(groupCol, StringType, nullable = true) +:
+        ps.map(p => StructField(p._1, DoubleType, nullable = true)))
+    spark.createDataFrame(
+      new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
+      schema)
   }
 
   /** Winsorization: clamp `valueCol` into its per-group exact
@@ -468,11 +399,15 @@ object Quantiles {
     // prefix sum gives each bucket's starting offset inside its tie
     // group, and the per-row row_number runs keyed (feature, value,
     // bucket) — parallelism bounded by bucket width, not value
-    // frequency. For a fully-castable id column, bucketing is a
+    // frequency. For a natively numeric id column, bucketing is a
     // monotone map of `id`, so
     //   offset(bucket) + row_number within bucket  ==  row_number within
     // the whole (feature, value) tie group ordered by id — bit-identical
     // to the window it replaces (spec-pinned partition-independence).
+    // A STRING id column that casts cleanly gets a deterministic tie
+    // order that is numeric across buckets but lexicographic within one
+    // (the tie window orders the raw string), so it can differ from a
+    // pure orderBy(id) and depends on the bucket boundaries.
     // A fully-UNcastable id column yields null bounds and collapses to
     // ONE bucket = exactly the old plan. MIXED castability is the one
     // case that deviates from pure orderBy(id) tie order: uncastable

@@ -784,9 +784,9 @@ object Sampling {
     * the sort buys before anyone changes the loader.
     *
     * Scale shape: each strategy's global rank comes from range
-    * partitions + per-partition row_number + ≤#partitions driver
-    * prefix offsets (the [[graft.sources.Sinks.exportJsonlSharded]]
-    * construction — never a single-partition window); batch = rank div
+    * partitions + per-partition running count + ≤#partitions driver
+    * prefix offsets ([[OrderStatistics.prefixOffsets]] — never a
+    * single-partition window); batch = rank div
     * batchSize, per-batch stats fold map-side, and BOTH final rows are
     * collected inside the persist scope (aggregates-only), so the
     * returned frame is a literal lift. Ranks are total orders ((len,
@@ -795,39 +795,26 @@ object Sampling {
                         batchSize: Int): DataFrame = {
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     val spark = df.sparkSession
-    val nParts = spark.sessionState.conf.numShufflePartitions
     val base = df
       .filter(col(idCol).isNotNull && col(lenCol).isNotNull)
       .select(col(idCol).as("__id"), col(lenCol).cast("long").as("__len"))
-    def strategy(tag: String, keys: Seq[Column]): (String, Long, Long, Long, Long) = {
-      val parts = base
-        .repartitionByRange(nParts, keys: _*)
-        .sortWithinPartitions(keys: _*)
-        .withColumn("__pid", spark_partition_id())
-        .persist()
-      try {
-        val subtotals = parts.groupBy("__pid").agg(count(lit(1)).as("c"))
-          .collect().map(r => (r.getAs[Int]("__pid"), r.getAs[Long]("c")))
-          .sortBy(_._1)
-        if (subtotals.isEmpty) return (tag, 0L, 0L, 0L, 0L)
-        val off = subtotals.scanLeft(0L)(_ + _._2).init
-        val offMap = map(subtotals.indices.flatMap(i =>
-          Seq(lit(subtotals(i)._1), lit(off(i)))): _*)
-        val w = Window.partitionBy("__pid").orderBy(keys.map(_.asc): _*)
-        val r = parts
-          .withColumn("__r",
-            row_number().over(w).cast("long") +
-              coalesce(element_at(offMap, col("__pid")), lit(0L)) - 1)
-          .withColumn("__b", expr(s"__r div ${batchSize}L"))
-          .groupBy("__b")
-          .agg(count(lit(1)).as("bn"), max("__len").as("bmax"),
-            sum("__len").as("bsum"))
-          .agg(count(lit(1)).as("nb"), sum("bn").as("nd"),
-            sum(col("bmax") * col("bn")).as("padded"), sum("bsum").as("toks"))
-          .head()
-        (tag, r.getLong(1), r.getLong(0), r.getLong(3), r.getLong(2))
-      } finally parts.unpersist()
-    }
+    def strategy(tag: String, keys: Seq[Column]): (String, Long, Long, Long, Long) =
+      OrderStatistics.prefixOffsets(base, keys, Seq(lit(1L))) { (parts, off) =>
+        if (off.grand(0) == 0L) (tag, 0L, 0L, 0L, 0L)
+        else {
+          val r = parts
+            .withColumn("__r", count(lit(1)).over(OrderStatistics.cumulative(keys: _*)) +
+              off.startCol(0) - 1)
+            .withColumn("__b", expr(s"__r div ${batchSize}L"))
+            .groupBy("__b")
+            .agg(count(lit(1)).as("bn"), max("__len").as("bmax"),
+              sum("__len").as("bsum"))
+            .agg(count(lit(1)).as("nb"), sum("bn").as("nd"),
+              sum(col("bmax") * col("bn")).as("padded"), sum("bsum").as("toks"))
+            .head()
+          (tag, r.getLong(1), r.getLong(0), r.getLong(3), r.getLong(2))
+        }
+      }
     val rows = Seq(
       strategy("arrival_order", Seq(col("__id"))),
       strategy("length_sorted", Seq(col("__len"), col("__id"))))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.OrderStatistics
 
 import scala.jdk.CollectionConverters._
 
@@ -17,19 +18,6 @@ import scala.jdk.CollectionConverters._
   *                 repeated variable labels, underscores -> spaces
   * @param pValues  attach t-test / ANOVA / chi-square results (stratified
   *                 runs only; forced off otherwise)
-  * @param approxQuantileAccuracy None (default): quartiles are EXACT at
-  *                 any scale — small columns (see quartileSketchMaxRows)
-  *                 via one `percentile_approx(4n)` job (exact while
-  *                 accuracy >= 4n), large ones via the distributed
-  *                 order-statistics pass ([[TableOne.exactQuartiles]]).
-  *                 Some(a): force a fixed-accuracy sketch inside the
-  *                 rollup — bounded memory independent of value
-  *                 cardinality, exact only while rows <= a/4. The
-  *                 reference uses rowcount+1 accuracy
-  *                 (/root/reference/tableone_pyspark.py:384-388):
-  *                 unbounded sketch memory AND a single-threaded
-  *                 final-stage merge that dominated our sf1 bench — the
-  *                 fixed sketch is the escape hatch here, not the default.
   * @param quartileSketchMaxRows exact-quartile path selector: when every
   *                 analyzed continuous column has at most this many
   *                 non-null rows (known free from the pass-1 rollup —
@@ -67,24 +55,11 @@ import scala.jdk.CollectionConverters._
   *                 memory long before executors struggle — fail fast
   *                 with a clear message instead.
   */
-/** One histogram row in [[TableOne.exactQuartiles]]'s range-partitioned
-  * pass: (col position, stratum position, value, count, range-partition
-  * id). Both group identifiers are SMALL INTS, not names — a string in
-  * the melt's hash-aggregate grouping key knocks the aggregation off its
-  * vectorized fast path (measured ~5x slower at sf1); names are restored
-  * on the driver from the positions. */
-private[tableone] case class HistRow(c: Int, si: Int, v: Double, cnt: Long, pid: Int)
-
-/** One emitted quartile pick from [[TableOne.exactQuartiles]]: `k` =
-  * 1/2/3 (25/50/75th percentile), `tot` marks the grand-total group. */
-private[tableone] case class Pick(c: Int, si: Int, tot: Boolean, k: Int, v: Double)
-
 final case class TableOneConfig(
     stratify: Option[String] = None,
     cols: Seq[String] = Nil,
     beautify: Boolean = false,
     pValues: Boolean = false,
-    approxQuantileAccuracy: Option[Int] = None,
     quartileSketchMaxRows: Long = 400000L,
     cacheInput: Boolean = false,
     maxStrata: Int = 1000)
@@ -108,10 +83,9 @@ final case class TableOneConfig(
   *      per-stratum rows carry the stratum counts, stats, and the
   *      (n, mean, var_samp) moments that feed the t-test/ANOVA,
   *   2. ONE exact-quartile job for ALL continuous columns at once
-  *      (value-histogram + ordered window — fully parallel, no sketch,
-  *      no single-reducer merge; skipped when there are no continuous
-  *      columns or when `approxQuantileAccuracy` opts into the in-rollup
-  *      sketch),
+  *      (value-histogram + range-partitioned order statistics — fully
+  *      parallel, no single-reducer merge; skipped when there are no
+  *      continuous columns),
   *   3. ONE melt + `groupBy(variable, value)` aggregation for ALL
   *      categorical columns (explicit per-stratum conditional counts — no
   *      pivot distinct-value job),
@@ -131,6 +105,15 @@ object TableOne {
     "n" -> 0.1, "min" -> 0.2, "max" -> 0.3, "mean" -> 0.4, "stddev" -> 0.5,
     "25th percentile" -> 0.6, "50th percentile" -> 0.7, "75th percentile" -> 0.8)
 
+  /** Group key of a column's grand total in [[exactQuartiles]]: (col
+    * position, TotalSi). Stratum positions are >= 0; -1 is a stratum that
+    * raced in after pass 1. */
+  private final val TotalSi = -2
+
+  /** 1-based ranks `ceil(k*n/4)`, k = 1..3, in integer-exact Long math —
+    * no float-epsilon tie-break risk against the oracle. */
+  private def quartileRanks(n: Long): Seq[Long] = Seq(1L, 2L, 3L).map(k => (k * n + 3) / 4)
+
   /** EXACT discrete quartiles (the element at 1-based rank `ceil(k*n/4)`
     * — the same pick as DuckDB's `quantile_disc` and as an exact-mode
     * percentile_approx) for every continuous column, every stratum, AND
@@ -139,40 +122,24 @@ object TableOne {
     *   1. melt -> groupBy (col, stratum, value).count — ONE shuffle with
     *      map-side combine; the histogram is the data's distinct-value
     *      footprint, never bigger than the input.
-    *   2. `repartitionByRange(col, value)` + in-partition sort. Partition
-    *      assignment is a pure function of the key, so all strata rows of
-    *      one (col, value) — and all its duplicates — land in ONE
-    *      partition, in global (col, value) order across partitions.
-    *   3. Per-partition subtotals per (col, stratum) — a tiny aggregate
-    *      (partitions x cols x strata rows) collected to the driver,
-    *      prefix-summed into per-partition starting offsets, and the
-    *      grand totals n(col, stratum) / n(col) that fix the target
-    *      ranks. A few KB regardless of data size.
-    *   4. ONE sorted `mapPartitions` pass: running cumulative counts
-    *      seeded from the offsets; a row (or value-group, for the
-    *      cross-strata total) whose cumulative count CROSSES a target
-    *      rank emits that pick. Output: at most 3 rows per group.
+    *   2. [[graft.ops.OrderStatistics.pick]] range-partitions it on
+    *      (col, value): all strata rows of one (col, value) — and all its
+    *      duplicates — land in ONE partition, in global (col, value) order
+    *      across partitions, so each stratum AND the column's grand total
+    *      read their ranks off the same range shuffle, with no second
+    *      histogram. A histogram row counts toward its stratum group and
+    *      its column's total group.
     *
     * Scale posture: no quantile sketch (the reference's rowcount-accuracy
     * sketch serializes a near-copy of the column into a single-threaded
     * final-stage merge — 30 s/group at sf1's 6M rows), and no
     * per-column ordered window (a `partitionBy(col)` running sum is one
-    * task per column no matter the cluster). Every stage here is
-    * parallel in the number of range partitions; the driver only ever
-    * sees subtotals and picks. `mapPartitions` is warranted (SURVEY §7.3
-    * last-resort rule) because a cross-partition running count seeded at
-    * partition boundaries is genuinely per-partition-imperative — no
-    * Catalyst operator expresses it without collapsing parallelism.
-    *
-    * Rank arithmetic is integer-exact: rank_k = ceil(k*n/4) in Long math,
-    * so there is no float-epsilon tie-break risk against the oracle. */
+    * task per column no matter the cluster). */
   private[tableone] def exactQuartiles(
       working: DataFrame,
       stratify: Option[String],
       strataNames: Seq[String],
       contCols: Seq[String]): Map[(String, Option[String]), Array[Double]] = {
-    val spark = working.sparkSession
-    import spark.implicits._
     // posexplode of a bare double array: the column is identified by its
     // POSITION (a 4-byte int), not its name — strings in the melt key
     // made the generate + hash-aggregate pass several times slower at
@@ -191,98 +158,20 @@ object TableOne {
       case None => working.select(lit(0).as("si"), posexplode(kvs).as(Seq("c", "v")))
     }).select(col("si"), col("c"), col("v"))
       .filter(col("v").isNotNull)
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // Both persists last for the duration of this call only (released in
-    // `finally` — no residual storage). `histPre` is cached because
-    // `repartitionByRange` runs a boundary-SAMPLING job over its child
-    // before the real shuffle: uncached, the whole melt+combine would
-    // execute twice. `hist` is cached because the subtotal pass and the
-    // pick pass are two separate jobs over the range-shuffled result, and
-    // AQE replans each action — the cache, not exchange reuse, is what
-    // guarantees the range shuffle happens once.
-    val histPre = melted.groupBy("c", "si", "v").agg(count(lit(1)).as("cnt")).persist()
-    val hist = histPre
-      .repartitionByRange(nParts, col("c"), col("v"))
-      .sortWithinPartitions("c", "v")
-      .withColumn("pid", spark_partition_id())
-      .as[HistRow]
-      .persist()
-    try {
-      // Per-stratum bookkeeping is pure overhead when there are no strata
-      // (every row would re-derive the grand-total picks a second time).
-      val withStrata = stratify.isDefined
-      val subtotals: Array[((Int, Int, Int), Long)] = hist
-        .groupBy("pid", "c", "si").agg(sum("cnt").as("t"))
-        .collect()
-        .map(r => (r.getAs[Int]("pid"), r.getAs[Int]("c"), r.getAs[Int]("si")) -> r.getAs[Long]("t"))
-      // Driver-side prefix sums over pid order: starting offsets for every
-      // (pid, col, stratum) and (pid, col), plus the grand totals that fix
-      // the six target ranks per group. All tiny.
-      val byStrat = subtotals.groupBy { case ((_, c, si), _) => (c, si) }
-      val byCol = subtotals.groupBy { case ((_, c, _), _) => c }
-      def offsets[K](m: Map[K, Array[((Int, Int, Int), Long)]]): (Map[(Int, K), Long], Map[K, Long]) = {
-        val off = Map.newBuilder[(Int, K), Long]
-        val tot = Map.newBuilder[K, Long]
-        m.foreach { case (k, rows) =>
-          var acc = 0L
-          rows.groupBy(_._1._1).toSeq.sortBy(_._1).foreach { case (pid, prs) =>
-            off += ((pid, k) -> acc); acc += prs.map(_._2).sum
-          }
-          tot += (k -> acc)
-        }
-        (off.result(), tot.result())
-      }
-      val (stratOff, stratN) = offsets(byStrat)
-      val (colOff, colN) = offsets(byCol)
-      def ranks(n: Long): Array[Long] = Array(1L, 2L, 3L).map(k => (k * n + 3) / 4)
-      val stratRanks = stratN.map { case (k, n) => k -> ranks(n) }
-      val colRanks = colN.map { case (c, n) => c -> ranks(n) }
-      val picks = hist.mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[Pick]
-        val cumS = scala.collection.mutable.Map.empty[(Int, Int), Long]
-        val cumC = scala.collection.mutable.Map.empty[Int, Long]
-        // value-group state for the cross-strata total (rows sorted by
-        // (c, v); all strata rows of one (c, v) are adjacent)
-        var gc = -1; var gv = 0.0; var gBefore = 0L; var gAfter = 0L
-        def flushGroup(): Unit = if (gc >= 0) {
-          colRanks(gc).zipWithIndex.foreach { case (r, i) =>
-            if (gBefore < r && r <= gAfter) out += Pick(gc, -1, tot = true, i + 1, gv)
-          }
-        }
-        it.foreach { h =>
-          // per-stratum crossing (hist rows are unique per (c, si, v))
-          if (withStrata) {
-            val sk = (h.c, h.si)
-            val before = cumS.getOrElse(sk, stratOff.getOrElse((h.pid, sk), 0L))
-            val after = before + h.cnt
-            cumS(sk) = after
-            stratRanks(sk).zipWithIndex.foreach { case (r, i) =>
-              if (before < r && r <= after) out += Pick(h.c, h.si, tot = false, i + 1, h.v)
-            }
-          }
-          // cross-strata total: accumulate the (c, v) peer group
-          if (h.c != gc || h.v != gv) {
-            flushGroup()
-            gc = h.c; gv = h.v
-            gBefore = cumC.getOrElse(h.c, colOff.getOrElse((h.pid, h.c), 0L))
-            gAfter = gBefore
-          }
-          gAfter += h.cnt
-          cumC(h.c) = gAfter
-        }
-        flushGroup()
-        out.iterator
-      }.collect()
-      val m = scala.collection.mutable.Map.empty[(String, Option[String]), Array[Double]]
-      picks.foreach { p =>
-        // a raced-in stratum (si = -1, no output column) emits no pick
-        val key: Option[(String, Option[String])] =
-          if (p.tot) Some((contCols(p.c), None))
-          else strataNames.lift(p.si).map(n => (contCols(p.c), Some(n)))
-        key.foreach(k => m.getOrElseUpdate(k, Array.fill(3)(Double.NaN))(p.k - 1) = p.v)
-      }
-      m.toMap
-    } finally { hist.unpersist(); histPre.unpersist() }
+    val hist = melted.groupBy("c", "si", "v").agg(count(lit(1)).as("w"))
+    // per-stratum groups are pure overhead when there are no strata
+    val levels: ((Int, Int)) => Seq[(Int, Int)] =
+      if (stratify.isDefined) k => Seq(k, (k._1, TotalSi)) else k => Seq((k._1, TotalSi))
+    val (n, at) = OrderStatistics.pick[(Int, Int)](hist,
+      struct(col("c").as("_1"), col("si").as("_2")), Seq(col("c"), col("v")),
+      quartileRanks, levels)
+    n.flatMap { case (k @ (c, si), nk) =>
+      // a raced-in stratum (si = -1, no output column) has no entry
+      val key =
+        if (si == TotalSi) Some((contCols(c), None))
+        else strataNames.lift(si).map(s => (contCols(c), Some(s)))
+      key.map(_ -> quartileRanks(nk).map(r => at((k, r))).toArray)
+    }
   }
 
   /** Small-column quartiles: one `percentile_approx` rollup job with
@@ -375,8 +264,7 @@ object TableOne {
     * per-stratum (n, mean, M2 = var*(n-1)) with the Chan/Welford update.
     * n=1 strata contribute M2=0 (Spark reports their var_samp as NaN,
     * but a single point has zero spread); the combined var/stddev is NaN
-    * at total n=1, matching var_samp/stddev_samp on the raw rows. Fields
-    * this mode never aggregates (the opt-in sketch's #q) stay null. */
+    * at total n=1, matching var_samp/stddev_samp on the raw rows. */
   private def combineTotalRow(stratRows: Seq[Row], contCols: Seq[String]): Row = {
     val schema = stratRows.head.schema
     def num(r: Row, f: String): Option[Double] = r.getAs[Any](f) match {
@@ -467,21 +355,17 @@ object TableOne {
     // overall stats) AND, when stratified, each stratum's row count +
     // stats + the (n, mean, var) test moments. The sanitized strat value
     // is never null, so grouping() unambiguously marks the total row.
-    // Quartiles ride in this job ONLY in the opt-in sketch mode; the
-    // default exact path computes them in their own fully-parallel job
-    // (see exactQuartiles below) because a high-accuracy sketch's
+    // Quartiles never ride in this job: a high-accuracy sketch's
     // final-stage merge is single-threaded per group and dominated the
-    // whole summary at sf1 (6M rows: 99 s of a 3 s query's work).
+    // whole summary at sf1 (6M rows: 99 s of a 3 s query's work), so
+    // pass 2 computes them on their own.
     def statExprs(withMoments: Boolean): Seq[Column] = contCols.flatMap { c =>
       val base = Seq(
         count(col(c)).as(s"$c#n"),
         min(col(c)).cast(DoubleType).as(s"$c#min"),
         max(col(c)).cast(DoubleType).as(s"$c#max"),
         avg(col(c)).as(s"$c#mean"),
-        stddev(col(c)).as(s"$c#stddev")) ++
-        cfg.approxQuantileAccuracy.map(a =>
-          percentile_approx(col(c), array(lit(0.25), lit(0.5), lit(0.75)), lit(a.toLong))
-            .cast(ArrayType(DoubleType)).as(s"$c#q"))
+        stddev(col(c)).as(s"$c#stddev"))
       if (withMoments)
         base ++ Seq(var_samp(col(c)).as(s"$c#var"),
           sum(col(c)).cast(DoubleType).as(s"$c#sum"))
@@ -496,8 +380,8 @@ object TableOne {
       case None =>
         val g = working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = false): _*).head()
         (g, Nil)
-      case Some(s) if cfg.approxQuantileAccuracy.isEmpty =>
-        // Default mode: ONE aggregate row per stratum, and the grand
+      case Some(s) =>
+        // ONE aggregate row per stratum, and the grand
         // total combined on the driver (counts/sums add, extrema reduce,
         // variances merge with the Chan/Welford update). A rollup would
         // feed every input row into TWO grouping sets — measured 3.5 s
@@ -521,39 +405,19 @@ object TableOne {
               Stratum(name, r.getAs[Long]("#rows"), r)
             })
         }
-      case Some(s) =>
-        // Opt-in sketch mode: the quartile sketches ride this pass and
-        // the total group's sketch cannot be combined from per-stratum
-        // results on the driver, so this mode keeps the rollup.
-        // grouping() must reference the rollup column itself, not an
-        // alias, so sanitize in a projection first.
-        val rows = working
-          .withColumn(StratCol, Sanitize.stratColumn(col(s)))
-          .rollup(col(StratCol))
-          .agg(count(lit(1)).as("#rows"), statExprs(withMoments = true) :+
-            grouping(col(StratCol)).cast("int").as("#isTotal"): _*)
-          .limit(cfg.maxStrata + 2)
-          .collect()
-        maxStrataGuard(rows.length - 1)
-        val (totalRows, stratRows) = rows.partition(_.getAs[Int]("#isTotal") == 1)
-        val byName = stratRows.map(r => r.getAs[String](StratCol) -> r).toMap
-        (totalRows.head, Sanitize.orderStrata(byName.keys.toSeq).map { name =>
-          val r = byName(name)
-          Stratum(name, r.getAs[Long]("#rows"), r)
-        })
     }
     val total: Long = globalRow.getAs[Long]("#rows")
     val stratNames = strata.map(_.name)
     val globalStats: Option[Row] = if (contCols.isEmpty) None else Some(globalRow)
 
-    // --- pass 2 (default path): EXACT quartiles for every continuous
+    // --- pass 2: EXACT quartiles for every continuous
     // column and every stratum + the total. Pass 1 already fixed every
     // column's non-null count, so the path choice is free: small columns
     // ride one percentile_approx rollup at accuracy 4n (exact, state
     // bounded by the threshold); anything larger takes the fully-parallel
     // order-statistics job. Key: None = grand total, Some(s) = stratum.
     val quartMap: Map[(String, Option[String]), Array[Double]] =
-      if (contCols.isEmpty || cfg.approxQuantileAccuracy.isDefined) Map.empty
+      if (contCols.isEmpty) Map.empty
       else {
         val maxN = contCols.map(c => globalRow.getAs[Long](s"$c#n")).max
         // sketch eligibility is additionally capped at Int.MaxValue/4:
@@ -609,7 +473,7 @@ object TableOne {
       case n: Number => Some(n.doubleValue())
       case other     => Some(other.toString.toDouble)
     }
-    // `key` identifies the group for quantile lookup on the exact path:
+    // `key` identifies the group for quantile lookup:
     // None = grand total, Some(stratum name) = that stratum.
     def statOf(r: Row, key: Option[String], c: String, slot: String): Option[Double] = slot match {
       case "n"   => numOpt(r, s"$c#n")
@@ -619,10 +483,7 @@ object TableOne {
       case "stddev" => numOpt(r, s"$c#stddev")
       case q =>
         val i = q.charAt(0) match { case '2' => 0; case '5' => 1; case '7' => 2 }
-        if (cfg.approxQuantileAccuracy.isDefined)
-          Option(r.getAs[scala.collection.Seq[Any]](s"$c#q"))
-            .flatMap(a => Option(a(i))).map(_.asInstanceOf[Number].doubleValue())
-        else quartMap.get((c, key)).map(_(i))
+        quartMap.get((c, key)).map(_(i))
     }
 
     val contRows: Seq[Row] = contCols.flatMap { c =>

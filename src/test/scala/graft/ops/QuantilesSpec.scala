@@ -88,10 +88,17 @@ class QuantilesSpec extends AnyFunSuite with Matchers {
   test("exact path is partition-count independent") {
     val rnd = new scala.util.Random(23)
     val rows = (1 to 3000).map(_ => (s"g${rnd.nextInt(2)}", rnd.nextGaussian()))
-    val a = collectWide(Quantiles.groupedQuantilesExact(
-      rows.toDF("g", "v").repartition(1), "g", "v", ps))
-    val b = collectWide(Quantiles.groupedQuantilesExact(
-      rows.toDF("g", "v").repartition(17), "g", "v", ps))
+    // the range-partition count is spark.sql.shuffle.partitions, so vary
+    // it along with the input's partitioning
+    def run(inputParts: Int, rangeParts: Int) = {
+      val before = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", rangeParts.toString)
+      try collectWide(Quantiles.groupedQuantilesExact(
+        rows.toDF("g", "v").repartition(inputParts), "g", "v", ps))
+      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
+    val a = run(1, 1)
+    val b = run(17, 7)
     a.keySet shouldBe b.keySet
     for (g <- a.keys; i <- ps.indices) a(g)(i) shouldBe b(g)(i) +- 1e-12
   }
