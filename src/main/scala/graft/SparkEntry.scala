@@ -98,8 +98,8 @@ object SparkEntry {
     // quartile path regardless of input size, so BOTH exact-quartile
     // paths stay under the DuckDB hash gate at every scale (the default
     // gate would route sf0.01's 60k rows to the sketch rider). The
-    // categorical column puts the counts-ride-the-melt path (one scan
-    // for quartiles + categories) under the same hash check.
+    // categorical column puts the categorical melt next to the
+    // order-statistics pass under the same hash check.
     "t9_tableone_orderstat" -> ((s, dir) => roundDoubles(TableOne.summarize(
       table(s, dir, "lineitem"),
       TableOneConfig(Some("l_linestatus"), Seq("l_returnflag", "l_quantity", "l_discount"),

@@ -9,20 +9,25 @@ import org.apache.spark.sql.functions._
   * so they are normalized the way the reference does
   * (/root/reference/tableone_pyspark.py:89-92, :172-174):
   * null -> "MISSING", spaces -> "_", non-ASCII runs -> "?".
-  * Sanitization happens BEFORE any grouping, so two raw values that
-  * sanitize to the same name merge into one stratum (reference behavior,
-  * SURVEY.md §7.4).
+  * Two raw values that sanitize to the same name merge into one stratum
+  * (reference behavior, SURVEY.md §7.4). TableOne groups by [[rawKey]]
+  * and names the few distinct raw values with [[stratValue]] on the
+  * driver, merging the groups that collide; [[stratColumn]] is the
+  * per-row form of the same mapping, and the two must agree.
   */
 object Sanitize {
 
   val Missing = "MISSING"
 
+  /** Unsanitized stratum key of a (possibly non-string) stratification
+    * column: its string form, null -> "MISSING". */
+  def rawKey(c: Column): Column = coalesce(c.cast("string"), lit(Missing))
+
   /** Sanitized version of a (possibly non-string) stratification column.
     * Single-pass custom expression; the two-regex formulation cost ~2x
     * the whole aggregation underneath it at 600k rows. */
   def stratColumn(c: Column): Column =
-    graft.functions.HashFunctions.sanitizeStrat(
-      coalesce(c.cast("string"), lit(Missing)))
+    graft.functions.HashFunctions.sanitizeStrat(rawKey(c))
 
   /** Driver-side equivalent for already-collected raw values. */
   def stratValue(v: Any): String =

@@ -20,7 +20,7 @@ import scala.jdk.CollectionConverters._
   *                 runs only; forced off otherwise)
   * @param quartileSketchMaxRows exact-quartile path selector: when every
   *                 analyzed continuous column has at most this many
-  *                 non-null rows (known free from the pass-1 rollup —
+  *                 non-null rows (known free from the pass-1 aggregate —
   *                 choosing costs zero extra jobs), quartiles come from a
   *                 single `percentile_approx` rollup with accuracy = 4n,
   *                 which retains all n samples and is therefore exact;
@@ -42,8 +42,9 @@ import scala.jdk.CollectionConverters._
   *                 Int.MaxValue/4 (percentile_approx's accuracy limit),
   *                 and when every continuous value is null neither job
   *                 runs — there is nothing to rank.
-  * @param cacheInput persist the input for the duration of the (up to 4)
-  *                 in-call aggregation passes — worth it when `df` is an
+  * @param cacheInput persist the input for the duration of the in-call
+  *                 passes over it (pass 1, the quartile pass and, with
+  *                 `pValues`, the categorical melt) — worth it when `df` is an
   *                 expensive upstream computation rather than a bare
   *                 scan. Released before summarize returns (no residual
   *                 executor storage); the returned plan re-scans the
@@ -53,7 +54,11 @@ import scala.jdk.CollectionConverters._
   *                 driver row, so an unbounded high-cardinality stratify
   *                 column would blow up the output schema and driver
   *                 memory long before executors struggle — fail fast
-  *                 with a clear message instead.
+  *                 with a clear message instead. The cap counts distinct
+  *                 RAW values (null counts as one), exactly the rows pass
+  *                 1 collects to the driver; where several raw values
+  *                 sanitize to one name (e.g. "a b" and "a_b") the output
+  *                 has fewer strata than the cap counted.
   */
 final case class TableOneConfig(
     stratify: Option[String] = None,
@@ -78,19 +83,24 @@ final case class TableOneConfig(
   * Execution design (vs the reference's >=10 jobs per continuous column,
   * SURVEY.md §3.5): at most THREE distributed passes regardless of column
   * count or stratification —
-  *   1. ONE `rollup(strat).agg` whose grand-total row carries the total
-  *      count + every continuous column's non-quantile stats and whose
-  *      per-stratum rows carry the stratum counts, stats, and the
-  *      (n, mean, var_samp) moments that feed the t-test/ANOVA,
+  *   1. ONE `groupBy(raw stratum).agg` whose rows carry each stratum's
+  *      count, continuous stats and the (n, mean, var_samp) moments that
+  *      feed the t-test/ANOVA; the driver names the strata, merges raw
+  *      values that sanitize to one name, and combines the grand total
+  *      (unstratified: one global `agg`),
   *   2. ONE exact-quartile job for ALL continuous columns at once
   *      (value-histogram + range-partitioned order statistics — fully
   *      parallel, no single-reducer merge; skipped when there are no
   *      continuous columns),
   *   3. ONE melt + `groupBy(variable, value)` aggregation for ALL
   *      categorical columns (explicit per-stratum conditional counts — no
-  *      pivot distinct-value job),
-  * and the inferential statistics are computed on the driver from those
-  * collected aggregates (StatTests) — raw rows are never collected,
+  *      pivot distinct-value job).
+  * Passes 2 and 3 key strata by an int index, never by name: pass 1
+  * enumerated every raw stratum value, so one map-literal lookup per row
+  * replaces a per-row string sanitize (a value that races in after pass
+  * 1 maps to -1 and counts toward the totals only). The inferential
+  * statistics are computed on the driver from those collected
+  * aggregates (StatTests) — raw rows are never collected,
   * unlike the reference's per-column `toPandas()`
   * (/root/reference/tableone_pyspark.py:453, :500).
   */
@@ -137,31 +147,22 @@ object TableOne {
     * task per column no matter the cluster). */
   private[tableone] def exactQuartiles(
       working: DataFrame,
-      stratify: Option[String],
+      stratum: Option[Column],
       strataNames: Seq[String],
       contCols: Seq[String]): Map[(String, Option[String]), Array[Double]] = {
     // posexplode of a bare double array: the column is identified by its
     // POSITION (a 4-byte int), not its name — strings in the melt key
     // made the generate + hash-aggregate pass several times slower at
     // sf1. Names are restored from contCols(idx) after the collect. The
-    // stratum is likewise an int: pass 1 already enumerated every
-    // sanitized stratum name, so a map-literal lookup replaces the string
-    // key (a value that races in between the two passes maps to -1 and
-    // still counts toward the grand total; it has no output column).
+    // stratum is likewise the int index `stratum` computes.
     val kvs = array(contCols.map(c => col(c).cast(DoubleType)): _*)
-    val melted = (stratify match {
-      case Some(s) =>
-        val pos = typedLit(strataNames.zipWithIndex.toMap)
-        working.select(
-          coalesce(element_at(pos, Sanitize.stratColumn(col(s))), lit(-1)).as("si"),
-          posexplode(kvs).as(Seq("c", "v")))
-      case None => working.select(lit(0).as("si"), posexplode(kvs).as(Seq("c", "v")))
-    }).select(col("si"), col("c"), col("v"))
+    val melted = working
+      .select(stratum.getOrElse(lit(0)).as("si"), posexplode(kvs).as(Seq("c", "v")))
       .filter(col("v").isNotNull)
     val hist = melted.groupBy("c", "si", "v").agg(count(lit(1)).as("w"))
     // per-stratum groups are pure overhead when there are no strata
     val levels: ((Int, Int)) => Seq[(Int, Int)] =
-      if (stratify.isDefined) k => Seq(k, (k._1, TotalSi)) else k => Seq((k._1, TotalSi))
+      if (stratum.isDefined) k => Seq(k, (k._1, TotalSi)) else k => Seq((k._1, TotalSi))
     val (n, at) = OrderStatistics.pick[(Int, Int)](hist,
       struct(col("c").as("_1"), col("si").as("_2")), Seq(col("c"), col("v")),
       quartileRanks, levels)
@@ -184,7 +185,8 @@ object TableOne {
     * unusable at large n. */
   private def sketchQuartiles(
       working: DataFrame,
-      stratify: Option[String],
+      stratum: Option[Column],
+      strataNames: Seq[String],
       contCols: Seq[String],
       accuracy: Long): Map[(String, Option[String]), Array[Double]] = {
     val qExprs = contCols.map(c =>
@@ -196,19 +198,19 @@ object TableOne {
           Option(a(i)).map(_.asInstanceOf[Number].doubleValue()).getOrElse(Double.NaN))
       }
     }
-    stratify match {
+    stratum match {
       case None =>
         entries(working.agg(qExprs.head, qExprs.tail: _*).head(), None).toMap
-      case Some(s) =>
-        working.withColumn(StratCol, Sanitize.stratColumn(col(s)))
+      case Some(si) =>
+        working.withColumn(StratCol, si)
           .rollup(col(StratCol))
           .agg(qExprs.head,
             qExprs.tail :+ grouping(col(StratCol)).cast("int").as("#isTotal"): _*)
           .collect()
           .iterator.flatMap { r =>
-            val key = if (r.getAs[Int]("#isTotal") == 1) None
-                      else Some(r.getAs[String](StratCol))
-            entries(r, key)
+            // a raced-in stratum (si = -1, no output column) has no entry
+            if (r.getAs[Int]("#isTotal") == 1) entries(r, None)
+            else strataNames.lift(r.getAs[Int](StratCol)).toSeq.flatMap(n => entries(r, Some(n)))
           }.toMap
     }
   }
@@ -254,18 +256,20 @@ object TableOne {
     } finally hist.unpersist()
   }
 
-  /** Grand-total statistics row combined on the driver from per-stratum
-    * aggregate rows (pass 1's groupBy output, in display order so FP
-    * accumulation is deterministic): counts and sums add, extrema reduce
-    * (NaN-aware to match Spark's NaN-sorts-greatest ordering: a stratum
-    * whose min is NaN — all-NaN values — must not poison the total min,
+  /** One statistics row merged on the driver from pass-1 aggregate rows
+    * over disjoint row sets: the grand total from the strata (in display
+    * order), and one stratum from the raw values that sanitize to its
+    * name (in raw-value order) — a fixed order, so FP accumulation is
+    * deterministic. Counts and sums add, extrema reduce
+    * (NaN-aware to match Spark's NaN-sorts-greatest ordering: a part
+    * whose min is NaN — all-NaN values — must not poison the merged min,
     * while a NaN max must win, as it does inside Spark's own max), the
-    * mean is total sum / total n, and the sample variance merges
-    * per-stratum (n, mean, M2 = var*(n-1)) with the Chan/Welford update.
-    * n=1 strata contribute M2=0 (Spark reports their var_samp as NaN,
-    * but a single point has zero spread); the combined var/stddev is NaN
-    * at total n=1, matching var_samp/stddev_samp on the raw rows. */
-  private def combineTotalRow(stratRows: Seq[Row], contCols: Seq[String]): Row = {
+    * mean is merged sum / merged n, and the sample variance merges
+    * per-part (n, mean, M2 = var*(n-1)) with the Chan/Welford update.
+    * n=1 parts contribute M2=0 (Spark reports their var_samp as null,
+    * but a single point has zero spread); the merged var/stddev is null
+    * at merged n=1, matching var_samp/stddev_samp on the raw rows. */
+  private def mergeStatRows(stratRows: Seq[Row], contCols: Seq[String]): Row = {
     val schema = stratRows.head.schema
     def num(r: Row, f: String): Option[Double] = r.getAs[Any](f) match {
       case null      => None
@@ -303,9 +307,11 @@ object TableOne {
               (nn, ma + d * nb / nn, m2a + m2b + d * d * na * nb / nn)
             }
         }
-        val v = if (n > 1L) m2 / (n - 1) else Double.NaN
-        set(s"$c#var", v)
-        set(s"$c#stddev", math.sqrt(v))
+        if (n > 1L) {
+          val v = m2 / (n - 1)
+          set(s"$c#var", v)
+          set(s"$c#stddev", math.sqrt(v))
+        }
       }
     }
     new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(cells, schema)
@@ -350,11 +356,9 @@ object TableOne {
 
     val working = if (cfg.cacheInput) df.persist() else df
 
-    // --- pass 1: ONE rollup aggregation job yields the global row
-    // (rollup grand total: total count + every continuous column's
-    // overall stats) AND, when stratified, each stratum's row count +
-    // stats + the (n, mean, var) test moments. The sanitized strat value
-    // is never null, so grouping() unambiguously marks the total row.
+    // --- pass 1: ONE aggregation job yields the global row (total count
+    // + every continuous column's overall stats) AND, when stratified,
+    // each stratum's row count + stats + the (n, mean, var) test moments.
     // Quartiles never ride in this job: a high-accuracy sketch's
     // final-stage merge is single-threaded per group and dominated the
     // whole summary at sf1 (6M rows: 99 s of a 3 s query's work), so
@@ -376,36 +380,47 @@ object TableOne {
     def maxStrataGuard(found: Int): Unit = require(found <= cfg.maxStrata,
       s"stratification column '${cfg.stratify.get}' has more than ${cfg.maxStrata} distinct values; " +
         "each stratum becomes two output columns — raise maxStrata only if that is intended")
-    val (globalRow: Row, strata: Seq[Stratum]) = cfg.stratify match {
+    // rawToSi: raw stratum key -> position of its stratum in `strata`
+    val (globalRow: Row, strata: Seq[Stratum], rawToSi: Map[String, Int]) = cfg.stratify match {
       case None =>
         val g = working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = false): _*).head()
-        (g, Nil)
+        (g, Nil, Map.empty[String, Int])
       case Some(s) =>
-        // ONE aggregate row per stratum, and the grand
-        // total combined on the driver (counts/sums add, extrema reduce,
+        // ONE aggregate row per RAW stratum value; the driver names each
+        // (Sanitize.stratValue on a handful of values instead of a string
+        // transform on every row), merges raw values that share a name,
+        // and combines the grand total (counts/sums add, extrema reduce,
         // variances merge with the Chan/Welford update). A rollup would
         // feed every input row into TWO grouping sets — measured 3.5 s
         // vs 1.6 s for this pass at sf1 — to produce a total the driver
         // derives from a handful of stratum rows for free.
         val rows = working
-          .withColumn(StratCol, Sanitize.stratColumn(col(s)))
-          .groupBy(col(StratCol))
+          .groupBy(Sanitize.rawKey(col(s)).as(StratCol))
           .agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*)
           .limit(cfg.maxStrata + 1)
           .collect()
         maxStrataGuard(rows.length)
         if (rows.isEmpty) // empty input: zero total, no strata
-          (working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*).head(), Nil)
+          (working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*).head(), Nil,
+            Map.empty[String, Int])
         else {
-          val byName = rows.map(r => r.getAs[String](StratCol) -> r).toMap
+          def raw(r: Row) = r.getAs[String](StratCol)
+          val byName = rows.sortBy(raw).groupBy(r => Sanitize.stratValue(raw(r)))
           val ordered = Sanitize.orderStrata(byName.keys.toSeq)
-          (combineTotalRow(ordered.map(byName), contCols),
-            ordered.map { name =>
-              val r = byName(name)
-              Stratum(name, r.getAs[Long]("#rows"), r)
-            })
+          val merged = ordered.map { name =>
+            val parts = byName(name)
+            val r = if (parts.length == 1) parts.head else mergeStatRows(parts.toSeq, contCols)
+            Stratum(name, r.getAs[Long]("#rows"), r)
+          }
+          val si = ordered.zipWithIndex.toMap
+          (mergeStatRows(merged.map(_.stats), contCols), merged,
+            byName.flatMap { case (name, parts) => parts.iterator.map(raw(_) -> si(name)) })
         }
     }
+    // Per-row stratum index for the passes below; a raw value that raced
+    // in after pass 1 maps to -1: it counts toward the totals only.
+    val stratum: Option[Column] = cfg.stratify.map(s =>
+      coalesce(element_at(typedLit(rawToSi), Sanitize.rawKey(col(s))), lit(-1)))
     val total: Long = globalRow.getAs[Long]("#rows")
     val stratNames = strata.map(_.name)
     val globalStats: Option[Row] = if (contCols.isEmpty) None else Some(globalRow)
@@ -426,8 +441,8 @@ object TableOne {
         // order-statistics path instead of failing analysis
         if (maxN == 0L) Map.empty // every continuous value is null
         else if (maxN <= math.min(cfg.quartileSketchMaxRows, Int.MaxValue / 4L))
-          sketchQuartiles(working, cfg.stratify, contCols, 4L * maxN)
-        else exactQuartiles(working, cfg.stratify, stratNames, contCols)
+          sketchQuartiles(working, stratum, stratNames, contCols, 4L * maxN)
+        else exactQuartiles(working, stratum, stratNames, contCols)
       }
 
     // --- output schema -------------------------------------------------
@@ -519,15 +534,12 @@ object TableOne {
       // cast covers BooleanType categoricals ("true"/"false"); no-op for strings
       val kvs = array(catCols.map(c =>
         struct(lit(c).as("variable"), coalesce(col(c).cast(StringType), lit(Missing)).as("Values"))): _*)
-      val melted = cfg.stratify match {
-        case Some(s) => working.select(Sanitize.stratColumn(col(s)).as(StratCol), explode(kvs).as("kv"))
-        case None    => working.select(lit("").as(StratCol), explode(kvs).as("kv"))
-      }
-      val counts = melted
+      val counts = working
+        .select(stratum.getOrElse(lit(-1)).as(StratCol), explode(kvs).as("kv"))
         .select(col(StratCol), col("kv.variable").as("variable"), col("kv.Values").as("Values"))
         .groupBy("variable", "Values")
         .agg(count(lit(1)).as("All_Patients"),
-          stratNames.map(sv => count(when(col(StratCol) === sv, 1)).as(sv)): _*)
+          stratNames.zipWithIndex.map { case (sv, i) => count(when(col(StratCol) === i, 1)).as(sv) }: _*)
 
       // chi-square per categorical variable, from the aggregated counts
       // (the contingency table IS the pivoted counts — SURVEY.md §2.9 D7).
@@ -594,8 +606,8 @@ object TableOne {
     val unordered = catBlock.fold(driverBlock)(driverBlock.unionByName(_))
     val ordered = unordered.orderBy(col("Index"), col("Values"))
 
-    // cacheInput served the in-call aggregation passes (rollup, melt,
-    // p-value collects); release it before returning so no executor
+    // cacheInput served the in-call passes (pass 1, quartiles, the
+    // p-value collect of the categorical melt); release it before returning so no executor
     // storage outlives the call — the returned plan's one consume
     // re-scans the input instead.
     if (cfg.cacheInput) working.unpersist()

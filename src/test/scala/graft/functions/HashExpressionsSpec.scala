@@ -83,15 +83,19 @@ class HashExpressionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("sanitizeStrat: spaces to underscores, non-ASCII runs collapse to one '?'") {
-    val df = Seq("a b  c", "héllo wörld", "日本語テスト x", "plain", "", "naïve café")
-      .toDF("t").select(HashFunctions.sanitizeStrat(col("t")).as("s"))
-    df.as[String].collect() shouldBe Array(
-      "a_b__c", "h?llo_w?rld", "?_x", "plain", "", "na?ve_caf?")
+    // "𝄞" is a surrogate pair: one '?' from every formulation
+    val in = Seq("a b  c", "héllo wörld", "日本語テスト x", "plain", "", "naïve café",
+      "𝄞 x", "MISSING")
+    val out = in.toDF("t").select(HashFunctions.sanitizeStrat(col("t")).as("s"))
+      .as[String].collect()
+    out shouldBe Array(
+      "a_b__c", "h?llo_w?rld", "?_x", "plain", "", "na?ve_caf?", "?_x", "MISSING")
     // parity with the two-regex reference formulation
-    val viaRegex = Seq("a b  c", "héllo wörld", "日本語テスト x", "plain", "", "naïve café")
-      .toDF("t").select(regexp_replace(regexp_replace(col("t"), " ", "_"),
-        "[^\\x00-\\x7F]+", "?").as("s")).as[String].collect()
-    df.as[String].collect() shouldBe viaRegex
+    val viaRegex = in.toDF("t").select(regexp_replace(regexp_replace(col("t"), " ", "_"),
+      "[^\\x00-\\x7F]+", "?").as("s")).as[String].collect()
+    out shouldBe viaRegex
+    // TableOne names strata with the driver-side form: it must agree
+    out shouldBe in.map(graft.tableone.Sanitize.stratValue).toArray
   }
 
   test("simHash64: equal token multisets equal; null text -> null") {

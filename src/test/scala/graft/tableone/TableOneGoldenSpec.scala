@@ -2,6 +2,7 @@ package graft.tableone
 
 import graft.TestSpark
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end golden test reproducing the reference's only test input
@@ -166,6 +167,47 @@ class TableOneGoldenSpec extends AnyFunSuite {
     assert(strata == Seq("Yes", "No", "a_b", "caf?", "MISSING"))
     val totals = out.collect().find(_.getAs[String]("Values") == "ALL").get
     assert(totals.getAs[Double]("a_b") == 2.0)
+
+    // Strata are grouped by RAW value and merged on the driver; that must
+    // equal grouping by the pre-sanitized value cell for cell, on both
+    // quartile paths: counts, extrema and quartiles exactly, means,
+    // stddevs and test statistics (merged moments) to 1e-12 relative.
+    // Colliding raw values: "a b"/"a_b", "café"/"caf€", null/"MISSING",
+    // and "Ω"/"Ж" whose merged stratum has a single non-null x.
+    val rich = ((1 to 160).map { i =>
+      val s = Seq("a b", "a_b", "café", "caf€", null, "MISSING", "Yes", "No")(i % 8)
+      val x: java.lang.Double = if (i % 9 == 0) null else ((i * 37) % 23) / 4.0
+      val k: java.lang.Integer = if (i % 10 == 0) null else i % 4
+      (s, k, x, i * 1.1, s"c${i % 3}")
+    } ++ Seq(("Ω", null, java.lang.Double.valueOf(2.0), 0.5, "c0"),
+      ("Ж", Int.box(1), null, 0.25, "c1"))).toDF("s", "k", "x", "y", "c")
+    val relCells = Set("mean", "stddev")
+    def rows(df: org.apache.spark.sql.DataFrame, s: String, threshold: Long) =
+      TableOne.summarize(df, TableOneConfig(stratify = Some(s), cols = Seq("x", "y", "c"),
+        pValues = true, quartileSketchMaxRows = threshold))
+    for (s <- Seq("s", "k"); threshold <- Seq(0L, Long.MaxValue)) {
+      val got = rows(rich, s, threshold)
+      val want = rows(rich.withColumn(s, Sanitize.stratColumn(col(s))), s, threshold)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      val cols = got.columns.toSeq
+      def sorted(df: org.apache.spark.sql.DataFrame) =
+        df.collect().sortBy(r => (r.getAs[Double]("Index"), r.getAs[String]("Values")))
+      val (g, w) = (sorted(got), sorted(want))
+      assert(g.length == w.length)
+      g.zip(w).foreach { case (a, b) =>
+        cols.indices.foreach { i =>
+          val what = s"stratify=$s threshold=$threshold ${a.getAs[String]("Characteristics")}/" +
+            s"${a.getAs[String]("Values")} ${cols(i)}: ${a.get(i)} vs ${b.get(i)}"
+          (a.get(i), b.get(i)) match {
+            case (x: Double, y: Double)
+                if relCells(a.getAs[String]("Values")) || cols(i) == "p_value" ||
+                  cols(i) == "test_value" =>
+              assert((x.isNaN && y.isNaN) || math.abs(x - y) <= 1e-12 * math.max(x.abs, y.abs), what)
+            case (x, y) => assert(x == y, what)
+          }
+        }
+      }
+    }
   }
 
   test("summarize leaves zero residual cached RDDs (exact-quartile persists released)") {
@@ -201,9 +243,8 @@ class TableOneGoldenSpec extends AnyFunSuite {
   test("sketch and order-statistics quartile paths agree cell-for-cell") {
     import spark.implicits._
     // ties, skew, a null stratum, null measures, and a categorical with
-    // nulls — the order-statistics path also carries the categorical
-    // counts in its melt (and the chi-square built from them), so every
-    // cell including p-values must match the sketch+distributed path
+    // nulls — every cell including p-values must match across the two
+    // quartile paths
     val df = (1 to 400).map { i =>
       val s = if (i % 7 == 0) null else s"g${i % 3}"
       val v: java.lang.Double = if (i % 11 == 0) null else (i % 17).toDouble
