@@ -29,6 +29,9 @@ object SparkEntry {
 
   // (name, isContinuous) in analysis order, per flagship target
   private val lineitemCols = Seq("l_linestatus" -> false, "l_quantity" -> true, "l_extendedprice" -> true)
+  // every numeric lineitem column, in schema order (t9)
+  private val t9Numeric = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+    "l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = base ++ OpsQueries.queries
 
@@ -94,16 +97,15 @@ object SparkEntry {
         .withColumn("o_is_urgent", col("o_orderpriority") === "1-URGENT")
         .withColumn("o_price_dec", floor(col("o_totalprice")).cast("decimal(18,2)")),
       TableOneConfig(Some("o_orderstatus"), Seq("o_is_urgent", "o_price_dec", "o_orderdate"))))),
-    // quartileSketchMaxRows = 0 forces the distributed order-statistics
-    // quartile path regardless of input size, so BOTH exact-quartile
-    // paths stay under the DuckDB hash gate at every scale (the default
-    // gate would route sf0.01's 60k rows to the sketch rider). The
-    // categorical column puts the categorical melt next to the
-    // order-statistics pass under the same hash check.
+    // All 8 numeric lineitem columns: even sf0.01's 60k rows give a
+    // quartile census bound of 8 x 60k = 480k > OrderStatistics.LocalMaxRows,
+    // so this is the query that keeps the distributed (range-shuffled)
+    // quartile route under the DuckDB hash gate at every scale; t1-t8
+    // take the driver-side route at small scales. The categorical column
+    // puts the categorical melt next to it under the same hash check.
     "t9_tableone_orderstat" -> ((s, dir) => roundDoubles(TableOne.summarize(
       table(s, dir, "lineitem"),
-      TableOneConfig(Some("l_linestatus"), Seq("l_returnflag", "l_quantity", "l_discount"),
-        quartileSketchMaxRows = 0L)))),
+      TableOneConfig(Some("l_linestatus"), "l_returnflag" +: t9Numeric)))),
 
     "t10_weighted_summary" -> ((s, dir) => {
       // survey-weighted Table 1 (sampling-weight capability the
@@ -364,15 +366,15 @@ object SparkEntry {
       table(s, dir, "lineitem").groupBy("l_linestatus")
         .pivot("l_returnflag", Seq("A", "N", "R")).count()
         .na.fill(0L).orderBy("l_linestatus")),
-    // Moments in ONE agg pass; exact quartiles from the CARDINALITY-GATED
-    // distinct-value histogram (TableOne.quartilesFrame): at l_quantity's
-    // 50 distinct values the cumulative pick runs a window over the tiny
-    // histogram; a high-cardinality column would route to the distributed
-    // order-statistics path instead of silently serializing an
-    // unpartitioned orderBy(v) window into one task. The previous
-    // registration forced percentile_approx(accuracy=2e6), whose
-    // single-threaded giant-sketch merge cost ~54 s at sf1; both gated
-    // paths are exact rank-ceil(k*n/4) = quantile_disc at ANY scale.
+    // Moments in ONE agg pass; exact quartiles from the distinct-value
+    // histogram (TableOne.quartilesFrame): its row count bounds the
+    // order-statistics census, so l_quantity's 50 distinct values are
+    // crossed on the driver in one collect, and a high-cardinality column
+    // would take the range-partitioned route — never an unpartitioned
+    // orderBy(v) window in one task. The previous registration forced
+    // percentile_approx(accuracy=2e6), whose single-threaded giant-sketch
+    // merge cost ~54 s at sf1; both routes are exact rank-ceil(k*n/4) =
+    // quantile_disc at ANY scale.
     "a3_onepass_stats" -> ((s, dir) => roundDoubles {
       val t = table(s, dir, "lineitem")
       val stats = t.agg(
@@ -825,7 +827,7 @@ object SparkEntry {
       Seq("o_is_urgent" -> false, "o_price_dec" -> true)),
     "t9_tableone_orderstat" -> TableOneSql.oracle(
       "lineitem", Some("l_linestatus"), Seq("F", "O"),
-      Seq("l_returnflag" -> false, "l_quantity" -> true, "l_discount" -> true)),
+      ("l_returnflag" -> false) +: t9Numeric.map(_ -> true)),
     "a1_group_count" ->
       "SELECT l_returnflag, count(*) AS cnt FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag",
     "a2_pivot_counts" ->

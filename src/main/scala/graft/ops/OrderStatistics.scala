@@ -22,7 +22,9 @@ import scala.reflect.runtime.universe.TypeTag
   * stage is parallel in the number of range partitions, no global
   * single-partition window ever materializes, and the driver only sees
   * subtotals and picks. The range-partition count is
-  * `spark.sql.shuffle.partitions`.
+  * `spark.sql.shuffle.partitions`. A [[pick]] census the caller bounds
+  * at [[LocalMaxRows]] rows skips the range shuffle: it is sorted into
+  * one partition and crossed on the driver from zero offsets.
   */
 private[graft] object OrderStatistics {
 
@@ -112,34 +114,55 @@ private[graft] object OrderStatistics {
     Window.partitionBy(Pid).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
+  /** Census row bound at or under which [[pick]] crosses the census on
+    * the driver instead of range-partitioning it. */
+  final val LocalMaxRows = 400000L
+
   /** EXACT order statistics per group. `census` carries a double `v` and
     * a long weight `w` per row, plus whatever `key` (the group, decoded as
     * `K`) and `order` read; within every group, `order` must sort rows by
     * `v`. A row's weight counts toward each group in `levels(k)`, so one
-    * range shuffle serves nested groupings. For each group with total
-    * weight n, `ranks(n)` names the 1-based ranks to pick — the caller's
-    * rank rule. Returns each group's n and the value at every requested
+    * pass serves nested groupings. For each group with total weight n,
+    * `ranks(n)` names the 1-based ranks to pick — the caller's rank rule.
+    * Returns each group's n and the value at every requested
     * (group, rank); a requested rank that got no pick throws (see
-    * [[resolve]]). Jobs: the range sampling, one subtotal collect, one
-    * pick collect. */
+    * [[resolve]]).
+    *
+    * `censusRowsAtMost` is an upper bound the caller already knows on the
+    * census row count. At or under [[LocalMaxRows]] the census is sorted
+    * into one partition and collected, and the driver crosses it from
+    * zero offsets — what a range shuffle saves in parallelism costs more
+    * in scheduling round-trips on a census that small. Jobs: local, the
+    * one sorted collect; distributed, the range sampling, one subtotal
+    * collect and one pick collect. */
   def pick[K: TypeTag](census: DataFrame, key: Column, order: Seq[Column],
                        ranks: Long => Seq[Long],
-                       levels: K => Seq[K] = (k: K) => Seq(k))
-      : (Map[K, Long], Map[(K, Long), Double]) =
-    grouped[K, (Map[K, Long], Map[(K, Long), Double])](
+                       levels: K => Seq[K] = (k: K) => Seq(k),
+                       censusRowsAtMost: Long = Long.MaxValue)
+      : (Map[K, Long], Map[(K, Long), Double]) = {
+    val spark = census.sparkSession
+    import spark.implicits._
+    def tallies(parts: DataFrame) =
+      parts.select(key.as("k"), col("v"), col("w"), col(Pid).as("pid")).as[Tally[K]]
+    def wanted(n: Map[K, Long]) = n.map { case (k, nk) => k -> ranks(nk).distinct.toArray }
+    if (censusRowsAtMost <= LocalMaxRows) {
+      // Spark's sort, not the driver's: NaN and -0.0 order as in the
+      // distributed route
+      val rows = tallies(census.coalesce(1).sortWithinPartitions(order: _*)
+        .withColumn(Pid, lit(0))).collect()
+      val n = rows.toSeq.flatMap(t => levels(t.k).map(_ -> t.w)).groupMapReduce(_._1)(_._2)(_ + _)
+      val want = wanted(n)
+      (n, resolve(cross(rows.iterator, Map.empty[(Int, K), Long], want, levels).toSeq, want))
+    } else grouped[K, (Map[K, Long], Map[(K, Long), Double])](
         census, key, order, Seq(col("w"))) { (parts, sums) =>
       val off = sums.through(levels)
       val start = off.start.map { case (pk, s) => pk -> s(0) }
       val n = off.total.map { case (k, t) => k -> t(0) }
-      val want = n.map { case (k, nk) => k -> ranks(nk).distinct.toArray }
-      val spark = census.sparkSession
-      import spark.implicits._
-      val picks = parts.select(key.as("k"), col("v"), col("w"), col(Pid).as("pid"))
-        .as[Tally[K]]
-        .mapPartitions(cross(_, start, want, levels))
-        .collect()
+      val want = wanted(n)
+      val picks = tallies(parts).mapPartitions(cross(_, start, want, levels)).collect()
       (n, resolve(picks, want))
     }
+  }
 
   /** The crossing step of one range partition: rows sorted as the pick
     * pass sorts them, each group's running weight seeded from its

@@ -11,9 +11,8 @@ package graft.oracle
   *
   * Strata must be the (sanitized) stratification values present in the
   * data, in the engine's display order (Sanitize.orderStrata). Quartiles
-  * use `quantile_disc`, which matches `percentile_approx` in exact mode
-  * (accuracy >= n+1): both return the data element at rank ceil(q*n)
-  * (SURVEY.md §1.5).
+  * use `quantile_disc`, which returns the data element at rank ceil(q*n),
+  * the engine's order-statistics pick (SURVEY.md §1.5).
   */
 object TableOneSql {
 

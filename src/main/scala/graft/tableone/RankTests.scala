@@ -28,13 +28,12 @@ import org.apache.spark.sql.functions._
   */
 object RankTests {
 
-  /** NDV gate between the two cumulative-count plans — the A5
-    * quartiles precedent (`TableOne.quartilesFrame`'s 65536): at or
-    * under the gate the distinct-value frame is report-sized and the
-    * single ordered window over it is both correct and ~3 stages
-    * cheaper; above it that window is a one-task sort of a frame that
-    * grows with the data, so the bucketed 4096-way prefix-sum takes
-    * over. Overridable for the forced-path parity spec. */
+  /** NDV gate between the two cumulative-count plans: at or under the
+    * gate the distinct-value frame is report-sized and the single
+    * ordered window over it is both correct and ~3 stages cheaper;
+    * above it that window is a one-task sort of a frame that grows with
+    * the data, so the bucketed 4096-way prefix-sum takes over.
+    * Overridable for the forced-path parity spec. */
   private[tableone] var ndvGate: Long = 65536L
 
   /** Build the ranked census, hand it to `use` (which must MATERIALIZE

@@ -18,37 +18,6 @@ import scala.jdk.CollectionConverters._
   *                 repeated variable labels, underscores -> spaces
   * @param pValues  attach t-test / ANOVA / chi-square results (stratified
   *                 runs only; forced off otherwise)
-  * @param quartileSketchMaxRows exact-quartile path selector: when every
-  *                 analyzed continuous column has at most this many
-  *                 non-null rows (known free from the pass-1 aggregate —
-  *                 choosing costs zero extra jobs), quartiles come from a
-  *                 single `percentile_approx` rollup with accuracy = 4n,
-  *                 which retains all n samples and is therefore exact;
-  *                 per-group sketch state is n doubles, bounded by this
-  *                 threshold (~3 MB at the 400k default). Columns above
-  *                 it take [[TableOne.exactQuartiles]] — fully parallel,
-  *                 memory bounded by partition size, but ~4 scheduling
-  *                 round-trips of fixed overhead that dominate small
-  *                 inputs (measured: a 15k-row summary pays ~0.5 s for a
-  *                 job that the sketch does in ~0.1). The default sits at
-  *                 the measured crossover: the sketch's single-threaded
-  *                 per-group final merge loses to the parallel pass
-  *                 somewhere between 150k rows (sketch 2x faster) and
-  *                 600k (order statistics up to 40% faster, more for
-  *                 low-cardinality columns whose histogram collapses).
-  *                 Both paths pick the identical rank-ceil(q*n) element.
-  *                 0 forces the order-statistics path (tests do this).
-  *                 Sketch eligibility is additionally capped at
-  *                 Int.MaxValue/4 (percentile_approx's accuracy limit),
-  *                 and when every continuous value is null neither job
-  *                 runs — there is nothing to rank.
-  * @param cacheInput persist the input for the duration of the in-call
-  *                 passes over it (pass 1, the quartile pass and, with
-  *                 `pValues`, the categorical melt) — worth it when `df` is an
-  *                 expensive upstream computation rather than a bare
-  *                 scan. Released before summarize returns (no residual
-  *                 executor storage); the returned plan re-scans the
-  *                 input once when consumed.
   * @param maxStrata hard cap on distinct stratification values. Each
   *                 stratum becomes TWO output columns and one collected
   *                 driver row, so an unbounded high-cardinality stratify
@@ -65,8 +34,6 @@ final case class TableOneConfig(
     cols: Seq[String] = Nil,
     beautify: Boolean = false,
     pValues: Boolean = false,
-    quartileSketchMaxRows: Long = 400000L,
-    cacheInput: Boolean = false,
     maxStrata: Int = 1000)
 
 /** "Table 1" descriptive-statistics engine — a from-scratch Scala Spark
@@ -88,10 +55,10 @@ final case class TableOneConfig(
   *      feed the t-test/ANOVA; the driver names the strata, merges raw
   *      values that sanitize to one name, and combines the grand total
   *      (unstratified: one global `agg`),
-  *   2. ONE exact-quartile job for ALL continuous columns at once
-  *      (value-histogram + range-partitioned order statistics — fully
-  *      parallel, no single-reducer merge; skipped when there are no
-  *      continuous columns),
+  *   2. ONE exact-quartile pass for ALL continuous columns at once (a
+  *      value histogram handed to the order-statistics engine, which
+  *      crosses a small one on the driver and range-partitions a large
+  *      one; skipped when no continuous value is non-null),
   *   3. ONE melt + `groupBy(variable, value)` aggregation for ALL
   *      categorical columns (explicit per-stratum conditional counts — no
   *      pivot distinct-value job).
@@ -125,20 +92,21 @@ object TableOne {
   private def quartileRanks(n: Long): Seq[Long] = Seq(1L, 2L, 3L).map(k => (k * n + 3) / 4)
 
   /** EXACT discrete quartiles (the element at 1-based rank `ceil(k*n/4)`
-    * — the same pick as DuckDB's `quantile_disc` and as an exact-mode
-    * percentile_approx) for every continuous column, every stratum, AND
-    * the grand total, via distributed order statistics:
+    * — the same pick as DuckDB's `quantile_disc`) for every continuous
+    * column, every stratum, AND the grand total, via order statistics:
     *
     *   1. melt -> groupBy (col, stratum, value).count — ONE shuffle with
     *      map-side combine; the histogram is the data's distinct-value
     *      footprint, never bigger than the input.
-    *   2. [[graft.ops.OrderStatistics.pick]] range-partitions it on
-    *      (col, value): all strata rows of one (col, value) — and all its
-    *      duplicates — land in ONE partition, in global (col, value) order
-    *      across partitions, so each stratum AND the column's grand total
-    *      read their ranks off the same range shuffle, with no second
+    *   2. [[graft.ops.OrderStatistics.pick]] orders it on (col, value):
+    *      all strata rows of one (col, value) — and all its duplicates —
+    *      are adjacent, so each stratum AND the column's grand total read
+    *      their ranks off the same ordered census, with no second
     *      histogram. A histogram row counts toward its stratum group and
-    *      its column's total group.
+    *      its column's total group. `censusRowsAtMost` bounds the
+    *      histogram's rows (the caller passes Σ non-null n); at or under
+    *      [[graft.ops.OrderStatistics.LocalMaxRows]] the driver crosses
+    *      it, above that a range shuffle does.
     *
     * Scale posture: no quantile sketch (the reference's rowcount-accuracy
     * sketch serializes a near-copy of the column into a single-threaded
@@ -146,17 +114,18 @@ object TableOne {
     * per-column ordered window (a `partitionBy(col)` running sum is one
     * task per column no matter the cluster). */
   private[tableone] def exactQuartiles(
-      working: DataFrame,
+      df: DataFrame,
       stratum: Option[Column],
       strataNames: Seq[String],
-      contCols: Seq[String]): Map[(String, Option[String]), Array[Double]] = {
+      contCols: Seq[String],
+      censusRowsAtMost: Long): Map[(String, Option[String]), Array[Double]] = {
     // posexplode of a bare double array: the column is identified by its
     // POSITION (a 4-byte int), not its name — strings in the melt key
     // made the generate + hash-aggregate pass several times slower at
     // sf1. Names are restored from contCols(idx) after the collect. The
     // stratum is likewise the int index `stratum` computes.
     val kvs = array(contCols.map(c => col(c).cast(DoubleType)): _*)
-    val melted = working
+    val melted = df
       .select(stratum.getOrElse(lit(0)).as("si"), posexplode(kvs).as(Seq("c", "v")))
       .filter(col("v").isNotNull)
     val hist = melted.groupBy("c", "si", "v").agg(count(lit(1)).as("w"))
@@ -165,7 +134,7 @@ object TableOne {
       if (stratum.isDefined) k => Seq(k, (k._1, TotalSi)) else k => Seq((k._1, TotalSi))
     val (n, at) = OrderStatistics.pick[(Int, Int)](hist,
       struct(col("c").as("_1"), col("si").as("_2")), Seq(col("c"), col("v")),
-      quartileRanks, levels)
+      quartileRanks, levels, censusRowsAtMost)
     n.flatMap { case (k @ (c, si), nk) =>
       // a raced-in stratum (si = -1, no output column) has no entry
       val key =
@@ -175,84 +144,23 @@ object TableOne {
     }
   }
 
-  /** Small-column quartiles: one `percentile_approx` rollup job with
-    * accuracy >= 4n, at which the Greenwald-Khanna sketch retains every
-    * sample and returns the exact rank-ceil(q*n) element — the same pick
-    * as [[exactQuartiles]] and DuckDB's `quantile_disc`. Only called when
-    * the gate in [[summarize]] has proven every column's n is at most
-    * `quartileSketchMaxRows`, which bounds per-group sketch state (n
-    * doubles) and the single-threaded final merge that makes this shape
-    * unusable at large n. */
-  private def sketchQuartiles(
-      working: DataFrame,
-      stratum: Option[Column],
-      strataNames: Seq[String],
-      contCols: Seq[String],
-      accuracy: Long): Map[(String, Option[String]), Array[Double]] = {
-    val qExprs = contCols.map(c =>
-      percentile_approx(col(c), array(lit(0.25), lit(0.5), lit(0.75)), lit(accuracy))
-        .cast(ArrayType(DoubleType)).as(s"$c#q"))
-    def entries(r: Row, key: Option[String]) = contCols.flatMap { c =>
-      Option(r.getAs[scala.collection.Seq[Any]](s"$c#q")).map { a =>
-        (c, key) -> Array(0, 1, 2).map(i =>
-          Option(a(i)).map(_.asInstanceOf[Number].doubleValue()).getOrElse(Double.NaN))
-      }
-    }
-    stratum match {
-      case None =>
-        entries(working.agg(qExprs.head, qExprs.tail: _*).head(), None).toMap
-      case Some(si) =>
-        working.withColumn(StratCol, si)
-          .rollup(col(StratCol))
-          .agg(qExprs.head,
-            qExprs.tail :+ grouping(col(StratCol)).cast("int").as("#isTotal"): _*)
-          .collect()
-          .iterator.flatMap { r =>
-            // a raced-in stratum (si = -1, no output column) has no entry
-            if (r.getAs[Int]("#isTotal") == 1) entries(r, None)
-            else strataNames.lift(r.getAs[Int](StratCol)).toSeq.flatMap(n => entries(r, Some(n)))
-          }.toMap
-    }
-  }
-
   /** One-row `(q25, q50, q75)` frame for a single numeric column, exact
-    * at any scale — the cardinality-GATED form of the distinct-value
-    * histogram quartile pick. The histogram (`groupBy(value).count`, a
-    * map-side-combinable shuffle) doubles as the gate: its row count IS
-    * the column's distinct-value cardinality. At or below `maxDistinct`
-    * the cumulative pick runs a window over the distinct VALUES — sound
-    * precisely because the windowed relation is histogram-sized, not
-    * row-sized. Above the gate that unpartitioned `orderBy(v)` window
-    * would serialize into one task, so the column routes to the
-    * fully-parallel distributed order-statistics pass
-    * ([[exactQuartiles]]) instead and the three picks return as typed
-    * literals (the high-cardinality path pays the extra gate scan; the
-    * gate exists exactly so that cost is a second scan, not a one-task
-    * window). Both paths pick the identical rank-ceil(k*n/4) element =
-    * DuckDB `quantile_disc` semantics. The histogram persist is released
-    * before returning (the 1-row pick is materialized eagerly). */
-  def quartilesFrame(df: DataFrame, c: String, maxDistinct: Long = 65536L): DataFrame = {
-    val spark = df.sparkSession
+    * at any scale: the distinct-value histogram (`groupBy(value).count`,
+    * a map-side-combinable shuffle) is persisted, its row count bounds
+    * the census for [[graft.ops.OrderStatistics.pick]], and the three
+    * rank-ceil(k*n/4) picks (DuckDB `quantile_disc`) return as typed
+    * literals — no ordered window at any cardinality. The histogram
+    * persist is released before returning. */
+  def quartilesFrame(df: DataFrame, c: String): DataFrame = {
     val hist = df.filter(col(c).isNotNull)
-      .groupBy(col(c).as("v")).agg(count(lit(1)).as("cnt")).persist()
+      .groupBy(col(c).cast(DoubleType).as("v")).agg(count(lit(1)).as("w")).persist()
     try {
-      if (hist.count() <= maxDistinct) {
-        val w = Window.orderBy("v")
-        val cum = hist.select(col("v"),
-          sum("cnt").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"),
-          sum("cnt").over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("nn"))
-        def q(k: Int, name: String) =
-          min(when(col("cum") >= expr(s"(nn * $k + 3) div 4"), col("v"))).as(name)
-        val agg = cum.agg(q(1, "q25"), q(2, "q50"), q(3, "q75"))
-        spark.createDataFrame(java.util.Collections.singletonList(agg.head()), agg.schema)
-      } else {
-        val dt = df.schema(c).dataType
-        val qs = exactQuartiles(df.select(col(c)), None, Nil, Seq(c))
-          .getOrElse((c, None), Array.fill(3)(Double.NaN))
-        spark.range(1).select(
-          lit(qs(0)).cast(dt).as("q25"), lit(qs(1)).cast(dt).as("q50"),
-          lit(qs(2)).cast(dt).as("q75"))
-      }
+      val (n, at) = OrderStatistics.pick[Long](hist, lit(0L), Seq(col("v")), quartileRanks,
+        censusRowsAtMost = hist.count())
+      val qs = n.get(0L).fold(Seq.fill(3)(lit(null)))(nk => quartileRanks(nk).map(r => lit(at((0L, r)))))
+      val dt = df.schema(c).dataType
+      df.sparkSession.range(1).select(
+        qs.zip(Seq("q25", "q50", "q75")).map { case (q, name) => q.cast(dt).as(name) }: _*)
     } finally hist.unpersist()
   }
 
@@ -354,8 +262,6 @@ object TableOne {
     // Variable position in the output (1-based; 0 is the Totals row).
     val varIdx: Map[String, Int] = analyzed.map(_._1).zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
 
-    val working = if (cfg.cacheInput) df.persist() else df
-
     // --- pass 1: ONE aggregation job yields the global row (total count
     // + every continuous column's overall stats) AND, when stratified,
     // each stratum's row count + stats + the (n, mean, var) test moments.
@@ -383,7 +289,7 @@ object TableOne {
     // rawToSi: raw stratum key -> position of its stratum in `strata`
     val (globalRow: Row, strata: Seq[Stratum], rawToSi: Map[String, Int]) = cfg.stratify match {
       case None =>
-        val g = working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = false): _*).head()
+        val g = df.agg(count(lit(1)).as("#rows"), statExprs(withMoments = false): _*).head()
         (g, Nil, Map.empty[String, Int])
       case Some(s) =>
         // ONE aggregate row per RAW stratum value; the driver names each
@@ -394,14 +300,14 @@ object TableOne {
         // feed every input row into TWO grouping sets — measured 3.5 s
         // vs 1.6 s for this pass at sf1 — to produce a total the driver
         // derives from a handful of stratum rows for free.
-        val rows = working
+        val rows = df
           .groupBy(Sanitize.rawKey(col(s)).as(StratCol))
           .agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*)
           .limit(cfg.maxStrata + 1)
           .collect()
         maxStrataGuard(rows.length)
         if (rows.isEmpty) // empty input: zero total, no strata
-          (working.agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*).head(), Nil,
+          (df.agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*).head(), Nil,
             Map.empty[String, Int])
         else {
           def raw(r: Row) = r.getAs[String](StratCol)
@@ -425,25 +331,13 @@ object TableOne {
     val stratNames = strata.map(_.name)
     val globalStats: Option[Row] = if (contCols.isEmpty) None else Some(globalRow)
 
-    // --- pass 2: EXACT quartiles for every continuous
-    // column and every stratum + the total. Pass 1 already fixed every
-    // column's non-null count, so the path choice is free: small columns
-    // ride one percentile_approx rollup at accuracy 4n (exact, state
-    // bounded by the threshold); anything larger takes the fully-parallel
-    // order-statistics job. Key: None = grand total, Some(s) = stratum.
+    // --- pass 2: EXACT quartiles for every continuous column and every
+    // stratum + the total. Pass 1's non-null counts bound the quartile
+    // histogram's rows for free. Key: None = grand total, Some(s) = stratum.
+    val sumN = contCols.map(c => globalRow.getAs[Long](s"$c#n")).sum
     val quartMap: Map[(String, Option[String]), Array[Double]] =
-      if (contCols.isEmpty) Map.empty
-      else {
-        val maxN = contCols.map(c => globalRow.getAs[Long](s"$c#n")).max
-        // sketch eligibility is additionally capped at Int.MaxValue/4:
-        // percentile_approx rejects accuracy beyond Int.MaxValue, so a
-        // caller-raised threshold must still route huge columns to the
-        // order-statistics path instead of failing analysis
-        if (maxN == 0L) Map.empty // every continuous value is null
-        else if (maxN <= math.min(cfg.quartileSketchMaxRows, Int.MaxValue / 4L))
-          sketchQuartiles(working, stratum, stratNames, contCols, 4L * maxN)
-        else exactQuartiles(working, stratum, stratNames, contCols)
-      }
+      if (sumN == 0L) Map.empty // no continuous column, or every value null
+      else exactQuartiles(df, stratum, stratNames, contCols, sumN)
 
     // --- output schema -------------------------------------------------
     val countColNames = "All_Patients" +: stratNames
@@ -534,7 +428,7 @@ object TableOne {
       // cast covers BooleanType categoricals ("true"/"false"); no-op for strings
       val kvs = array(catCols.map(c =>
         struct(lit(c).as("variable"), coalesce(col(c).cast(StringType), lit(Missing)).as("Values"))): _*)
-      val counts = working
+      val counts = df
         .select(stratum.getOrElse(lit(-1)).as(StratCol), explode(kvs).as("kv"))
         .select(col(StratCol), col("kv.variable").as("variable"), col("kv.Values").as("Values"))
         .groupBy("variable", "Values")
@@ -605,12 +499,6 @@ object TableOne {
 
     val unordered = catBlock.fold(driverBlock)(driverBlock.unionByName(_))
     val ordered = unordered.orderBy(col("Index"), col("Values"))
-
-    // cacheInput served the in-call passes (pass 1, quartiles, the
-    // p-value collect of the categorical melt); release it before returning so no executor
-    // storage outlives the call — the returned plan's one consume
-    // re-scans the input instead.
-    if (cfg.cacheInput) working.unpersist()
 
     val finalDf =
       if (!cfg.beautify) ordered

@@ -1,9 +1,15 @@
 package graft.ops
 
 import graft.TestSpark
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+
+import java.util.concurrent.atomic.AtomicInteger
+import scala.reflect.runtime.universe.TypeTag
 
 import OrderStatistics.{Pick, Tally}
 
@@ -28,17 +34,38 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
     try body finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  /** Runs the engine over (g, v) rows under `rule` and checks every pick
-    * against the sorted array of each group's non-null values. */
+  /** Picks compared by bit pattern, so NaN equals NaN. */
+  private def bits[K](at: Map[(K, Long), Double]): Map[(K, Long), Long] =
+    at.view.mapValues(java.lang.Double.doubleToLongBits).toMap
+
+  /** `pick` on both routes: the driver-side cross (bounded by the
+    * census's own row count) and the range shuffle (no bound). Asserts
+    * they return the identical (n, picks) and returns them. */
+  private def bothRoutes[K: TypeTag](census: DataFrame, key: Column, order: Seq[Column],
+                                     rule: Long => Seq[Long], levels: K => Seq[K] = (k: K) => Seq(k))
+      : (Map[K, Long], Map[(K, Long), Double]) = {
+    def run(bound: Long) = OrderStatistics.pick[K](census, key, order, rule, levels, bound)
+    val (local, distributed) = (run(census.count()), run(Long.MaxValue))
+    local._1 shouldBe distributed._1
+    bits(local._2) shouldBe bits(distributed._2)
+    distributed
+  }
+
+  /** Runs the engine over (g, v) rows under `rule` on both routes and
+    * checks every pick against the sorted array of each group's non-null
+    * values (NaN sorts greatest, as in Spark). */
   private def checkAgainstModel(rows: Seq[(String, Option[Double])], rule: Long => Seq[Long]): Unit = {
     val census = rows.toDF("g", "v").filter(col("v").isNotNull)
       .groupBy("g", "v").agg(count(lit(1)).as("w"))
-    val (n, at) = OrderStatistics.pick[String](census, col("g"), Seq(col("g"), col("v")), rule)
+    val (n, at) = bothRoutes[String](census, col("g"), Seq(col("g"), col("v")), rule)
     val model = rows.collect { case (g, Some(v)) => g -> v }
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toVector).toMap
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted(Ordering.Double.TotalOrdering).toVector).toMap
     n shouldBe model.view.mapValues(_.length.toLong).toMap
     for ((g, sorted) <- model; r <- rule(sorted.length.toLong))
-      withClue(s"group $g rank $r: ") { at((g, r)) shouldBe sorted((r - 1).toInt) }
+      withClue(s"group $g rank $r: ") {
+        java.lang.Double.doubleToLongBits(at((g, r))) shouldBe
+          java.lang.Double.doubleToLongBits(sorted((r - 1).toInt))
+      }
   }
 
   private val rnd = new scala.util.Random(31)
@@ -51,7 +78,9 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
       (1 to 40).map(i => ("nulls", if (i % 3 == 0) None else Some(i.toDouble))) ++
       Seq(("dead", None), ("dead", None)) ++
       // a single-row group: every rank is rank 1
-      Seq(("one", Some(-7.0)))
+      Seq(("one", Some(-7.0))) ++
+      // NaN, which Spark sorts above every other value
+      Seq(1.0, Double.NaN, 3.0, Double.NaN, -2.0).map(v => ("nan", Some(v)))
 
   for (parts <- Seq(1, 7)) {
     test(s"disc and cont ranks match a sorted-array model at $parts shuffle partitions") {
@@ -82,7 +111,7 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
     // (0, -1) ranks the union, as TableOne's grand total does
     val rows = Seq((0, 0, 1.0), (0, 1, 2.0), (0, 0, 3.0), (0, 1, 4.0), (0, 1, 4.0))
     val census = rows.toDF("c", "si", "v").groupBy("c", "si", "v").agg(count(lit(1)).as("w"))
-    val (n, at) = OrderStatistics.pick[(Int, Int)](census,
+    val (n, at) = bothRoutes[(Int, Int)](census,
       struct(col("c").as("_1"), col("si").as("_2")), Seq(col("c"), col("v")), disc,
       (k: (Int, Int)) => Seq(k, (k._1, -1)))
     n shouldBe Map((0, 0) -> 2L, (0, 1) -> 3L, (0, -1) -> 5L)
@@ -106,5 +135,42 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
     val good = Seq(Iterator(Tally("g", 1.0, 1L, 0)), Iterator(Tally("g", 2.0, 1L, 1)))
       .flatMap(OrderStatistics.cross(_, start.updated((1, "g"), 1L), ranks, (k: String) => Seq(k)))
     OrderStatistics.resolve(good, ranks) shouldBe Map(("g", 1L) -> 1.0, ("g", 2L) -> 2.0)
+  }
+
+  test("the driver-side route still fails on a rank no row covers") {
+    val census = Seq(("g", 1.0, 1L), ("g", 2.0, 1L)).toDF("g", "v", "w")
+    val e = intercept[IllegalStateException] {
+      OrderStatistics.pick[String](census, col("g"), Seq(col("g"), col("v")),
+        n => Seq(n + 1), censusRowsAtMost = 2L)
+    }
+    e.getMessage should include("group 'g'")
+    e.getMessage should include("rank 3")
+  }
+
+  test("the driver-side route starts fewer jobs and persists nothing") {
+    val census = mixed.toDF("g", "v").filter(col("v").isNotNull)
+      .groupBy("g", "v").agg(count(lit(1)).as("w"))
+    val sc = spark.sparkContext
+    /** (jobs started, RDDs unpersisted) while `pick` runs under `bound`. */
+    def events(bound: Long): (Int, Int) = {
+      val (jobs, unpersists) = (new AtomicInteger, new AtomicInteger)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = unpersists.incrementAndGet()
+      }
+      TestListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        OrderStatistics.pick[String](census, col("g"), Seq(col("g"), col("v")), disc,
+          censusRowsAtMost = bound)
+        TestListenerBus.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      (jobs.get, unpersists.get)
+    }
+    val (localJobs, localUnpersists) = events(OrderStatistics.LocalMaxRows)
+    val (distJobs, distUnpersists) = events(Long.MaxValue)
+    localJobs should be < distJobs
+    localUnpersists shouldBe 0
+    distUnpersists should be > 0
   }
 }

@@ -169,9 +169,10 @@ class TableOneGoldenSpec extends AnyFunSuite {
     assert(totals.getAs[Double]("a_b") == 2.0)
 
     // Strata are grouped by RAW value and merged on the driver; that must
-    // equal grouping by the pre-sanitized value cell for cell, on both
-    // quartile paths: counts, extrema and quartiles exactly, means,
-    // stddevs and test statistics (merged moments) to 1e-12 relative.
+    // equal grouping by the pre-sanitized value cell for cell: counts,
+    // extrema and quartiles exactly, means, stddevs and test statistics
+    // (merged moments) to 1e-12 relative. The quartile pass reads the
+    // same stratum index on both order-statistics routes.
     // Colliding raw values: "a b"/"a_b", "café"/"caf€", null/"MISSING",
     // and "Ω"/"Ж" whose merged stratum has a single non-null x.
     val rich = ((1 to 160).map { i =>
@@ -182,12 +183,14 @@ class TableOneGoldenSpec extends AnyFunSuite {
     } ++ Seq(("Ω", null, java.lang.Double.valueOf(2.0), 0.5, "c0"),
       ("Ж", Int.box(1), null, 0.25, "c1"))).toDF("s", "k", "x", "y", "c")
     val relCells = Set("mean", "stddev")
-    def rows(df: org.apache.spark.sql.DataFrame, s: String, threshold: Long) =
+    def rows(df: org.apache.spark.sql.DataFrame, s: String) =
       TableOne.summarize(df, TableOneConfig(stratify = Some(s), cols = Seq("x", "y", "c"),
-        pValues = true, quartileSketchMaxRows = threshold))
-    for (s <- Seq("s", "k"); threshold <- Seq(0L, Long.MaxValue)) {
-      val got = rows(rich, s, threshold)
-      val want = rows(rich.withColumn(s, Sanitize.stratColumn(col(s))), s, threshold)
+        pValues = true))
+    for (s <- Seq("s", "k")) {
+      val (local, distributed) = QuartileRoutes(rich, s, Seq("x", "y"))
+      assert(local == distributed, s"stratify=$s: quartile routes diverge")
+      val got = rows(rich, s)
+      val want = rows(rich.withColumn(s, Sanitize.stratColumn(col(s))), s)
       assert(got.columns.toSeq == want.columns.toSeq)
       val cols = got.columns.toSeq
       def sorted(df: org.apache.spark.sql.DataFrame) =
@@ -196,7 +199,7 @@ class TableOneGoldenSpec extends AnyFunSuite {
       assert(g.length == w.length)
       g.zip(w).foreach { case (a, b) =>
         cols.indices.foreach { i =>
-          val what = s"stratify=$s threshold=$threshold ${a.getAs[String]("Characteristics")}/" +
+          val what = s"stratify=$s ${a.getAs[String]("Characteristics")}/" +
             s"${a.getAs[String]("Values")} ${cols(i)}: ${a.get(i)} vs ${b.get(i)}"
           (a.get(i), b.get(i)) match {
             case (x: Double, y: Double)
@@ -215,11 +218,11 @@ class TableOneGoldenSpec extends AnyFunSuite {
     val df = Seq(("A", 1.0, "x"), ("B", 2.0, "y"), ("A", 3.0, "x"), ("B", 4.0, "z"))
       .toDF("s", "num", "cat")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // quartileSketchMaxRows = 0 forces the order-statistics path, whose
-    // in-call persists are the thing this test pins down
+    // summarize takes the driver-side route at this size; the range
+    // shuffle's in-call persist is pinned down through exactQuartiles
     TableOne.summarize(df,
-      TableOneConfig(stratify = Some("s"), cols = Seq("num", "cat"), pValues = true,
-        quartileSketchMaxRows = 0L)).collect()
+      TableOneConfig(stratify = Some("s"), cols = Seq("num", "cat"), pValues = true)).collect()
+    QuartileRoutes(df, "s", Seq("num"))
     val residual = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(residual.isEmpty, s"summarize leaked cached RDDs: $residual")
   }
@@ -240,25 +243,27 @@ class TableOneGoldenSpec extends AnyFunSuite {
     assert(n.getAs[Double]("All_Patients") == 0.0)
   }
 
-  test("sketch and order-statistics quartile paths agree cell-for-cell") {
+  test("driver-side and range-shuffled quartile routes match summarize") {
     import spark.implicits._
-    // ties, skew, a null stratum, null measures, and a categorical with
-    // nulls — every cell including p-values must match across the two
-    // quartile paths
+    // ties, skew, a null stratum and null measures: both order-statistics
+    // routes must pick the same quartiles for every (column, stratum) and
+    // the grand total, and summarize's quartile cells must be those picks
     val df = (1 to 400).map { i =>
       val s = if (i % 7 == 0) null else s"g${i % 3}"
       val v: java.lang.Double = if (i % 11 == 0) null else (i % 17).toDouble
       val c = if (i % 13 == 0) null else s"cat${i % 4}"
       (s, v, i.toDouble, c)
     }.toDF("s", "a", "b", "c")
-    def run(threshold: Long) = TableOne.summarize(df,
-      TableOneConfig(stratify = Some("s"), cols = Seq("a", "b", "c"),
-        pValues = true, quartileSketchMaxRows = threshold))
-      .collect().sortBy(_.getAs[Double]("Index")).map(_.toSeq)
-    val (sketch, orderStat) = (run(Long.MaxValue), run(0L))
-    assert(sketch.length == orderStat.length)
-    sketch.zip(orderStat).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(a == b, s"row $i diverges:\n  sketch:    $a\n  orderstat: $b")
-    }
+    val (local, distributed) = QuartileRoutes(df, "s", Seq("a", "b"))
+    assert(local == distributed, s"routes diverge:\n  local:       $local\n  distributed: $distributed")
+    val out = TableOne.summarize(df,
+      TableOneConfig(stratify = Some("s"), cols = Seq("a", "b", "c"), pValues = true)).collect()
+    val slots = Seq("25th percentile", "50th percentile", "75th percentile")
+    val cells = for (c <- Seq("a", "b"); key <- None +: Seq("g0", "g1", "g2", "MISSING").map(Some(_)))
+      yield (c, key) -> slots.map { slot =>
+        out.find(r => r.getAs[String]("Characteristics") == c && r.getAs[String]("Values") == slot)
+          .get.getAs[Double](key.getOrElse("All_Patients"))
+      }
+    assert(cells.toMap == distributed)
   }
 }

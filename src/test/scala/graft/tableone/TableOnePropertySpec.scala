@@ -31,14 +31,14 @@ class TableOnePropertySpec extends AnyFunSuite with Matchers {
     (0 until n).flatMap(i => tableGen.apply(Gen.Parameters.default, Seed(42L + i)))
 
   test("stratified summary matches a naive in-memory computation") {
-    // both exact-quartile paths: the default threshold routes these tiny
-    // tables to the percentile_approx(4n) sketch; 0 forces the
-    // distributed order-statistics pass over the same generated cases
-    for (sketchMax <- Seq(Long.MaxValue, 0L); rows <- cases(8)) {
+    // summarize crosses these tiny tables' quartile census on the driver;
+    // the range-shuffled route must pick the same quartiles on every case
+    for (rows <- cases(8)) {
       val df = rows.toDF("strat", "cat", "cont")
+      val (local, distributed) = QuartileRoutes(df, "strat", Seq("cont"))
+      local shouldBe distributed
       val out = TableOne.summarize(df,
-        TableOneConfig(Some("strat"), Seq("cat", "cont"),
-          quartileSketchMaxRows = sketchMax)).collect()
+        TableOneConfig(Some("strat"), Seq("cat", "cont"))).collect()
       val byKey = out.map(r => (r.getAs[Double]("Index"), r.getAs[String]("Values")) -> r).toMap
 
       // Totals row

@@ -8,8 +8,9 @@ Reads <out dir>/result.json of a `perfbench/run.py ... --trace 1` run
 operation's span tree, op -> build | exec -> Spark job -> stage, with wall
 time, and for each stage its task CPU time, input records and task count.
 Jobs are named by their call site (`collect at TableOne.scala:410`) and
-tagged with their quartile path when they run inside `exactQuartiles` or
-`sketchQuartiles`. `--op N` prints only the N-th operation (0-based).
+tagged `exact` when they run inside `exactQuartiles` (the perfbench
+trace also has a `sketch` tag, which no current code path produces).
+`--op N` prints only the N-th operation (0-based).
 """
 import argparse
 import json
