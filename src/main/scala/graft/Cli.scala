@@ -84,6 +84,15 @@ object Cli {
       TableOneConfig(stratify = a.stratify, cols = a.cols,
         beautify = a.beautify, pValues = a.pValues))
 
+  /** Writes the summary as ONE file in its row order: CSV with a header
+    * when `path` ends in ".csv", parquet otherwise. The summary is a
+    * local relation spread over several partitions; `coalesce(1)`
+    * concatenates them in order. */
+  def write(out: DataFrame, path: String): Unit = {
+    val w = out.coalesce(1).write.mode("overwrite")
+    if (path.endsWith(".csv")) w.option("header", "true").csv(path) else w.parquet(path)
+  }
+
   def main(args: Array[String]): Unit = parse(args.toSeq) match {
     case Left(err) =>
       System.err.println(err)
@@ -100,12 +109,9 @@ object Cli {
       try {
         val out = run(spark, a)
         a.output match {
-          case Some(p) if p.endsWith(".csv") =>
-            out.write.mode("overwrite").option("header", "true").csv(p)
-            println(s"wrote CSV to $p")
           case Some(p) =>
-            out.write.mode("overwrite").parquet(p)
-            println(s"wrote parquet to $p")
+            write(out, p)
+            println(s"wrote ${if (p.endsWith(".csv")) "CSV" else "parquet"} to $p")
           case None =>
             out.show(1000, truncate = false)
         }

@@ -3658,7 +3658,9 @@ object OpsQueries {
       // variant differs in ONE pixel's gray (plus the mean shift), so
       // most (2i, 2i+1) pairs land within hamming <= 3; the oracle
       // replays the byte math and brute-forces all pairs — equal by the
-      // pigeonhole exactness of quarter banding at maxHamming 3.
+      // pigeonhole exactness of quarter banding at maxHamming 3, which
+      // holds only while every quarter bucket has <= 256 rows (aHashPairs'
+      // default maxBucketSize skips larger buckets; true at gate scale).
       val bmpHdr = lit(Multimodal.bmp24Header(8, 8))
       val base = docs(s, dir).filter(col("doc_id") % 10 === 5)
       val variants = base.select(explode(array(
@@ -3682,7 +3684,9 @@ object OpsQueries {
       // aHashPairs. Each %10==0 doc plants an original and a
       // one-byte-perturbed variant (sample 5's low byte), which flips
       // at most delta bits 4 and 5 — every planted pair lands within
-      // hamming <= 2 by construction; the oracle brute-forces all pairs.
+      // hamming <= 2 by construction; the oracle brute-forces all pairs,
+      // equal to the banded join while every quarter bucket has <= 256
+      // rows (aHashPairs' default maxBucketSize cap).
       val hdr = lit(Multimodal.wavPcm16Header(dataBytes = 130))
       val base = docs(s, dir).filter(col("doc_id") % 10 === 0)
       val variants = base.select(explode(array(
@@ -6112,7 +6116,8 @@ object OpsQueries {
       // r+g+b is storage-order invariant), bit i set iff 64*gray > total
       // (exact integers), quarters packed 16 bits each; pairs are the
       // BRUTE-FORCE a<b join — equal to the banded Spark join by the
-      // pigeonhole exactness at maxHamming 3
+      // pigeonhole exactness at maxHamming 3 while every quarter bucket
+      // has <= 256 rows (the Spark side's maxBucketSize cap)
       val quarter = (q: Int) =>
         s"sum(CASE WHEN gv.i // 16 = $q AND 64 * gv.g > tot.total " +
           s"THEN (1 << (gv.i % 16)::INT) ELSE 0 END)::INT AS q$q"
@@ -6133,7 +6138,8 @@ object OpsQueries {
     },
     "m7_audio_fingerprint" -> {
       // LE16 decode (m5's byte replay) + delta bits + quarter packing
-      // (m6's), brute-force pairs == banded pairs by pigeonhole
+      // (m6's), brute-force pairs == banded pairs by pigeonhole while
+      // every quarter bucket has <= 256 rows (the maxBucketSize cap)
       val quarter = (q: Int) =>
         s"sum(CASE WHEN (b.i - 1) // 16 = $q THEN b.bit * (1 << ((b.i - 1) % 16)::INT) ELSE 0 END)::INT AS q$q"
       val ham = (0 to 3).map(i => s"bit_count(xor(a.q$i, c.q$i))").mkString(" + ")

@@ -97,12 +97,14 @@ object SparkEntry {
         .withColumn("o_is_urgent", col("o_orderpriority") === "1-URGENT")
         .withColumn("o_price_dec", floor(col("o_totalprice")).cast("decimal(18,2)")),
       TableOneConfig(Some("o_orderstatus"), Seq("o_is_urgent", "o_price_dec", "o_orderdate"))))),
-    // All 8 numeric lineitem columns: even sf0.01's 60k rows give a
-    // quartile census bound of 8 x 60k = 480k > OrderStatistics.LocalMaxRows,
-    // so this is the query that keeps the distributed (range-shuffled)
-    // quartile route under the DuckDB hash gate at every scale; t1-t8
-    // take the driver-side route at small scales. The categorical column
-    // puts the categorical melt next to it under the same hash check.
+    // All 8 numeric lineitem columns: the widest census of the
+    // t-queries (one row per distinct (column, value, stratum)). At
+    // sf0.01 it fits OrderStatistics.LocalMaxRows, so the driver
+    // computes it; a census above that bound stays distributed. The
+    // distributed route is pinned at every size by the route-parity and
+    // >LocalMaxRows-census specs (TableOneGoldenSpec,
+    // TableOnePropertySpec). The categorical column puts the categorical
+    // cells next to it under the same hash check.
     "t9_tableone_orderstat" -> ((s, dir) => roundDoubles(TableOne.summarize(
       table(s, dir, "lineitem"),
       TableOneConfig(Some("l_linestatus"), "l_returnflag" +: t9Numeric)))),

@@ -8,10 +8,10 @@ import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
 /** Exact order statistics and prefix-offset ranking over range
-  * partitions — the one implementation behind TableOne's exact
-  * quartiles, the grouped `percentile_cont` path, the ROC/PR/DeLong
-  * AUCs, the KS and Wasserstein-1 drift statistics, the JSONL shard
-  * assignment and the padding-efficiency batch ranks.
+  * partitions — the one implementation behind TableOne's quartiles,
+  * extrema and moments, the grouped `percentile_cont` path, the
+  * ROC/PR/DeLong AUCs, the KS and Wasserstein-1 drift statistics, the
+  * JSONL shard assignment and the padding-efficiency batch ranks.
   *
   * The construction: range-partition the input on its order keys and
   * sort within partitions, so partition ids follow the global order;
@@ -118,72 +118,120 @@ private[graft] object OrderStatistics {
     * the driver instead of range-partitioning it. */
   final val LocalMaxRows = 400000L
 
-  /** EXACT order statistics per group. `census` carries a double `v` and
-    * a long weight `w` per row, plus whatever `key` (the group, decoded as
-    * `K`) and `order` read; within every group, `order` must sort rows by
-    * `v`. A row's weight counts toward each group in `levels(k)`, so one
-    * pass serves nested groupings. For each group with total weight n,
-    * `ranks(n)` names the 1-based ranks to pick — the caller's rank rule.
-    * Returns each group's n and the value at every requested
+  /** EXACT order statistics per group, with each group's [[Moments]].
+    * `census` carries a double `v` and a long weight `w` per row, plus
+    * whatever `key` (the group, decoded as `K`) and `order` read; within
+    * every group, `order` must sort rows by `v`. A row's weight counts
+    * toward each group in `levels(k)`, so one pass serves nested
+    * groupings. For each group with total weight n, `ranks(n)` names the
+    * 1-based ranks to pick — the caller's rank rule. Returns each group's
+    * moments (n among them) and the value at every requested
     * (group, rank); a requested rank that got no pick throws (see
     * [[resolve]]).
     *
     * `censusRowsAtMost` is an upper bound the caller already knows on the
     * census row count. At or under [[LocalMaxRows]] the census is sorted
     * into one partition and collected, and the driver crosses it from
-    * zero offsets — what a range shuffle saves in parallelism costs more
-    * in scheduling round-trips on a census that small. Jobs: local, the
-    * one sorted collect; distributed, the range sampling, one subtotal
-    * collect and one pick collect. */
+    * zero offsets ([[crossSorted]]) — what a range shuffle saves in
+    * parallelism costs more in scheduling round-trips on a census that
+    * small. Above it every range partition is crossed where it lives and
+    * the driver merges the partitions' moments in partition order. Jobs:
+    * local, the one sorted collect; distributed, the range sampling, one
+    * subtotal collect and one pick collect. */
   def pick[K: TypeTag](census: DataFrame, key: Column, order: Seq[Column],
                        ranks: Long => Seq[Long],
                        levels: K => Seq[K] = (k: K) => Seq(k),
                        censusRowsAtMost: Long = Long.MaxValue)
-      : (Map[K, Long], Map[(K, Long), Double]) = {
+      : (Map[K, Moments], Map[(K, Long), Double]) = {
     val spark = census.sparkSession
     import spark.implicits._
     def tallies(parts: DataFrame) =
       parts.select(key.as("k"), col("v"), col("w"), col(Pid).as("pid")).as[Tally[K]]
-    def wanted(n: Map[K, Long]) = n.map { case (k, nk) => k -> ranks(nk).distinct.toArray }
-    if (censusRowsAtMost <= LocalMaxRows) {
+    if (censusRowsAtMost <= LocalMaxRows)
       // Spark's sort, not the driver's: NaN and -0.0 order as in the
       // distributed route
-      val rows = tallies(census.coalesce(1).sortWithinPartitions(order: _*)
-        .withColumn(Pid, lit(0))).collect()
-      val n = rows.toSeq.flatMap(t => levels(t.k).map(_ -> t.w)).groupMapReduce(_._1)(_._2)(_ + _)
-      val want = wanted(n)
-      (n, resolve(cross(rows.iterator, Map.empty[(Int, K), Long], want, levels).toSeq, want))
-    } else grouped[K, (Map[K, Long], Map[(K, Long), Double])](
+      crossSorted(tallies(census.coalesce(1).sortWithinPartitions(order: _*)
+        .withColumn(Pid, lit(0))).collect().toSeq, ranks, levels)
+    else grouped[K, (Map[K, Moments], Map[(K, Long), Double])](
         census, key, order, Seq(col("w"))) { (parts, sums) =>
       val off = sums.through(levels)
       val start = off.start.map { case (pk, s) => pk -> s(0) }
-      val n = off.total.map { case (k, t) => k -> t(0) }
-      val want = wanted(n)
-      val picks = tallies(parts).mapPartitions(cross(_, start, want, levels)).collect()
-      (n, resolve(picks, want))
+      val want = wanted(off.total.map { case (k, t) => k -> t(0) }, ranks)
+      val crossed = tallies(parts).mapPartitions { rows =>
+        val it = rows.buffered
+        if (it.hasNext) Iterator.single(it.head.pid -> cross(it, start, want, levels)) else Iterator.empty
+      }.collect().sortBy(_._1).map(_._2)
+      (crossed.toSeq.flatMap(_.moments).groupMapReduce(_._1)(_._2)(_ + _),
+        resolve(crossed.flatMap(_.picks), want))
     }
   }
+
+  private def wanted[K](n: Map[K, Long], ranks: Long => Seq[Long]): Map[K, Array[Long]] =
+    n.map { case (k, nk) => k -> ranks(nk).distinct.toArray }
+
+  /** [[pick]] over a census already on the driver, sorted as its `order`
+    * sorts it: one partition crossed from zero offsets. */
+  def crossSorted[K](rows: Seq[Tally[K]], ranks: Long => Seq[Long], levels: K => Seq[K])
+      : (Map[K, Moments], Map[(K, Long), Double]) = {
+    val n = rows.flatMap(t => levels(t.k).map(_ -> t.w)).groupMapReduce(_._1)(_._2)(_ + _)
+    val want = wanted(n, ranks)
+    val crossed = cross(rows.iterator, Map.empty[(Int, K), Long], want, levels)
+    (crossed.moments.toMap, resolve(crossed.picks, want))
+  }
+
+  /** Weighted count `n`, `sum` and `m2` (the sum of squared deviations
+    * from the mean) of a group's values. `+` merges two disjoint parts
+    * with Chan et al.'s pairwise update: a fold over a sorted census and
+    * a merge of per-partition folds agree exactly in n and up to
+    * rounding in sum and m2. Like Spark's `var_samp`, any NaN or
+    * infinite value makes m2 NaN. */
+  final case class Moments(n: Long, sum: Double, m2: Double) {
+    def mean: Double = sum / n
+    /** Sample (n − 1) variance; NaN below two values. */
+    def variance: Double = if (n > 1L) m2 / (n - 1) else Double.NaN
+    def +(o: Moments): Moments =
+      if (n == 0L) o
+      else if (o.n == 0L) this
+      else {
+        val nn = n + o.n
+        val d = o.mean - mean
+        Moments(nn, sum + o.sum, m2 + o.m2 + d * d * n * o.n / nn)
+      }
+  }
+
+  object Moments {
+    /** `w` copies of `v`: no spread, unless `v` is NaN or infinite. */
+    def of(v: Double, w: Long): Moments = Moments(w, v * w, (v - v) * w)
+  }
+
+  /** What crossing one range partition yields: its picks and each
+    * group's [[Moments]] over the partition's rows. */
+  final case class Crossed[K](picks: Seq[Pick[K]], moments: Seq[(K, Moments)])
 
   /** The crossing step of one range partition: rows sorted as the pick
     * pass sorts them, each group's running weight seeded from its
     * partition's `start` offset; a row whose running weight crosses a
     * wanted rank (before < rank <= after) picks its value for that rank.
-    * Pure — a partition's picks depend only on its rows and the offsets. */
+    * The same walk folds each group's moments in row order. Pure — a
+    * partition's result depends only on its rows and the offsets. */
   def cross[K](rows: Iterator[Tally[K]], start: Map[(Int, K), Long],
-               ranks: Map[K, Array[Long]], levels: K => Seq[K]): Iterator[Pick[K]] = {
+               ranks: Map[K, Array[Long]], levels: K => Seq[K]): Crossed[K] = {
     val cum = mutable.HashMap.empty[K, Long]
+    val moments = mutable.HashMap.empty[K, Moments]
     val out = mutable.ArrayBuffer.empty[Pick[K]]
     rows.foreach { t =>
       levels(t.k).foreach { g =>
         val before = cum.getOrElse(g, start.getOrElse((t.pid, g), 0L))
         val after = before + t.w
         cum(g) = after
+        val m = Moments.of(t.v, t.w)
+        moments(g) = moments.get(g).fold(m)(_ + m)
         ranks.getOrElse(g, Array.emptyLongArray).foreach { r =>
           if (before < r && r <= after) out += Pick(g, r, t.v)
         }
       }
     }
-    out.iterator
+    Crossed(out.toSeq, moments.toSeq)
   }
 
   /** Indexes the picks by (group, rank) and fails on any wanted rank that

@@ -110,7 +110,7 @@ object Quantiles {
       totals.keys.toSeq.filter(_ == null)
     val rows: Seq[Row] = groupsSorted.map { g =>
       val qs = ps.map { case (_, p) =>
-        val (lo, frac) = position(totals(g), p)
+        val (lo, frac) = position(totals(g).n, p)
         val vlo = at((g, lo))
         // identical arithmetic as Spark's percentile and DuckDB's
         // quantile_cont: lower + (higher − lower) · frac

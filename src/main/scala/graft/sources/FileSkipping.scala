@@ -503,16 +503,21 @@ object FileSkipping {
     // spark.sql.optimizer.runtime.bloomFilter.maxNumBits (default 64 Mi
     // bits ≈ 7 M rows/file at fpp 0.01) — above that the realized fpp
     // would quietly degrade and the prune rate with it. When our sizing
-    // exceeds the cap, the build runs in a CLONED session (own SQLConf,
+    // exceeds the cap, the build runs in a NEW session (own SQLConf,
     // shared SparkContext and cache): a set-then-restore on the caller's
     // session would be visible to every query another thread plans in
     // the window — a session-global race for a build-local need.
+    // `newSession` starts from the SparkConf defaults, so the caller's
+    // runtime SQL confs (e.g. parquet rebase and timestamp semantics) are
+    // copied in first: the build reads the directory as the caller does.
     val maxBitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
     val raiseCap = numBits > spark.conf.get(maxBitsKey).toLong
     val buildSession = if (raiseCap) {
       val s2 = spark.newSession()
+      // only runtime-set confs differ, and those are settable
+      spark.conf.getAll.foreach { case (k, v) => if (!s2.conf.getOption(k).contains(v)) s2.conf.set(k, v) }
       s2.conf.set(maxBitsKey, numBits.toString)
-      System.err.println(s"[bloom] $table: cloned build session with $maxBitsKey" +
+      System.err.println(s"[bloom] $table: build session with $maxBitsKey" +
         s"=$numBits (${perFile} rows/file at fpp=$fpp)")
       s2
     } else spark

@@ -403,7 +403,7 @@ object EventPipeline {
     * every micro-batch is summarized as a full Table 1 and handed to
     * `sink` with its batch id. foreachBatch is the idiomatic bridge for
     * batch-only logic (summarize collects aggregates eagerly, which a
-    * continuous query cannot) — each batch runs the same two-pass plan. */
+    * continuous query cannot) — each batch runs the same one-scan plan. */
   def summarizePerBatch(events: DataFrame, cfg: graft.tableone.TableOneConfig)
                        (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream

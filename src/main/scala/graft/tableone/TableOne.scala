@@ -1,10 +1,11 @@
 package graft.tableone
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.OrderStatistics
+import graft.ops.OrderStatistics.{LocalMaxRows, Moments, Tally}
 
 import scala.jdk.CollectionConverters._
 
@@ -24,10 +25,10 @@ import scala.jdk.CollectionConverters._
   *                 column would blow up the output schema and driver
   *                 memory long before executors struggle — fail fast
   *                 with a clear message instead. The cap counts distinct
-  *                 RAW values (null counts as one), exactly the rows pass
-  *                 1 collects to the driver; where several raw values
-  *                 sanitize to one name (e.g. "a b" and "a_b") the output
-  *                 has fewer strata than the cap counted.
+  *                 RAW values (null counts as one), exactly the census's
+  *                 row-counter entries the driver reads; where several
+  *                 raw values sanitize to one name (e.g. "a b" and "a_b")
+  *                 the output has fewer strata than the cap counted.
   */
 final case class TableOneConfig(
     stratify: Option[String] = None,
@@ -45,36 +46,32 @@ final case class TableOneConfig(
   * All_Patients, All_Patients_%` then per-stratum `<v>, <v>_%` pairs, then
   * (pValues) `p_value, test_value, test_name`. `Index` is the double sort
   * key: integer part = variable position (0 = Totals), fraction = statistic
-  * slot (continuous .1-.8) or category rank * 0.01.
+  * slot (continuous .1-.8) or category rank * 0.01. Rows come in
+  * `orderBy("Index", "Values")` order.
   *
   * Execution design (vs the reference's >=10 jobs per continuous column,
-  * SURVEY.md §3.5): at most THREE distributed passes regardless of column
-  * count or stratification —
-  *   1. ONE `groupBy(raw stratum).agg` whose rows carry each stratum's
-  *      count, continuous stats and the (n, mean, var_samp) moments that
-  *      feed the t-test/ANOVA; the driver names the strata, merges raw
-  *      values that sanitize to one name, and combines the grand total
-  *      (unstratified: one global `agg`),
-  *   2. ONE exact-quartile pass for ALL continuous columns at once (a
-  *      value histogram handed to the order-statistics engine, which
-  *      crosses a small one on the driver and range-partitions a large
-  *      one; skipped when no continuous value is non-null),
-  *   3. ONE melt + `groupBy(variable, value)` aggregation for ALL
-  *      categorical columns (explicit per-stratum conditional counts — no
-  *      pivot distinct-value job).
-  * Passes 2 and 3 key strata by an int index, never by name: pass 1
-  * enumerated every raw stratum value, so one map-literal lookup per row
-  * replaces a per-row string sanitize (a value that races in after pass
-  * 1 maps to -1 and counts toward the totals only). The inferential
-  * statistics are computed on the driver from those collected
-  * aggregates (StatTests) — raw rows are never collected,
-  * unlike the reference's per-column `toPandas()`
+  * SURVEY.md §3.5): ONE scan and ONE hash aggregation regardless of
+  * column count or stratification — the census. Every input row explodes
+  * into a row-counter entry, one (column, value) entry per continuous
+  * column and one (column, category) entry per categorical column, and
+  * `groupBy(c, raw stratum, v, s).count` tallies them. The census is the
+  * data's distinct-value footprint, so it is usually small: at or under
+  * [[graft.ops.OrderStatistics.LocalMaxRows]] rows the driver collects
+  * it and computes every cell — strata names and sizes, counts, min/max
+  * and exact quartiles (order statistics over the sorted tallies),
+  * mean/stddev and the t-test/ANOVA moments (one weighted fold over the
+  * same tallies), categorical counts and chi-square — and returns the
+  * table as a LocalRelation, which consumes without a job. A larger
+  * census stays distributed for the call: its row counters and
+  * categorical cells are collected, and the continuous tallies are
+  * range-partitioned through [[exactQuartiles]]. Strata are keyed by
+  * their RAW value and named on the driver, merging raw values that
+  * sanitize to one name; raw rows are never collected, unlike the
+  * reference's per-column `toPandas()`
   * (/root/reference/tableone_pyspark.py:453, :500).
   */
 object TableOne {
   import Sanitize.Missing
-
-  private val StratCol = "__graft_strat"
 
   /** Continuous statistic slots: (Values label, Index fraction), in output
     * order (/root/reference/tableone_pyspark.py:325-434). */
@@ -82,67 +79,46 @@ object TableOne {
     "n" -> 0.1, "min" -> 0.2, "max" -> 0.3, "mean" -> 0.4, "stddev" -> 0.5,
     "25th percentile" -> 0.6, "50th percentile" -> 0.7, "75th percentile" -> 0.8)
 
-  /** Group key of a column's grand total in [[exactQuartiles]]: (col
-    * position, TotalSi). Stratum positions are >= 0; -1 is a stratum that
-    * raced in after pass 1. */
-  private final val TotalSi = -2
+  /** 1-based rank `ceil(k*n/4)` of quartile k in integer-exact Long math
+    * — the same pick as DuckDB's `quantile_disc`, with no float-epsilon
+    * tie-break risk against the oracle. */
+  private def quartileRank(k: Long)(n: Long): Long = (k * n + 3) / 4
 
-  /** 1-based ranks `ceil(k*n/4)`, k = 1..3, in integer-exact Long math —
-    * no float-epsilon tie-break risk against the oracle. */
-  private def quartileRanks(n: Long): Seq[Long] = Seq(1L, 2L, 3L).map(k => (k * n + 3) / 4)
+  /** The order-statistic slots and their rank among n values. NaN sorts
+    * greatest (Spark's order), so rank n is Spark's `max` and rank 1 its
+    * `min`. */
+  private val RankSlots: Map[String, Long => Long] = Map(
+    "min" -> (_ => 1L), "max" -> (n => n), "25th percentile" -> quartileRank(1),
+    "50th percentile" -> quartileRank(2), "75th percentile" -> quartileRank(3))
+  private def statRanks(n: Long): Seq[Long] = RankSlots.values.map(_(n)).toSeq
 
-  /** EXACT discrete quartiles (the element at 1-based rank `ceil(k*n/4)`
-    * — the same pick as DuckDB's `quantile_disc`) for every continuous
-    * column, every stratum, AND the grand total, via order statistics:
-    *
-    *   1. melt -> groupBy (col, stratum, value).count — ONE shuffle with
-    *      map-side combine; the histogram is the data's distinct-value
-    *      footprint, never bigger than the input.
-    *   2. [[graft.ops.OrderStatistics.pick]] orders it on (col, value):
-    *      all strata rows of one (col, value) — and all its duplicates —
-    *      are adjacent, so each stratum AND the column's grand total read
-    *      their ranks off the same ordered census, with no second
-    *      histogram. A histogram row counts toward its stratum group and
-    *      its column's total group. `censusRowsAtMost` bounds the
-    *      histogram's rows (the caller passes Σ non-null n); at or under
-    *      [[graft.ops.OrderStatistics.LocalMaxRows]] the driver crosses
-    *      it, above that a range shuffle does.
+  /** Statistics group of a continuous column: (variable position, stratum
+    * name), or (position, None) for the column's grand total. Census rows
+    * carry the RAW stratum key in the second field until `levels` names it. */
+  private type Key = (Int, Option[String])
+
+  /** One collected census row: variable position `c` (0 = the row
+    * counter), raw stratum key `r`, continuous value `v` or category `s`,
+    * weight `w`, and `o` = [[Sanitize.categoryOrderKey]] of `s`. */
+  private final case class Entry(c: Int, r: String, v: Option[Double], s: Option[String], w: Long, o: Int)
+
+  /** EXACT order statistics and moments of every continuous column, per
+    * stratum and in total, from the distributed census's non-null
+    * continuous tallies: [[graft.ops.OrderStatistics.pick]] range-orders
+    * them on (column, value, raw stratum), so each stratum AND the
+    * column's grand total read their ranks off the same ordered census
+    * (`levels` counts a tally toward both), and each range partition
+    * folds the groups' moments that the driver merges in partition order.
     *
     * Scale posture: no quantile sketch (the reference's rowcount-accuracy
     * sketch serializes a near-copy of the column into a single-threaded
     * final-stage merge — 30 s/group at sf1's 6M rows), and no
     * per-column ordered window (a `partitionBy(col)` running sum is one
     * task per column no matter the cluster). */
-  private[tableone] def exactQuartiles(
-      df: DataFrame,
-      stratum: Option[Column],
-      strataNames: Seq[String],
-      contCols: Seq[String],
-      censusRowsAtMost: Long): Map[(String, Option[String]), Array[Double]] = {
-    // posexplode of a bare double array: the column is identified by its
-    // POSITION (a 4-byte int), not its name — strings in the melt key
-    // made the generate + hash-aggregate pass several times slower at
-    // sf1. Names are restored from contCols(idx) after the collect. The
-    // stratum is likewise the int index `stratum` computes.
-    val kvs = array(contCols.map(c => col(c).cast(DoubleType)): _*)
-    val melted = df
-      .select(stratum.getOrElse(lit(0)).as("si"), posexplode(kvs).as(Seq("c", "v")))
-      .filter(col("v").isNotNull)
-    val hist = melted.groupBy("c", "si", "v").agg(count(lit(1)).as("w"))
-    // per-stratum groups are pure overhead when there are no strata
-    val levels: ((Int, Int)) => Seq[(Int, Int)] =
-      if (stratum.isDefined) k => Seq(k, (k._1, TotalSi)) else k => Seq((k._1, TotalSi))
-    val (n, at) = OrderStatistics.pick[(Int, Int)](hist,
-      struct(col("c").as("_1"), col("si").as("_2")), Seq(col("c"), col("v")),
-      quartileRanks, levels, censusRowsAtMost)
-    n.flatMap { case (k @ (c, si), nk) =>
-      // a raced-in stratum (si = -1, no output column) has no entry
-      val key =
-        if (si == TotalSi) Some((contCols(c), None))
-        else strataNames.lift(si).map(s => (contCols(c), Some(s)))
-      key.map(_ -> quartileRanks(nk).map(r => at((k, r))).toArray)
-    }
-  }
+  private def exactQuartiles(tallies: DataFrame, levels: Key => Seq[Key])
+      : (Map[Key, Moments], Map[(Key, Long), Double]) =
+    OrderStatistics.pick[Key](tallies, struct(col("c").as("_1"), col("r").as("_2")),
+      Seq(col("c"), col("v"), col("r")), statRanks, levels)
 
   /** One-row `(q25, q50, q75)` frame for a single numeric column, exact
     * at any scale: the distinct-value histogram (`groupBy(value).count`,
@@ -155,78 +131,33 @@ object TableOne {
     val hist = df.filter(col(c).isNotNull)
       .groupBy(col(c).cast(DoubleType).as("v")).agg(count(lit(1)).as("w")).persist()
     try {
-      val (n, at) = OrderStatistics.pick[Long](hist, lit(0L), Seq(col("v")), quartileRanks,
+      val ranks = (n: Long) => Seq(1L, 2L, 3L).map(quartileRank(_)(n))
+      val (m, at) = OrderStatistics.pick[Long](hist, lit(0L), Seq(col("v")), ranks,
         censusRowsAtMost = hist.count())
-      val qs = n.get(0L).fold(Seq.fill(3)(lit(null)))(nk => quartileRanks(nk).map(r => lit(at((0L, r)))))
+      val qs = m.get(0L).fold(Seq.fill(3)(lit(null)))(g => ranks(g.n).map(r => lit(at((0L, r)))))
       val dt = df.schema(c).dataType
       df.sparkSession.range(1).select(
         qs.zip(Seq("q25", "q50", "q75")).map { case (q, name) => q.cast(dt).as(name) }: _*)
     } finally hist.unpersist()
   }
 
-  /** One statistics row merged on the driver from pass-1 aggregate rows
-    * over disjoint row sets: the grand total from the strata (in display
-    * order), and one stratum from the raw values that sanitize to its
-    * name (in raw-value order) — a fixed order, so FP accumulation is
-    * deterministic. Counts and sums add, extrema reduce
-    * (NaN-aware to match Spark's NaN-sorts-greatest ordering: a part
-    * whose min is NaN — all-NaN values — must not poison the merged min,
-    * while a NaN max must win, as it does inside Spark's own max), the
-    * mean is merged sum / merged n, and the sample variance merges
-    * per-part (n, mean, M2 = var*(n-1)) with the Chan/Welford update.
-    * n=1 parts contribute M2=0 (Spark reports their var_samp as null,
-    * but a single point has zero spread); the merged var/stddev is null
-    * at merged n=1, matching var_samp/stddev_samp on the raw rows. */
-  private def mergeStatRows(stratRows: Seq[Row], contCols: Seq[String]): Row = {
-    val schema = stratRows.head.schema
-    def num(r: Row, f: String): Option[Double] = r.getAs[Any](f) match {
-      case null      => None
-      case n: Number => Some(n.doubleValue())
-      case o         => Some(o.toString.toDouble)
-    }
-    val cells = new Array[Any](schema.length)
-    def set(f: String, v: Any): Unit = cells(schema.fieldIndex(f)) = v
-    set("#rows", stratRows.map(_.getAs[Long]("#rows")).sum)
-    contCols.foreach { c =>
-      val parts = stratRows.flatMap { r =>
-        val n = r.getAs[Long](s"$c#n")
-        if (n == 0L) None
-        else Some((n, num(r, s"$c#mean").getOrElse(Double.NaN),
-          if (n == 1L) 0.0
-          else num(r, s"$c#var").map(_ * (n - 1)).getOrElse(Double.NaN)))
-      }
-      val n = parts.map(_._1).sum
-      set(s"$c#n", n)
-      if (n > 0L) {
-        val mins = stratRows.flatMap(num(_, s"$c#min"))
-        val maxs = stratRows.flatMap(num(_, s"$c#max"))
-        set(s"$c#min", mins.reduce((a, b) =>
-          if (a.isNaN) b else if (b.isNaN) a else math.min(a, b)))
-        set(s"$c#max", maxs.reduce((a, b) => math.max(a, b)))
-        val totalSum = stratRows.flatMap(num(_, s"$c#sum")).sum
-        set(s"$c#sum", totalSum)
-        set(s"$c#mean", totalSum / n)
-        val (_, _, m2) = parts.foldLeft((0L, 0.0, 0.0)) {
-          case ((na, ma, m2a), (nb, mb, m2b)) =>
-            if (na == 0L) (nb, mb, m2b)
-            else {
-              val nn = na + nb
-              val d = mb - ma
-              (nn, ma + d * nb / nn, m2a + m2b + d * d * na * nb / nn)
-            }
-        }
-        if (n > 1L) {
-          val v = m2 / (n - 1)
-          set(s"$c#var", v)
-          set(s"$c#stddev", math.sqrt(v))
-        }
-      }
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(cells, schema)
-  }
+  /** Spark's string order: UTF-8 bytes, i.e. code point order, which
+    * Java's UTF-16 `String` order breaks for supplementary characters. */
+  private val SparkStringOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 
-  def summarize(df: DataFrame, cfg: TableOneConfig): DataFrame = {
+  /** Spark's `orderBy("Index", "Values")` on the driver. */
+  private val OutputOrder: Ordering[(Double, String)] =
+    Ordering.Tuple2(Ordering.Double.TotalOrdering, SparkStringOrder)
+
+  def summarize(df: DataFrame, cfg: TableOneConfig): DataFrame = summarize(df, cfg, LocalMaxRows)
+
+  /** [[summarize]] with the census row count up to which the driver
+    * computes every cell; specs lower it to drive the distributed route
+    * on small inputs. */
+  private[tableone] def summarize(df: DataFrame, cfg: TableOneConfig, localMaxRows: Long): DataFrame = {
     val spark = df.sparkSession
+    import spark.implicits._
     val pValues = cfg.pValues && cfg.stratify.isDefined
     if (cfg.pValues && cfg.stratify.isEmpty)
       Console.err.println("[tableone] p_values forced off: no stratification column")
@@ -239,108 +170,84 @@ object TableOne {
     cfg.stratify.foreach { s =>
       require(schema.fieldNames.contains(s), s"stratification column not in schema: $s")
     }
-    sealed trait Kind
-    case object Cat extends Kind
-    case object Cont extends Kind
     // Type dispatch (beyond the reference's string/numeric-only handling,
     // tableone_pyspark.py:215-217): booleans are a natural two-category
-    // variable (cast to "true"/"false" in the melt); DecimalType is a
+    // variable (cast to "true"/"false" in the census); DecimalType is a
     // NumericType, so decimal measures get the full continuous treatment
-    // (stats are cast to double on the way out); date/timestamp and any
+    // (values are cast to double in the census); date/timestamp and any
     // other type warn and skip — there is no defensible default summary.
-    val analyzed: Seq[(String, Kind)] = cfg.cols.flatMap { c =>
+    val analyzed: Seq[(String, Boolean)] = cfg.cols.flatMap { c =>
       schema(c).dataType match {
-        case StringType | BooleanType => Some(c -> (Cat: Kind))
-        case _: NumericType           => Some(c -> (Cont: Kind))
+        case StringType | BooleanType => Some(c -> false)
+        case _: NumericType           => Some(c -> true)
         case other =>
           Console.err.println(s"[tableone] unsupported column type $c:$other — skipped")
           None
       }
     }
-    val catCols = analyzed.collect { case (c, Cat) => c }
-    val contCols = analyzed.collect { case (c, Cont) => c }
-    // Variable position in the output (1-based; 0 is the Totals row).
-    val varIdx: Map[String, Int] = analyzed.map(_._1).zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
+    // (name, variable position): 1-based; 0 is the Totals row and the
+    // census's row counter
+    val positioned = analyzed.zipWithIndex.map { case ((c, cont), i) => (c, i + 1, cont) }
+    val contCols = positioned.collect { case (c, i, true) => c -> i }
+    val catCols = positioned.collect { case (c, i, false) => c -> i }
 
-    // --- pass 1: ONE aggregation job yields the global row (total count
-    // + every continuous column's overall stats) AND, when stratified,
-    // each stratum's row count + stats + the (n, mean, var) test moments.
-    // Quartiles never ride in this job: a high-accuracy sketch's
-    // final-stage merge is single-threaded per group and dominated the
-    // whole summary at sf1 (6M rows: 99 s of a 3 s query's work), so
-    // pass 2 computes them on their own.
-    def statExprs(withMoments: Boolean): Seq[Column] = contCols.flatMap { c =>
-      val base = Seq(
-        count(col(c)).as(s"$c#n"),
-        min(col(c)).cast(DoubleType).as(s"$c#min"),
-        max(col(c)).cast(DoubleType).as(s"$c#max"),
-        avg(col(c)).as(s"$c#mean"),
-        stddev(col(c)).as(s"$c#stddev"))
-      if (withMoments)
-        base ++ Seq(var_samp(col(c)).as(s"$c#var"),
-          sum(col(c)).cast(DoubleType).as(s"$c#sum"))
-      else base
-    }
+    // --- the census: ONE scan, ONE aggregation -------------------------
+    def entry(c: Int, v: Column, s: Column) =
+      struct(lit(c).as("c"), v.cast(DoubleType).as("v"), s.cast(StringType).as("s"))
+    // cast covers BooleanType categoricals ("true"/"false"); no-op for strings
+    val entries = entry(0, lit(null), lit(null)) +:
+      (contCols.map { case (c, i) => entry(i, col(c), lit(null)) } ++
+        catCols.map { case (c, i) => entry(i, lit(null), coalesce(col(c).cast(StringType), lit(Missing))) })
+    val census = df
+      .select(cfg.stratify.fold(lit(""))(s => Sanitize.rawKey(col(s))).as("r"), explode(array(entries: _*)).as("e"))
+      .groupBy(col("e.c").as("c"), col("r"), col("e.v").as("v"), col("e.s").as("s"))
+      .agg(count(lit(1)).as("w"))
+      .withColumn("o", Sanitize.categoryOrderKey(col("s")))
+    // Collects at most `atMost` + 1 census rows: one more than fits.
+    def upTo(d: DataFrame, atMost: Long): Seq[Entry] =
+      d.limit((atMost + 1).min(Int.MaxValue).toInt).as[Entry].collect().toSeq
+    val firstRows = upTo(census, localMaxRows)
+    val onDriver = firstRows.length <= localMaxRows
+    // A census too large for the driver stays distributed for this call.
+    if (!onDriver) census.persist()
+    val (names, counters, cats, (moments, at)) = try {
+      val counters =
+        if (onDriver) firstRows.filter(_.c == 0) else upTo(census.filter(col("c") === 0), cfg.maxStrata)
+      cfg.stratify.foreach { s =>
+        require(counters.length <= cfg.maxStrata,
+          s"stratification column '$s' has more than ${cfg.maxStrata} distinct values; " +
+            "each stratum becomes two output columns — raise maxStrata only if that is intended")
+      }
+      // raw stratum key -> stratum name (raw values sharing a name merge);
+      // every census row's key is a counter's: they share one scan
+      val names = counters.map(e => e.r -> Sanitize.stratValue(e.r)).toMap
+      val levels: Key => Seq[Key] =
+        if (cfg.stratify.isEmpty) k => Seq((k._1, None))
+        else k => Seq((k._1, k._2.map(names)), (k._1, None))
+      if (onDriver) {
+        // sorted as the distributed route sorts: NaN greatest; the
+        // grouping already turned -0.0 into 0.0
+        val tallies = firstRows.collect { case Entry(c, r, Some(v), _, w, _) => Tally[Key]((c, Some(r)), v, w, 0) }
+          .sorted(Ordering.by((t: Tally[Key]) => (t.k._1, t.v, t.k._2.get))(
+            Ordering.Tuple3(Ordering.Int, Ordering.Double.TotalOrdering, Ordering.String)))
+        (names, counters, firstRows.filter(_.s.isDefined), OrderStatistics.crossSorted(tallies, statRanks, levels))
+      } else {
+        val cats = upTo(census.filter(col("s").isNotNull), LocalMaxRows)
+        require(cats.length <= LocalMaxRows,
+          s"categorical columns have more than $LocalMaxRows (variable, category, stratum) cells; " +
+            "each category becomes an output row — summarize fewer or coarser categorical columns")
+        (names, counters, cats,
+          if (contCols.isEmpty) (Map.empty[Key, Moments], Map.empty[(Key, Long), Double])
+          else exactQuartiles(census.filter(col("v").isNotNull), levels))
+      }
+    } finally if (!onDriver) census.unpersist()
 
-    case class Stratum(name: String, rows: Long, stats: Row)
-    def maxStrataGuard(found: Int): Unit = require(found <= cfg.maxStrata,
-      s"stratification column '${cfg.stratify.get}' has more than ${cfg.maxStrata} distinct values; " +
-        "each stratum becomes two output columns — raise maxStrata only if that is intended")
-    // rawToSi: raw stratum key -> position of its stratum in `strata`
-    val (globalRow: Row, strata: Seq[Stratum], rawToSi: Map[String, Int]) = cfg.stratify match {
-      case None =>
-        val g = df.agg(count(lit(1)).as("#rows"), statExprs(withMoments = false): _*).head()
-        (g, Nil, Map.empty[String, Int])
-      case Some(s) =>
-        // ONE aggregate row per RAW stratum value; the driver names each
-        // (Sanitize.stratValue on a handful of values instead of a string
-        // transform on every row), merges raw values that share a name,
-        // and combines the grand total (counts/sums add, extrema reduce,
-        // variances merge with the Chan/Welford update). A rollup would
-        // feed every input row into TWO grouping sets — measured 3.5 s
-        // vs 1.6 s for this pass at sf1 — to produce a total the driver
-        // derives from a handful of stratum rows for free.
-        val rows = df
-          .groupBy(Sanitize.rawKey(col(s)).as(StratCol))
-          .agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*)
-          .limit(cfg.maxStrata + 1)
-          .collect()
-        maxStrataGuard(rows.length)
-        if (rows.isEmpty) // empty input: zero total, no strata
-          (df.agg(count(lit(1)).as("#rows"), statExprs(withMoments = true): _*).head(), Nil,
-            Map.empty[String, Int])
-        else {
-          def raw(r: Row) = r.getAs[String](StratCol)
-          val byName = rows.sortBy(raw).groupBy(r => Sanitize.stratValue(raw(r)))
-          val ordered = Sanitize.orderStrata(byName.keys.toSeq)
-          val merged = ordered.map { name =>
-            val parts = byName(name)
-            val r = if (parts.length == 1) parts.head else mergeStatRows(parts.toSeq, contCols)
-            Stratum(name, r.getAs[Long]("#rows"), r)
-          }
-          val si = ordered.zipWithIndex.toMap
-          (mergeStatRows(merged.map(_.stats), contCols), merged,
-            byName.flatMap { case (name, parts) => parts.iterator.map(raw(_) -> si(name)) })
-        }
-    }
-    // Per-row stratum index for the passes below; a raw value that raced
-    // in after pass 1 maps to -1: it counts toward the totals only.
-    val stratum: Option[Column] = cfg.stratify.map(s =>
-      coalesce(element_at(typedLit(rawToSi), Sanitize.rawKey(col(s))), lit(-1)))
-    val total: Long = globalRow.getAs[Long]("#rows")
-    val stratNames = strata.map(_.name)
-    val globalStats: Option[Row] = if (contCols.isEmpty) None else Some(globalRow)
-
-    // --- pass 2: EXACT quartiles for every continuous column and every
-    // stratum + the total. Pass 1's non-null counts bound the quartile
-    // histogram's rows for free. Key: None = grand total, Some(s) = stratum.
-    val sumN = contCols.map(c => globalRow.getAs[Long](s"$c#n")).sum
-    val quartMap: Map[(String, Option[String]), Array[Double]] =
-      if (sumN == 0L) Map.empty // no continuous column, or every value null
-      else exactQuartiles(df, stratum, stratNames, contCols, sumN)
+    val total: Long = counters.map(_.w).sum
+    val stratRows: Map[String, Long] = counters.groupMapReduce(e => names(e.r))(_.w)(_ + _)
+    val strata: Seq[String] = if (cfg.stratify.isEmpty) Nil else Sanitize.orderStrata(stratRows.keys.toSeq)
 
     // --- output schema -------------------------------------------------
-    val countColNames = "All_Patients" +: stratNames
+    val countColNames = "All_Patients" +: strata
     val pairCols = countColNames.flatMap(c => Seq(c, c + "_%"))
     val fixedHead = Seq("Pivoted_column", "Index", "Characteristics", "Variable_type", "Values")
     val pTail = if (pValues) Seq("p_value", "test_value", "test_name") else Nil
@@ -371,39 +278,27 @@ object TableOne {
     }
 
     // --- Totals row ----------------------------------------------------
-    val totalsByCol: Map[String, Option[Double]] =
-      (("All_Patients" -> Some(total.toDouble)) +: strata.map(s => s.name -> Some(s.rows.toDouble))).toMap
     val totalsRow = mkRow(0.0, "Total", null, "ALL",
-      totalsByCol, countColNames.map(_ -> Some(1.0)).toMap, None)
+      (("All_Patients" -> Some(total.toDouble)) +: strata.map(s => s -> Some(stratRows(s).toDouble))).toMap,
+      countColNames.map(_ -> Some(1.0)).toMap, None)
 
-    // --- continuous rows (driver-assembled from collected aggregates) -
-    def numOpt(r: Row, field: String): Option[Double] = r.getAs[Any](field) match {
-      case null      => None
-      case n: Number => Some(n.doubleValue())
-      case other     => Some(other.toString.toDouble)
-    }
-    // `key` identifies the group for quantile lookup:
-    // None = grand total, Some(stratum name) = that stratum.
-    def statOf(r: Row, key: Option[String], c: String, slot: String): Option[Double] = slot match {
-      case "n"   => numOpt(r, s"$c#n")
-      case "min" => numOpt(r, s"$c#min")
-      case "max" => numOpt(r, s"$c#max")
-      case "mean" => numOpt(r, s"$c#mean")
-      case "stddev" => numOpt(r, s"$c#stddev")
-      case q =>
-        val i = q.charAt(0) match { case '2' => 0; case '5' => 1; case '7' => 2 }
-        quartMap.get((c, key)).map(_(i))
-    }
-
-    val contRows: Seq[Row] = contCols.flatMap { c =>
-      val idx = varIdx(c)
+    // --- continuous rows -----------------------------------------------
+    val contRows: Seq[Row] = contCols.flatMap { case (c, idx) =>
+      // a group without moments has no non-null value
+      def stat(g: Option[String], slot: String): Option[Double] = {
+        val m = moments.get((idx, g))
+        slot match {
+          case "n"      => Some(m.fold(0L)(_.n).toDouble)
+          case "mean"   => m.map(_.mean)
+          case "stddev" => m.filter(_.n > 1L).map(x => math.sqrt(x.variance))
+          case rank     => m.map(x => at(((idx, g), RankSlots(rank)(x.n))))
+        }
+      }
       val test: Option[TestResult] =
         if (!pValues) None
         else Some {
-          val groups = strata.map(s => GroupMoments(
-            s.stats.getAs[Long](s"$c#n"),
-            numOpt(s.stats, s"$c#mean").getOrElse(Double.NaN),
-            numOpt(s.stats, s"$c#var").getOrElse(Double.NaN)))
+          val groups = strata.map(s => moments.get((idx, Some(s)))
+            .fold(GroupMoments(0L, Double.NaN, Double.NaN))(m => GroupMoments(m.n, m.mean, m.variance)))
           strata.size match {
             case 2          => StatTests.pooledTTest(groups(0), groups(1))
             case n if n > 2 => StatTests.oneWayAnova(groups)
@@ -411,108 +306,54 @@ object TableOne {
           }
         }
       ContSlots.map { case (slot, frac) =>
-        val counts: Map[String, Option[Double]] =
-          (("All_Patients" -> globalStats.flatMap(statOf(_, None, c, slot))) +:
-            strata.map(s => s.name -> statOf(s.stats, Some(s.name), c, slot))).toMap
+        val counts = (("All_Patients" -> stat(None, slot)) +: strata.map(s => s -> stat(Some(s), slot))).toMap
         // p-value attaches to the variable's first row only (slot "n").
-        mkRow(idx + frac, c, "continuous", slot, counts, Map.empty,
-          if (slot == "n") test else None)
+        mkRow(idx + frac, c, "continuous", slot, counts, Map.empty, if (slot == "n") test else None)
       }
     }
 
-    val driverBlock = spark.createDataFrame(
-      (totalsRow +: contRows).asJava, outSchema)
-
-    // --- categorical block (stays distributed; one melt + agg job) ----
-    val catBlock: Option[DataFrame] = if (catCols.isEmpty) None else Some {
-      // cast covers BooleanType categoricals ("true"/"false"); no-op for strings
-      val kvs = array(catCols.map(c =>
-        struct(lit(c).as("variable"), coalesce(col(c).cast(StringType), lit(Missing)).as("Values"))): _*)
-      val counts = df
-        .select(stratum.getOrElse(lit(-1)).as(StratCol), explode(kvs).as("kv"))
-        .select(col(StratCol), col("kv.variable").as("variable"), col("kv.Values").as("Values"))
-        .groupBy("variable", "Values")
-        .agg(count(lit(1)).as("All_Patients"),
-          stratNames.zipWithIndex.map { case (sv, i) => count(when(col(StratCol) === i, 1)).as(sv) }: _*)
-
-      // chi-square per categorical variable, from the aggregated counts
-      // (the contingency table IS the pivoted counts — SURVEY.md §2.9 D7).
-      // No persist on `counts`: a persist would outlive summarize with no
-      // sound place to unpersist (the returned plan is lazy). Instead,
-      // when p-values force an eager collect for the contingency tables,
-      // those SAME driver rows become the block source (a LocalRelation)
-      // — the melt+aggregate never runs twice. Cardinality = variables x
-      // values x strata, the same bound the chi-square collect already
-      // accepts; without p-values the block stays fully distributed.
-      val (catTests: Map[String, TestResult], blockSrc: DataFrame) =
-        if (!pValues) (Map.empty[String, TestResult], counts)
-        else {
-          val collected = counts.collect()
-          val nonMissing = collected.filter(_.getAs[String]("Values") != Missing)
-          val tests = catCols.map { c =>
-            // sorted so the chi-square sums its contingency rows in a
-            // deterministic order — FP addition is order-sensitive at
-            // 1 ULP and the aggregate's collect order is not stable
-            val rows = nonMissing.filter(_.getAs[String]("variable") == c)
-              .sortBy(_.getAs[String]("Values"))
-            val nonMissingTotal = rows.map(_.getAs[Long]("All_Patients")).sum
-            // gate: >=5 non-missing rows (a row count — tableone_pyspark.py:503)
-            val t =
-              if (nonMissingTotal < 5) StatTests.NotDone
-              else StatTests.chiSquare(rows.map(r => stratNames.map(s => r.getAs[Long](s)).toArray))
-            c -> t
-          }.toMap
-          (tests, spark.createDataFrame(collected.toSeq.asJava, counts.schema))
+    // --- categorical rows ----------------------------------------------
+    val catRows: Seq[Row] = catCols.flatMap { case (c, idx) =>
+      // (category, stratum name -> count), in the reference's category
+      // order: order key, then Spark's string order
+      val categories = cats.filter(_.c == idx).groupBy(_.s.get).toSeq
+        .sortBy { case (v, es) => (es.head.o, v) }(Ordering.Tuple2(Ordering.Int, SparkStringOrder))
+        .map { case (v, es) => v -> es.groupMapReduce(e => names(e.r))(_.w)(_ + _) }
+      // chi-square from the counts (the contingency table IS the pivoted
+      // counts — SURVEY.md §2.9 D7), summed in a fixed category order
+      val test: Option[TestResult] =
+        if (!pValues) None
+        else Some {
+          val rows = categories.filter(_._1 != Missing).sortBy(_._1)
+          // gate: >=5 non-missing rows (a row count — tableone_pyspark.py:503)
+          if (rows.map(_._2.values.sum).sum < 5) StatTests.NotDone
+          else StatTests.chiSquare(rows.map { case (_, n) => strata.map(n.getOrElse(_, 0L)).toArray }.toArray)
         }
-
-      val win = Window.partitionBy("variable").orderBy("order", "Values")
-      val varIdxExpr = catCols.tail.foldLeft(when(col("variable") === catCols.head, varIdx(catCols.head))) {
-        (acc, c) => acc.when(col("variable") === c, varIdx(c))
+      categories.zipWithIndex.map { case ((v, n), i) =>
+        val all = n.values.sum.toDouble
+        def cnt(s: String) = n.getOrElse(s, 0L).toDouble
+        mkRow(idx.toDouble + (i + 1) * 0.01, c, "category", v,
+          (("All_Patients" -> Some(all)) +: strata.map(s => s -> Some(cnt(s)))).toMap,
+          (("All_Patients" -> Some(all / total.toDouble)) +:
+            strata.map(s => s -> Some(cnt(s) / stratRows(s).toDouble))).toMap,
+          if (i == 0) test else None)
       }
-      var block = blockSrc
-        .withColumn("order", Sanitize.categoryOrderKey(col("Values")))
-        .withColumn("__rn", row_number().over(win))
-        .withColumn("Index", varIdxExpr.cast(DoubleType) + col("__rn") * 0.01)
-        .withColumn("Pivoted_column", lit(pivotedLabel))
-        .withColumn("Characteristics", col("variable"))
-        .withColumn("Variable_type", lit("category"))
-        .withColumn("All_Patients_%", col("All_Patients") / lit(total.toDouble))
-      strata.foreach { s =>
-        block = block.withColumn(s.name + "_%", col(s.name) / lit(s.rows.toDouble))
-      }
-      if (pValues) {
-        def attach(colName: String, f: TestResult => Any, dt: DataType): Unit = {
-          val e = catCols.foldLeft(lit(null).cast(dt)) { (acc, c) =>
-            when(col("variable") === c && col("__rn") === 1, lit(f(catTests(c)))).otherwise(acc)
-          }
-          block = block.withColumn(colName, e)
-        }
-        attach("p_value", _.pValue, DoubleType)
-        attach("test_value", _.testValue, DoubleType)
-        attach("test_name", _.testName, StringType)
-      }
-      block.select(outCols.map {
-        case n if outSchema(n).dataType == DoubleType => col(n).cast(DoubleType).as(n)
-        case n => col(n)
-      }: _*)
     }
 
-    val unordered = catBlock.fold(driverBlock)(driverBlock.unionByName(_))
-    val ordered = unordered.orderBy(col("Index"), col("Values"))
-
-    val finalDf =
-      if (!cfg.beautify) ordered
-      else {
-        val win = Window.partitionBy("Characteristics").orderBy("Index", "Values")
-        ordered
-          .drop("Pivoted_column", "Variable_type")
-          .withColumn("__rank", row_number().over(win))
-          .withColumn("Characteristics",
-            when(col("__rank") === 1, regexp_replace(col("Characteristics"), "_", " "))
-              .otherwise(lit(null)))
-          .drop("__rank")
-          .orderBy(col("Index"), col("Values"))
+    val ordered = (totalsRow +: (contRows ++ catRows)).sortBy(r => (r.getDouble(1), r.getString(4)))(OutputOrder)
+    if (!cfg.beautify) spark.createDataFrame(ordered.asJava, outSchema)
+    else {
+      // drop the bookkeeping columns; each label shows on its first row
+      val keep = outCols.indices.filterNot(i => outCols(i) == "Pivoted_column" || outCols(i) == "Variable_type")
+      val seen = scala.collection.mutable.Set.empty[String]
+      val rows = ordered.map { r =>
+        Row.fromSeq(keep.map { i =>
+          if (outCols(i) != "Characteristics") r.get(i)
+          else if (seen.add(r.getString(i))) r.getString(i).replace("_", " ")
+          else null
+        })
       }
-    finalDf.coalesce(1)
+      spark.createDataFrame(rows.asJava, StructType(keep.map(outSchema(_))))
+    }
   }
 }

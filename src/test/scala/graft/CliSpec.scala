@@ -53,9 +53,18 @@ class CliSpec extends AnyFunSuite with Matchers {
     rows.length should be > 5
     out.columns should contain allOf ("Index", "Characteristics", "Values",
       "All_Patients", "p_value")
-    // write path round-trips
-    val dir = java.nio.file.Files.createTempDirectory("cli_out").toString + "/t1"
-    out.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir).count() shouldBe rows.length
+    // the write path leaves ONE part file per format, its rows in
+    // summarize's order
+    val base = java.nio.file.Files.createTempDirectory("cli_out").toString
+    def parts(dir: String) = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("part-"))
+    val pq = base + "/t1"
+    Cli.write(out, pq)
+    parts(pq) should have length 1
+    spark.read.parquet(pq).collect().toSeq shouldBe rows.toSeq
+    val csv = base + "/t1.csv"
+    Cli.write(out, csv)
+    parts(csv) should have length 1
+    spark.read.option("header", "true").csv(csv).collect().map(_.getAs[String]("Values")).toSeq shouldBe
+      rows.map(_.getAs[String]("Values")).toSeq
   }
 }

@@ -265,6 +265,36 @@ class FileSkippingSpec extends AnyFunSuite with Matchers {
     ds.collect().map(_.getAs[Long]("k")) shouldBe Array(42L)
   }
 
+  test("a bloom build above the bits cap still carries the caller's runtime SQL confs") {
+    val maxBits = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    val probe = "spark.sql.files.maxPartitionBytes"
+    // a cap far below the build's sizing moves the build to its own
+    // session; every SQL execution reports its session's modified confs
+    val builds = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.modifiedConfigs.get(maxBits).exists(_ != "4096") => builds.add(s.modifiedConfigs)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    val callerConfs = Seq(maxBits, probe).map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(maxBits, "4096")
+    spark.conf.set(probe, "12345678")
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      bloomCommit(tmp(), 1, 1000)
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      callerConfs.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    builds should not be empty
+    builds.forEach(conf => conf.get(probe) shouldBe Some("12345678"))
+  }
+
   test("bloom lookup of an absent key returns empty (files may false-positive, rows never)") {
     val t = tmp()
     bloomCommit(t, 1, 1000)

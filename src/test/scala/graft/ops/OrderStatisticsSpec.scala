@@ -11,7 +11,7 @@ import org.scalatest.matchers.should.Matchers
 import java.util.concurrent.atomic.AtomicInteger
 import scala.reflect.runtime.universe.TypeTag
 
-import OrderStatistics.{Pick, Tally}
+import OrderStatistics.{Moments, Pick, Tally}
 
 class OrderStatisticsSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
@@ -38,17 +38,28 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
   private def bits[K](at: Map[(K, Long), Double]): Map[(K, Long), Long] =
     at.view.mapValues(java.lang.Double.doubleToLongBits).toMap
 
+  /** Equal within 1e-12 relative, or both NaN. */
+  private def close(a: Double, b: Double): Boolean =
+    (a.isNaN && b.isNaN) || a == b || math.abs(a - b) <= 1e-12 * math.max(a.abs, b.abs)
+
   /** `pick` on both routes: the driver-side cross (bounded by the
     * census's own row count) and the range shuffle (no bound). Asserts
-    * they return the identical (n, picks) and returns them. */
+    * they return the identical n and picks, and moments within 1e-12
+    * relative (the range shuffle merges per-partition folds), and
+    * returns each group's n and the picks. */
   private def bothRoutes[K: TypeTag](census: DataFrame, key: Column, order: Seq[Column],
                                      rule: Long => Seq[Long], levels: K => Seq[K] = (k: K) => Seq(k))
       : (Map[K, Long], Map[(K, Long), Double]) = {
     def run(bound: Long) = OrderStatistics.pick[K](census, key, order, rule, levels, bound)
     val (local, distributed) = (run(census.count()), run(Long.MaxValue))
-    local._1 shouldBe distributed._1
+    val n = distributed._1.view.mapValues(_.n).toMap
+    local._1.view.mapValues(_.n).toMap shouldBe n
+    for ((k, m) <- distributed._1) withClue(s"group $k moments: ${local._1(k)} vs $m") {
+      close(local._1(k).sum, m.sum) shouldBe true
+      close(local._1(k).m2, m.m2) shouldBe true
+    }
     bits(local._2) shouldBe bits(distributed._2)
-    distributed
+    (n, distributed._2)
   }
 
   /** Runs the engine over (g, v) rows under `rule` on both routes and
@@ -61,6 +72,15 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
     val model = rows.collect { case (g, Some(v)) => g -> v }
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted(Ordering.Double.TotalOrdering).toVector).toMap
     n shouldBe model.view.mapValues(_.length.toLong).toMap
+    // the moments of each group against the same model
+    val moments = OrderStatistics.pick[String](census, col("g"), Seq(col("g"), col("v")), rule)._1
+    for ((g, sorted) <- model) withClue(s"group $g moments: ") {
+      val mean = sorted.sum / sorted.length
+      close(moments(g).mean, mean) shouldBe true
+      if (sorted.length > 1)
+        close(moments(g).variance, sorted.map(x => (x - mean) * (x - mean)).sum / (sorted.length - 1)) shouldBe true
+      else moments(g).variance.isNaN shouldBe true
+    }
     for ((g, sorted) <- model; r <- rule(sorted.length.toLong))
       withClue(s"group $g rank $r: ") {
         java.lang.Double.doubleToLongBits(at((g, r))) shouldBe
@@ -126,15 +146,42 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
     // partition 1 should start at offset 1; starting it at 5 skips rank 2
     val start = Map((0, "g") -> 0L, (1, "g") -> 5L)
     val picks = Seq(partition0, partition1)
-      .flatMap(OrderStatistics.cross(_, start, ranks, (k: String) => Seq(k)))
+      .flatMap(OrderStatistics.cross(_, start, ranks, (k: String) => Seq(k)).picks)
     picks shouldBe Seq(Pick("g", 1L, 1.0))
     val e = intercept[IllegalStateException](OrderStatistics.resolve(picks, ranks))
     e.getMessage should include("group 'g'")
     e.getMessage should include("rank 2")
     // the correct offset covers both ranks
     val good = Seq(Iterator(Tally("g", 1.0, 1L, 0)), Iterator(Tally("g", 2.0, 1L, 1)))
-      .flatMap(OrderStatistics.cross(_, start.updated((1, "g"), 1L), ranks, (k: String) => Seq(k)))
+      .flatMap(OrderStatistics.cross(_, start.updated((1, "g"), 1L), ranks, (k: String) => Seq(k)).picks)
     OrderStatistics.resolve(good, ranks) shouldBe Map(("g", 1L) -> 1.0, ("g", 2L) -> 2.0)
+  }
+
+  test("moments: merged partition folds match one fold; NaN and infinities spread as NaN") {
+    val values = (1 to 1000).map(i => (i * 7919 % 1013) / 8.0 - 40.0)
+    val one = values.map(Moments.of(_, 1L)).reduce(_ + _)
+    val merged = values.grouped(97).map(_.map(Moments.of(_, 1L)).reduce(_ + _)).reduce(_ + _)
+    val mean = values.sum / values.length
+    val m2 = values.map(x => (x - mean) * (x - mean)).sum
+    one.n shouldBe 1000L
+    merged.n shouldBe 1000L
+    for (m <- Seq(one, merged)) {
+      close(m.mean, mean) shouldBe true
+      close(m.m2, m2) shouldBe true
+    }
+    // w copies of one value: no spread; a tally equals its copies
+    Moments.of(2.5, 4L) shouldBe Moments(4L, 10.0, 0.0)
+    (Moments.of(2.5, 1L) + Moments.of(2.5, 3L)) shouldBe Moments.of(2.5, 4L)
+    Moments.of(1.0, 1L).variance.isNaN shouldBe true
+    // Spark's var_samp is NaN over a NaN or an infinity, even repeated
+    for (v <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      Moments.of(v, 2L).variance.isNaN shouldBe true
+      (Moments.of(1.0, 1L) + Moments.of(v, 1L)).variance.isNaN shouldBe true
+    }
+    val sparkVarSamp = Seq(Double.NaN, Double.PositiveInfinity).map { v =>
+      Seq(v, v, 1.0).toDF("x").agg(var_samp("x")).head().getDouble(0)
+    }
+    sparkVarSamp.foreach(_.isNaN shouldBe true)
   }
 
   test("the driver-side route still fails on a rank no row covers") {
@@ -151,12 +198,16 @@ class OrderStatisticsSpec extends AnyFunSuite with Matchers {
     val census = mixed.toDF("g", "v").filter(col("v").isNotNull)
       .groupBy("g", "v").agg(count(lit(1)).as("w"))
     val sc = spark.sparkContext
-    /** (jobs started, RDDs unpersisted) while `pick` runs under `bound`. */
+    /** (jobs started, RDDs of this call unpersisted) while `pick` runs
+      * under `bound`. RDDs persisted earlier are left out: the context
+      * cleaner unpersists them again whenever a GC collects them. */
     def events(bound: Long): (Int, Int) = {
       val (jobs, unpersists) = (new AtomicInteger, new AtomicInteger)
+      val firstRdd = sc.emptyRDD[Int].id
       val listener = new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-        override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = unpersists.incrementAndGet()
+        override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+          if (e.rddId > firstRdd) unpersists.incrementAndGet()
       }
       TestListenerBus.drain(sc)
       sc.addSparkListener(listener)

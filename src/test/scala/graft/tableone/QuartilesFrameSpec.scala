@@ -14,13 +14,15 @@ class QuartilesFrameSpec extends AnyFunSuite with Matchers {
 
   test("both gate paths pick the identical rank-ceil(k*n/4) element") {
     // 1..1000 doubles: quartiles are the 250th/500th/750th order stats,
-    // from quartilesFrame's driver-side route and from the range shuffle
+    // from quartilesFrame's driver-side route and from summarize's range shuffle
     val df = spark.range(1, 1001).select(col("id").cast("double").as("v"))
     val frame = TableOne.quartilesFrame(df, "v")
     frame.columns.toSeq shouldBe Seq("q25", "q50", "q75")
     Seq(0, 1, 2).map(frame.head().getDouble) shouldBe Seq(250.0, 500.0, 750.0)
-    TableOne.exactQuartiles(df, None, Nil, Seq("v"), Long.MaxValue)(("v", None))
-      .toSeq shouldBe Seq(250.0, 500.0, 750.0)
+    val ranged = TableOne.summarize(df, TableOneConfig(cols = Seq("v")), localMaxRows = 0L).collect()
+    Seq("25th percentile", "50th percentile", "75th percentile")
+      .map(q => ranged.find(_.getAs[String]("Values") == q).get.getAs[Double]("All_Patients")) shouldBe
+      Seq(250.0, 500.0, 750.0)
   }
 
   test("high-cardinality column avoids the unpartitioned window") {
@@ -46,7 +48,7 @@ class QuartilesFrameSpec extends AnyFunSuite with Matchers {
   test("no residual cache after either path") {
     val df = spark.range(1, 101).select(col("id").cast("double").as("v"))
     TableOne.quartilesFrame(df, "v").collect()
-    TableOne.exactQuartiles(df, None, Nil, Seq("v"), Long.MaxValue)
+    TableOne.summarize(df, TableOneConfig(cols = Seq("v")), localMaxRows = 0L).collect()
     spark.sparkContext.getPersistentRDDs shouldBe empty
   }
 }

@@ -2,8 +2,11 @@ package graft.tableone
 
 import graft.TestSpark
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, row_number, when}
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end golden test reproducing the reference's only test input
   * (/root/reference/testing.py:18-29): 10 patients, stratify by `plan`,
@@ -171,8 +174,8 @@ class TableOneGoldenSpec extends AnyFunSuite {
     // Strata are grouped by RAW value and merged on the driver; that must
     // equal grouping by the pre-sanitized value cell for cell: counts,
     // extrema and quartiles exactly, means, stddevs and test statistics
-    // (merged moments) to 1e-12 relative. The quartile pass reads the
-    // same stratum index on both order-statistics routes.
+    // (merged moments) to 1e-12 relative. Both summarize routes merge the
+    // raw values the same way.
     // Colliding raw values: "a b"/"a_b", "café"/"caf€", null/"MISSING",
     // and "Ω"/"Ж" whose merged stratum has a single non-null x.
     val rich = ((1 to 160).map { i =>
@@ -187,8 +190,7 @@ class TableOneGoldenSpec extends AnyFunSuite {
       TableOne.summarize(df, TableOneConfig(stratify = Some(s), cols = Seq("x", "y", "c"),
         pValues = true))
     for (s <- Seq("s", "k")) {
-      val (local, distributed) = QuartileRoutes(rich, s, Seq("x", "y"))
-      assert(local == distributed, s"stratify=$s: quartile routes diverge")
+      QuartileRoutes(rich, TableOneConfig(stratify = Some(s), cols = Seq("x", "y", "c"), pValues = true))
       val got = rows(rich, s)
       val want = rows(rich.withColumn(s, Sanitize.stratColumn(col(s))), s)
       assert(got.columns.toSeq == want.columns.toSeq)
@@ -218,11 +220,9 @@ class TableOneGoldenSpec extends AnyFunSuite {
     val df = Seq(("A", 1.0, "x"), ("B", 2.0, "y"), ("A", 3.0, "x"), ("B", 4.0, "z"))
       .toDF("s", "num", "cat")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // summarize takes the driver-side route at this size; the range
-    // shuffle's in-call persist is pinned down through exactQuartiles
-    TableOne.summarize(df,
-      TableOneConfig(stratify = Some("s"), cols = Seq("num", "cat"), pValues = true)).collect()
-    QuartileRoutes(df, "s", Seq("num"))
+    // the driver route persists nothing; the distributed route persists
+    // its census and the range shuffle for the call only
+    QuartileRoutes(df, TableOneConfig(stratify = Some("s"), cols = Seq("num", "cat"), pValues = true))
     val residual = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(residual.isEmpty, s"summarize leaked cached RDDs: $residual")
   }
@@ -245,25 +245,58 @@ class TableOneGoldenSpec extends AnyFunSuite {
 
   test("driver-side and range-shuffled quartile routes match summarize") {
     import spark.implicits._
-    // ties, skew, a null stratum and null measures: both order-statistics
-    // routes must pick the same quartiles for every (column, stratum) and
-    // the grand total, and summarize's quartile cells must be those picks
-    val df = (1 to 400).map { i =>
+    // ties, skew, a null stratum and null measures: both summarize routes
+    // must give the same table, and its quartile cells must be the
+    // rank-ceil(k*n/4) elements of every (column, stratum) and the total
+    val data = (1 to 400).map { i =>
       val s = if (i % 7 == 0) null else s"g${i % 3}"
       val v: java.lang.Double = if (i % 11 == 0) null else (i % 17).toDouble
       val c = if (i % 13 == 0) null else s"cat${i % 4}"
       (s, v, i.toDouble, c)
-    }.toDF("s", "a", "b", "c")
-    val (local, distributed) = QuartileRoutes(df, "s", Seq("a", "b"))
-    assert(local == distributed, s"routes diverge:\n  local:       $local\n  distributed: $distributed")
-    val out = TableOne.summarize(df,
-      TableOneConfig(stratify = Some("s"), cols = Seq("a", "b", "c"), pValues = true)).collect()
-    val slots = Seq("25th percentile", "50th percentile", "75th percentile")
-    val cells = for (c <- Seq("a", "b"); key <- None +: Seq("g0", "g1", "g2", "MISSING").map(Some(_)))
-      yield (c, key) -> slots.map { slot =>
-        out.find(r => r.getAs[String]("Characteristics") == c && r.getAs[String]("Values") == slot)
+    }
+    val df = data.toDF("s", "a", "b", "c")
+    val out = QuartileRoutes(df,
+      TableOneConfig(stratify = Some("s"), cols = Seq("a", "b", "c"), pValues = true))
+    val slots = Seq("25th percentile" -> 1L, "50th percentile" -> 2L, "75th percentile" -> 3L)
+    for (c <- Seq("a", "b"); key <- None +: Seq("g0", "g1", "g2", "MISSING").map(Some(_))) {
+      val values = data.filter(r => key.forall(_ == Option(r._1).getOrElse("MISSING")))
+        .flatMap(r => Option(if (c == "a") r._2 else Double.box(r._3))).map(_.doubleValue).sorted
+      slots.foreach { case (slot, k) =>
+        val cell = out.find(r => r.getAs[String]("Characteristics") == c && r.getAs[String]("Values") == slot)
           .get.getAs[Double](key.getOrElse("All_Patients"))
+        assert(cell == values(((k * values.length + 3) / 4 - 1).toInt), s"$c $key $slot")
       }
-    assert(cells.toMap == distributed)
+    }
+  }
+
+  test("driver-side row order is Spark's orderBy(Index, Values), UTF-8 string order included") {
+    import spark.implicits._
+    // Spark orders strings by UTF-8 bytes (code points): "ﬁ" (U+FB01)
+    // before "😀" (U+1F600), the reverse of Java's UTF-16 String order.
+    // v1 has 104 categories, so its ranks 101-102 land on the same Index
+    // doubles as v2's ranks 1-2 (1 + 101 * 0.01 == 2 + 1 * 0.01): there
+    // "😀" of v1 and "ﬁ" of v2 tie on Index and the string order decides.
+    val v1 = Seq("Yes", "No", "😀", "Unknown", "other", null) ++ (0 until 98).map(i => f"c$i%02d")
+    val v2 = Seq("😀", "ﬁ", "Unknown")
+    val df = (0 until 208).map(i => (if (i % 2 == 0) "a" else "b", v1(i % v1.size), v2(i % v2.size)))
+      .toDF("g", "v1", "v2")
+    for (beautify <- Seq(false, true)) withClue(s"beautify=$beautify: ") {
+      val out = TableOne.summarize(df, TableOneConfig(Some("g"), Seq("v1", "v2"), beautify = beautify))
+      val rows = out.collect().toSeq
+      val viaSpark = spark.createDataFrame(rows.asJava, out.schema).repartition(3)
+        .orderBy("Index", "Values").collect().toSeq
+      assert(rows.map(_.getAs[String]("Values")) == viaSpark.map(_.getAs[String]("Values")))
+      assert(rows == viaSpark)
+      val tie = rows.filter(_.getAs[Double]("Index") == 2.0 + 1 * 0.01).map(_.getAs[String]("Values"))
+      assert(tie == Seq("ﬁ", "😀"))
+    }
+    // category ranks follow Spark's (order key, Values) window order
+    val out = TableOne.summarize(df, TableOneConfig(Some("g"), Seq("v1", "v2")))
+    val ranked = out.filter(col("Variable_type") === "category")
+      .withColumn("rn", row_number().over(Window.partitionBy("Characteristics")
+        .orderBy(Sanitize.categoryOrderKey(col("Values")), col("Values"))))
+      .withColumn("want", when(col("Characteristics") === "v1", lit(1.0)).otherwise(lit(2.0)) + col("rn") * 0.01)
+    assert(ranked.filter(col("Index") =!= col("want")).count() == 0L)
+    assert(ranked.count() == 107L)
   }
 }

@@ -1,6 +1,7 @@
 package graft.tableone
 
 import graft.TestSpark
+import org.apache.spark.sql.Row
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,87 +31,111 @@ class TableOnePropertySpec extends AnyFunSuite with Matchers {
   private def cases(n: Int): Seq[List[Rec]] =
     (0 until n).flatMap(i => tableGen.apply(Gen.Parameters.default, Seed(42L + i)))
 
+  /** `expected` within 1e-9, or NaN where `expected` is NaN. */
+  private def approx(actual: Double, expected: Double): Unit =
+    if (expected.isNaN) assert(actual.isNaN, s"want NaN, got $actual")
+    else actual shouldBe expected +- 1e-9
+
+  /** Asserts `out` — summarize over `rows` stratified by `strat`,
+    * analyzing `cat` then `cont` — equals a naive in-memory computation
+    * of the same statistics. Values order as Spark orders them: NaN
+    * greatest. */
+  private def assertMatchesNaive(rows: Seq[Rec], out: Array[Row]): Unit = {
+    val byKey = out.map(r => (r.getAs[Double]("Index"), r.getAs[String]("Values")) -> r).toMap
+
+    // Totals row
+    val totals = byKey((0.0, "ALL"))
+    totals.getAs[Double]("All_Patients") shouldBe rows.size.toDouble
+    val strata = rows.groupBy(_.strat.map(_.replace(" ", "_")).getOrElse("MISSING"))
+    strata.foreach { case (sv, srows) =>
+      totals.getAs[Double](sv) shouldBe srows.size.toDouble
+    }
+
+    // categorical counts + percents
+    val catRows = out.filter(_.getAs[String]("Variable_type") == "category")
+    val naiveCat = rows.groupBy(_.cat.getOrElse("MISSING")).map { case (k, v) => k -> v.size }
+    catRows.foreach { r =>
+      val v = r.getAs[String]("Values")
+      r.getAs[Double]("All_Patients") shouldBe naiveCat(v).toDouble
+      r.getAs[Double]("All_Patients_%") shouldBe naiveCat(v).toDouble / rows.size +- 1e-9
+      strata.foreach { case (sv, srows) =>
+        val cnt = srows.count(_.cat.getOrElse("MISSING") == v)
+        Option(r.getAs[java.lang.Double](sv)).map(_.doubleValue).getOrElse(0.0) shouldBe cnt.toDouble
+      }
+    }
+    // percents sum to ~1 per stratum across the categorical variable
+    if (catRows.nonEmpty) {
+      val pctSum = catRows.flatMap(r => Option(r.getAs[java.lang.Double]("All_Patients_%"))).map(_.doubleValue).sum
+      pctSum shouldBe 1.0 +- 1e-9
+    }
+
+    // continuous stats vs naive, for the total and every stratum: exact
+    // lower-nearest-rank quantiles (disc semantics)
+    def cell(slot: String, group: String): Option[Double] =
+      out.find(r => r.getAs[String]("Values") == slot && r.getAs[String]("Characteristics") == "cont")
+        .flatMap(r => Option(r.getAs[java.lang.Double](group)).map(_.doubleValue))
+    val slotQ = Seq("25th percentile" -> 0.25, "50th percentile" -> 0.5, "75th percentile" -> 0.75)
+    (("All_Patients" -> rows) +: strata.toSeq).foreach { case (group, grows) =>
+      withClue(s"group $group: ") {
+        val sorted = grows.flatMap(_.cont).sorted(Ordering.Double.TotalOrdering)
+        cell("n", group) shouldBe Some(sorted.size.toDouble)
+        if (sorted.isEmpty) (Seq("min", "max", "mean", "stddev") ++ slotQ.map(_._1)).foreach { slot =>
+          cell(slot, group) shouldBe None
+        }
+        else {
+          approx(cell("min", group).get, sorted.head)
+          approx(cell("max", group).get, sorted.last)
+          val mean = sorted.sum / sorted.size
+          approx(cell("mean", group).get, mean)
+          if (sorted.size == 1) cell("stddev", group) shouldBe None
+          else approx(cell("stddev", group).get,
+            math.sqrt(sorted.map(x => (x - mean) * (x - mean)).sum / (sorted.size - 1)))
+          val qs = slotQ.map { case (slot, q) =>
+            val got = cell(slot, group).get
+            approx(got, sorted(math.ceil(q * sorted.size).toInt.max(1) - 1))
+            got
+          }
+          if (!qs.exists(_.isNaN)) qs shouldBe qs.sorted
+        }
+      }
+    }
+
+    // Index strictly increasing in output order
+    val indices = out.map(_.getAs[Double]("Index")).toSeq
+    indices shouldBe indices.sorted
+    indices.distinct.size shouldBe indices.size
+  }
+
   test("stratified summary matches a naive in-memory computation") {
-    // summarize crosses these tiny tables' quartile census on the driver;
-    // the range-shuffled route must pick the same quartiles on every case
+    // summarize computes these tiny tables on the driver; the
+    // distributed route must give the same table on every case
     for (rows <- cases(8)) {
       val df = rows.toDF("strat", "cat", "cont")
-      val (local, distributed) = QuartileRoutes(df, "strat", Seq("cont"))
-      local shouldBe distributed
-      val out = TableOne.summarize(df,
-        TableOneConfig(Some("strat"), Seq("cat", "cont"))).collect()
-      val byKey = out.map(r => (r.getAs[Double]("Index"), r.getAs[String]("Values")) -> r).toMap
-
-      // Totals row
-      val totals = byKey((0.0, "ALL"))
-      totals.getAs[Double]("All_Patients") shouldBe rows.size.toDouble
-      val strata = rows.groupBy(_.strat.map(_.replace(" ", "_")).getOrElse("MISSING"))
-      strata.foreach { case (sv, srows) =>
-        totals.getAs[Double](sv) shouldBe srows.size.toDouble
-      }
-
-      // categorical counts + percents
-      val catRows = out.filter(_.getAs[String]("Variable_type") == "category")
-      val naiveCat = rows.groupBy(_.cat.getOrElse("MISSING")).map { case (k, v) => k -> v.size }
-      catRows.foreach { r =>
-        val v = r.getAs[String]("Values")
-        r.getAs[Double]("All_Patients") shouldBe naiveCat(v).toDouble
-        r.getAs[Double]("All_Patients_%") shouldBe naiveCat(v).toDouble / rows.size +- 1e-9
-        strata.foreach { case (sv, srows) =>
-          val cnt = srows.count(_.cat.getOrElse("MISSING") == v)
-          Option(r.getAs[java.lang.Double](sv)).map(_.doubleValue).getOrElse(0.0) shouldBe cnt.toDouble
-        }
-      }
-      // percents sum to ~1 per stratum across the categorical variable
-      if (catRows.nonEmpty) {
-        val pctSum = catRows.flatMap(r => Option(r.getAs[java.lang.Double]("All_Patients_%"))).map(_.doubleValue).sum
-        pctSum shouldBe 1.0 +- 1e-9
-      }
-
-      // continuous stats vs naive
-      val cont = rows.flatMap(_.cont)
-      def contStat(slot: String): Option[Double] = {
-        val idx = out.find(r => r.getAs[String]("Values") == slot &&
-          r.getAs[String]("Characteristics") == "cont")
-        idx.flatMap(r => Option(r.getAs[java.lang.Double]("All_Patients")).map(_.doubleValue))
-      }
-      contStat("n") shouldBe Some(cont.size.toDouble)
-      if (cont.nonEmpty) {
-        contStat("min").get shouldBe cont.min +- 1e-9
-        contStat("max").get shouldBe cont.max +- 1e-9
-        contStat("mean").get shouldBe (cont.sum / cont.size) +- 1e-9
-        // exact lower-nearest-rank quantiles (disc semantics)
-        val sorted = cont.sorted
-        def disc(q: Double) = sorted(math.ceil(q * cont.size).toInt.max(1) - 1)
-        contStat("25th percentile").get shouldBe disc(0.25) +- 1e-9
-        contStat("50th percentile").get shouldBe disc(0.5) +- 1e-9
-        contStat("75th percentile").get shouldBe disc(0.75) +- 1e-9
-        val Seq(q25, q50, q75) =
-          Seq("25th percentile", "50th percentile", "75th percentile").map(contStat(_).get)
-        q25 should be <= q50
-        q50 should be <= q75
-      }
-      // per-stratum quartiles vs the naive rank pick — the case where the
-      // order-statistics pass must seed running counts across range
-      // partitions correctly for every (column, stratum) group
-      val slotQ = Seq("25th percentile" -> 0.25, "50th percentile" -> 0.5,
-        "75th percentile" -> 0.75)
-      strata.foreach { case (sv, srows) =>
-        val sc = srows.flatMap(_.cont).sorted
-        slotQ.foreach { case (slot, q) =>
-          val cell = out.find(r => r.getAs[String]("Values") == slot &&
-              r.getAs[String]("Characteristics") == "cont")
-            .flatMap(r => Option(r.getAs[java.lang.Double](sv)).map(_.doubleValue))
-          if (sc.isEmpty) cell shouldBe None
-          else cell.get shouldBe sc(math.ceil(q * sc.size).toInt.max(1) - 1) +- 1e-9
-        }
-      }
-
-      // Index strictly increasing in output order
-      val indices = out.map(_.getAs[Double]("Index")).toSeq
-      indices shouldBe indices.sorted
-      indices.distinct.size shouldBe indices.size
+      assertMatchesNaive(rows, QuartileRoutes(df, TableOneConfig(Some("strat"), Seq("cat", "cont"))))
     }
+  }
+
+  test("a census above LocalMaxRows stays distributed, matches the naive computation, caches nothing") {
+    // two strata of 250k distinct doubles each (interleaved), so the
+    // census outgrows the driver route by size alone; plus NaN, -0.0 and
+    // 0.0 (one census value), null values, a null stratum and a stratum
+    // with a single row
+    val cats = Vector(Some("Yes"), Some("No"), Some("x y"), Some("other"), None)
+    val big = (0 until 250000).flatMap { i =>
+      Seq(Rec(Some("A"), cats(i % 5), Some(i / 1024.0 - 100)),
+        Rec(Some("B"), cats(i % 3), Some((i + 0.5) / 1024.0 - 100)))
+    } ++ Seq(
+      Rec(Some("A"), None, Some(Double.NaN)), Rec(Some("A"), Some("Yes"), Some(Double.NaN)),
+      Rec(Some("B"), None, Some(-0.0)), Rec(Some("B"), Some("No"), Some(0.0)),
+      Rec(Some("B"), Some("No"), None), Rec(None, Some("x y"), Some(3.5)), Rec(None, None, None),
+      Rec(Some("C"), Some("other"), Some(42.0)))
+    val census = big.flatMap(r => r.cont.map(v => (r.strat, if (v == 0.0) 0.0 else v))).distinct.size
+    census.toLong should be > graft.ops.OrderStatistics.LocalMaxRows
+    val df = spark.sparkContext.parallelize(big, 4).toDF()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = TableOne.summarize(df, TableOneConfig(Some("strat"), Seq("cat", "cont"))).collect()
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    assertMatchesNaive(big, out)
   }
 
   test("decimal and byte columns are analyzed as continuous (beyond reference parity)") {
@@ -152,9 +177,14 @@ class TableOnePropertySpec extends AnyFunSuite with Matchers {
       TableOne.summarize(df, TableOneConfig(Some("strat"), Seq("cont"), maxStrata = 10))
     }
     e.getMessage should include ("distinct values")
-    // at or under the cap it works
+    // at or under the cap it works, on both routes
     TableOne.summarize(df, TableOneConfig(Some("strat"), Seq("cont"), maxStrata = 50))
       .collect().length should be > 0
+    intercept[IllegalArgumentException] {
+      TableOne.summarize(df, TableOneConfig(Some("strat"), Seq("cont"), maxStrata = 10), localMaxRows = 0L)
+    }.getMessage should include ("distinct values")
+    TableOne.summarize(df, TableOneConfig(Some("strat"), Seq("cont"), maxStrata = Int.MaxValue),
+      localMaxRows = 0L).collect().length should be > 0
   }
 
   test("unstratified summary: schema is fixed and rows/percent invariants hold") {
