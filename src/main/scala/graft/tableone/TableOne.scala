@@ -99,8 +99,11 @@ object TableOne {
 
   /** One collected census row: variable position `c` (0 = the row
     * counter), raw stratum key `r`, continuous value `v` or category `s`,
-    * weight `w`, and `o` = [[Sanitize.categoryOrderKey]] of `s`. */
-  private final case class Entry(c: Int, r: String, v: Option[Double], s: Option[String], w: Long, o: Int)
+    * weight `w`, and `o` = [[Sanitize.categoryOrderKey]] of `s`. Not
+    * `private`: Spark's generated deserializer must reach its members,
+    * or every collect logs a failed compile and falls back to the
+    * interpreted projection. */
+  private[tableone] final case class Entry(c: Int, r: String, v: Option[Double], s: Option[String], w: Long, o: Int)
 
   /** EXACT order statistics and moments of every continuous column, per
     * stratum and in total, from the distributed census's non-null
