@@ -8,6 +8,18 @@ object Bench {
     * vs plan (neither moved). sec = -1 marks a failed query. */
   private case class QRes(name: String, sec: Double, gcMs: Long, jitMs: Long)
 
+  /** `{"name":seconds,...}` — a non-finite value (JSON has no NaN or
+    * Infinity literal) is written as the -1.0 failure sentinel, so the
+    * record always parses. */
+  private[graft] def toJson(r: Seq[(String, Double)]): String =
+    r.map { case (k, v) =>
+      s"\"" + k + "\":" + (if (v.isNaN || v.isInfinite) -1.0 else v)
+    }.mkString("{", ",", "}")
+
+  /** The stdout `BENCH_QUERIES` record: the per-query median map. */
+  private[graft] def queriesLine(sfDir: String, r: Seq[(String, Double)]): String =
+    s"""{"metric":"queries","sf":"$sfDir","queries":${toJson(r)}}"""
+
   /** Carry a prior record's per-scale blocks into a record whose run
     * skipped that scale. Returns `,"key":value` fragments (verbatim
     * value spans) for every TOP-LEVEL key of `priorTxt` that starts
@@ -240,8 +252,6 @@ object Bench {
       jvmHealth(tag)
       out
     }
-    def toJson(r: Seq[(String, Double)]): String =
-      r.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     def toJsonL(r: Seq[(String, Long)]): String =
       r.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // A total must sum only queries that RAN: -1.0 failure sentinels would
@@ -536,10 +546,10 @@ object Bench {
     // detail file. Tail-safe by construction — the totals line stays
     // last and small, so even if a bounded tail capture cuts the ~8 KB
     // queries line's head, the line the driver parses is untouched.
-    val queriesLine = s"""{"metric":"queries","sf":"$sfDir","queries":${toJson(results.map(r => r.name -> r.sec))}}"""
+    val queries = queriesLine(sfDir, results.map(r => r.name -> r.sec))
     spark.stop()
     System.err.println("[bench] full record written to " + outFile)
-    println("BENCH_QUERIES: " + queriesLine)
+    println("BENCH_QUERIES: " + queries)
     println("BENCH_JSON: " + compact)
     println(compact)
   }

@@ -2191,8 +2191,7 @@ object OpsQueries {
       // corpus). Bucketing is the replayable positional char hash, so
       // the oracle re-derives every bucket assignment AND the smoothed
       // log-ratio model — the weight computation is hash-verified, not
-      // rows-only; the Gumbel-top-k select step over these weights is
-      // Sampling.importanceResample (determinism spec-pinned).
+      // rows-only.
       TextAnalysis.importanceWeights(
           table(s, dir, "documents").select("doc_id", "text", "lang"),
           "doc_id", "text",
@@ -4112,7 +4111,7 @@ object OpsQueries {
       "f AS (SELECT *, greatest(s_de, s_en, s_es, s_fr, s_it, s_zh) AS m FROM s) "
   }
 
-  /** Quality heuristic over CTE `f`'s columns — TextAnalysis.qualityScore. */
+  /** Quality heuristic over CTE `f`'s columns — TextAnalysis.qualityScoreP. */
   private val QualityScoreSql: String =
     "(((CASE WHEN n_tok >= 5 AND n_tok <= 100000 THEN 1.0 ELSE 0.0 END) + " +
       "(CASE WHEN mtl >= 2.0 AND mtl <= 12.0 THEN 1.0 ELSE 0.0 END) + " +

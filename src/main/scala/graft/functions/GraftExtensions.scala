@@ -1,17 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL registration for the graft custom expressions, so they are
-  * callable from `spark.sql(...)` as well as the Column API.
-  *
-  * Two entry points:
-  *   - config `spark.sql.extensions=graft.functions.GraftExtensions`
-  *     (session bootstrap; the standard extension-injection path), or
-  *   - `GraftExtensions.register(spark)` on a live session.
+  * callable from `spark.sql(...)` as well as the Column API: set
+  * `spark.sql.extensions=graft.functions.GraftExtensions` when the
+  * session is built (the standard extension-injection path).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -81,10 +78,4 @@ object GraftExtensions {
         "char_entropy(text) - struct(n_cp, entropy): codepoint-distribution Shannon entropy in bits"),
       (args: Seq[Expression]) => CharEntropy(args(0))),
   )
-
-  /** Registers the functions into an already-running session. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, inf, builder) =>
-      org.apache.spark.sql.graft.ColumnBridge.registerFunction(spark, ident, inf, builder)
-    }
 }

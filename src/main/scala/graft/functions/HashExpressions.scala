@@ -713,11 +713,11 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryVectorEx
     copy(left = l(0), right = l(1))
 }
 
-/** Product-quantization kernels shared by [[PqEncode]] / [[PqAdcDistance]]
-  * / [[PqQuantizationError]] — the vector is never sub-sliced into
-  * intermediate arrays; every distance runs over (offset, len) windows of
-  * the original buffer with sequential IEEE accumulation, so the c7
-  * oracle's per-position replay sees identical doubles. */
+/** Product-quantization kernel of [[PqEncode]] — the vector is never
+  * sub-sliced into intermediate arrays; every distance runs over
+  * (offset, len) windows of the original buffer with sequential IEEE
+  * accumulation, so the c7 oracle's per-position replay sees identical
+  * doubles. */
 private[functions] object PqOps {
   /** codes(sub) = argmin over centroids of squared L2 on the sub-window;
     * ties break to the LOWEST centroid index. `cb(sub)(cent)` is dsub
@@ -748,35 +748,6 @@ private[functions] object PqOps {
       sub += 1
     }
     out
-  }
-
-  /** Sum over subspaces of the squared L2 to the ASSIGNED centroid —
-    * encode and total quantization error in one pass. */
-  def quantError(v: ArrayData, cb: Array[Array[Array[Double]]], dsub: Int): Double = {
-    val m = cb.length
-    var total = 0.0
-    var sub = 0
-    while (sub < m) {
-      val cents = cb(sub)
-      val off = sub * dsub
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0.0
-        var j = 0
-        while (j < dsub) {
-          val diff = v.getDouble(off + j) - cent(j)
-          d += diff * diff
-          j += 1
-        }
-        if (d < bestD) bestD = d
-        c += 1
-      }
-      total += bestD
-      sub += 1
-    }
-    total
   }
 }
 
@@ -840,33 +811,6 @@ case class PqAdcDistance(child: Expression, table: Seq[Seq[Double]])
   }
 
   override protected def withNewChildInternal(newChild: Expression): PqAdcDistance =
-    copy(child = newChild)
-}
-
-/** Total squared quantization error of a vector under PQ codebooks
-  * (Σ over subspaces of the squared L2 to the assigned centroid) — the
-  * training-quality metric, one pass, no code materialization. */
-case class PqQuantizationError(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-  extends UnaryExpression with CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty), "empty codebook")
-  private val dsub = codebooks.head.head.length
-  require(dsub >= 1 && codebooks.forall(_.forall(_.length == dsub)),
-    "all centroids must share one subvector dimension")
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "pq_quant_error"
-
-  @transient private lazy val cb: Array[Array[Array[Double]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    require(v.numElements() == cb.length * dsub,
-      s"pq_quant_error: vector dim ${v.numElements()} != ${cb.length} x $dsub")
-    PqOps.quantError(v, cb, dsub)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqQuantizationError =
     copy(child = newChild)
 }
 
@@ -1057,11 +1001,6 @@ object HashFunctions {
     * per-subspace distance table. */
   def pqAdcDistance(codes: Column, table: Seq[Seq[Double]]): Column =
     ColumnBridge.column(PqAdcDistance(expr(codes), table))
-
-  /** Total squared quantization error of a double-array column under PQ
-    * codebooks. */
-  def pqQuantizationError(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
-    ColumnBridge.column(PqQuantizationError(expr(vec), codebooks))
 
   /** One-pass frequency stats struct (n, n_distinct, max_count,
     * total_chars, dup_chars) of a string-array column. */

@@ -211,8 +211,9 @@ object Dedup {
     *     TIGHT shift windows: a segment occurrence shifted by `s` needs
     *     |s| edits before it and |s + δ| after (δ = length difference),
     *     so only shifts with |s| + |s + δ| <= d are feasible — and
-    *     segment 0 pins to s = 0 (nothing precedes it), the last to
-    *     s = −δ (nothing follows). 22 keys/row at d = 2, deduplicated.
+    *     segment 0 only shifts by s >= 0 (only insertions precede it),
+    *     the last only by s <= −δ (only insertions follow it). At most
+    *     22 keys per corpus string at d = 2, one row each.
     *  3. The join key is ONE xxhash64 long over (length, segment index,
     *     segment text) — a hash collision can only create a false
     *     CANDIDATE, which the final levenshtein filter kills, so
@@ -296,41 +297,47 @@ object Dedup {
       .select(col(corpusStr).as("__cstr")).distinct()
     // even segment layout of a length-L string: first (L mod nSeg)
     // segments are one char longer; start_i = i*q + min(i, r), 0-based
-    def segLen(lCol: Column, i: Int): Column =
-      floor(lCol / nSeg).cast("int") + when(lit(i) < pmod(lCol, lit(nSeg)), 1).otherwise(0)
-    def segStart(lCol: Column, i: Int): Column =
-      lit(i) * floor(lCol / nSeg).cast("int") + least(lit(i), pmod(lCol, lit(nSeg)))
-    def key(lCol: Column, i: Int, seg: Column): Column =
-      xxhash64(lCol, lit(i), seg)
+    def segLen(lCol: Column, i: Column): Column =
+      floor(lCol / nSeg).cast("int") + when(i < pmod(lCol, lit(nSeg)), 1).otherwise(0)
+    def segStart(lCol: Column, i: Column): Column =
+      i * floor(lCol / nSeg).cast("int") + least(i, pmod(lCol, lit(nSeg)))
+    def key(lCol: Column, i: Column, seg: Column): Column =
+      xxhash64(lCol, i, seg)
 
     val pL = length(col("__pstr"))
     val probeSegs = pNames
       .filter(pL > d)
       .select(col("__pstr"), explode(array((0 to d).map { i =>
-        key(pL, i, col("__pstr").substr(segStart(pL, i) + 1, segLen(pL, i)))
+        key(pL, lit(i), col("__pstr").substr(segStart(pL, lit(i)) + 1, segLen(pL, lit(i))))
       }: _*)).as("__k"))
-    val cM = length(col("__cstr"))
-    val corpusKeys = (for {
+    // the feasible (length difference, segment, shift) triples, one
+    // literal row each: tight PassJoin windows need >= |shift| edits
+    // before the segment and >= |shift + delta| after, so |off| +
+    // |off + delta| <= d. Segment 0 has an EMPTY prefix — only insertions
+    // can precede it, so its shift is non-negative; symmetrically the
+    // last segment's suffix admits only insertions, so shift <= -delta
+    val shifts = for {
       delta <- -d to d
       i <- 0 to d
       off <- -d to d
-      // tight PassJoin windows: >= |shift| edits must precede the
-      // segment and >= |shift + delta| follow, so |off| + |off + delta|
-      // <= d. Segment 0 has an EMPTY prefix — only insertions can
-      // precede it, so its shift is non-negative; symmetrically the
-      // last segment's suffix admits only insertions, so shift <= -delta
       if math.abs(off) + math.abs(off + delta) <= d
       if i != 0 || off >= 0
       if i != d || off <= -delta
-    } yield {
-      val lCol = cM + delta
-      val p = segStart(lCol, i) + off
-      val len = segLen(lCol, i)
-      when(lCol > d && p >= 0 && p + len <= cM,
-        key(lCol, i, col("__cstr").substr(p + 1, len)))
-    }).toSeq
+    } yield (delta, i, off)
+    // ONE key expression evaluated per (corpus string, triple) row —
+    // unrolling a key per triple into one projection outgrows Janino's
+    // 64 KB method limit and drops the stage out of codegen. A key
+    // repeated within one string (periodic text) only repeats candidate
+    // pairs, which the candidate distinct below collapses.
+    val cM = length(col("__cstr"))
+    val lCol = cM + col("__s._1")
+    val iCol = col("__s._2")
+    val p = segStart(lCol, iCol) + col("__s._3")
+    val len = segLen(lCol, iCol)
     val corpusSegs = cNames
-      .select(col("__cstr"), explode(array_distinct(array(corpusKeys: _*))).as("__k"))
+      .select(col("__cstr"), explode(typedLit(shifts)).as("__s"))
+      .select(col("__cstr"), when(lCol > d && p >= 0 && p + len <= cM,
+        key(lCol, iCol, col("__cstr").substr(p + 1, len))).as("__k"))
       .filter(col("__k").isNotNull)
     val pSide = if (broadcastProbe) broadcast(probeSegs) else probeSegs
     val segCandidates = corpusSegs.join(pSide, Seq("__k"))
@@ -349,7 +356,7 @@ object Dedup {
 
   /** Jaro-Winkler near-name pairs over the DISTINCT values of `nameCol`
     * — the prefix-biased fuzzy-linkage complement to the exact-edit
-    * PassJoin ([[fuzzyJoin]]): JW tolerates length-proportional noise
+    * PassJoin ([[fuzzyJoinBest]]): JW tolerates length-proportional noise
     * and rewards shared prefixes, which catches "cold widget" ~
     * "old widget" classes a fixed edit budget prices the same as
     * unrelated strings.
@@ -436,14 +443,6 @@ object Dedup {
   def minHashJaccard(sigA: Column, sigB: Column): Column =
     size(filter(zip_with(sigA, sigB, (a, b) => a === b), x => x)).cast("double") /
       size(sigA).cast("double")
-
-  /** Exact n-gram Jaccard similarity of two texts. */
-  def ngramJaccard(a: Column, b: Column, n: Int = 3): Column = {
-    val sa = array_distinct(shingles(a, n))
-    val sb = array_distinct(shingles(b, n))
-    size(array_intersect(sa, sb)).cast("double") /
-      greatest(size(array_union(sa, sb)), lit(1)).cast("double")
-  }
 
   /** Benchmark decontamination: for every corpus document, the number and
     * fraction of its distinct word `n`-grams that appear anywhere in the
@@ -986,7 +985,10 @@ object Dedup {
   /** Embedding-cosine near-duplicate pairs: pairs with cosine >=
     * `threshold`. Buckets via random-hyperplane LSH sign bits
     * (Similarity.lshBucket) to avoid the cartesian join; a pair is a
-    * candidate when all `planes.size` sign bits agree. */
+    * candidate when all `planes.size` sign bits agree.
+    *
+    * Kept: the fixed-plane reference DedupSpec compares
+    * [[embeddingNearDupPairsAdaptive]] against. */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, planes: Seq[Seq[Double]]): DataFrame = {
     val withB = df.select(col(idCol).as("id"), col(vecCol).as("v"),

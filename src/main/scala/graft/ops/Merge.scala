@@ -183,45 +183,6 @@ object Merge {
         }: _*)
   }
 
-  /** Incremental HEAVY-HITTERS maintenance: combine stored per-key
-    * Misra-Gries summaries (`map<string,long>`, the
-    * [[graft.functions.MisraGries]] output) with a delta batch's, using
-    * the mergeable-summaries rule (Agarwal et al.): counter-wise sum,
-    * then subtract the (k+1)-th largest count and drop non-positive
-    * counters — entirely in codegen'd map/array functions, so the merge
-    * is a pure projection over STATE-sized rows (never a row shuffle).
-    * The MG guarantee survives every maintenance step: any item with
-    * true frequency > N/(k+1) over the full history is present, and
-    * kept counters undercount by at most N/(k+1). Same null policy as
-    * [[mergeSketchState]]. */
-  def mergeTopKState(state: DataFrame, deltaAgg: DataFrame, keys: Seq[String],
-                     sketchCols: Seq[String], k: Int): DataFrame = {
-    require(keys.nonEmpty, "need at least one key column")
-    require(sketchCols.nonEmpty, "need at least one sketch column")
-    require(k >= 1, s"k must be >= 1, got $k")
-    def mgMerge(a: Column, b: Column): Column = {
-      // counter-wise sum over the union of keys
-      val summed = map_zip_with(a, b,
-        (_, x, y) => coalesce(x, lit(0L)) + coalesce(y, lit(0L)))
-      // the (k+1)-th largest count, 0 when <= k counters survive
-      val desc = reverse(array_sort(map_values(summed)))
-      val sub = when(size(desc) > k, element_at(desc, k + 1)).otherwise(lit(0L))
-      map_filter(
-        transform_values(summed, (_, v) => v - sub),
-        (_, v) => v > 0L)
-    }
-    val s = state.select(keys.map(kc => col(kc).as(s"__sk_$kc")) ++
-      sketchCols.map(c => col(c).as(s"__s_$c")): _*)
-    val d = deltaAgg.select(keys.map(kc => col(kc).as(s"__dk_$kc")) ++
-      sketchCols.map(c => col(c).as(s"__d_$c")): _*)
-    nullSafeFullOuter(s, d, keys)
-      .select(keys.map(kc => coalesce(col(s"__sk_$kc"), col(s"__dk_$kc")).as(kc)) ++
-        sketchCols.map { c =>
-          val a = col(s"__s_$c"); val b = col(s"__d_$c")
-          when(a.isNull, b).when(b.isNull, a).otherwise(mgMerge(a, b)).as(c)
-        }: _*)
-  }
-
   /** Null-safe full-outer key join of the two pre-renamed state-merge
     * sides. `groupBy` over a nullable column yields a NULL-keyed group,
     * and a plain equi-join would never match it against itself — the

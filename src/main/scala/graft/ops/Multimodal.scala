@@ -1552,19 +1552,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** In-plan JPEG wrap: a Column encoding the first `w*h*3` bytes of a
-    * binary column (right-padded with 'x') as a REAL baseline JPEG via
-    * [[encodeJpeg]] — planting helper so the real ImageIO decode path
-    * runs against testdata payloads. Scalar UDF justified as in
-    * [[pngRgb8Payload]]: per-row codec byte work with no built-in
-    * equivalent. */
-  def jpegRgbPayload(payload: org.apache.spark.sql.Column, w: Int, h: Int): org.apache.spark.sql.Column = {
-    val n = w * h * 3
-    val enc = udf((b: Array[Byte]) => encodeJpeg(w, h,
-      (if (b == null) Array.emptyByteArray else b).take(n).padTo(n, 'x'.toByte)))
-    enc(payload)
-  }
-
   val otsuStatsType: StructType = StructType(Seq(
     StructField("n_pixels", LongType, nullable = false),
     StructField("threshold", IntegerType, nullable = false),

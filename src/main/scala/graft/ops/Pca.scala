@@ -205,24 +205,9 @@ object Pca {
       val flip = if (col0(best) < 0) -1.0 else 1.0
       col0.map(_ * flip).toSeq
     }
-    // the FULL spectrum's sum is the covariance trace — varianceFrame's
+    // the FULL spectrum's sum is the covariance trace: the variance-ratio
     // denominator comes free with the fit, no second scan
     PcaModel(n, mean.toSeq, order.map(vals).toSeq, comps.toSeq, vals.sum)
-  }
-
-  /** The eigen spectrum as a report frame:
-    * (component, eigenvalue, var_ratio, cum_ratio), variance ratios
-    * against the FULL trace (so a truncated k still shows how much of
-    * the total the kept components explain). */
-  def varianceFrame(spark: SparkSession, model: PcaModel): DataFrame = {
-    import spark.implicits._
-    require(model.totalVariance > 0,
-      s"total variance must be positive, got ${model.totalVariance}")
-    val trace = model.totalVariance
-    val cum = model.eigenvalues.scanLeft(0.0)(_ + _).tail
-    model.eigenvalues.zipWithIndex.map { case (ev, i) =>
-      (i.toLong, ev, ev / trace, cum(i) / trace)
-    }.toDF("component", "eigenvalue", "var_ratio", "cum_ratio")
   }
 
   /** Project each row onto the model's top `k` components:

@@ -242,16 +242,6 @@ object Pq {
       .select(col(idCol), col("exact_dist"))
   }
 
-  /** Corpus-mean squared quantization error under `codebooks` — ONE
-    * aggregate row (n, mse); the training-quality gate (lower ksub or
-    * fewer iters must never report a smaller error than more). */
-  def mse(corpus: DataFrame, vecCol: String, codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
-    corpus
-      .filter(col(vecCol).isNotNull)
-      .agg(count(lit(1)).as("n"),
-        avg(HashFunctions.pqQuantizationError(
-          col(vecCol).cast("array<double>"), codebooks)).as("mse"))
-
   // ---- scalar quantization (SQ8) -------------------------------------
 
   /** Per-dimension quantization range for [[sqEncode]]. */

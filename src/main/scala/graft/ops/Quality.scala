@@ -328,37 +328,6 @@ object Quality {
     graft.sources.FileSkipping.commitWithStats(df, table, statsCols, mode)
   }
 
-  /** Constraint SUGGESTION from a profile (the Deequ suggestion shape):
-    * turn a [[profileExact]] report into the checks the data currently
-    * satisfies, for a human to review and freeze into the pipeline's
-    * [[checkSuite]] gate — profile once, suggest, audit forever.
-    * Rules (deliberately few and predictable):
-    *  - no nulls observed          → `NotNull(col)`
-    *  - all values distinct, 0 null → `Unique(col)`
-    *  - numeric min/max observed   → `InRange(lo − m·span, hi + m·span)`
-    *    with margin m = `rangeMargin` (headroom so the suggestion is a
-    *    fence, not a cast of today's exact extremes)
-    * Driver-side by design — the input is |columns| rows. */
-  def suggestChecks(profile: DataFrame, rangeMargin: Double = 0.1): Seq[Check] = {
-    require(rangeMargin >= 0.0, s"rangeMargin must be >= 0, got $rangeMargin")
-    profile.collect().toSeq.flatMap { r =>
-      val c = r.getString(0)
-      val nRows = r.getLong(1); val nNull = r.getLong(2); val ndv = r.getLong(3)
-      val minV = Option(r.getString(4)); val maxV = Option(r.getString(5))
-      val notNull = if (nNull == 0L && nRows > 0L) Seq(NotNull(c)) else Nil
-      val unique = if (nNull == 0L && nRows > 0L && ndv == nRows)
-        Seq(Unique(Seq(c))) else Nil
-      val range = for {
-        lo <- minV.flatMap(_.toDoubleOption)
-        hi <- maxV.flatMap(_.toDoubleOption)
-      } yield {
-        val span = hi - lo
-        InRange(c, lo - rangeMargin * span, hi + rangeMargin * span)
-      }
-      notNull ++ unique ++ range.toSeq
-    }
-  }
-
   private val profileSchema = StructType(Seq(
     StructField("column", StringType, nullable = false),
     StructField("n_rows", LongType, nullable = false),

@@ -126,20 +126,6 @@ object Quantiles {
       schema)
   }
 
-  /** Winsorization: clamp `valueCol` into its per-group exact
-    * [`pLo`, `pHi`] quantiles (the standard outlier-robust
-    * preprocessing step), routed through [[groupedQuantiles]]' gate so
-    * the bounds job survives any group shape. Returns `df` with
-    * `valueCol` replaced by its clamped value. */
-  def winsorize(df: DataFrame, groupCol: String, valueCol: String,
-                pLo: Double = 0.05, pHi: Double = 0.95,
-                maxBufferedPerGroup: Long = 4L << 20): DataFrame = {
-    require(pLo < pHi, s"pLo must be < pHi, got [$pLo, $pHi]")
-    val bounds = groupedQuantiles(df, groupCol, valueCol,
-      Seq("__lo" -> pLo, "__hi" -> pHi), maxBufferedPerGroup)
-    clampToBounds(df, groupCol, valueCol, bounds)
-  }
-
   /** Clamp `valueCol` into per-group `[__lo, __hi]` bounds (one row per
     * group, `g` = the group key cast to string — the shape both
     * quantile paths emit). The bounds frame is aggregate-sized by

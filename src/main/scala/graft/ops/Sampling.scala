@@ -316,7 +316,10 @@ object Sampling {
     * rows fan out at most ceil(max rate) times and never shuffle.
     * Deterministic in (idCol, seed): re-runs give identical mixes, and
     * every partial-epoch row is a row the previous full epochs also
-    * emitted. Output carries an `epoch` column (0-based copy index). */
+    * emitted. Output carries an `epoch` column (0-based copy index).
+    *
+    * Kept: the explicit-`totalOut` reference SamplingSpec compares
+    * [[weightedMixtureUpsample]] against. */
   def weightedMixtureRepeat(df: DataFrame, sourceCol: String, idCol: String,
                             weights: Map[String, Double], totalOut: Long,
                             seed: Long = 42L): DataFrame = {
@@ -366,35 +369,6 @@ object Sampling {
     df.withColumn("epoch", explode(sequence(lit(0L), fullEpochs.cast("long"))))
       .filter(col("epoch") < fullEpochs ||
         (col("epoch") === fullEpochs && u < rate - fullEpochs))
-  }
-
-  /** Importance RESAMPLING via the Gumbel-top-k trick — the DSIR select
-    * step over [[graft.ops.TextAnalysis.importanceWeights]]' output (or
-    * any log-weight column): drawing k rows WITHOUT replacement with
-    * probability ∝ exp(logw / temperature) is exactly "take the k
-    * largest `logw/T + G_i`" with standard Gumbel noise
-    * `G = −ln(−ln(u))`. The noise is DETERMINISTIC — `u ∈ (0,1)` comes
-    * from the [[lehmerPriority]] permutation of `idCol` — so re-runs
-    * reproduce the identical sample on any partitioning (spec-pinned),
-    * and a new `seed` is a fresh independent draw.
-    *
-    * Scale shape: one narrow projection, then `orderBy(key).limit(k)` —
-    * Spark plans TakeOrderedAndProject, a per-partition top-k merged on
-    * the driver, NOT a global sort; k rows is the only thing that
-    * moves. `temperature` → 0 degenerates toward deterministic top-k by
-    * weight; large T toward uniform. */
-  def importanceResample(df: DataFrame, idCol: String, logwCol: String,
-                         k: Int, seed: Long = 1L,
-                         temperature: Double = 1.0): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(temperature > 0, s"temperature must be > 0, got $temperature")
-    // u in (0, 1): priority in [0, M), shifted to (0, M] then scaled by
-    // 1/(M+1) — both endpoints strictly excluded, log(-log(u)) total
-    val u = (lehmerPriority(col(idCol), seed).cast("double") + lit(1.0)) /
-      lit(2147483648.0)
-    val key = col(logwCol) / lit(temperature) - log(-log(u))
-    df.withColumn("__gk", key).orderBy(col("__gk").desc, col(idCol)).limit(k)
-      .drop("__gk")
   }
 
   /** Deterministic NEGATIVE sampling for contrastive training: for each

@@ -29,21 +29,6 @@ object Similarity {
 
   private def litVec(q: Seq[Double]): Column = array(q.map(lit): _*)
 
-  /** Brute-force cosine top-k of `corpus` against one literal query
-    * vector. The plan is scan -> project(cosine) -> TakeOrderedAndProject:
-    * each partition keeps its local top-k, the driver merges k*partitions
-    * rows — no global sort, no shuffle. */
-  def topKBrute(corpus: DataFrame, idCol: String, vecCol: String,
-                query: Seq[Double], k: Int): DataFrame = {
-    val qn = math.sqrt(query.map(x => x * x).sum)
-    val qCol = litVec(query.map(_ / qn))
-    corpus
-      .select(col(idCol),
-        cosine(col(vecCol).cast("array<double>"), qCol).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Top-k for a whole (small) query table: broadcast the queries, score
     * every (corpus row, query) pair in one pass over the corpus, keep
     * top-k per query with a window. Corpus is never shuffled — only the

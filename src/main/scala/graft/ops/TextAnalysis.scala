@@ -240,9 +240,8 @@ object TextAnalysis {
     * quality/language heuristics consume (see
     * [[graft.functions.TextProfile]]). Queries that need several signals
     * should materialize this ONCE (`.withColumn("__p", profile(t))`) and
-    * derive with the `*P` accessors — each plain-text signal function
-    * below is a profile call of its own, fine standalone, wasteful x10
-    * in a wide projection. */
+    * derive with the `*P` accessors rather than profiling once per
+    * signal, which is wasteful x10 in a wide projection. */
   def profile(text: Column): Column =
     graft.functions.HashFunctions.textProfile(
       text, EnglishStopwords, LangStopwords.toSeq.sortBy(_._1))
@@ -258,7 +257,10 @@ object TextAnalysis {
   def upperRatioP(p: Column): Column = ratio(p.getField("n_upper"), p.getField("n_chars"))
   def stopwordRatioP(p: Column): Column = ratio(p.getField("n_stop"), p.getField("n_tok"))
 
-  /** [[qualityScore]] over a materialized profile. */
+  /** Composite document-quality score in [0,1] over a materialized
+    * profile — heuristics in the spirit of C4/Gopher filtering rules:
+    * enough tokens, sane word lengths, some stopwords, not dominated by
+    * punctuation/digits/caps. */
   def qualityScoreP(p: Column): Column = {
     val nTok = tokenCountP(p)
     val mtl = meanTokenLengthP(p)
@@ -301,21 +303,6 @@ object TextAnalysis {
     "were", "it", "that", "this", "for", "on", "with", "as", "at", "by",
     "be", "he", "she", "they", "you", "we", "not", "but", "from")
 
-  def punctRatio(text: Column): Column = punctRatioP(profile(text))
-
-  def digitRatio(text: Column): Column = digitRatioP(profile(text))
-
-  def upperRatio(text: Column): Column = upperRatioP(profile(text))
-
-  def stopwordRatio(text: Column): Column = stopwordRatioP(profile(text))
-
-  def meanTokenLength(text: Column): Column = meanTokenLengthP(profile(text))
-
-  /** Composite document-quality score in [0,1] — heuristics in the spirit
-    * of C4/Gopher filtering rules: enough tokens, sane word lengths, some
-    * stopwords, not dominated by punctuation/digits/caps. */
-  def qualityScore(text: Column): Column = qualityScoreP(profile(text))
-
   /** Adds the standard quality columns to a document DataFrame — ONE
     * profile pass shared by all of them (CollapseProject keeps a
     * multiply-referenced non-trivial alias materialized, so `__p` is
@@ -351,27 +338,21 @@ object TextAnalysis {
   def lineFreqStats(text: Column): Column =
     graft.functions.HashFunctions.arrayFreqStats(docLines(text))
 
-  /** [[duplicateLineRatio]] over a materialized line-stats struct. */
+  /** Fraction of non-empty lines that repeat an earlier line — the
+    * classic boilerplate signal (nav bars, footers, chat logs) — over a
+    * materialized line-stats struct. */
   def duplicateLineRatioS(stats: Column): Column =
     ratio(stats.getField("n") - stats.getField("n_distinct"), stats.getField("n"))
 
-  /** [[duplicateLineCharRatio]] over a materialized line-stats struct. */
+  /** Fraction of line characters sitting in repeat occurrences of a line
+    * (the characters a line-level dedup would remove), over a
+    * materialized line-stats struct. One compiled hash-map pass per row
+    * ([[graft.functions.ArrayFreqStats]]) — the interpreted HOF
+    * formulation (a nested `filter` per distinct line) was quadratic in
+    * the line count and dominated x5 at sf1. Semantics pinned HOF-for-HOF
+    * by the parity spec in HashExpressionsSpec. */
   def duplicateLineCharRatioS(stats: Column): Column =
     ratio(stats.getField("dup_chars"), stats.getField("total_chars"))
-
-  /** Fraction of non-empty lines that repeat an earlier line — the
-    * classic boilerplate signal (nav bars, footers, chat logs). */
-  def duplicateLineRatio(text: Column): Column =
-    duplicateLineRatioS(lineFreqStats(text))
-
-  /** Fraction of line characters sitting in repeat occurrences of a line
-    * (the characters a line-level dedup would remove). One compiled
-    * hash-map pass per row ([[graft.functions.ArrayFreqStats]]) — the
-    * interpreted HOF formulation (a nested `filter` per distinct line)
-    * was quadratic in the line count and dominated x5 at sf1. Semantics
-    * pinned HOF-for-HOF by the parity spec in HashExpressionsSpec. */
-  def duplicateLineCharRatio(text: Column): Column =
-    duplicateLineCharRatioS(lineFreqStats(text))
 
   /** Highest frequency share of any word `n`-gram (lowercased): 1.0 means
     * the document is one phrase repeated. Gopher gates on this for
@@ -505,24 +486,8 @@ object TextAnalysis {
     * 1-row count subquery (a column-pruned scan), so the whole operator
     * is one lazy job — no separate driver-side `count()` action. */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int = 3): DataFrame =
-    tfidfTopTermsImpl(docs, idCol, textCol,
-      broadcast(docs.agg(count(lit(1)).cast("double").as("__n"))), k)
-
-  /** Variant with a caller-supplied corpus size (amortize a known N
-    * across repeated calls instead of re-counting per invocation).
-    * Distinctly named, not an overload: an overloaded
-    * `tfidfTopTerms(..., n, k)` would let an Int-literal corpus size
-    * silently bind to the base signature's `k` (Int beats Int-to-Long
-    * widening in overload resolution) — a corpus size becoming a top-k
-    * cutoff with no compile error. */
-  def tfidfTopTermsWithCount(docs: DataFrame, idCol: String, textCol: String,
-                             n: Long, k: Int): DataFrame =
-    tfidfTopTermsImpl(docs, idCol, textCol,
-      docs.sparkSession.range(1).select(lit(n.toDouble).as("__n")), k)
-
-  private def tfidfTopTermsImpl(docs: DataFrame, idCol: String, textCol: String,
-                                nDf: DataFrame, k: Int): DataFrame = {
+                    k: Int = 3): DataFrame = {
+    val nDf = docs.agg(count(lit(1)).cast("double").as("__n"))
     val tf = docs.select(col(idCol), explode(tokens(lower(col(textCol)))).as("term"))
       .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -614,9 +579,8 @@ object TextAnalysis {
     * log p_source(bucket(g))]` over its hashed unigram occurrences,
     * where both bucket models are add-α-smoothed count profiles —
     * target = rows satisfying `targetCond`, source = the whole corpus.
-    * High-weight documents look like the target distribution; feeding
-    * them to [[Sampling.importanceResample]] (Gumbel top-k) completes
-    * the DSIR select step.
+    * High-weight documents look like the target distribution; a Gumbel
+    * top-k draw over the weights completes the DSIR select step.
     *
     * Scale shape: tokens normalize to [a-z0-9] and bucket via the
     * replayable [[hashedGramBucket]] in one projection; the two count

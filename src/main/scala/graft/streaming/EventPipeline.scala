@@ -451,49 +451,6 @@ object EventPipeline {
       .start()
   }
 
-  /** Streaming per-stratum deterministic sample: maintains
-    * [[graft.ops.Sampling.bottomKSample]]'s exact bottom-k-by-Lehmer-
-    * priority selection over an unbounded stream. Bottom-k of a fixed
-    * priority function is a SEMILATTICE merge — commutative, associative
-    * and IDEMPOTENT — so the maintained state converges to precisely the
-    * sample the batch operator would draw over all distinct ids seen,
-    * regardless of batch boundaries, arrival order, or replayed ids
-    * (idempotence makes the operator replay-tolerant with no dedup
-    * bookkeeping: a re-delivered id re-derives the same priority and
-    * merges into the same slot). The p9 oracle discipline carries over:
-    * an external engine re-derives the full selection from the id set.
-    *
-    * Each batch costs one distinct + bottom-k aggregate over
-    * `state ∪ batch` — batch-sized work with a shuffle bounded at k
-    * rows per (partition, stratum), never proportional to stream age.
-    * State is ≤ k·|strata| rows; the caller owns storage via `get`/`set`
-    * (same contract as [[maintainAggState]]: `set` must materialize). */
-  def maintainBottomKState(stream: DataFrame, strataCol: String, idCol: String,
-                           n: Int, seed: Long = 1L)
-                          (get: () => Option[DataFrame], set: DataFrame => Unit): StreamingQuery = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // distinct BEFORE the bottom-k: BottomKIds ranks a multiset, so
-          // a replayed id (within the batch or vs the state) must collapse
-          // to one candidate or it would occupy two sample slots
-          val incoming = batch
-            .select(col(strataCol), col(idCol).cast("long").as(idCol))
-          val candidates = get() match {
-            case Some(state) => state
-              .select(col(strataCol), col(idCol).cast("long").as(idCol))
-              .unionByName(incoming)
-            case None => incoming
-          }
-          set(graft.ops.Sampling.bottomKSample(
-            candidates.distinct(), strataCol, idCol, n, seed))
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
-  }
-
   /** EXACTLY-ONCE streaming append into a
     * [[graft.sources.VersionedTable]]: each micro-batch commits as one
     * table version carrying its batchId, and

@@ -1,22 +1,14 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Spark 4 made Column<->Expression conversion and `sessionState`
-  * `private[sql]` (connect/classic split). This bridge lives under the
-  * sql package namespace to expose the few internals the custom
-  * Catalyst expressions in `graft.functions` need. */
+/** Spark 4 made Column<->Expression conversion `private[sql]`
+  * (connect/classic split). This bridge lives under the sql package
+  * namespace to expose the conversions the custom Catalyst expressions
+  * in `graft.functions` need. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Registers a function into a live session's registry (the
-    * config-time path is `spark.sql.extensions`). */
-  def registerFunction(spark: SparkSession, ident: FunctionIdentifier,
-                       info: ExpressionInfo, builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

@@ -73,6 +73,16 @@ class BenchSpec extends AnyFunSuite {
     assert(rec.contains(""""sf10_total":789.4"""))
   }
 
+  test("a NaN or infinite median round-trips the BENCH_QUERIES line as valid JSON") {
+    val line = Bench.queriesLine("sf",
+      Seq("a" -> Double.NaN, "b" -> 1.5, "c" -> Double.PositiveInfinity))
+    // Jackson's strict parser rejects the bare NaN / Infinity tokens
+    val q = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line).get("queries")
+    assert(q.get("a").asDouble() === -1.0)
+    assert(q.get("b").asDouble() === 1.5)
+    assert(q.get("c").asDouble() === -1.0)
+  }
+
   test("empty or scale-less prior carries nothing") {
     assert(Bench.carryScaleBlocks("", "sf1_") === "")
     assert(Bench.carryScaleBlocks("""{"metric":"total","value":1.0}""", "sf1_") === "")

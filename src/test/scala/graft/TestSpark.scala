@@ -10,5 +10,6 @@ object TestSpark {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .getOrCreate()
 }

@@ -108,7 +108,6 @@ class HashExpressionsSpec extends AnyFunSuite with Matchers {
   }
 
   test("SQL registration: functions callable from spark.sql") {
-    GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT
         |  simhash64(split('a b c', ' ')) AS sh,
@@ -219,6 +218,7 @@ class HashExpressionsSpec extends AnyFunSuite with Matchers {
         (a, g) => greatest(a, F.size(filter(gs, x => x === g))))
       top.cast("double") / greatest(F.size(gs), lit(1)).cast("double")
     }
+    val lines = TextAnalysis.lineFreqStats(col("t"))
     val texts = Seq(
       "", "one line", "single",
       "nav\nnav\nnav", "nav\nbody text\nnav\n\nx\nnav",
@@ -230,8 +230,8 @@ class HashExpressionsSpec extends AnyFunSuite with Matchers {
     val df = texts.toDF("t")
     for (n <- Seq(1, 2, 3)) {
       df.select(
-          TextAnalysis.duplicateLineRatio(col("t")).as("g1"), hofDupLineRatio(col("t")).as("h1"),
-          TextAnalysis.duplicateLineCharRatio(col("t")).as("g2"), hofDupLineCharRatio(col("t")).as("h2"),
+          TextAnalysis.duplicateLineRatioS(lines).as("g1"), hofDupLineRatio(col("t")).as("h1"),
+          TextAnalysis.duplicateLineCharRatioS(lines).as("g2"), hofDupLineCharRatio(col("t")).as("h2"),
           TextAnalysis.topNgramRatio(col("t"), n).as("g3"), hofTopNgramRatio(col("t"), n).as("h3"))
         .collect().foreach { r =>
           r.getAs[Double]("g1") shouldBe r.getAs[Double]("h1") +- 1e-12
@@ -241,8 +241,8 @@ class HashExpressionsSpec extends AnyFunSuite with Matchers {
     }
     // null text -> null signals, matching HOF null propagation
     val nr = Seq[Option[String]](None).toDF("t").select(
-      TextAnalysis.duplicateLineRatio(col("t")).as("a"),
-      TextAnalysis.duplicateLineCharRatio(col("t")).as("b"),
+      TextAnalysis.duplicateLineRatioS(lines).as("a"),
+      TextAnalysis.duplicateLineCharRatioS(lines).as("b"),
       TextAnalysis.topNgramRatio(col("t"), 2).as("c")).head()
     (0 until 3).foreach(nr.isNullAt(_) shouldBe true)
   }

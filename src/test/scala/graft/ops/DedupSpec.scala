@@ -130,12 +130,14 @@ class DedupSpec extends AnyFunSuite with Matchers {
     short shouldBe Seq("a b")
   }
 
+  // exact word-3-gram Jaccard of two text columns (lowercased shingle sets)
+  private def exactJaccard(a: String, b: String) =
+    Dedup.hashJaccard(Dedup.shingleHashes(col(a), 3), Dedup.shingleHashes(col(b), 3))
+
   test("ngram jaccard: identical 1.0, disjoint 0.0, case-insensitive") {
     val df = Seq((base, base.toUpperCase, "completely different words entirely here now"))
       .toDF("a", "b", "c")
-    val r = df.select(
-      Dedup.ngramJaccard(col("a"), col("b")).as("same"),
-      Dedup.ngramJaccard(col("a"), col("c")).as("diff")).head()
+    val r = df.select(exactJaccard("a", "b").as("same"), exactJaccard("a", "c").as("diff")).head()
     r.getAs[Double]("same") shouldBe 1.0
     r.getAs[Double]("diff") shouldBe 0.0
   }
@@ -146,7 +148,7 @@ class DedupSpec extends AnyFunSuite with Matchers {
     val r = df.select(
       Dedup.minHashJaccard(
         Dedup.minHashSignature(col("a"), 128), Dedup.minHashSignature(col("b"), 128)).as("est"),
-      Dedup.ngramJaccard(col("a"), col("b")).as("exact")).head()
+      exactJaccard("a", "b").as("exact")).head()
     r.getAs[Double]("est") shouldBe r.getAs[Double]("exact") +- 0.15
     r.getAs[Double]("exact") should be > 0.5
   }
@@ -335,7 +337,6 @@ class DedupSpec extends AnyFunSuite with Matchers {
     Seq[Option[String]](None).toDF("t")
       .select(Dedup.dedupLinesWithinDoc(col("t")).as("d"))
       .head().isNullAt(0) shouldBe true
-    graft.functions.GraftExtensions.register(spark)
     spark.sql("SELECT dedup_lines('a\nb\na') AS d").head().getString(0) shouldBe "a\nb"
   }
 

@@ -156,6 +156,24 @@ class LinkageSpec extends AnyFunSuite with Matchers {
     got shouldBe expect
   }
 
+  test("fuzzyJoinBest key generation compiles under whole-stage codegen (no fallback)") {
+    // with the fallback off, a generated class Janino rejects (a method
+    // past 64 KB) throws instead of silently running interpreted
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val probes = Seq((1L, "abcdefgh"), (2L, "abcxefgh"), (3L, "zz"))
+      val corpus = Seq((10L, "abcdefgh"), (11L, "abcdefg"), (12L, "qqqqqqqq"), (13L, "z"))
+      val got = Dedup.fuzzyJoinBest(
+          probes.toDF("pid", "ps"), corpus.toDF("cid", "cs"),
+          "pid", "ps", "cid", "cs", maxDist = 2)
+        .orderBy("pid").collect()
+        .map(r => (r.getLong(0), r.getAs[Any]("n_matches"), r.getAs[Any]("best_id")))
+      got shouldBe Array((1L, 2L, 10L), (2L, 2L, 10L), (3L, 1L, 13L))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("fuzzyJoinLevenshtein handles degenerate short strings soundly") {
     val probes = Seq((1L, "ab"), (2L, "a"), (3L, ""), (4L, "abcdef"))
     val corpus = Seq((10L, "ab"), (11L, "b"), (12L, ""), (13L, "abcd"),

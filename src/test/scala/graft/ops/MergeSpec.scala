@@ -294,38 +294,6 @@ class MergeSpec extends AnyFunSuite with Matchers {
     graft.functions.CountMin.estimate(aGrid, 4, 64, "y") should be >= 2L
   }
 
-  test("mergeTopKState: MG guarantee holds across maintenance; state stays <= k counters") {
-    import org.apache.spark.sql.functions._
-    val k = 3
-    val mg = udaf(new graft.functions.MisraGries(k),
-      org.apache.spark.sql.Encoders.STRING)
-    // three batches for one key; 'hot' has freq 12 of N=24 — far above
-    // N/(k+1) = 6, so it MUST survive every merge
-    val batches = Seq(
-      Seq.fill(4)("hot") ++ Seq("a", "b", "c", "d"),
-      Seq.fill(4)("hot") ++ Seq("e", "f", "a", "b"),
-      Seq.fill(4)("hot") ++ Seq("c", "a", "d", "e"))
-    def sketchOf(items: Seq[String]) =
-      items.map(w => ("k1", w)).toDF("g", "w").groupBy("g").agg(mg(col("w")).as("sk"))
-    val maintained = batches.map(sketchOf).reduce { (st, delta) =>
-      Merge.mergeTopKState(st, delta, Seq("g"), Seq("sk"), k)
-    }
-    val m = maintained.collect()(0).getMap[String, Long](1)
-    m.size should be <= k
-    m.keySet should contain("hot")
-    val n = batches.flatten.size.toLong
-    val trueHot = batches.flatten.count(_ == "hot").toLong
-    // MG bound: kept counter undercounts by at most N/(k+1)
-    m("hot") should be <= trueHot
-    m("hot") should be >= trueHot - n / (k + 1)
-    // keys absent from one side keep the other side's summary
-    val fresh = Seq(("k2", "z")).toDF("g", "w").groupBy("g").agg(mg(col("w")).as("sk"))
-    val merged = Merge.mergeTopKState(maintained, fresh, Seq("g"), Seq("sk"), k)
-      .orderBy("g").collect()
-    merged.length shouldBe 2
-    merged(1).getMap[String, Long](1)("z") shouldBe 1L
-  }
-
   test("incrementalJoinDelta: base view + delta equals the full recomputed join") {
     val a = Seq((1L, "a1"), (2L, "a2"), (3L, "a3")).toDF("k", "av")
     val da = Seq((2L, "a2b"), (4L, "a4")).toDF("k", "av")

@@ -47,9 +47,20 @@ class PqSpec extends AnyFunSuite with Matchers {
         best should be < 0.1
       }
     }
-    val mse4 = Pq.mse(df, "v", cb4).head().getDouble(1)
+    // corpus-mean squared quantization error: per subspace, the squared
+    // L2 to the nearest centroid, summed over subspaces
+    def mse(cb: Seq[Seq[Seq[Double]]]): Double = {
+      val errs = planted(256).map { case (_, v) =>
+        cb.zipWithIndex.map { case (cents, sub) =>
+          val w = v.slice(sub * 2, sub * 2 + 2)
+          cents.map(c => c.zip(w).map { case (a, b) => (a - b) * (a - b) }.sum).min
+        }.sum
+      }
+      errs.sum / errs.size
+    }
+    val mse4 = mse(cb4)
     val cb1 = Pq.fit(df, "id", "v", m = 2, ksub = 1, iters = 6)
-    val mse1 = Pq.mse(df, "v", cb1).head().getDouble(1)
+    val mse1 = mse(cb1)
     mse4 should be < 0.01   // within-anchor jitter only
     mse1 should be > (10.0 * mse4) // one centroid per subspace cannot fit 4 anchors
     // stable across partitioning up to float-summation dust (the mean

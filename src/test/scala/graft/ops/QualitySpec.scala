@@ -123,32 +123,6 @@ class QualitySpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("suggestChecks turns a profile into checks the data satisfies") {
-    val prof = Quality.profileExact(fixture, Seq("id", "v", "prio"))
-    val checks = Quality.suggestChecks(prof)
-    // id: no nulls -> NotNull; duplicated 5 -> NOT Unique; numeric range
-    checks should contain(Quality.NotNull("id"))
-    checks.collect { case Quality.Unique(cols, _) => cols } shouldBe empty
-    val idRange = checks.collectFirst {
-      case Quality.InRange("id", lo, hi, _) => (lo, hi) }.get
-    idRange._1 shouldBe 0.2 +- 1e-9  // 1 - 0.1 * span(8)
-    idRange._2 shouldBe 9.8 +- 1e-9
-    // v: has nulls -> no NotNull; range from [-1, 15]
-    checks.collect { case Quality.NotNull("v", _) => () } shouldBe empty
-    checks.collectFirst { case Quality.InRange("v", lo, hi, _) => (lo, hi) }
-      .get._1 shouldBe (-2.6) +- 1e-9
-    // prio: strings -> NotNull, no range
-    checks should contain(Quality.NotNull("prio"))
-    checks.collect { case Quality.InRange("prio", _, _, _) => () } shouldBe empty
-    // self-consistency: the suggested suite passes on the data it profiled
-    Quality.checkSuite(fixture, checks).collect().map(_.getBoolean(6))
-      .forall(identity) shouldBe true
-    // a genuinely unique column does get the Unique suggestion
-    val u = Seq(1L, 2L, 3L).toDF("k")
-    Quality.suggestChecks(Quality.profileExact(u, Seq("k"))) should
-      contain(Quality.Unique(Seq("k")))
-  }
-
   test("auditedCommit publishes only data that passes its gate") {
     val t = java.nio.file.Files.createTempDirectory("graft_wap").resolve("t").toString
     val good = Seq((1L, 5.0), (2L, 7.0)).toDF("k", "x")

@@ -106,12 +106,13 @@ class QuantilesSpec extends AnyFunSuite with Matchers {
   test("winsorize clamps into per-group quantile bounds; literal and join attach agree") {
     val df = (1 to 200).map(i => (s"g${i % 3}", Some(i.toDouble)))
       .:+(("gnull", None: Option[Double])).toDF("g", "v")
-    val w = Quantiles.winsorize(df, "g", "v", 0.1, 0.9).collect()
+    // per-group exact [p10, p90] bounds attached onto the rows, as a14 does
+    val bf = Quantiles.groupedQuantiles(df, "g", "v", Seq("lo" -> 0.1, "hi" -> 0.9))
+    val w = Quantiles.clampToBounds(df, "g", "v", bf).collect()
       .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
     w.length shouldBe 201
     // every clamped value sits inside its group's exact [p10, p90]
-    val bounds = Quantiles.groupedQuantiles(df, "g", "v", Seq("lo" -> 0.1, "hi" -> 0.9))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val bounds = bf.collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     w.filter(_._1 != "gnull").foreach { case (g, Some(v)) =>
       v should be >= bounds(g)._1
       v should be <= bounds(g)._2
@@ -120,7 +121,6 @@ class QuantilesSpec extends AnyFunSuite with Matchers {
     // the all-null group passes through unclamped (its value stays null)
     w.filter(_._1 == "gnull").head._2 shouldBe None
     // join path (maxLiteralGroups = 0 forces it) equals the literal path
-    val bf = Quantiles.groupedQuantiles(df, "g", "v", Seq("lo" -> 0.1, "hi" -> 0.9))
     val lit0 = Quantiles.clampToBounds(df, "g", "v", bf, maxLiteralGroups = 0)
       .select("g", "v").collect().map(r =>
         (r.getString(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))).sortBy(_.toString)

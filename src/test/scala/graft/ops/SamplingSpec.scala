@@ -260,40 +260,6 @@ class SamplingSpec extends AnyFunSuite with Matchers {
       Sampling.negativeSamples(items, items, "id", "lab", k = 1, maxPool = 10)
   }
 
-  test("importanceResample equals the driver Gumbel-top-k model, any partitioning") {
-    import org.apache.spark.sql.functions.col
-    // weights spread over several orders of magnitude in exp-space
-    val rows = (1L to 400L).map(i => (i, (i % 17).toDouble / 4.0 - 2.0))
-    val df = rows.toDF("id", "logw")
-    // driver replay of the exact operator arithmetic
-    def lehmer(id: Long, seed: Long): Long = {
-      val m = 2147483647L
-      val s1 = ((id + seed) % m) * 48271L % m
-      s1 * 48271L % m
-    }
-    def key(id: Long, lw: Double, seed: Long): Double =
-      lw - math.log(-math.log((lehmer(id, seed).toDouble + 1.0) / 2147483648.0))
-    val expect = rows.sortBy { case (id, lw) => (-key(id, lw, 1L), id) }
-      .take(25).map(_._1).toSet
-    def got(parts: Int): Set[Long] =
-      Sampling.importanceResample(df.repartition(parts), "id", "logw", k = 25)
-        .select("id").as[Long].collect().toSet
-    got(1) shouldBe expect
-    got(11) shouldBe expect
-    // a fresh seed is an independent draw
-    val other = Sampling.importanceResample(df, "id", "logw", k = 25, seed = 9L)
-      .select("id").as[Long].collect().toSet
-    other should not equal expect
-    // temperature -> 0 degenerates toward deterministic top-k by weight:
-    // every selected row carries a weight from the top weight classes
-    val cold = Sampling.importanceResample(df, "id", "logw", k = 25,
-        temperature = 1e-6)
-      .select("logw").as[Double].collect()
-    all(cold) should be > 1.0 // top classes are 2.0 and 1.75 (23 ids each)
-    // the __gk helper column does not leak into the output
-    Sampling.importanceResample(df, "id", "logw", k = 5).columns.toSeq shouldBe Seq("id", "logw")
-  }
-
   test("temperatureWeights: T=1 is natural proportions, large T approaches uniform") {
     import org.apache.spark.sql.functions.col
     val df = (Seq.fill(900)("big") ++ Seq.fill(100)("small"))

@@ -33,8 +33,9 @@ class SimilaritySpec extends AnyFunSuite with Matchers {
     (4L, Seq(-1.0, 0.0)), (5L, Seq(0.7, 0.7))).toDF("id", "vec")
 
   test("brute-force top-k ranks by cosine") {
-    val top = Similarity.topKBrute(corpus, "id", "vec", Seq(1.0, 0.0), 3)
-      .select("id").as[Long].collect()
+    val query = Seq((10L, Seq(1.0, 0.0))).toDF("qid", "qv")
+    val top = Similarity.topKForQueries(corpus, "id", "vec", query, "qid", "qv", 3)
+      .orderBy(col("cosine").desc, col("id")).select("id").as[Long].collect()
     top shouldBe Array(1L, 2L, 5L)
   }
 

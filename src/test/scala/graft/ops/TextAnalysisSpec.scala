@@ -11,6 +11,8 @@ class TextAnalysisSpec extends AnyFunSuite with Matchers {
 
   private def one[T](c: org.apache.spark.sql.Column, text: String): T =
     Seq(text).toDF("t").select(c.as("r")).head().getAs[T]("r")
+  private val p = TextAnalysis.profile(col("t"))
+  private val lines = TextAnalysis.lineFreqStats(col("t"))
 
   test("tokens drops empty strings from leading/trailing/multiple whitespace") {
     one[Seq[String]](TextAnalysis.tokens(col("t")), "  a  b\tc \n") shouldBe Seq("a", "b", "c")
@@ -24,26 +26,26 @@ class TextAnalysisSpec extends AnyFunSuite with Matchers {
 
   test("ratios on a crafted string") {
     val t = "AB c, 12!" // len 9: 2 upper, 2 digits, 2 punct
-    one[Double](TextAnalysis.punctRatio(col("t")), t) shouldBe (2.0 / 9) +- 1e-12
-    one[Double](TextAnalysis.digitRatio(col("t")), t) shouldBe (2.0 / 9) +- 1e-12
-    one[Double](TextAnalysis.upperRatio(col("t")), t) shouldBe (2.0 / 9) +- 1e-12
+    one[Double](TextAnalysis.punctRatioP(p), t) shouldBe (2.0 / 9) +- 1e-12
+    one[Double](TextAnalysis.digitRatioP(p), t) shouldBe (2.0 / 9) +- 1e-12
+    one[Double](TextAnalysis.upperRatioP(p), t) shouldBe (2.0 / 9) +- 1e-12
   }
 
   test("stopword ratio and mean token length") {
     val t = "the cat sat on the mat" // stopwords: the, on, the = 3/6
-    one[Double](TextAnalysis.stopwordRatio(col("t")), t) shouldBe 0.5 +- 1e-12
-    one[Double](TextAnalysis.meanTokenLength(col("t")), t) shouldBe (17.0 / 6) +- 1e-12
+    one[Double](TextAnalysis.stopwordRatioP(p), t) shouldBe 0.5 +- 1e-12
+    one[Double](TextAnalysis.meanTokenLengthP(p), t) shouldBe (17.0 / 6) +- 1e-12
   }
 
   test("duplicate-line signals on a crafted boilerplate document") {
     // 5 non-empty lines: "nav" x3 (3 chars each), "body text" (9), "x" (1)
     val t = "nav\nbody text\nnav\n\nx\nnav"
-    one[Double](TextAnalysis.duplicateLineRatio(col("t")), t) shouldBe (2.0 / 5) +- 1e-12
+    one[Double](TextAnalysis.duplicateLineRatioS(lines), t) shouldBe (2.0 / 5) +- 1e-12
     // dup chars = (3-1)*3 = 6 of total 3+9+3+1+3 = 19 line chars
-    one[Double](TextAnalysis.duplicateLineCharRatio(col("t")), t) shouldBe (6.0 / 19) +- 1e-12
+    one[Double](TextAnalysis.duplicateLineCharRatioS(lines), t) shouldBe (6.0 / 19) +- 1e-12
     // no lines / single lines degrade to 0
-    one[Double](TextAnalysis.duplicateLineRatio(col("t")), "") shouldBe 0.0
-    one[Double](TextAnalysis.duplicateLineCharRatio(col("t")), "only line") shouldBe 0.0
+    one[Double](TextAnalysis.duplicateLineRatioS(lines), "") shouldBe 0.0
+    one[Double](TextAnalysis.duplicateLineCharRatioS(lines), "only line") shouldBe 0.0
   }
 
   test("top n-gram ratio flags a repeated phrase") {
@@ -85,8 +87,8 @@ class TextAnalysisSpec extends AnyFunSuite with Matchers {
   test("quality score: clean English prose scores high, garbage scores low") {
     val good = "the quick brown fox jumps over the lazy dog and runs to the old barn"
     val bad = "!!! ??? ### 111 222 333 !!!"
-    val g = one[Double](TextAnalysis.qualityScore(col("t")), good)
-    val b = one[Double](TextAnalysis.qualityScore(col("t")), bad)
+    val g = one[Double](TextAnalysis.qualityScoreP(p), good)
+    val b = one[Double](TextAnalysis.qualityScoreP(p), bad)
     g should be >= 5.0 / 6
     b should be <= 0.5
   }
@@ -117,18 +119,13 @@ class TextAnalysisSpec extends AnyFunSuite with Matchers {
 
   test("tfidf: corpus-wide terms score zero, rare terms rank first") {
     val docs = Seq((1L, "a a b"), (2L, "a c")).toDF("doc_id", "text")
-    val out = TextAnalysis.tfidfTopTermsWithCount(docs, "doc_id", "text", n = 2, k = 2)
+    val out = TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", k = 2)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("term"),
         r.getAs[Double]("score"))).toSet
     // df(a)=2 -> idf ln(1)=0; df(b)=df(c)=1 -> idf ln(2)
     out shouldBe Set(
       (1L, "b", math.log(2.0)), (1L, "a", 0.0),
       (2L, "c", math.log(2.0)), (2L, "a", 0.0))
-    // the in-plan-N overload (count subquery, no driver action) agrees
-    val inPlan = TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", k = 2)
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("term"),
-        r.getAs[Double]("score"))).toSet
-    inPlan shouldBe out
   }
 
   test("vertical tab counts as whitespace (explicit class, Java/RE2 parity)") {

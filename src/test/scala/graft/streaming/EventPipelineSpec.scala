@@ -656,38 +656,6 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
     } finally q.stop()
   }
 
-  test("maintainBottomKState converges to the batch bottom-k sample, replays included") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    val q = EventPipeline.maintainBottomKState(input.toDF(),
-      "event_type", "event_id", n = 3)(get _, set _)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
-    def ev(id: Long, t: String) = Event(id, ts("10:00"), id, t, 1.0)
-    try {
-      feed((1L to 10L).map(i => ev(i, if (i % 2 == 0) "click" else "view")): _*)
-      feed(ev(4L, "click"), ev(11L, "click"), ev(3L, "view")) // 4 and 3 are replays
-      feed((12L to 25L).map(i => ev(i, "view")): _*)
-      val got = get().get.orderBy("event_type", "event_id")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      // the batch operator over every DISTINCT id fed, in one shot
-      val direct = graft.ops.Sampling.bottomKSample(
-          fed.toSeq.toDF().select("event_type", "event_id").distinct(),
-          "event_type", "event_id", 3)
-        .orderBy("event_type", "event_id")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      got shouldBe direct
-      // state is bounded at k rows per stratum
-      got.groupBy(_._1).values.foreach(_.size should be <= 3)
-    } finally q.stop()
-  }
-
   test("rollingZAnomalies over maintained hourly state equals the batch path (a10 twin)") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.{DataFrame, Row}
