@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed graph primitives over edge-list DataFrames — the shapes a
@@ -242,24 +243,37 @@ object Graph {
     * external engine can replay exactly `rounds` rounds either way
     * (the same fixed-round contract as [[labelPropagation]]).
     *
-    * Scale shape per round: one explode + map-side-combined degree
-    * count, then two semi-joins keyed by node id to drop dead
-    * endpoints. Nothing buffers a neighborhood; lineage grows by three
-    * joins per round (checkpoint beyond the ≤10 this accepts). */
+    * Edge rules: a duplicated edge counts once per copy toward both
+    * endpoints' degrees, and a self-loop counts twice toward its node.
+    * An edge with a null endpoint counts toward its other endpoint's
+    * round-1 degree and is then dropped.
+    *
+    * Scale shape: one `groupBy(a, b).count` folds duplicates into a
+    * multiplicity `m`. Each round then explodes every edge into its two
+    * endpoint rows, takes the degree as `sum(m)` over a window
+    * partitioned by node id, and keeps an edge iff the smaller endpoint
+    * degree is >= k (one group-by on the edge). Each round reads the
+    * previous round's edges exactly once, so the lazy plan has the
+    * input's leaves at any `rounds`, and its size grows by one window
+    * and one aggregate per round. The window buffers one node's
+    * endpoint rows at a time; Spark spills that buffer for a hub. */
   def kCore(canonical: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 10, s"rounds must be in [1, 10], got $rounds")
-    var edges = canonical.select(col("id_a").as("a"), col("id_b").as("b"))
-    def degrees: DataFrame = edges
-      .select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
+    val ends = explode(array(col("a"), col("b"))).as("id")
+    var edges = canonical.groupBy(col("id_a").as("a"), col("id_b").as("b"))
+      .agg(count(lit(1)).as("m"))
     for (_ <- 1 to rounds) {
-      val keep = degrees.filter(col("degree") >= k).select(col("id"))
-      edges = edges
-        .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
+      edges = edges.select(col("a"), col("b"), col("m"), ends)
+        .withColumn("deg", sum(col("m")).over(Window.partitionBy("id")))
+        .filter(col("a").isNotNull && col("b").isNotNull)
+        // m is one value per (a, b): grouping on it just carries it along
+        .groupBy("a", "b", "m").agg(min(col("deg")).as("deg"))
+        .filter(col("deg") >= k)
     }
-    degrees
+    // coalesce only keeps `degree` non-nullable, as the count it sums is
+    edges.select(ends, col("m"))
+      .groupBy("id").agg(coalesce(sum(col("m")), lit(0L)).as("degree"))
   }
 
   /** Adamic-Adar link prediction over a canonical (id_a < id_b) edge
@@ -436,8 +450,9 @@ object Graph {
     * groupedMode shape on a graph). Nothing ever buffers a
     * neighborhood; `iters` is small by LPA convention (labels
     * stabilize in a few rounds; each round extends lineage by one
-    * join, so very large budgets should checkpoint — out of scope for
-    * the ≤10 this accepts). Returns (id, label). */
+    * join, two analyzed-plan leaves for the two-direction edge union,
+    * so very large budgets should checkpoint — out of scope for the
+    * ≤10 this accepts). Returns (id, label). */
   def labelPropagation(canonical: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10, s"iters must be in [1, 10], got $iters")
     val und = canonical.select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -469,8 +484,12 @@ object Graph {
     * final direction.
     *
     * Scale shape per round: two edge-keyed join + map-side-combined sum
-    * passes; score frames stay |nodes|-sized. Lineage grows ~4 joins
-    * per round — the same ≤ small-iters contract as [[pageRank]].
+    * passes; score frames stay |nodes|-sized. Lineage grows by four
+    * joins (six edge-frame reads) per round. The final step joins the
+    * two score frames, each holding the whole round chain, and
+    * cross-joins that with its own L1 totals, so the analyzed plan reads
+    * the chain four times and grows by 24 leaves per round — linear,
+    * under the same ≤ small-iters contract as [[pageRank]].
     * Returns (node, authority, hub) L1-normalized; nodes with no
     * in-edges (resp. out-edges) score 0. */
   def hits(edges: DataFrame, iters: Int): DataFrame = {

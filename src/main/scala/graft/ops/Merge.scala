@@ -183,13 +183,6 @@ object Merge {
         }: _*)
   }
 
-  /** Null-safe full-outer key join of the two pre-renamed state-merge
-    * sides. `groupBy` over a nullable column yields a NULL-keyed group,
-    * and a plain equi-join would never match it against itself — the
-    * merged state would silently carry two rows for the same null key,
-    * breaking merge(agg(A), agg(B)) == agg(A ∪ B). `<=>` (EqualNullSafe)
-    * is still an equi-join condition to Catalyst, so the plan stays a
-    * hash/sort-merge join on the key — no scale change. */
   /** Incremental equi-join view maintenance (insert-only deltas): the
     * delta of V = A ⋈ B under appends (dA, dB) is exactly
     * dV = dA⋈B ∪ A⋈dB ∪ dA⋈dB — appending dV to the materialized V
@@ -211,6 +204,13 @@ object Merge {
       .unionByName(da.join(db, keys))
   }
 
+  /** Null-safe full-outer key join of the two pre-renamed state-merge
+    * sides. `groupBy` over a nullable column yields a NULL-keyed group,
+    * and a plain equi-join would never match it against itself — the
+    * merged state would silently carry two rows for the same null key,
+    * breaking merge(agg(A), agg(B)) == agg(A ∪ B). `<=>` (EqualNullSafe)
+    * is still an equi-join condition to Catalyst, so the plan stays a
+    * hash/sort-merge join on the key — no scale change. */
   private def nullSafeFullOuter(s: DataFrame, d: DataFrame,
                                 keys: Seq[String]): DataFrame =
     s.join(d, keys.map(k => col(s"__sk_$k") <=> col(s"__dk_$k")).reduce(_ && _),

@@ -1,8 +1,14 @@
 package graft.ops
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, floor}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.concurrent.{Await, Future}
 
 class GraphSpec extends AnyFunSuite with Matchers {
   private lazy val spark = TestSpark.spark
@@ -159,6 +165,101 @@ class GraphSpec extends AnyFunSuite with Matchers {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe core2
     an[IllegalArgumentException] should be thrownBy Graph.kCore(tri, 0, 1)
     an[IllegalArgumentException] should be thrownBy Graph.kCore(tri, 2, 11)
+  }
+
+  private type Edge = (Option[Long], Option[Long])
+
+  /** One synchronous peeling round on the driver: degrees count every
+    * endpoint occurrence of the round's edges (a self-loop twice, each
+    * duplicate once, a null endpoint's edge toward its other endpoint),
+    * then edges with a null endpoint or an endpoint of degree < k go. */
+  private def peelRound(edges: Seq[Edge], k: Int): Seq[Edge] = {
+    val deg = endpointDegrees(edges)
+    edges.filter { case (a, b) =>
+      a.isDefined && b.isDefined && deg(a) >= k && deg(b) >= k }
+  }
+
+  private def endpointDegrees(edges: Seq[Edge]): Map[Option[Long], Long] =
+    edges.flatMap { case (a, b) => Seq(a, b) }
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+
+  private def degreeRows(edges: Seq[Edge]): Seq[(Long, Long)] =
+    endpointDegrees(edges).toSeq.map { case (id, d) => id.get -> d }.sorted
+
+  private def kCoreRows(edges: DataFrame, k: Int, rounds: Int): Seq[(Long, Long)] =
+    Graph.kCore(edges, k, rounds).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+
+  test("kCore matches driver-side peeling with duplicates, self-loops and null endpoints") {
+    // 30 seeded graphs on disjoint id ranges: peeling never crosses a
+    // component, so one kCore call over their union checks every graph
+    val edges: Seq[Edge] = (0 until 30).flatMap { g =>
+      val rnd = new scala.util.Random(g)
+      val n = 4 + rnd.nextInt(9)
+      def id: Option[Long] =
+        if (rnd.nextInt(15) == 0) None else Some(1000L * g + rnd.nextInt(n))
+      val drawn = Seq.fill(3 + rnd.nextInt(3 * n)) {
+        val a = id
+        if (rnd.nextInt(10) == 0) (a, a) else (a, id)
+      }
+      drawn ++ rnd.shuffle(drawn).take(rnd.nextInt(4))
+    }
+    edges.exists(e => e._1.isEmpty || e._2.isEmpty) shouldBe true
+    edges.exists(e => e._1.isDefined && e._1 == e._2) shouldBe true
+    edges.distinct.size should be < edges.size
+    val df = edges.toDF("id_a", "id_b")
+    val model = Iterator.iterate(edges)(peelRound(_, 3)).take(4).toSeq
+    // rounds matter on this input: peeling is still under way at round 3
+    degreeRows(model(1)) should not be degreeRows(model(3))
+    for (k <- 1 to 3; rounds <- 1 to 3) withClue(s"k=$k rounds=$rounds: ") {
+      val expected = degreeRows(Iterator.iterate(edges)(peelRound(_, k)).drop(rounds).next())
+      kCoreRows(df.repartition(k + rounds), k, rounds) shouldBe expected
+    }
+  }
+
+  test("iterative graph operators keep analyzed plans linear in rounds") {
+    val und = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val dir = Seq((1L, 2L)).toDF("src", "dst")
+    val canonical = Seq((1L, 2L)).toDF("a", "b")
+    val seeds = Seq(1L).toDF("node")
+    // (operator, plan at r rounds, a, b): leaves(r) <= a + b·r, with a and
+    // b as measured on these one-row inputs
+    val bounds: Seq[(String, Int => DataFrame, Int, Int)] = Seq(
+      ("kCore", r => Graph.kCore(und, 2, r), 1, 0),
+      ("pageRank", r => Graph.pageRank(dir, r), 1, 4),
+      ("hits", r => Graph.hits(dir, r), 2, 24),
+      ("labelPropagation", r => Graph.labelPropagation(und, r), 2, 2),
+      ("shortestPaths", r => Graph.shortestPaths(canonical, seeds, r), 1, 3),
+      ("harmonicCentrality", r => Graph.harmonicCentrality(canonical, seeds, r), 1, 3))
+    for ((name, plan, a, b) <- bounds; r <- 1 to 10) withClue(s"$name at $r rounds: ") {
+      plan(r).queryExecution.analyzed.collectLeaves().size should be <= a + b * r
+    }
+  }
+
+  test("kCore at rounds = 10 on a 2,000-id chain+band graph finishes at the converged core") {
+    // g6's shape: 40 blocks of 50 ids, a chain i-(i+1) inside each block
+    // plus a skip band i-(i+2). Even blocks are banded end to end (a
+    // stable 2-core); odd blocks only on ids 10..39, so their two 10-node
+    // chain tails lose one node per round and the 2-core is reached at
+    // exactly round 10.
+    val pos = col("id") % 50
+    val ids = spark.range(2000)
+    val chain = ids.filter(pos =!= 49).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val band = ids
+      .filter(pos < 48 && (floor(col("id") / 50) % 2 === 0 || (pos >= 10 && pos < 38)))
+      .select(col("id").as("id_a"), (col("id") + 2).as("id_b"))
+    val graph = chain.union(band)
+    val edges: Seq[Edge] = graph.as[(Long, Long)].collect().toSeq
+      .map { case (a, b) => (Some(a), Some(b)) }
+    val peeled = Iterator.iterate(edges)(peelRound(_, 2)).take(12).toSeq
+    peeled(10) shouldBe peeled(11)
+    peeled(9) should not be peeled(10)
+    val core = degreeRows(peeled(10))
+    core.size shouldBe 20 * 50 + 20 * 30
+    // a plan that triples each round never finishes 10 rounds: the
+    // bound turns that into a failure instead of a hang
+    val got = Await.result(Future(kCoreRows(graph, 2, 10)), 120.seconds)
+    got shouldBe core
   }
 
   test("adamicAdar scores the square's diagonals and excludes existing edges") {
