@@ -21,6 +21,37 @@ object OpsQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "documents").select(col("doc_id"), col("text"))
 
+  /** The d6/d13/d13c/c5 shared planted near-dup corpus: doc_id % 5 == 3
+    * becomes a double-space copy of doc_id - 1 and doc_id % 5 == 4 a
+    * triple-space copy of doc_id - 2 — the same token stream (identical
+    * shingle sets) under different raw text, so each % 5 == 2 donor
+    * anchors a 3-clique that exact dedup does not absorb. */
+  private def plantedNearDupDocs(s: SparkSession, dir: String): DataFrame = {
+    val d = docs(s, dir)
+    val c1 = d.select((col("doc_id") + 1).as("doc_id"),
+      expr("replace(text, ' ', '  ')").as("__c1"))
+    val c2 = d.select((col("doc_id") + 2).as("doc_id"),
+      expr("replace(text, ' ', '   ')").as("__c2"))
+    d.join(c1, Seq("doc_id"), "left").join(c2, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("doc_id") % 5 === 3 && col("__c1").isNotNull, col("__c1"))
+          .when(col("doc_id") % 5 === 4 && col("__c2").isNotNull, col("__c2"))
+          .otherwise(col("text")).as("text"))
+  }
+
+  /** The d15/d15c shared "new crawl" over the reference corpus `ref`:
+    * doc_id % 4 == 0 is a byte-exact copy, % 4 == 1 an equal-token
+    * near-dup (double spaces), % 4 in {2, 3} genuinely fresh (a unique
+    * token appended). Ids shift by 1e12 for scale-proof disjointness
+    * (a +1e6 shift collided with real ids at sf30, where ids reach
+    * 1.5M, and crossCorpusDedup's in-plan uniqueness guard caught it
+    * loudly rather than silently double-counting). */
+  private def newCrawl(ref: DataFrame): DataFrame =
+    ref.select((col("doc_id") + 1000000000000L).as("doc_id"),
+      when(col("doc_id") % 4 === 0, col("text"))
+        .when(col("doc_id") % 4 === 1, expr("replace(text, ' ', '  ')"))
+        .otherwise(concat(col("text"), lit(" zz"), col("doc_id"))).as("text"))
+
   /** The g1/g11 shared planted doc-adjacency graph, canonical (a < b):
     * chain edges (i, i+1), chords (i, i+2) at i%3==0 and i%5==0
     * (overlapping at i%15==0 — exercises the canonical dedup), and
@@ -159,29 +190,17 @@ object OpsQueries {
       Dedup.minHashDedup(docs(s, dir), "doc_id", "text", threshold = 0.5)
         .select(col("doc_id")).orderBy("doc_id")),
     "d6_minhash_dedup_cc" -> ((s, dir) => {
-      // Planted fixture putting the FULL pipeline (exact-dedup prefix ->
-      // MinHash-LSH pairs -> connected components) under the DuckDB hash
-      // gate (the d8/d9 pattern): doc_id % 5 == 3 becomes a double-space
-      // copy of doc_id - 1, doc_id % 5 == 4 a triple-space copy of
-      // doc_id - 2 — same TOKEN stream (so identical shingle sets) but
-      // different raw text (so the exact prefix does NOT absorb them);
-      // each % 5 == 2 donor thus anchors a 3-clique the components must
+      // The [[plantedNearDupDocs]] fixture puts the FULL pipeline
+      // (exact-dedup prefix -> MinHash-LSH pairs -> connected
+      // components) under the DuckDB hash gate (the d8/d9 pattern):
+      // each % 5 == 2 donor anchors a 3-clique the components must
       // merge. At threshold 1.0 a pair qualifies iff the distinct
       // shingle-hash sets are EQUAL, and equal sets mean identical
       // MinHash signatures — every band collides, recall is exactly 1 —
       // so the surviving id set is SQL-derivable: min doc_id per
       // distinct shingle set. The exact prefix stays the production
       // order (absorbs mass-duplicate clusters before LSH buckets them).
-      val d = docs(s, dir)
-      val c1 = d.select((col("doc_id") + 1).as("doc_id"),
-        expr("replace(text, ' ', '  ')").as("__c1"))
-      val c2 = d.select((col("doc_id") + 2).as("doc_id"),
-        expr("replace(text, ' ', '   ')").as("__c2"))
-      val corpus = d.join(c1, Seq("doc_id"), "left").join(c2, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 3 && col("__c1").isNotNull, col("__c1"))
-            .when(col("doc_id") % 5 === 4 && col("__c2").isNotNull, col("__c2"))
-            .otherwise(col("text")).as("text"))
+      val corpus = plantedNearDupDocs(s, dir)
       Dedup.minHashDedupClustered(
           Dedup.exact(corpus, "doc_id", "text"),
           "doc_id", "text", threshold = 1.0)
@@ -3158,16 +3177,7 @@ object OpsQueries {
       // (≥20 tokens) → per-language report carrying the absorbed
       // cluster mass. Every stage is an individually oracle-verified
       // operator; the oracle composes their verified CTE shapes.
-      val d = docs(s, dir)
-      val c1 = d.select((col("doc_id") + 1).as("doc_id"),
-        expr("replace(text, ' ', '  ')").as("__c1"))
-      val c2 = d.select((col("doc_id") + 2).as("doc_id"),
-        expr("replace(text, ' ', '   ')").as("__c2"))
-      val corpus = d.join(c1, Seq("doc_id"), "left").join(c2, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 3 && col("__c1").isNotNull, col("__c1"))
-            .when(col("doc_id") % 5 === 4 && col("__c2").isNotNull, col("__c2"))
-            .otherwise(col("text")).as("text"))
+      val corpus = plantedNearDupDocs(s, dir)
       val surv = Dedup.canonicalPerCluster(corpus, "doc_id", "text",
         prefer = length(col("text")), threshold = 1.0)
       surv.select(col("doc_id"), col("cluster_size"),
@@ -3390,16 +3400,7 @@ object OpsQueries {
       // winner differs from d6's min-id everywhere a clique exists, and
       // cluster_size pins the component membership itself under the hash
       // gate (d6 only checked the survivor set).
-      val d = docs(s, dir)
-      val c1 = d.select((col("doc_id") + 1).as("doc_id"),
-        expr("replace(text, ' ', '  ')").as("__c1"))
-      val c2 = d.select((col("doc_id") + 2).as("doc_id"),
-        expr("replace(text, ' ', '   ')").as("__c2"))
-      val corpus = d.join(c1, Seq("doc_id"), "left").join(c2, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 3 && col("__c1").isNotNull, col("__c1"))
-            .when(col("doc_id") % 5 === 4 && col("__c2").isNotNull, col("__c2"))
-            .otherwise(col("text")).as("text"))
+      val corpus = plantedNearDupDocs(s, dir)
       Dedup.canonicalPerCluster(corpus, "doc_id", "text",
           prefer = length(col("text")), threshold = 1.0)
         .select(col("doc_id"), col("cluster_size"))
@@ -3420,16 +3421,7 @@ object OpsQueries {
       // pays the exponent-1.85 Σ size² pair growth the capped default
       // path skips. The name keeps its historical "_capped" suffix —
       // renaming a declared query is a contract break.
-      val d = docs(s, dir)
-      val c1 = d.select((col("doc_id") + 1).as("doc_id"),
-        expr("replace(text, ' ', '  ')").as("__c1"))
-      val c2 = d.select((col("doc_id") + 2).as("doc_id"),
-        expr("replace(text, ' ', '   ')").as("__c2"))
-      val corpus = d.join(c1, Seq("doc_id"), "left").join(c2, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 3 && col("__c1").isNotNull, col("__c1"))
-            .when(col("doc_id") % 5 === 4 && col("__c2").isNotNull, col("__c2"))
-            .otherwise(col("text")).as("text"))
+      val corpus = plantedNearDupDocs(s, dir)
       Dedup.canonicalPerCluster(corpus, "doc_id", "text",
           prefer = length(col("text")), threshold = 1.0, maxBucketSize = 0)
         .select(col("doc_id"), col("cluster_size"))
@@ -3582,23 +3574,13 @@ object OpsQueries {
         .orderBy(col("n").desc, col("token"))
     }),
     "d15_cross_corpus_dedup" -> ((s, dir) => {
-      // dedup the "new crawl" against the existing corpus: %4==0 is a
-      // byte-exact copy, %4==1 an equal-token near-dup (double spaces),
-      // %4 in {2,3} genuinely fresh (a unique token appended) — only
-      // the fresh half survives. Threshold 1.0 => a new doc is dropped
+      // dedup the [[newCrawl]] against the existing corpus: only its
+      // fresh half survives. Threshold 1.0 => a new doc is dropped
       // iff its distinct shingle set EQUALS some ref doc's (the d6
       // equality argument), which the oracle derives with a set-key
       // anti-join — no LSH replay needed.
       val ref = docs(s, dir)
-      // 1e12 shift: scale-proof id disjointness (the +1e6 fixture shift
-      // collided with real ids at the sf30 spot-bench — ids reach 1.5M
-      // there — and crossCorpusDedup's in-plan uniqueness guard caught
-      // it loudly rather than silently double-counting)
-      val newc = ref.select((col("doc_id") + 1000000000000L).as("doc_id"),
-        when(col("doc_id") % 4 === 0, col("text"))
-          .when(col("doc_id") % 4 === 1, expr("replace(text, ' ', '  ')"))
-          .otherwise(concat(col("text"), lit(" zz"), col("doc_id"))).as("text"))
-      Dedup.crossCorpusDedup(newc, ref, "doc_id", "text", threshold = 1.0)
+      Dedup.crossCorpusDedup(newCrawl(ref), ref, "doc_id", "text", threshold = 1.0)
         .select(col("doc_id")).orderBy("doc_id")
     }),
     "d15c_cross_corpus_capped" -> ((s, dir) => {
@@ -3611,11 +3593,7 @@ object OpsQueries {
       // at the composed scales this twin alone pays the exponent-1.84
       // boundary-crossing pair growth the default path skips.
       val ref = docs(s, dir)
-      val newc = ref.select((col("doc_id") + 1000000000000L).as("doc_id"),
-        when(col("doc_id") % 4 === 0, col("text"))
-          .when(col("doc_id") % 4 === 1, expr("replace(text, ' ', '  ')"))
-          .otherwise(concat(col("text"), lit(" zz"), col("doc_id"))).as("text"))
-      Dedup.crossCorpusDedup(newc, ref, "doc_id", "text", threshold = 1.0,
+      Dedup.crossCorpusDedup(newCrawl(ref), ref, "doc_id", "text", threshold = 1.0,
           maxBucketSize = 0)
         .select(col("doc_id")).orderBy("doc_id")
     }),

@@ -672,29 +672,13 @@ object Dedup {
     val withSig = withSh.select(col("id"), col("sh"),
       graft.functions.HashFunctions.minHashSignature(col("sh"), numHashes).as("sig"))
 
-    val bandedAll = withSig.select(col("id"),
+    val banded = withSig.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         b => xxhash64(concat_ws(",", slice(col("sig"), b * rows + lit(1), lit(rows)))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
 
-    // bucket-size gate: a count window over the ALREADY-banded relation,
-    // so the band explode is derived once (the earlier groupBy+join
-    // formulation re-derived the explode — and re-read the signature
-    // relation — a second time). The window shuffles on the same
-    // (band, band_hash) key the pair join needs, and its per-bucket work
-    // is linear in the bucket — the quadratic blowup the cap prevents is
-    // in the join, not here.
-    val banded =
-      if (maxBucketSize <= 0) bandedAll
-      else bandedAll
-        .withColumn("__bn", count(lit(1)).over(Window.partitionBy("band", "band_hash")))
-        .filter(col("__bn") <= maxBucketSize).drop("__bn")
-
-    val candidates = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("band_hash"), col("id").as("id_b")),
-        Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
+    val candidates = BandedPairs(banded, Seq("band", "band_hash"), maxBucketSize = maxBucketSize)
+      .dropDuplicates("id_a", "id_b")
 
     candidates
       .join(withSig.select(col("id").as("id_a"), col("sh").as("sh_a"), col("sig").as("sig_a")), Seq("id_a"))
@@ -956,30 +940,6 @@ object Dedup {
   def simHash(text: Column): Column =
     graft.functions.HashFunctions.simHash64(TextAnalysis.tokens(lower(text)))
 
-  /** Hamming distance between two SimHashes. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** SimHash near-dup pairs: documents whose 64-bit SimHashes differ in
-    * <= maxHamming bits. Buckets by the 4 16-bit quarters of the hash
-    * (pigeonhole: any pair within Hamming distance 3 shares at least one
-    * exact quarter), so the join is an equi-join, not a cross join. */
-  def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "quarter-banding is sound only for maxHamming <= 3")
-    val withSig = df.select(col(idCol).as("id"), simHash(col(textCol)).as("sim"))
-    val banded = withSig.select(col("id"), col("sim"),
-      posexplode(array((0 until 4).map(q =>
-        shiftright(col("sim"), q * 16).bitwiseAND(0xFFFFL)): _*)))
-      .withColumnRenamed("pos", "quarter").withColumnRenamed("col", "qhash")
-    val a = banded.select(col("quarter"), col("qhash"), col("id").as("id_a"), col("sim").as("sim_a"))
-    val b = banded.select(col("quarter"), col("qhash"), col("id").as("id_b"), col("sim").as("sim_b"))
-    a.join(b, Seq("quarter", "qhash"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), hamming(col("sim_a"), col("sim_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a", "id_b")
-  }
-
   // --- embedding near-dup ----------------------------------------------
 
   /** Embedding-cosine near-duplicate pairs: pairs with cosine >=
@@ -993,72 +953,33 @@ object Dedup {
                             threshold: Double, planes: Seq[Seq[Double]]): DataFrame = {
     val withB = df.select(col(idCol).as("id"), col(vecCol).as("v"),
       Similarity.lshBucket(col(vecCol), planes).as("bucket"))
-    val a = withB.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = withB.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        Similarity.cosine(col("v_a"), col("v_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    cosinePairs(withB, threshold)
   }
 
-  /** [[embeddingNearDupPairs]] with the plane count scaled to the corpus:
-    * P = clamp(ceil(log2(n / targetBucket)), minPlanes, maxPlanes), so the
-    * expected bucket population stays ~targetBucket no matter the corpus
-    * size. A FIXED plane count is quadratic in disguise — 10x the vectors
-    * in the same 2^P buckets is 100x the candidate pairs (measured 43x
-    * wall-clock at sf1). The count is folded into the plan as a broadcast
-    * one-row aggregate (no driver-side count action), and the plane
-    * literals are the static `randomPlanes(maxPlanes, dim, seed)` prefix —
-    * [[Similarity.lshBucketGated]] masks the bits above P at runtime, so
-    * small corpora reproduce the fixed-minPlanes bucketing bit-for-bit. */
+  /** [[embeddingNearDupPairs]] with the plane count scaled to the corpus
+    * by [[Similarity.adaptiveBuckets]]: P = clamp(ceil(log2(n /
+    * targetBucket)), minPlanes, maxPlanes), so the expected bucket
+    * population stays ~targetBucket no matter the corpus size. A FIXED
+    * plane count is quadratic in disguise — 10x the vectors in the same
+    * 2^P buckets is 100x the candidate pairs (measured 43x wall-clock at
+    * sf1). Small corpora reproduce the fixed-minPlanes bucketing
+    * bit-for-bit. */
   def embeddingNearDupPairsAdaptive(df: DataFrame, idCol: String, vecCol: String,
                                     threshold: Double, minPlanes: Int = 4, maxPlanes: Int = 16,
                                     targetBucket: Int = 64, seed: Long = 42L): DataFrame = {
-    val dim = Similarity.inferDim(df, vecCol)
-    val planes = Similarity.randomPlanes(maxPlanes, dim, seed)
-    val n = df.agg(count(lit(1)).as("__n"))
-    val p = greatest(lit(minPlanes),
-      least(lit(maxPlanes), ceil(log2(col("__n") / lit(targetBucket.toDouble))).cast("int")))
-    val withB = df.crossJoin(broadcast(n))
-      .select(col(idCol).as("id"), col(vecCol).as("v"),
-        Similarity.lshBucketGated(col(vecCol), planes, p).as("bucket"))
-    val a = withB.select(col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = withB.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
+    val withB = Similarity.adaptiveBuckets(df, Seq(col(idCol).as("id"), col(vecCol).as("v")),
+      col(vecCol), Similarity.inferDim(df, vecCol), minPlanes, maxPlanes, targetBucket, seed)
+    cosinePairs(withB, threshold)
+  }
+
+  /** Verify step of both embedding pair stages: (id, v, bucket) rows →
+    * uncapped bucket pairs with cosine >= `threshold`. */
+  private def cosinePairs(withB: DataFrame, threshold: Double): DataFrame =
+    BandedPairs(withB, Seq("bucket"), Seq("v"))
       .select(col("id_a"), col("id_b"),
         Similarity.cosine(col("v_a"), col("v_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
-  }
 
-  /** Cross-document repeated-SPAN detection — the corpus-level exact
-    * substring dedup signal (Lee et al., "Deduplicating Training Data
-    * Makes Language Models Better", ACL 2022, builds a suffix array for
-    * this; a distributed engine gets the same signal from SAMPLED
-    * character k-gram anchors without any global index):
-    *
-    *  - every `stride`-th k-character gram of every document is an
-    *    anchor (pure `sequence`/`substring` projection — codegen'd, no
-    *    UDF, no corpus-sized state);
-    *  - anchors aggregate exactly in two map-side-combinable levels
-    *    ((gram, doc) then gram), so the shuffle carries distinct
-    *    sampled grams, about `corpus_chars / stride` rows — the knob
-    *    that makes 100 TB affordable;
-    *  - a gram surviving `minOcc` is a repeated span's fingerprint:
-    *    any repeated span of length >= k + stride - 1 is GUARANTEED to
-    *    contain at least one sampled anchor of one copy, and alignment
-    *    differences only shift WHICH anchor repeats, not whether one
-    *    does, when both copies sit at the same offsets mod stride.
-    *    `hashMod > 1` switches to content-defined sampling (keep grams
-    *    whose xxhash64 is 0 mod hashMod — winnowing-style), which is
-    *    alignment-INDEPENDENT: the same grams are selected in every
-    *    copy wherever it starts. Positional mode is externally
-    *    replayable (the d19 oracle); hash mode is the robust production
-    *    knob (spec-pinned, like every xxhash operator here).
-    *
-    * Returns (gram, n_occ, n_docs) for every surviving anchor. Callers
-    * route hits to span removal or doc-level quarantine. */
   /** The REMOVAL side of [[repeatedSpans]]: mask every character covered
     * by an occurrence of any blocklisted k-gram (Lee et al. cut the
     * repeated spans; masking keeps offsets stable for downstream
@@ -1115,6 +1036,33 @@ object Dedup {
     }(enc)
   }
 
+  /** Cross-document repeated-SPAN detection — the corpus-level exact
+    * substring dedup signal (Lee et al., "Deduplicating Training Data
+    * Makes Language Models Better", ACL 2022, builds a suffix array for
+    * this; a distributed engine gets the same signal from SAMPLED
+    * character k-gram anchors without any global index):
+    *
+    *  - every `stride`-th k-character gram of every document is an
+    *    anchor (pure `sequence`/`substring` projection — codegen'd, no
+    *    UDF, no corpus-sized state);
+    *  - anchors aggregate exactly in two map-side-combinable levels
+    *    ((gram, doc) then gram), so the shuffle carries distinct
+    *    sampled grams, about `corpus_chars / stride` rows — the knob
+    *    that makes 100 TB affordable;
+    *  - a gram surviving `minOcc` is a repeated span's fingerprint:
+    *    any repeated span of length >= k + stride - 1 is GUARANTEED to
+    *    contain at least one sampled anchor of one copy, and alignment
+    *    differences only shift WHICH anchor repeats, not whether one
+    *    does, when both copies sit at the same offsets mod stride.
+    *    `hashMod > 1` switches to content-defined sampling (keep grams
+    *    whose xxhash64 is 0 mod hashMod — winnowing-style), which is
+    *    alignment-INDEPENDENT: the same grams are selected in every
+    *    copy wherever it starts. Positional mode is externally
+    *    replayable (the d19 oracle); hash mode is the robust production
+    *    knob (spec-pinned, like every xxhash operator here).
+    *
+    * Returns (gram, n_occ, n_docs) for every surviving anchor. Callers
+    * route hits to span removal or doc-level quarantine. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String, k: Int = 24,
                     stride: Int = 8, minOcc: Long = 2L, hashMod: Int = 0): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")

@@ -1031,13 +1031,6 @@ object Multimodal {
     out
   }
 
-  /** Partition-wise REAL image resize over a binary column: decodable
-    * 24-bpp BMP payloads are box-resampled ([[boxResize]]) to
-    * `outW` x `outH` and re-encoded as a valid BMP in `outCol`; every
-    * other payload maps to null (compressed-format resize follows the
-    * same decode stubs as [[withImageStats]]). The output is a REAL
-    * payload — feed it back through [[withImageStats]] / [[withMediaMeta]]
-    * or write it out; same `mapPartitions` batch shape as the decoders. */
   /** 64-bit average-hash (aHash) of a decodable 24-bpp BMP, as FOUR
     * 16-bit quarters (bit i of the hash lives in quarter i/16 at
     * position i%16). The perceptual-hash pipeline: decode → box-resample
@@ -1050,7 +1043,7 @@ object Multimodal {
     * Quarters instead of one packed long: bit 63 would sign-wrap a
     * BIGINT, and the quartered form is exactly what the banded pair
     * join needs (pigeonhole: hamming ≤ 3 over 4 quarters guarantees one
-    * exactly-equal quarter — the [[Dedup.simHashPairs]] argument). */
+    * exactly-equal quarter; see [[aHashPairs]]). */
   private[ops] def aHash64Quarters(bytes: Array[Byte]): Option[Array[Int]] =
     decodeBmp24Pixels(bytes).map { case (w, h, rgb) =>
       val small = if (w == 8 && h == 8) rgb else boxResize(w, h, rgb, 8, 8)
@@ -1142,8 +1135,9 @@ object Multimodal {
     *
     * `maxBucketSize` (default 256; <= 0 disables) skips quarter buckets
     * holding more than that many signatures before the pair join — the
-    * Σ size² cap the text LSH pair stage carries, with a HIGHER budget
-    * because the failure mode differs: a 16-bit quarter is a far weaker
+    * [[BandedPairs]] Σ size² cap the text LSH pair stage carries, with
+    * a HIGHER budget because the failure mode differs: a 16-bit quarter
+    * is a far weaker
     * band than a 64-bit minhash-band bucket, so low-information
     * payloads (dark images, silence, constant rasters) COLLIDE
     * NATURALLY — measured census on the replicated 100x corpus: max
@@ -1159,30 +1153,24 @@ object Multimodal {
     require(maxHamming <= 3, "quarter-banding is sound only for maxHamming <= 3")
     val sigs = df.filter(col(hashCol).isNotNull)
       .select(col(idCol).as("id"), col(hashCol).as("h"))
-    val bandedAll = sigs.select(col("id"), col("h"), posexplode(col("h")))
+    val banded = sigs.select(col("id"), col("h"), posexplode(col("h")))
       .withColumnRenamed("pos", "quarter").withColumnRenamed("col", "qv")
-    // the same already-banded count-window gate as the LSH pair stage:
-    // linear in the bucket, shuffles on the key the join needs anyway
-    val banded =
-      if (maxBucketSize <= 0) bandedAll
-      else bandedAll
-        .withColumn("__bn", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("quarter", "qv")))
-        .filter(col("__bn") <= maxBucketSize).drop("__bn")
-    val a = banded.select(col("quarter"), col("qv"),
-      col("id").as("id_a"), col("h").as("h_a"))
-    val b = banded.select(col("quarter"), col("qv"),
-      col("id").as("id_b"), col("h").as("h_b"))
     val hamming = (0 until 4).map(i =>
       bit_count(col("h_a").getItem(i).bitwiseXOR(col("h_b").getItem(i))))
       .reduce(_ + _)
-    a.join(b, Seq("quarter", "qv"))
-      .filter(col("id_a") < col("id_b"))
+    BandedPairs(banded, Seq("quarter", "qv"), Seq("h"), maxBucketSize)
       .select(col("id_a"), col("id_b"), hamming.cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
   }
 
+  /** Partition-wise REAL image resize over a binary column: decodable
+    * 24-bpp BMP payloads are box-resampled ([[boxResize]]) to
+    * `outW` x `outH` and re-encoded as a valid BMP in `outCol`; every
+    * other payload maps to null (compressed-format resize follows the
+    * same decode stubs as [[withImageStats]]). The output is a REAL
+    * payload — feed it back through [[withImageStats]] / [[withMediaMeta]]
+    * or write it out; same `mapPartitions` batch shape as the decoders. */
   def resizeBmp(df: DataFrame, payloadCol: String, outW: Int, outH: Int,
                 outCol: String = "resized"): DataFrame = {
     require(outW > 0 && outH > 0, "output dims must be positive")

@@ -157,6 +157,24 @@ object Similarity {
         shiftleft(lit(1L), i)).otherwise(lit(0L))
     }.reduce[Column]((a, b) => a.bitwiseOR(b))
 
+  /** `cols` of `df` plus `bucket`: the [[lshBucketGated]] bucket of
+    * `bucketVec` under the first P of `randomPlanes(maxPlanes, bucketDim,
+    * seed)`, with P = clamp(ceil(log2(n / targetBucket)), minPlanes,
+    * maxPlanes) for n = `df`'s row count, so the expected bucket
+    * population stays ~targetBucket at any corpus size. The count is
+    * folded into the plan as a broadcast one-row aggregate (no
+    * driver-side count action) and the plane literals stay static. */
+  private[ops] def adaptiveBuckets(df: DataFrame, cols: Seq[Column], bucketVec: Column,
+                                   bucketDim: Int, minPlanes: Int, maxPlanes: Int,
+                                   targetBucket: Int, seed: Long): DataFrame = {
+    val planes = randomPlanes(maxPlanes, bucketDim, seed)
+    val n = df.agg(count(lit(1)).as("__n"))
+    val p = greatest(lit(minPlanes), least(lit(maxPlanes),
+      ceil(log2(col("__n") / lit(targetBucket.toDouble))).cast("int")))
+    df.crossJoin(broadcast(n))
+      .select(cols :+ lshBucketGated(bucketVec, planes, p).as("bucket"): _*)
+  }
+
   /** Vector width of `vecCol`, read from the first row with a usable
     * vector (one tiny job — a LocalLimit(1) scan, not a full pass).
     * Null/empty vectors are skipped; an empty corpus fails with a clear
@@ -333,16 +351,17 @@ object Similarity {
     * by cosine — the index-building step for graph-based ANN (NN-descent
     * seeds, HNSW base layers) and for similarity-graph clustering.
     *
-    * Shape: the adaptive-bucket candidate join of
+    * Shape: the [[adaptiveBuckets]] candidate join of
     * [[Dedup.embeddingNearDupPairsAdaptive]] (population-stable buckets:
     * P = clamp(ceil(log2(n/targetBucket)), min, max) folded into the
-    * plan as a broadcast 1-row count) made DIRECTED (src pairs with
-    * every other bucket-mate), then top-k per source via the bounded
-    * [[graft.functions.TopK]] aggregator — the shuffle carries at most k
-    * rows per (partition, src), never the full candidate list (a window
-    * would sort every candidate of every source). Recall is bucket-local
-    * by construction — the documented trade; raise targetBucket or use
-    * [[topKLsh]]'s multi-probe for recall-critical lookups.
+    * plan as a broadcast 1-row count): each unordered bucket pair is
+    * scored once and emitted in both directions, then top-k per source
+    * via the bounded [[graft.functions.TopK]] aggregator — the shuffle
+    * carries at most k rows per (partition, src), never the full
+    * candidate list (a window would sort every candidate of every
+    * source). Recall is bucket-local by construction — the documented
+    * trade; raise targetBucket or use [[topKLsh]]'s multi-probe for
+    * recall-critical lookups.
     *
     * Output: (src, rank 1..k, dst, cosine), rank by (cosine desc, dst)
     * — deterministic under any partitioning. */
@@ -388,25 +407,20 @@ object Similarity {
                            minPlanes: Int, maxPlanes: Int,
                            targetBucket: Int, seed: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val planes = randomPlanes(maxPlanes, bucketDim, seed)
-    val n = df.agg(count(lit(1)).as("__n"))
-    val p = greatest(lit(minPlanes), least(lit(maxPlanes),
-      ceil(log2(col("__n") / lit(targetBucket.toDouble))).cast("int")))
-    val withB = df.crossJoin(broadcast(n))
-      .select(col(idCol).as("id"), col(vecCol).as("v"),
-        lshBucketGated(bucketVec, planes, p).as("bucket"))
-    val a = withB.select(col("bucket"), col("id").as("src"), col("v").as("v_a"))
-    val b = withB.select(col("bucket"), col("id").as("dst"), col("v").as("v_b"))
+    val withB = adaptiveBuckets(df, Seq(col(idCol).as("id"), col(vecCol).as("v")),
+      bucketVec, bucketDim, minPlanes, maxPlanes, targetBucket, seed)
     val tk = org.apache.spark.sql.functions.udaf(new graft.functions.TopK(k),
       org.apache.spark.sql.Encoders.product[graft.functions.Scored])
-    a.join(b, Seq("bucket"))
-      .filter(col("src") =!= col("dst"))
+    BandedPairs(withB, Seq("bucket"), Seq("v"))
       // same uncast cosine as embeddingNearDupPairsAdaptive — the d5
-      // oracle precedent pins the double-for-double agreement
-      .select(col("src"), col("dst"),
-        cosine(col("v_a"), col("v_b")).as("cosine"))
-      .groupBy("src")
-      .agg(tk(col("cosine"), col("dst")).as("__top"))
+      // oracle precedent pins the double-for-double agreement; it is
+      // symmetric bit for bit, so each unordered pair is scored once
+      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cosine"))
+      .select(explode(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst"), col("cosine")),
+        struct(col("id_b").as("src"), col("id_a").as("dst"), col("cosine")))).as("e"))
+      .groupBy(col("e.src").as("src"))
+      .agg(tk(col("e.cosine"), col("e.dst")).as("__top"))
       .select(col("src"), posexplode(col("__top")))
       .select(col("src"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("dst"), col("col.score").as("cosine"))
