@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{MissingNode, ObjectNode}
+import scala.jdk.CollectionConverters._
 
 object Bench {
   /** One query's timed-pass record: the median rep's wall seconds plus
@@ -8,111 +11,67 @@ object Bench {
     * vs plan (neither moved). sec = -1 marks a failed query. */
   private case class QRes(name: String, sec: Double, gcMs: Long, jitMs: Long)
 
-  /** `{"name":seconds,...}` — a non-finite value (JSON has no NaN or
-    * Infinity literal) is written as the -1.0 failure sentinel, so the
-    * record always parses. */
-  private[graft] def toJson(r: Seq[(String, Double)]): String =
-    r.map { case (k, v) =>
-      s"\"" + k + "\":" + (if (v.isNaN || v.isInfinite) -1.0 else v)
-    }.mkString("{", ",", "}")
+  // The regression gate: a query whose sweep median exceeds RegFactor x
+  // its median in the prior committed record (and RegFloor seconds, so
+  // 30 ms -> 100 ms jitter spawns no child JVM) is re-timed in a fresh
+  // child JVM, as is any query above IsoSec. The relative gate exists
+  // because an absolute threshold alone let queries run ~10x their prior
+  // under 10 s with untouched code (x4_tfidf at 8.01 s). Each class is
+  // bounded to its IsoMax worst offenders. A child JVM cannot JIT a
+  // sub-second query back to a warm full-suite number, so an isolated
+  // time under EnvFloor cannot tell plan from startup cost.
+  private val RegFactor = 3.0
+  private val RegFloor = 0.2
+  private val EnvFloor = 1.5
+  private val IsoSec = 10.0
+  private val IsoMax = 10
+
+  /** `{"name":seconds,...}` in the given order — a non-finite value (JSON
+    * has no NaN or Infinity literal) is written as the -1.0 failure
+    * sentinel, so the record always parses. */
+  private def secs(r: Seq[(String, Double)]): ObjectNode = {
+    val o = Util.json.createObjectNode()
+    r.foreach { case (k, v) => o.put(k, if (v.isNaN || v.isInfinite) -1.0 else v) }
+    o
+  }
+
+  private def longs(r: Seq[(String, Long)]): ObjectNode = {
+    val o = Util.json.createObjectNode()
+    r.foreach { case (k, v) => o.put(k, v) }
+    o
+  }
 
   /** The stdout `BENCH_QUERIES` record: the per-query median map. */
-  private[graft] def queriesLine(sfDir: String, r: Seq[(String, Double)]): String =
-    s"""{"metric":"queries","sf":"$sfDir","queries":${toJson(r)}}"""
+  private[graft] def queriesLine(sfDir: String, r: Seq[(String, Double)]): String = {
+    val o = Util.json.createObjectNode().put("metric", "queries").put("sf", sfDir)
+    o.set[JsonNode]("queries", secs(r))
+    Util.json.writeValueAsString(o)
+  }
 
-  /** Carry a prior record's per-scale blocks into a record whose run
-    * skipped that scale. Returns `,"key":value` fragments (verbatim
-    * value spans) for every TOP-LEVEL key of `priorTxt` that starts
-    * with `prefix` ("sf1_" / "sf10_"), in original order; "" when the
-    * prior has none. This is what stops an sf0.1-only run (the driver's
-    * per-round default) from erasing the committed 3-scale history when
-    * it rewrites bench_out.json: the sf1_/sf10_ blocks of the prior
-    * survive verbatim, declared via "carried_scales" so a reader knows
-    * their provenance. A linear scan tracking depth and string state —
-    * a query named like a scale key can never match because only
-    * depth-1 keys are considered. */
-  private[graft] def carryScaleBlocks(priorTxt: String, prefix: String): String = {
-    val t = priorTxt
-    val sb = new StringBuilder
-    var i = 0; var depth = 0; var inStr = false; var esc = false
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-        i += 1
-      } else c match {
-        case '{' | '[' => depth += 1; i += 1
-        case '}' | ']' => depth -= 1; i += 1
-        case '"' if depth == 1 =>
-          // a depth-1 string followed by ':' is a top-level key (our
-          // records' keys never contain escapes); anything else is a
-          // top-level string VALUE — skip it
-          val end = t.indexOf('"', i + 1)
-          if (end < 0) return sb.toString
-          val key = t.substring(i + 1, end)
-          var j = end + 1
-          while (j < t.length && t.charAt(j).isWhitespace) j += 1
-          if (j < t.length && t.charAt(j) == ':') {
-            j += 1
-            while (j < t.length && t.charAt(j).isWhitespace) j += 1
-            val vStart = j
-            var k = j
-            if (k < t.length && (t.charAt(k) == '{' || t.charAt(k) == '[')) {
-              var d2 = 0; var s2 = false; var e2 = false; var done = false
-              while (k < t.length && !done) {
-                val ch = t.charAt(k)
-                if (s2) { if (e2) e2 = false else if (ch == '\\') e2 = true
-                          else if (ch == '"') s2 = false }
-                else ch match {
-                  case '{' | '[' => d2 += 1
-                  case '}' | ']' => d2 -= 1; if (d2 == 0) done = true
-                  case '"' => s2 = true
-                  case _ =>
-                }
-                k += 1
-              }
-            } else if (k < t.length && t.charAt(k) == '"') {
-              k += 1; var e2 = false; var done = false
-              while (k < t.length && !done) {
-                val ch = t.charAt(k)
-                if (e2) e2 = false else if (ch == '\\') e2 = true
-                else if (ch == '"') done = true
-                k += 1
-              }
-            } else {
-              while (k < t.length && !",}] \n\r\t".contains(t.charAt(k))) k += 1
-            }
-            if (key.startsWith(prefix))
-              sb.append(",\"").append(key).append("\":").append(t.substring(vStart, k))
-            i = k
-          } else i = end + 1
-        case '"' => inStr = true; i += 1
-        case _ => i += 1
-      }
-    }
-    sb.toString
+  /** The prior committed record, or a missing node when there is none or
+    * it does not parse. */
+  private[graft] def readPrior(path: String): JsonNode =
+    try Util.json.readTree(new java.io.File(path)) catch { case _: Exception => MissingNode.getInstance }
+
+  /** `prior.<key>` as a name -> seconds map; empty when absent. */
+  private[graft] def loadPrior(prior: JsonNode, key: String): Map[String, Double] =
+    prior.path(key).properties.iterator.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
+
+  /** The prior record's top-level fields whose names start with
+    * `scale + "_"` ("sf1" / "sf10"), in their original order. A run that
+    * skips a scale carries these forward, declared in "carried_scales",
+    * so an sf0.1-only run does not erase the committed 3-scale history
+    * when it rewrites bench_out.json. */
+  private[graft] def scaleBlocks(prior: JsonNode, scale: String): ObjectNode = {
+    val o = Util.json.createObjectNode()
+    prior.properties.iterator.asScala.filter(_.getKey.startsWith(scale + "_"))
+      .foreach(e => o.set[JsonNode](e.getKey, e.getValue))
+    o
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Static conf, read at session creation. The default 100-entry
-      // generated-class cache cannot hold a 136-query suite: every full
-      // pass evicts everything, so every pass re-generates, re-Janino-
-      // compiles, and re-JITs each query's codegen classes — the class
-      // churn behind the round-10 late-alphabet sweep inflation (x9
-      // 17.9 s in-sweep vs 4.3 s isolated at sf10, same code). 2048
-      // entries hold all passes' classes for the foreseeable suite.
-      .config("spark.sql.codegen.cache.maxEntries", "2048")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Steady-state measurement: one untimed pass first (JIT compilation,
     // codegen cache, parquet footers), then the timed pass. Both passes
     // execute every query fully.
@@ -152,28 +111,20 @@ object Bench {
     // regression class this run exists to catch, so it must not read as
     // a speedup.
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt)
-    // Per-query stderr lines are OPT-IN (SPARK_GRAFT_BENCH_VERBOSE=1):
-    // the round driver captures merged stdout+stderr into a bounded
-    // buffer, and ~600 per-query lines (~60 KB) pushed the final JSON
-    // line past the capture limit every round — r14's recorded "tail"
-    // cuts off mid-record exactly where a ~64 KB cap would land. The
-    // default run now emits one summary line per pass; local debugging
-    // sets VERBOSE=1 to get the per-query detail back.
+    // Per-query stderr lines are OPT-IN (SPARK_GRAFT_BENCH_VERBOSE=1): a
+    // caller that captures merged stdout+stderr into a bounded buffer
+    // would otherwise lose the final JSON line behind ~600 per-query
+    // lines (~60 KB). The default run emits one summary line per pass.
     val verbose = sys.env.getOrElse("SPARK_GRAFT_BENCH_VERBOSE", "0") == "1"
-    // Drain accumulated session state between queries: Spark's
+    // Drain accumulated session state before every rep: Spark's
     // ContextCleaner frees shuffle files / broadcasts only when a GC
     // processes their weak references, and with a large heap a GC may
-    // simply never happen — after the 55-query warmup pass the timed
-    // pass then runs against tens of GB of undead shuffle state (d1
-    // measured 13 s in the full suite vs 0.5 s isolated; d2 26 s vs
-    // 2.1 s — pure pollution, not query cost). An explicit GC after
-    // every query keeps each measurement starting from a drained JVM,
+    // simply never happen — the timed pass then runs against tens of GB
+    // of undead shuffle state (d1 measured 13 s in the full suite vs
+    // 0.5 s isolated; d2 26 s vs 2.1 s — pure pollution, not query cost).
+    // An explicit GC keeps each measurement starting from a drained JVM,
     // the same state an isolated run sees.
-    // SPARK_GRAFT_BENCH_DRAIN=0 disables the inter-rep GC (A/B-ing the
-    // drain's own cost); default on — honest numbers beat fast ones.
-    val drainOn = sys.env.getOrElse("SPARK_GRAFT_BENCH_DRAIN", "1") != "0"
-    def drain(): Unit =
-      if (drainOn) { System.gc(); Thread.sleep(50); System.gc() }
+    def drain(): Unit = { System.gc(); Thread.sleep(50); System.gc() }
     // Per-rep environment telemetry (the neighbor-pollution classifier):
     // GC time and JIT compilation time accumulated INSIDE the rep's
     // timed span. A query whose seconds move round-over-round while its
@@ -181,7 +132,6 @@ object Bench {
     // with it says environment (heap pressure, code-cache churn, a
     // concurrent process stealing cores shows as neither), flat
     // telemetry with moved seconds says the plan itself changed.
-    import scala.jdk.CollectionConverters._
     def gcTotalMs(): Long =
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
         .map(_.getCollectionTime).filter(_ >= 0).sum
@@ -190,11 +140,9 @@ object Bench {
       if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
         jitBean.getTotalCompilationTime else -1L
     // JVM-health telemetry, printed after every pass: code-heap and
-    // metaspace occupancy. The round-10 sweep inflated late-alphabet
-    // queries 2-5x with untouched code (x9 17.9 s in-sweep vs 4.3 s
-    // isolated); this line is what turns the next such episode from a
-    // guessing game into a read-off — a near-full CodeHeap or a
-    // metaspace ramp across passes IS the diagnosis.
+    // metaspace occupancy. A near-full CodeHeap or a metaspace ramp
+    // across passes is the diagnosis when late-alphabet queries inflate
+    // 2-5x with untouched code (x9 17.9 s in-sweep vs 4.3 s isolated).
     def jvmHealth(tag: String): Unit = {
       val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
         .filter(p => p.getName.startsWith("CodeHeap") || p.getName == "Metaspace")
@@ -203,12 +151,11 @@ object Bench {
         f"${p.getName}=${u.getUsed / 1048576}%d/${math.max(u.getMax, u.getCommitted) / 1048576}%dMB"
       }.mkString(" ")
       System.err.println(s"[jvm] $tag $s")
-      // Hard gate, not telemetry: the round-10 sweep silently inflated
-      // late-alphabet queries 2-5x when the JIT code cache thrashed.
-      // Occupancy >90% of a CodeHeap's reserved max means the NEXT such
-      // episode is underway — fail the whole bench loudly (rc!=0, driver
-      // records the failure) rather than publish numbers that measure
-      // deoptimized re-JIT churn instead of the queries.
+      // Hard gate, not telemetry: when the JIT code cache thrashes,
+      // late-alphabet queries inflate 2-5x. Occupancy >90% of a
+      // CodeHeap's reserved max means such an episode is underway — fail
+      // the whole bench loudly (rc!=0) rather than publish numbers that
+      // measure deoptimized re-JIT churn instead of the queries.
       pools.filter(p => p.getName.startsWith("CodeHeap") && p.getUsage.getMax > 0)
         .foreach { p =>
           val u = p.getUsage
@@ -252,72 +199,40 @@ object Bench {
       jvmHealth(tag)
       out
     }
-    def toJsonL(r: Seq[(String, Long)]): String =
-      r.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // A total must sum only queries that RAN: -1.0 failure sentinels would
-    // otherwise silently subtract from it (round 8's recorded 37.1 s was
-    // really 46.1 s over the live queries — nine -1.0s hid 9 s). The
-    // failure count is emitted alongside so a "fast" total with failures
-    // can never read as a clean win.
+    // otherwise silently subtract from it (a recorded 37.1 s was really
+    // 46.1 s over the live queries — nine -1.0s hid 9 s). The failure
+    // count is emitted alongside so a "fast" total with failures can
+    // never read as a clean win.
     def liveTotal(r: Seq[QRes]): Double = r.map(_.sec).filter(_ >= 0).sum
     def nFailed(r: Seq[QRes]): Int = r.count(_.sec < 0)
-    // --- round-over-round regression gate -------------------------------
-    // The round-12 official record carried x4_tfidf at 8.01 s and
-    // q8_seasonal_decompose at 4.13 s — ~10x their committed prior
-    // records with UNTOUCHED code — and the 10 s absolute isolation
-    // threshold never cross-checked them. The gate is relative, not
-    // absolute: any query whose sweep median exceeds REG_FACTOR x its
-    // median in the previous COMMITTED bench record (bench_out.json at
-    // process start, i.e. the repo's checked-in prior round) joins the
-    // fresh-child-JVM isolation set regardless of absolute seconds, and
-    // both numbers land in the JSON under "regressions". A tiny floor
-    // keeps 30 ms -> 100 ms jitter from spawning child JVMs.
-    val regFactor = sys.env.getOrElse("SPARK_GRAFT_BENCH_REG_FACTOR", "3").toDouble
-    val regFloor = sys.env.getOrElse("SPARK_GRAFT_BENCH_REG_FLOOR", "0.2").toDouble
-    val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
-    // Snapshot the prior record's TEXT once, at process start: the final
-    // write replaces bench_out.json mid-process, so a lazy read during
-    // the sf1/sf10 passes could otherwise compare against this run's own
-    // output instead of the committed prior round.
-    val priorTxt: String = try new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(priorPath)),
-      java.nio.charset.StandardCharsets.UTF_8) catch { case _: Exception => "" }
-    def loadPrior(key: String): Map[String, Double] = try {
-      // [{,] anchors the exact key: a bare "queries":{ search would land
-      // inside "isolated_queries":{ first
-      val m = java.util.regex.Pattern.compile("[{,]\"" + key + "\":\\{([^}]*)\\}").matcher(priorTxt)
-      if (!m.find()) Map.empty
-      else "\"([A-Za-z0-9_]+)\":(-?[0-9][0-9.eE+-]*)".r.findAllMatchIn(m.group(1))
-        .map(mm => mm.group(1) -> mm.group(2).toDouble).toMap
-    } catch { case _: Exception => Map.empty }
-    def regressions(rows: Seq[QRes], prior: Map[String, Double]): Seq[(String, Double, Double)] =
+    // The record file. Its content at process start is the prior
+    // committed record the regression gate compares against; this run
+    // replaces it at the end.
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val prior = readPrior(outFile)
+    def regressions(rows: Seq[QRes], priorSecs: Map[String, Double]): Seq[(String, Double, Double)] =
       rows.filter(_.sec > 0).flatMap { r =>
-        prior.get(r.name)
-          .filter(p => p > 0 && r.sec > regFactor * p && r.sec > regFloor)
+        priorSecs.get(r.name)
+          .filter(p => p > 0 && r.sec > RegFactor * p && r.sec > RegFloor)
           .map(p => (r.name, p, r.sec))
       }
     // Isolated re-timing for the heavy tail AND the regression set: a
     // long shared-JVM sweep inflates its most expensive queries ~1.5-2x
     // through accumulated GC pressure even with the codegen-cache and
     // drain fixes (d15 measured 38 s isolated vs 60.8 s in-sweep at
-    // sf10, a23 59 vs 67.3 — same code, same data). For any query whose
-    // sweep median exceeds the absolute threshold OR regressed >3x its
-    // prior committed record, re-run it in a FRESH child JVM (same flags
-    // as this one, cloned from RuntimeMXBean) and record BOTH numbers,
-    // so the JSON's heavy tail measures the operator, not the suite.
-    // Bounded to the top `isoMax` offenders per class; the child runs
-    // Bench restricted to the one query with isolation and extra scales
+    // sf10, a23 59 vs 67.3 — same code, same data). Each target is re-run
+    // in a FRESH child JVM (same flags as this one, cloned from
+    // RuntimeMXBean) and BOTH numbers are recorded, so the JSON's heavy
+    // tail measures the operator, not the suite. The child runs Bench
+    // restricted to the one query with isolation and extra scales
     // disabled (no recursion).
-    val isoThreshold = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_SEC", "10").toDouble
-    val isoMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_MAX", "10").toInt
-    val isoOn = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0" && isoMax > 0
-    // The child JVM's heap is CAPPED, never inherited: round 13's record
-    // died rc=137 (kernel OOM-kill) because each isolation child cloned
-    // the parent's full -Xmx, so parent + child together exceeded the
-    // container's memory limit the moment a regression tripped the gate.
-    // A single-query child needs a fraction of the sweep heap; 8g covers
-    // the heaviest sf10 query with margin.
+    val isoOn = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") != "0"
+    // The child JVM's heap is CAPPED, never inherited: a child cloning
+    // the parent's full -Xmx makes parent + child exceed the container's
+    // memory limit (kernel OOM-kill, rc=137) the moment a regression trips
+    // the gate. A single-query child needs a fraction of the sweep heap;
+    // 8g covers the heaviest sf10 query with margin.
     val isoHeap = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISO_HEAP", "8g")
     def isolatedRerun(targets: Seq[(String, Double)], dir: String, tag: String): Seq[(String, Double)] = {
       if (!isoOn) return Seq.empty
@@ -346,12 +261,8 @@ object Bench {
         pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
         pb.redirectError(ProcessBuilder.Redirect.DISCARD)
         val rc = try pb.start().waitFor() catch { case _: Exception => -1 }
-        val iso = if (rc != 0) None else {
-          val txt = try new String(java.nio.file.Files.readAllBytes(tmp),
-            java.nio.charset.StandardCharsets.UTF_8) catch { case _: Exception => "" }
-          val re = ("\"" + java.util.regex.Pattern.quote(name) + "\":(-?[0-9.]+)").r
-          re.findFirstMatchIn(txt).map(_.group(1).toDouble)
-        }
+        val iso = if (rc != 0) None
+          else Some(readPrior(tmp.toString).path("queries").path(name)).filter(_.isNumber).map(_.asDouble)
         try java.nio.file.Files.deleteIfExists(tmp) catch { case _: Exception => () }
         iso match {
           case Some(s) =>
@@ -363,194 +274,139 @@ object Bench {
         }
       }
     }
-    // The durable record path — defined BEFORE the passes so each pass
-    // can flush its sweep numbers the moment they exist. Round 13's
-    // lesson: the isolation reruns died (OOM-kill) AFTER a complete,
-    // correct sweep, and because nothing had been written yet the whole
-    // record was void. Now every pass writes a "partial":true record
-    // before isolation starts; the final write (no partial flag)
-    // atomically replaces it. A killed isolation pass costs only the
-    // isolated numbers, never the sweep.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // Partials land in a SIDECAR (outFile + ".partial"), never over
-    // outFile itself: outFile is the git-tracked committed prior — a run
-    // killed mid-way must not replace the next run's regression baseline
-    // with its own (possibly squeeze-inflated) sweep numbers. Only the
-    // final write owns outFile; the sidecar is deleted on success.
+    // Every pass flushes its sweep numbers as a "partial":true record
+    // before isolation starts, so a child JVM killed mid-way costs only
+    // the isolated numbers, never the sweep. Partials land in a SIDECAR
+    // (outFile + ".partial"), never over outFile itself: outFile is the
+    // git-tracked committed prior, and a killed run must not replace the
+    // next run's regression baseline with its own (possibly squeeze-
+    // inflated) sweep numbers. Only the final write owns outFile; the
+    // sidecar is deleted on success.
     val partialFile = outFile + ".partial"
-    def writeTo(path: String, js: String): Unit =
+    def writeTo(path: String, node: ObjectNode): Unit =
       try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        (js + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        (Util.json.writeValueAsString(node) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: java.io.IOException =>
         System.err.println(s"[bench] could not write $path: ${e.getMessage}") }
-    def writePartial(js: String): Unit = writeTo(partialFile, js)
-    def writeOut(js: String): Unit = {
-      writeTo(outFile, js)
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(partialFile))
-      catch { case _: Exception => () }
-    }
-    /** The full per-scale JSON fragment: queries + telemetry maps +
-      * regressions vs the prior committed record + isolated reruns of
-      * (heavy ∪ regressed). `prefix` is "" for the main sf0.1 pass,
-      * "sf1_"/"sf10_" for the extra scales. `mkPartial` wraps this
-      * pass's sweep fragment into a complete partial record, flushed to
-      * disk BEFORE the isolation children are spawned. */
-    def passJson(rows: Seq[QRes], dir: String, tag: String, prefix: String,
-                 mkPartial: String => String): String = {
+    val results = timedPass(sfDir, "bench")
+    val total = liveTotal(results)
+    // `rec` is the full record; `compact` the totals-only stdout line
+    // (see the println below). Both open with the same four fields.
+    val compact = Util.json.createObjectNode()
+      .put("metric", "total").put("value", total).put("unit", "sec").put("failed", nFailed(results))
+    val rec = compact.deepCopy()
+    compact.put("n_queries", results.size).put("sf", sfDir)
+    /** One pass's fields of `rec`: queries + telemetry maps + regressions
+      * vs the prior committed record + isolated reruns of (heavy ∪
+      * regressed), then the pass's data dir under `dirKey`. `prefix` is
+      * "" for the main pass, "sf1_"/"sf10_" for the extra scales. */
+    def pass(rows: Seq[QRes], dir: String, tag: String, prefix: String, dirKey: String): Unit = {
       // the prior key IS the prefixed queries map — deriving it here
       // removes the mismatched-pair foot-gun (sf10 timings vs sf0.1
       // priors would manufacture bogus regressions)
-      val prior = loadPrior(prefix + "queries")
-      val regs = regressions(rows, prior).sortBy(-_._3).take(isoMax)
-      val heavy = rows.filter(_.sec > isoThreshold).sortBy(-_.sec).take(isoMax)
+      val regs = regressions(rows, loadPrior(prior, prefix + "queries")).sortBy(-_._3).take(IsoMax)
+      val heavy = rows.filter(_.sec > IsoSec).sortBy(-_.sec).take(IsoMax)
         .map(r => r.name -> r.sec)
       val targets = (heavy ++ regs.map(r => (r._1, r._3)).filterNot(t => heavy.exists(_._1 == t._1)))
       regs.foreach { case (n, p, s) =>
-        System.err.println(f"[$tag-reg] $n%-22s prior $p%.2f s -> sweep $s%.2f s (>${regFactor}%.0fx) — isolating") }
-      // A child JVM cannot JIT a sub-second query back to a warm full-
-      // suite number: its isolated time bottoms out around startup +
-      // first-compile cost regardless of the plan. Below this floor the
-      // isolated number cannot distinguish plan from startup — and a
-      // "regression" whose fresh-JVM absolute cost is ~1 s is not a
-      // scale signal either — so it adjudicates as environment.
-      val envFloor = sys.env.getOrElse("SPARK_GRAFT_BENCH_ENV_FLOOR", "1.5").toDouble
-      def regJson(isoMap: Map[String, Double]): String = if (regs.isEmpty) "" else
-        s""","${prefix}regressions":{""" + regs.map { case (n, p, s) =>
-          // each regression carries its own adjudication (r14 verdict
-          // #7 — "the gate log must stay trustworthy"): the fresh-JVM
-          // rerun's number and whether it clears the gate. A sweep hit
-          // whose isolated time is back under max(regFactor x prior,
-          // the JIT floor) is ENVIRONMENT (neighbor contention,
-          // page-cache squeeze, a concurrent foreground build — the
-          // r14 t6 class; child-JVM startup for sub-second queries),
-          // not plan.
-          // Three-way verdict: under regFactor×prior the fresh JVM
-          // reproduces the prior-class time ⇒ environment. Under the
-          // JIT floor but NOT under the gate (cheap query, e.g. prior
-          // 0.3 s, isolated 1.4 s = 4.7× prior) the child JVM cannot
-          // distinguish plan from startup — assert NEITHER verdict:
-          // env_explained:null + an explicit below_jit_floor marker so
-          // sub-second regressions stay visible in the gate log
-          // instead of being auto-labeled environment.
-          val adj = isoMap.get(n).map { i =>
-            val verdict =
-              if (i < regFactor * p) ""","env_explained":true"""
-              else if (i < envFloor) ""","env_explained":null,"adjudication":"below_jit_floor""""
-              else ""","env_explained":false"""
-            s""","isolated":$i""" + verdict
-          }.getOrElse("")
-          s""""$n":{"prior":$p,"sweep":$s$adj}""" }.mkString(",") + "}"
-      val baseJson = s""""${prefix}queries":${toJson(rows.map(r => r.name -> r.sec))}""" +
-        s""","${prefix}gc_ms":${toJsonL(rows.map(r => r.name -> r.gcMs))}""" +
-        s""","${prefix}jit_ms":${toJsonL(rows.map(r => r.name -> r.jitMs))}"""
+        System.err.println(f"[$tag-reg] $n%-22s prior $p%.2f s -> sweep $s%.2f s (>${RegFactor}%.0fx) — isolating") }
+      rec.set[JsonNode](prefix + "queries", secs(rows.map(r => r.name -> r.sec)))
+      rec.set[JsonNode](prefix + "gc_ms", longs(rows.map(r => r.name -> r.gcMs)))
+      rec.set[JsonNode](prefix + "jit_ms", longs(rows.map(r => r.name -> r.jitMs)))
+      val regNode = Util.json.createObjectNode()
+      val regEntries = regs.map { case (n, p, s) => (n, p, regNode.putObject(n).put("prior", p).put("sweep", s)) }
+      if (regs.nonEmpty) rec.set[JsonNode](prefix + "regressions", regNode)
       // sweep numbers hit disk (sidecar) before any child JVM exists;
       // the partial carries the unadjudicated regressions
-      writePartial(mkPartial(baseJson + regJson(Map.empty)))
+      writeTo(partialFile, rec.deepCopy().put(dirKey, dir).put("partial", true))
       val iso = isolatedRerun(targets, dir, tag)
-      val isoJson = if (iso.isEmpty) "" else s""","${prefix}isolated_queries":${toJson(iso)}"""
-      baseJson + regJson(iso.toMap) + isoJson
+      // Each regression carries its own adjudication: the fresh-JVM
+      // rerun's number and a three-way verdict. Under RegFactor x prior
+      // the fresh JVM reproduces the prior-class time ⇒ environment
+      // (neighbor contention, page-cache squeeze, a concurrent build),
+      // not plan. Under EnvFloor but NOT under the gate (cheap query,
+      // e.g. prior 0.3 s, isolated 1.4 s = 4.7x prior) the child JVM
+      // cannot distinguish plan from startup — assert NEITHER verdict:
+      // env_explained:null + an explicit below_jit_floor marker, so
+      // sub-second regressions stay visible in the gate log instead of
+      // being auto-labeled environment.
+      val isoMap = iso.toMap
+      regEntries.foreach { case (n, p, r) =>
+        isoMap.get(n).foreach { i =>
+          r.put("isolated", i)
+          if (i < RegFactor * p) r.put("env_explained", true)
+          else if (i < EnvFloor) r.putNull("env_explained").put("adjudication", "below_jit_floor")
+          else r.put("env_explained", false)
+        }
+      }
+      if (iso.nonEmpty) rec.set[JsonNode](prefix + "isolated_queries", secs(iso))
+      rec.put(dirKey, dir)
     }
-    val results = timedPass(sfDir, "bench")
-    val total = liveTotal(results)
-    def hdr = s"""{"metric":"total","value":$total,"unit":"sec","failed":${nFailed(results)},"""
-    val mainJson = passJson(results, sfDir, "bench", "",
-      frag => hdr + frag + s""","sf":"$sfDir","partial":true}""")
+    pass(results, sfDir, "bench", "", "sf")
     // Extra-scale passes are OPT-IN: at 220+ queries a 3-scale sweep runs
-    // ~1.6 h, past the driver's bench budget — round 11's official record
-    // came back rc=124/parsed:null because these passes ran by default
-    // whenever benchdata/ existed. The default invocation now lands
-    // warmup + the sf0.1 timed pass only; the builder's own 3-scale
-    // record sets SPARK_GRAFT_BENCH_SCALES=all (in tmux). A present-but-
-    // skipped scale is declared in the JSON so the skip is loud.
+    // ~1.6 h, past a typical bench budget, so the default invocation
+    // runs warmup + the sf0.1 timed pass only, and a 3-scale record sets
+    // SPARK_GRAFT_BENCH_SCALES=all. A present-but-skipped scale is
+    // declared in the JSON so the skip is loud.
+    // sf1 (replicated 10x by graft.ScaleData from sf0.1) catches
+    // constant-factor and superlinear-scaling regressions the sf0.1
+    // numbers alone cannot see (e.g. a quartile-sketch merge: 3.4 s at
+    // sf0.1 but 99 s at sf1); sf10 is the 100x check.
     val scales = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALES", "sf")
     def scaleWanted(s: String) = scales == "all" || scales.split(",").map(_.trim).contains(s)
     var skipped = List.empty[String]
     var carriedScales = List.empty[String]
-    // A scale pass that does NOT run — dataset dir absent (benchdata/ is
-    // wiped between rounds) or the scale not requested — must not erase
-    // the committed prior's multi-scale history when this record
-    // replaces bench_out.json: carry the prior's blocks forward
-    // verbatim, declared via "carried_scales".
-    def carryOr(scale: String): String = {
-      val cf = carryScaleBlocks(priorTxt, scale + "_")
-      if (cf.nonEmpty) carriedScales ::= scale
-      cf
+    for ((scale, dir) <- Seq(
+        "sf1" -> sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "benchdata/sf1"),
+        "sf10" -> sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "benchdata/sf10"))) {
+      val present = new java.io.File(dir).isDirectory
+      if (present && scaleWanted(scale)) {
+        val r = timedPass(dir, s"bench-$scale")
+        for (o <- Seq(rec, compact))
+          o.put(s"${scale}_total", liveTotal(r)).put(s"${scale}_failed", nFailed(r))
+        pass(r, dir, s"bench-$scale", scale + "_", scale + "_dir")
+      } else {
+        // A scale pass that does NOT run — dataset dir absent (benchdata/
+        // is not committed) or the scale not requested — must not erase
+        // the committed prior's multi-scale history when this record
+        // replaces bench_out.json.
+        if (present) skipped ::= scale
+        val carried = scaleBlocks(prior, scale)
+        if (!carried.isEmpty) { carriedScales ::= scale; rec.setAll[JsonNode](carried) }
+      }
     }
-    // 10x scale check (replicated sf1 dataset, built by graft.ScaleData
-    // from sf0.1): catches constant-factor and superlinear-scaling
-    // regressions the sf0.1 numbers alone cannot see (e.g. the quartile-
-    // sketch merge: 3.4 s at sf0.1 but 99 s at sf1 before replacement).
-    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "benchdata/sf1")
-    var sf1Compact = ""
-    val sf1 = if (!new java.io.File(sf1Dir).isDirectory) carryOr("sf1")
-    else if (!scaleWanted("sf1")) {
-      skipped ::= "sf1"; carryOr("sf1")
-    } else {
-      val r1 = timedPass(sf1Dir, "bench-sf1")
-      val sf1Hdr = s""","sf1_total":${liveTotal(r1)},"sf1_failed":${nFailed(r1)},"""
-      sf1Compact = s""","sf1_total":${liveTotal(r1)},"sf1_failed":${nFailed(r1)}"""
-      sf1Hdr + passJson(r1, sf1Dir, "bench-sf1", "sf1_",
-        frag => hdr + mainJson + s""","sf":"$sfDir"""" + sf1Hdr + frag +
-          s""","sf1_dir":"$sf1Dir","partial":true}""") +
-        s""","sf1_dir":"$sf1Dir""""
+    for (o <- Seq(rec, compact)) {
+      if (skipped.nonEmpty) o.put("skipped_scales", skipped.sorted.mkString(","))
+      if (carriedScales.nonEmpty) o.put("carried_scales", carriedScales.sorted.mkString(","))
     }
-    // 100x scale check, same per-rep drain + median discipline as every
-    // other pass. SPARK_GRAFT_SF10=0 additionally skips it even when the
-    // scale is requested (quick 2-scale iterations).
-    val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "benchdata/sf10")
-    var sf10Compact = ""
-    val sf10 = if (!new java.io.File(sf10Dir).isDirectory
-        || sys.env.getOrElse("SPARK_GRAFT_SF10", "1") == "0") carryOr("sf10")
-    else if (!scaleWanted("sf10")) {
-      skipped ::= "sf10"; carryOr("sf10")
-    } else {
-      val r10 = timedPass(sf10Dir, "bench-sf10")
-      val sf10Hdr = s""","sf10_total":${liveTotal(r10)},"sf10_failed":${nFailed(r10)},"""
-      sf10Compact = s""","sf10_total":${liveTotal(r10)},"sf10_failed":${nFailed(r10)}"""
-      sf10Hdr + passJson(r10, sf10Dir, "bench-sf10", "sf10_",
-        frag => hdr + mainJson + s""","sf":"$sfDir"""" + sf1 + sf10Hdr + frag +
-          s""","sf10_dir":"$sf10Dir","partial":true}""") +
-        s""","sf10_dir":"$sf10Dir""""
-    }
-    val skippedJson = if (skipped.isEmpty) "" else
-      s""","skipped_scales":"${skipped.sorted.mkString(",")}""""
-    val carriedJson = if (carriedScales.isEmpty) "" else
-      s""","carried_scales":"${carriedScales.sorted.mkString(",")}""""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","failed":${nFailed(results)},$mainJson,"sf":"$sfDir"$sf1$sf10$skippedJson$carriedJson}"""
-    // Persist the final JSON — replaces the last partial flush; the
+    compact.put("detail", outFile)
+    // Persist the final record — replaces the sidecar partial; the
     // durable record for round-over-round per-query comparison.
-    writeOut(json)
-    // The driver machine-parses the LAST stdout line of a BOUNDED merged
-    // stdout+stderr capture that keeps the TAIL, so the line it reads
-    // must be (a) last and (b) small ENOUGH THAT ITS HEAD SURVIVES the
+    writeTo(outFile, rec)
+    try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(partialFile))
+    catch { case _: Exception => () }
+    // A caller that machine-parses the LAST stdout line of a BOUNDED
+    // merged stdout+stderr capture that keeps the TAIL needs that line
+    // (a) last and (b) small ENOUGH THAT ITS HEAD SURVIVES the
     // truncation. A per-query map is ~8 KB at ~290 queries and grows
-    // with every query added — it does NOT fit; r13–r15 all came back
-    // parsed:null because the map's head was cut. The last line
-    // therefore carries TOTALS ONLY (value/failed/n_queries/sf, the
-    // per-scale totals, skip/carry markers, and the detail-file path —
-    // a few hundred bytes at ANY query count); the per-query map lives
-    // solely in the durable file above. A grep-able "BENCH_JSON: "
-    // marker line with the same payload precedes it as the documented
-    // fallback recovery path. stop() BEFORE the println so Spark's
-    // shutdown can't emit stray stdout after it (build.sbt's
-    // showSuccess:=false keeps sbt's footer off the tail too).
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","failed":${nFailed(results)},""" +
-      s""""n_queries":${results.size},"sf":"$sfDir"""" +
-      sf1Compact + sf10Compact + skippedJson + carriedJson +
-      s""","detail":"$outFile"}"""
-    // The per-query map ALSO goes to stdout, on its own grep-able marker
-    // line ABOVE the final totals line: the driver's round-over-round
-    // per-query comparison needs the map, and the totals-only last line
-    // (which fixed the r13-r15 parsed:null truncations) left PERF's
-    // per_query structurally empty when the driver does not read the
-    // detail file. Tail-safe by construction — the totals line stays
-    // last and small, so even if a bounded tail capture cuts the ~8 KB
-    // queries line's head, the line the driver parses is untouched.
+    // with every query added, so it does NOT fit. The last line therefore
+    // carries TOTALS ONLY (value/failed/n_queries/sf, the per-scale
+    // totals, skip/carry markers, and the detail-file path — a few
+    // hundred bytes at ANY query count); a grep-able "BENCH_JSON: "
+    // marker line with the same payload precedes it as the fallback
+    // recovery path. stop() BEFORE the println so Spark's shutdown can't
+    // emit stray stdout after it (build.sbt's showSuccess:=false keeps
+    // sbt's footer off the tail too).
+    // The per-query map goes to stdout on its own grep-able marker line
+    // ABOVE the totals line, for a per-query comparison that does not
+    // read the detail file. Tail-safe by construction: even if a bounded
+    // capture cuts the queries line's head, the last line is untouched.
     val queries = queriesLine(sfDir, results.map(r => r.name -> r.sec))
     spark.stop()
     System.err.println("[bench] full record written to " + outFile)
+    val totals = Util.json.writeValueAsString(compact)
     println("BENCH_QUERIES: " + queries)
-    println("BENCH_JSON: " + compact)
-    println(compact)
+    println("BENCH_JSON: " + totals)
+    println(totals)
   }
 }

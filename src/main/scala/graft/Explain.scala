@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints `explain("formatted")` for representative
   * queries so scan pruning (ReadSchema/PushedFilters), join strategies
   * (broadcast vs shuffle), and exchange counts can be reviewed. Usage:
@@ -14,14 +12,7 @@ object Explain {
       if (args.length > 1) args.tail.toSeq
       else Seq("t1_tableone_lineitem", "d3_minhash_dedup", "s1_cosine_topk",
         "s3_ann_ivf", "e2_sessionize", "x1_text_stats", "a2_pivot_counts")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     // EXPLAIN_RUN=1: additionally EXECUTE each query and print the final
     // adaptive plan — AQE decisions (stage reuse, skew splits, join
     // demotions) are invisible in the static formatted plan.

@@ -3406,21 +3406,14 @@ object OpsQueries {
         .select(col("doc_id"), col("cluster_size"))
         .orderBy("doc_id")
     }),
-    "d13c_cluster_canonical_capped" -> ((s, dir) => {
-      // d13's UNCAPPED contrast twin. History: until r15 the default
-      // pair-stage cap was 1000 (never engaged) and this twin carried
-      // the explicit 50-cap so the Σ size² collapse could be measured;
-      // r16 made 50 the DEFAULT, which turned this twin into a byte-
-      // identical duplicate of d13 — the uncapped regression canary was
-      // gone and ~56 s of the sf10 sweep measured the same plan twice
-      // (r16 verdict #3). The twin now passes maxBucketSize = 0 (the
-      // documented opt-in uncapped quadratic path), restoring the
-      // contrast: at gate scale no bucket exceeds 50, so the oracle is
-      // STILL d13's verbatim (hash-identical output); at sf10+ the
-      // replicated clusters reach ~300/~900 docs and this twin alone
-      // pays the exponent-1.85 Σ size² pair growth the capped default
-      // path skips. The name keeps its historical "_capped" suffix —
-      // renaming a declared query is a contract break.
+    "d13c_cluster_canonical_uncapped" -> ((s, dir) => {
+      // d13's UNCAPPED contrast twin: maxBucketSize = 0 opts into the
+      // quadratic pair path that the default 50-cap skips, so the record
+      // measures capped vs uncapped instead of the same plan twice. At
+      // gate scale no bucket exceeds 50, so the oracle is d13's verbatim
+      // (hash-identical output); at sf10+ the replicated clusters reach
+      // ~300/~900 docs and this twin alone pays the exponent-1.85
+      // Σ size² pair growth.
       val corpus = plantedNearDupDocs(s, dir)
       Dedup.canonicalPerCluster(corpus, "doc_id", "text",
           prefer = length(col("text")), threshold = 1.0, maxBucketSize = 0)
@@ -3583,12 +3576,11 @@ object OpsQueries {
       Dedup.crossCorpusDedup(newCrawl(ref), ref, "doc_id", "text", threshold = 1.0)
         .select(col("doc_id")).orderBy("doc_id")
     }),
-    "d15c_cross_corpus_capped" -> ((s, dir) => {
-      // d15's UNCAPPED contrast twin (the d13c rationale — see that
-      // query's comment for the r16 history): since the 50-cap became
-      // the DEFAULT, this twin opts INTO the quadratic path with
-      // maxBucketSize = 0 so the 3-scale record keeps measuring the
-      // capped-vs-uncapped contrast instead of the same plan twice.
+    "d15c_cross_corpus_uncapped" -> ((s, dir) => {
+      // d15's UNCAPPED contrast twin (the d13c rationale): it opts INTO
+      // the quadratic path with maxBucketSize = 0 so the 3-scale record
+      // keeps measuring the capped-vs-uncapped contrast instead of the
+      // same plan twice.
       // At gate scale no bucket exceeds 50 -> d15's oracle verbatim;
       // at the composed scales this twin alone pays the exponent-1.84
       // boundary-crossing pair growth the default path skips.
@@ -4118,8 +4110,8 @@ object OpsQueries {
     // semantics are pinned quantitatively in DedupSpec/ClusteringSpec.
     base +
       ("c6_curation_mat" -> base("c4_curation_v2")) +
-      ("d13c_cluster_canonical_capped" -> base("d13_cluster_canonical")) +
-      ("d15c_cross_corpus_capped" -> base("d15_cross_corpus_dedup"))
+      ("d13c_cluster_canonical_uncapped" -> base("d13_cluster_canonical")) +
+      ("d15c_cross_corpus_uncapped" -> base("d15_cross_corpus_dedup"))
   }
 
   private def oracleSqlBase: Map[String, String] = Map(

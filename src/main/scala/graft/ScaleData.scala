@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds a larger benchmark dataset by replicating a testdata scale
@@ -97,14 +96,7 @@ object ScaleData {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "benchdata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // events ships TIMESTAMP(NANOS); read as long, write as long —
     // Util.events converts on read either way
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -132,7 +124,7 @@ object ScaleData {
       // split size; per-row projections like JSON parsing ran 1-core on
       // a 32-core session and benchmarked ~12x slower than their real
       // cost). A cluster reads thousands of files; the bench should too.
-      val spread = if (keys.isEmpty) out else out.repartition(cpus.toInt)
+      val spread = if (keys.isEmpty) out else out.repartition(spark.sparkContext.defaultParallelism)
       spread.write.mode("overwrite").parquet(s"$dst/$t.parquet")
       System.err.println(s"[scale] $t x${if (keys.isEmpty) 1 else factor} -> $dst/$t.parquet")
     }

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.tableone.{TableOne, TableOneConfig}
 
 /** Dev smoke driver: runs the flagship entry + edge probes on sf0.001.
   * Usage: sbt "runMain graft.Smoke" */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
 
     val e = SparkEntry.entry(spark)

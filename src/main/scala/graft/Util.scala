@@ -5,6 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, TimestampNTZType, TimestampType}
 
 object Util {
+  /** The suite mains' one JSON codec: Bench's record and Verify's
+    * oracle_sql.json. Lazy, so the queries that load Util never build it. */
+  lazy val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Round every DoubleType column to `scale` decimals. Applied to both
     * sides of the DuckDB-oracle compare so order-dependent floating-point
     * summation cannot flip a hash match. */
