@@ -57,6 +57,13 @@ object Bench {
   private[graft] def loadPrior(prior: JsonNode, key: String): Map[String, Double] =
     prior.path(key).properties.iterator.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
 
+  /** An isolated child run's seconds for `name`: its `queries.<name>`
+    * when that is a time. A child whose query throws still exits 0 and
+    * records the -1.0 failure sentinel there, which is a failed rerun, not
+    * a time. */
+  private[graft] def isolatedSeconds(child: JsonNode, name: String): Option[Double] =
+    Some(child.path("queries").path(name)).filter(_.isNumber).map(_.asDouble).filter(_ >= 0)
+
   /** The prior record's top-level fields whose names start with
     * `scale + "_"` ("sf1" / "sf10"), in their original order. A run that
     * skips a scale carries these forward, declared in "carried_scales",
@@ -261,15 +268,15 @@ object Bench {
         pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
         pb.redirectError(ProcessBuilder.Redirect.DISCARD)
         val rc = try pb.start().waitFor() catch { case _: Exception => -1 }
-        val iso = if (rc != 0) None
-          else Some(readPrior(tmp.toString).path("queries").path(name)).filter(_.isNumber).map(_.asDouble)
+        val iso = if (rc != 0) None else isolatedSeconds(readPrior(tmp.toString), name)
         try java.nio.file.Files.deleteIfExists(tmp) catch { case _: Exception => () }
         iso match {
           case Some(s) =>
             System.err.println(f"[$tag-iso] $name%-22s sweep $sweepSec%.2f s -> isolated $s%.2f s")
             Some(name -> s)
           case None =>
-            System.err.println(s"[$tag-iso] $name isolated rerun failed (rc=$rc) — keeping sweep number only")
+            System.err.println(s"[$tag-iso] $name isolated rerun failed (rc=$rc, or the query failed in " +
+              "the child) — keeping sweep number only")
             None
         }
       }

@@ -1,6 +1,6 @@
 package graft.tableone
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -51,11 +51,13 @@ final case class TableOneConfig(
   *
   * Execution design (vs the reference's >=10 jobs per continuous column,
   * SURVEY.md §3.5): ONE scan and ONE hash aggregation regardless of
-  * column count or stratification — the census. Every input row explodes
-  * into a row-counter entry, one (column, value) entry per continuous
-  * column and one (column, category) entry per categorical column, and
-  * `groupBy(c, raw stratum, v, s).count` tallies them. The census is the
-  * data's distinct-value footprint, so it is usually small: at or under
+  * column count or stratification — the census ([[Census]]): one row
+  * counter per raw stratum, one (column, value) tally per continuous
+  * column and one (column, category) tally per categorical column. Each
+  * partition counts its rows into typed maps and one
+  * `groupBy(c, raw stratum, v, s).agg(sum(w))` merges the partitions'
+  * partial rows; no input row is exploded. The census is the data's
+  * distinct-value footprint, so it is usually small: at or under
   * [[graft.ops.OrderStatistics.LocalMaxRows]] rows the driver collects
   * it and computes every cell — strata names and sizes, counts, min/max
   * and exact quartiles (order statistics over the sorted tallies),
@@ -195,16 +197,7 @@ object TableOne {
     val catCols = positioned.collect { case (c, i, false) => c -> i }
 
     // --- the census: ONE scan, ONE aggregation -------------------------
-    def entry(c: Int, v: Column, s: Column) =
-      struct(lit(c).as("c"), v.cast(DoubleType).as("v"), s.cast(StringType).as("s"))
-    // cast covers BooleanType categoricals ("true"/"false"); no-op for strings
-    val entries = entry(0, lit(null), lit(null)) +:
-      (contCols.map { case (c, i) => entry(i, col(c), lit(null)) } ++
-        catCols.map { case (c, i) => entry(i, lit(null), coalesce(col(c).cast(StringType), lit(Missing))) })
-    val census = df
-      .select(cfg.stratify.fold(lit(""))(s => Sanitize.rawKey(col(s))).as("r"), explode(array(entries: _*)).as("e"))
-      .groupBy(col("e.c").as("c"), col("r"), col("e.v").as("v"), col("e.s").as("s"))
-      .agg(count(lit(1)).as("w"))
+    val census = Census.of(df, cfg.stratify, contCols, catCols)
       .withColumn("o", Sanitize.categoryOrderKey(col("s")))
     // Collects at most `atMost` + 1 census rows: one more than fits.
     def upTo(d: DataFrame, atMost: Long): Seq[Entry] =

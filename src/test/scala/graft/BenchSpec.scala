@@ -136,6 +136,15 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.loadPrior(swapped, "queries") === Map("a" -> 1.0))
   }
 
+  test("an isolated child that records the failure sentinel yields no isolated time") {
+    val child = strict.readTree("""{"queries":{"failed_q":-1.0,"ok_q":0.75,"text_q":"1.0"}}""")
+    assert(Bench.isolatedSeconds(child, "failed_q") === None)
+    assert(Bench.isolatedSeconds(child, "ok_q") === Some(0.75))
+    assert(Bench.isolatedSeconds(child, "text_q") === None)
+    assert(Bench.isolatedSeconds(child, "absent_q") === None)
+    assert(Bench.isolatedSeconds(Bench.readPrior(tempFile("")), "ok_q") === None)
+  }
+
   test("oracle_sql.json round-trips SQL with a tab, CR, quote and U+0001") {
     val sql = Map("q1" -> "SELECT\t1 AS \"x\"\r\nFROM t WHERE s = '\u0001'",
       "q\"2" -> "SELECT '\\' AS b")

@@ -138,6 +138,27 @@ class TableOnePropertySpec extends AnyFunSuite with Matchers {
     assertMatchesNaive(big, out)
   }
 
+  test("a zero-row input gives zero counts, null statistics and NOT DONE tests on both routes") {
+    // three empty partitions: the census tallies nothing anywhere
+    val empty = spark.sparkContext.parallelize(Seq.empty[Rec], 3).toDF()
+    val configs = Seq(TableOneConfig(Some("strat"), Seq("cat", "cont"), pValues = true),
+      TableOneConfig(Some("strat"), Seq("cat", "cont")), TableOneConfig(None, Seq("cat", "cont")))
+    for (cfg <- configs) withClue(s"$cfg: ") {
+      val out = QuartileRoutes(empty, cfg)
+      // no rows means no strata and no categories: Totals, then the
+      // eight continuous statistics
+      out.map(_.getAs[String]("Values")).toSeq shouldBe
+        Seq("ALL", "n", "min", "max", "mean", "stddev", "25th percentile", "50th percentile", "75th percentile")
+      out.head.getAs[Double]("All_Patients") shouldBe 0.0
+      out.tail.foreach { r =>
+        if (r.getAs[String]("Values") == "n") r.getAs[Double]("All_Patients") shouldBe 0.0
+        else r.isNullAt(r.fieldIndex("All_Patients")) shouldBe true
+      }
+      if (cfg.pValues) out.tail.head.getAs[String]("test_name") shouldBe StatTests.NotDone.testName
+      else out.head.schema.fieldNames should not contain "test_name"
+    }
+  }
+
   test("decimal and byte columns are analyzed as continuous (beyond reference parity)") {
     val df = spark.sql(
       """SELECT * FROM VALUES
