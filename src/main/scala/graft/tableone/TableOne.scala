@@ -1,5 +1,6 @@
 package graft.tableone
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -54,25 +55,24 @@ final case class TableOneConfig(
   * column count or stratification — the census ([[Census]]): one row
   * counter per raw stratum, one (column, value) tally per continuous
   * column and one (column, category) tally per categorical column. Each
-  * partition counts its rows into typed maps and one
-  * `groupBy(c, raw stratum, v, s).agg(sum(w))` merges the partitions'
-  * partial rows; no input row is exploded. The census is the data's
-  * distinct-value footprint, so it is usually small: at or under
-  * [[graft.ops.OrderStatistics.LocalMaxRows]] rows the driver collects
-  * it and computes every cell — strata names and sizes, counts, min/max
-  * and exact quartiles (order statistics over the sorted tallies),
-  * mean/stddev and the t-test/ANOVA moments (one weighted fold over the
-  * same tallies), categorical counts and chi-square — and returns the
-  * table as a LocalRelation, which consumes without a job. A larger
-  * census stays distributed for the call: its row counters and
-  * categorical cells are collected, and the continuous tallies are
-  * range-partitioned through [[exactQuartiles]]. Strata are keyed by
-  * their RAW value and named on the driver, merging raw values that
-  * sanitize to one name; raw rows are never collected, unlike the
-  * reference's per-column `toPandas()`
+  * partition counts the scan's column batches straight into typed maps
+  * (dictionary-encoded strings by dictionary id; an input that is not a
+  * bare vectorized scan is batched by `RowToColumnarExec`), and one
+  * `groupBy(c, raw stratum, v, s).agg(sum(w))` merges the partial rows.
+  * At or under [[graft.ops.OrderStatistics.LocalMaxRows]] census rows the
+  * driver collects the census and computes every cell — strata names and
+  * sizes, counts, min/max and exact quartiles (order statistics over the
+  * sorted tallies), mean/stddev and the t-test/ANOVA moments (one
+  * weighted fold), categorical counts and chi-square — and returns a
+  * LocalRelation, which consumes without a job. A larger census stays
+  * distributed: its row counters and categorical cells are collected, and
+  * the continuous tallies are range-partitioned through
+  * [[exactQuartiles]]. Strata are keyed by their RAW value and named on
+  * the driver, merging raw values that sanitize to one name; raw rows are
+  * never collected, unlike the reference's per-column `toPandas()`
   * (/root/reference/tableone_pyspark.py:453, :500).
   */
-object TableOne {
+object TableOne extends Logging {
   import Sanitize.Missing
 
   /** Continuous statistic slots: (Values label, Index fraction), in output
@@ -165,7 +165,7 @@ object TableOne {
     import spark.implicits._
     val pValues = cfg.pValues && cfg.stratify.isDefined
     if (cfg.pValues && cfg.stratify.isEmpty)
-      Console.err.println("[tableone] p_values forced off: no stratification column")
+      logWarning("p_values forced off: no stratification column")
 
     // --- dispatch analyzed columns by Spark type ----------------------
     val schema = df.schema
@@ -186,7 +186,7 @@ object TableOne {
         case StringType | BooleanType => Some(c -> false)
         case _: NumericType           => Some(c -> true)
         case other =>
-          Console.err.println(s"[tableone] unsupported column type $c:$other — skipped")
+          logWarning(s"unsupported column type $c:$other — skipped")
           None
       }
     }

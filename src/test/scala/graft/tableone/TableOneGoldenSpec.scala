@@ -3,7 +3,11 @@ package graft.tableone
 import graft.TestSpark
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, row_number, when}
+import org.apache.spark.sql.functions.{col, current_date, lit, row_number, when}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -128,6 +132,28 @@ class TableOneGoldenSpec extends AnyFunSuite {
       math.abs(john.getAs[Double]("All_Patients_%") - 0.3) < eps)
     val mean = rows.find(_.getAs[String]("Values") == "mean").get
     assert(mean.getAs[Double]("All_Patients") == 42.0)
+  }
+
+  test("forced-off p-values and skipped columns are logged as warnings, not printed") {
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("tableone-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger(TableOne.getClass.getName.stripSuffix("$")).asInstanceOf[Logger]
+    val err = new java.io.ByteArrayOutputStream
+    capture.start()
+    logger.addAppender(capture)
+    try Console.withErr(err) {
+      TableOne.summarize(fixture.withColumn("seen", current_date()),
+        TableOneConfig(cols = Seq("name", "seen"), pValues = true)).collect()
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(warnings.asScala.toSeq === Seq(
+      "p_values forced off: no stratification column", "unsupported column type seen:DateType — skipped"))
+    assert(err.size === 0)
   }
 
   test("two strata selects the t-test; booleans summarize as categories") {
