@@ -2,7 +2,7 @@ package graft.tableone
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -53,9 +53,9 @@ private[tableone] object Census {
   private val Seq(missingKey, trueKey, falseKey) = Seq(Missing, "true", "false").map(UTF8String.fromString)
 
   /** Where [[tally]] reads a batch: the raw stratum key is string column
-    * `stratum`, or `key` (the bound [[Sanitize.rawKey]]) evaluated on each
-    * row, or `""`; `cont` and `cat` pair a column's ordinal with its
-    * variable position, the census's `c`. */
+    * `stratum`, or `key` (the bound [[Sanitize.rawKey]]) projected from
+    * each row by generated code, or `""`; `cont` and `cat` pair a
+    * column's ordinal with its variable position, the census's `c`. */
   final case class Layout(stratum: Option[Int], key: Option[Expression], cont: Array[(Int, Int)], cat: Array[(Int, Int)])
 
   /** `df`'s columns the census reads, in the relation's column order (so
@@ -129,6 +129,7 @@ private[tableone] object Census {
     * one key may appear in several partial rows; their `w`s sum to its
     * census weight. */
   def tally(batches: Iterator[ColumnarBatch], l: Layout, flushAt: Int): Iterator[InternalRow] = {
+    val keyOf = l.key.map(k => UnsafeProjection.create(Seq(k)))
     def fill(): mutable.ArrayBuffer[InternalRow] = {
       val index = new java.util.HashMap[UTF8String, Integer]
       val (raw, n) = (mutable.ArrayBuffer.empty[UTF8String], mutable.ArrayBuffer.empty[Count])
@@ -153,7 +154,7 @@ private[tableone] object Census {
         val (sidx, ids) = (new Array[Int](rows), new Array[Int](rows))
         // each row's stratum index; in a small domain each id is named once
         var i = 0
-        (l.stratum, l.key) match {
+        (l.stratum, keyOf) match {
           case (Some(o), _) =>
             val v = b.column(o)
             val named = new Array[Int](dictionaryIds(v, rows, 1, ids) max 0) // by id: stratum + 1
@@ -164,7 +165,7 @@ private[tableone] object Census {
               i += 1
             }
           case (_, Some(key)) =>
-            while (i < rows) { sidx(i) = stratum(key.eval(b.getRow(i)).asInstanceOf[UTF8String]); i += 1 }
+            while (i < rows) { sidx(i) = stratum(key(b.getRow(i)).getUTF8String(0)); i += 1 }
           case _ => java.util.Arrays.fill(sidx, stratum(UTF8String.EMPTY_UTF8))
         }
         i = 0
