@@ -1820,8 +1820,8 @@ object OpsQueries {
         .orderBy("bin")
     }),
     "a30_quantile_bins" -> ((s, dir) =>
-      // equal-frequency quintiles of price: edges from the gated exact
-      // quantile router, attached as LITERALS (the clampToBounds gate),
+      // equal-frequency quintiles of price: edges from the exact grouped
+      // quantile operator, attached as LITERALS (the clampToBounds gate),
       // census in one branch-free aggregate
       Encoding.quantileBin(
           table(s, dir, "lineitem").select("l_extendedprice"),

@@ -435,11 +435,8 @@ object SparkEntry {
     "a11_grouped_quantiles" -> ((s, dir) =>
       // per-group EXACT interpolated quantiles (percentile_cont
       // semantics: position (n-1)·p, linear interpolation) — the grouped
-      // complement of a3's global quartiles, through the MEMORY-GATED
-      // router: a cheap max-group-size probe keeps Spark's `percentile`
-      // sort aggregate while the largest group's buffer is bounded, and
-      // routes unbounded groups to the distributed order-statistics pass
-      // (exercised oracle-identically by a13). Both regimes covered.
+      // complement of a3's global quartiles: a (group, value) histogram,
+      // range-partitioned order statistics, driver interpolation
       Quantiles.groupedQuantiles(table(s, dir, "lineitem"),
           "l_returnflag", "l_extendedprice",
           Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75, "p95" -> 0.95))
@@ -451,14 +448,10 @@ object SparkEntry {
         .orderBy("l_returnflag")),
 
     "a13_grouped_quantiles_dist" -> ((s, dir) =>
-      // the DISTRIBUTED order-statistics path of a11's gated router,
-      // forced (gate bypassed) so the driver's oracle checks this plan
-      // at every scale: range-partitioned (group, value) histogram,
-      // driver prefix sums over partition subtotals, per-partition
-      // rank picks, driver interpolation — per-executor memory bounded
-      // by partition size, never by group size (the a11 weak spot's
-      // 100 TB route).
-      Quantiles.groupedQuantilesExact(table(s, dir, "lineitem"),
+      // the same route and arguments as a11 (groupedQuantiles has one
+      // plan); kept under its own name, which benchmark workloads and
+      // committed bench records carry
+      Quantiles.groupedQuantiles(table(s, dir, "lineitem"),
           "l_returnflag", "l_extendedprice",
           Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75, "p95" -> 0.95))
         .select(col("l_returnflag"),
@@ -470,18 +463,15 @@ object SparkEntry {
 
     "a14_winsorized_stats" -> ((s, dir) => {
       // winsorization — the standard outlier-robust preprocessing step,
-      // composed from the gated quantile operator: per-group [p05, p95]
-      // bounds (3 rows) broadcast back onto the corpus, values clamped,
+      // composed from the grouped quantile operator: per-group [p05, p95]
+      // bounds (3 rows) attached back onto the corpus, values clamped,
       // one aggregate. Both engines interpolate the bounds with the
       // identical arithmetic (the a11 precedent), so the clamp
       // boundaries agree bitwise and only the rounded averages carry
-      // float-sum noise. The caller KNOWS the group shape here — 3
-      // return-flag groups that each dwarf any sane sort buffer — so it
-      // calls the distributed-exact path directly instead of paying
-      // groupedQuantiles' max-group-size probe job: two lineitem passes
-      // (bounds histogram + clamp aggregate) instead of three.
+      // float-sum noise. Two lineitem passes: bounds histogram, clamp
+      // aggregate.
       val li = table(s, dir, "lineitem")
-      val qs = Quantiles.groupedQuantilesExact(li, "l_returnflag",
+      val qs = Quantiles.groupedQuantiles(li, "l_returnflag",
         "l_extendedprice", Seq("lo" -> 0.05, "hi" -> 0.95))
       // bounds attach as a literal branch chain, not a join: the 3-row
       // broadcast hash join measured ~10x the whole clamp aggregate at
@@ -499,7 +489,7 @@ object SparkEntry {
     }),
     "a15_robust_stats" -> ((s, dir) => {
       // robust center/spread + outlier census: per-group median and MAD
-      // via two gated quantile passes, then one outlier-count scan with
+      // via two grouped quantile passes, then one outlier-count scan with
       // the (median, mad) pair attached as literals (3 groups — the a14
       // lesson: a tiny broadcast hash join costs ~10x the aggregate it
       // feeds). 4.4478 = 3 x 1.4826 (the normal-consistency constant),
@@ -1284,7 +1274,7 @@ object SparkEntry {
         "FROM w GROUP BY 1 ORDER BY 1"),
     "a15_robust_stats" ->
       // median and MAD re-derived with quantile_cont (interpolation
-      // identical to the gated router — the a11 precedent), outliers
+      // identical to groupedQuantiles — the a11 precedent), outliers
       // against the same single-literal 4.4478 threshold
       ("WITH m AS (SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5) AS med " +
         "FROM lineitem GROUP BY 1), " +

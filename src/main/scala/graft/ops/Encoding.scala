@@ -80,12 +80,9 @@ object Encoding {
     * open above); a heavily-tied column can leave interior bins empty
     * (duplicate edges) — those simply don't appear in the census.
     *
-    * Scale shape: edges come straight from the DISTRIBUTED exact
-    * order-statistics pass ([[Quantiles.groupedQuantilesExact]] on
-    * [[OrderStatistics.pick]]; the gated router's sort-aggregate side is skipped
-    * because a single global group is its worst case, every row
-    * funneling into one task's percentile buffer — 2× slower measured
-    * at sf0.1), collected as k−1 doubles and attached
+    * Scale shape: edges come straight from the exact order-statistics
+    * pass ([[Quantiles.groupedQuantiles]] over one global group, on
+    * [[OrderStatistics.pick]]), collected as k−1 doubles and attached
     * as LITERALS (the clampToBounds gate: a k-row broadcast join costs
     * ~10× a literal when-chain — measured, SURVEY §6.4); the census is
     * then ONE map-side-combined aggregate with branch-free bin
@@ -95,13 +92,7 @@ object Encoding {
   def quantileBin(df: DataFrame, valueCol: String, k: Int): DataFrame = {
     require(k >= 2 && k <= 256, s"k must be in [2, 256], got $k")
     val ps = (1 until k).map(i => (s"__e$i", i.toDouble / k))
-    // the DISTRIBUTED order-stat path directly, not the gated router:
-    // a single global group is the sort-aggregate path's worst case
-    // (every row serializes into one task's percentile buffer — 8.5 s
-    // vs 4.3 s measured at sf0.1 on lineitem), and the whole point of
-    // the gate's cheap probe is moot when the caller KNOWS there is
-    // exactly one group
-    val edgeRow = Quantiles.groupedQuantilesExact(
+    val edgeRow = Quantiles.groupedQuantiles(
       df.filter(col(valueCol).isNotNull)
         .select(lit(1).as("__g"), col(valueCol).cast("double").as("__v")),
       "__g", "__v", ps).head()

@@ -186,9 +186,7 @@ object Evaluation {
       .select(col(scoreCol).cast(DoubleType).as("__s"),
         col(labelCol).cast("long").as("__y"))
     val ps = (1 until k).map(i => (s"__e$i", i.toDouble / k))
-    // distributed order-stat path directly — one global group is the
-    // sort-aggregate path's worst case (the quantileBin measurement)
-    val edgeRow = Quantiles.groupedQuantilesExact(
+    val edgeRow = Quantiles.groupedQuantiles(
       src.select(lit(1).as("__g"), col("__s")), "__g", "__s", ps).head()
     val es = (1 until k).map(i => edgeRow.getAs[Double](s"__e$i"))
     val bin = es.map(e => when(col("__s") >= lit(e), 1L).otherwise(0L))

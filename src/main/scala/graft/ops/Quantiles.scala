@@ -1,92 +1,40 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Grouped EXACT interpolated quantiles (`percentile_cont` semantics:
   * position p·(n−1), linear interpolation between the two bracketing
-  * order statistics) with a memory-gated physical plan.
+  * order statistics).
   *
   * The reference computes quartiles per stratum with
-  * `percentile_approx(col, q, n+1)` (/root/reference/tableone_pyspark.py:384-388);
-  * this operator is the grouped generalization with arbitrary
-  * probabilities and a plan that survives any group size.
+  * `percentile_approx(col, q, n+1)` (tableone_pyspark.py:384-388); this
+  * operator is the exact, grouped generalization with arbitrary
+  * probabilities. It has one plan, whatever the group shape: one hash
+  * aggregation over (group, value) — the cardinality-driven plan of "A
+  * Six-dimensional Analysis of In-memory Aggregation" (EDBT 2019) —
+  * handed to [[OrderStatistics.pick]]: range partitions, driver prefix
+  * sums of the partition subtotals, and each partition emits the order
+  * statistics whose global rank falls inside it. Executor memory is
+  * bounded by a range partition, never by a group, so one huge group (3
+  * return flags × 10^10 rows) and thousands of tiny ones take the same
+  * route.
   *
-  * Two regimes, complementary by construction:
-  *
-  *  - MANY SMALL groups: Spark's native `percentile` sort aggregate is
-  *    the right plan — its per-group buffer (an OpenHashMap of
-  *    value→count) is bounded by the group's size/cardinality, the agg
-  *    is a single hash exchange, and nothing touches the driver. The
-  *    gate keeps this path whenever the LARGEST group's row count is at
-  *    most `maxBufferedPerGroup`.
-  *  - FEW HUGE groups (the 100 TB shape: 3 return-flags × 10^10 rows):
-  *    that buffer grows linearly with the group and OOMs an executor.
-  *    [[groupedQuantilesExact]] instead hands the per-(group, value)
-  *    histogram to [[OrderStatistics.pick]]: range partitions, driver
-  *    prefix sums of partition subtotals (O(#groups × #partitions) —
-  *    aggregate-sized in this regime), and each partition emits the
-  *    order statistics whose global rank falls inside it. Every stage is
-  *    parallel in the number of range partitions; per-executor memory is
-  *    bounded by partition size, not group size.
-  *
-  * The pathological corpus with BOTH 10^6+ groups and a multi-billion-row
-  * group would make the exact path's driver bookkeeping large; route such
-  * data by raising `maxBufferedPerGroup` (executors with the memory to
-  * sort the big group) or pre-splitting hot groups. The gate's one
-  * max-group-size job is a map-side-combined count — negligible against
-  * either path.
+  * Cost on the driver: O(groups × range partitions) subtotals and
+  * O(groups) output rows, interpolated there and returned as a local
+  * relation. The call is eager: its jobs run before it returns.
   */
 object Quantiles {
 
-  /** Gated grouped quantiles: one cheap max-group-size probe job, then
-    * either the native `percentile` sort aggregate (max group ≤
-    * `maxBufferedPerGroup`) or the distributed order-statistics pass.
-    * Both paths return identical values (spec-pinned): one row per
-    * group, `groupCol` cast to string, one double column per `(name, p)`
-    * in `ps`. Rows whose value is null are ignored; a group with only
-    * nulls is absent from the output (it has no order statistics).
-    *
-    * @param maxBufferedPerGroup largest group row-count the native sort
-    *        aggregate is allowed to buffer on one executor. Default 4M
-    *        values ≈ 32 MB of doubles per group — comfortably inside an
-    *        executor, far above the crossover where the distributed
-    *        pass's ~4 scheduling round-trips stop mattering. */
+  /** One row per group, `groupCol` cast to string, one double column per
+    * `(name, p)` in `ps`. Rows whose value is null are ignored; a group
+    * with only nulls is absent from the output (it has no order
+    * statistics); a null group key is a group of its own and sorts last.
+    * See the object doc for the plan and its driver cost. */
   def groupedQuantiles(df: DataFrame, groupCol: String, valueCol: String,
-                       ps: Seq[(String, Double)],
-                       maxBufferedPerGroup: Long = 4L << 20): DataFrame = {
-    requirePs(ps)
-    // pre-filter nulls: percentile ignores them anyway, and dropping
-    // all-null groups HERE makes both paths agree that such a group is
-    // absent from the output
-    val nonNull = df.filter(col(valueCol).isNotNull)
-    val maxGroup = nonNull
-      .groupBy(col(groupCol)).agg(count(lit(1)).as("__n"))
-      .agg(max(col("__n"))).head()
-    val maxN = if (maxGroup.isNullAt(0)) 0L else maxGroup.getLong(0)
-    if (maxN <= maxBufferedPerGroup) {
-      // ONE percentile buffer per group, not one per requested p: N
-      // separate `percentile(col, p)` aggregates each accumulate and
-      // sort their OWN copy of the same group's values (4 quantiles =
-      // 4x the buffering and 4 sorts); the array form shares a single
-      // buffer and one sort across every p. Identical values — same
-      // aggregate, fanned back out to the named columns.
-      val pList = ps.map(_._2).mkString(",")
-      nonNull.groupBy(col(groupCol).cast("string").as(groupCol))
-        .agg(expr(s"percentile(`$valueCol`, array($pList))").as("__qs"))
-        .select(col(groupCol) +: ps.zipWithIndex.map { case ((name, _), i) =>
-          col("__qs").getItem(i).as(name) }: _*)
-    } else groupedQuantilesExact(df, groupCol, valueCol, ps)
-  }
-
-  /** The distributed order-statistics path — always safe, never buffers
-    * a group. See the object doc for the plan shape. Public so a caller
-    * who KNOWS the corpus shape (and the a13 driver query, which must
-    * exercise this path at every scale) can bypass the probe job. */
-  def groupedQuantilesExact(df: DataFrame, groupCol: String, valueCol: String,
-                            ps: Seq[(String, Double)]): DataFrame = {
+                       ps: Seq[(String, Double)]): DataFrame = {
     requirePs(ps)
     val spark = df.sparkSession
     val hist = df.select(col(groupCol).cast("string").as("g"),
@@ -126,41 +74,19 @@ object Quantiles {
       schema)
   }
 
-  /** Clamp `valueCol` into per-group `[__lo, __hi]` bounds (one row per
-    * group, `g` = the group key cast to string — the shape both
-    * quantile paths emit). The bounds frame is aggregate-sized by
-    * construction, but HOW it attaches matters: joining even a 3-row
-    * broadcast against a wide scan measured ~10x the cost of the whole
-    * clamp aggregate at sf10 (6–8 s vs 0.7 s for 60M rows — the
-    * per-row string-key hash probe dwarfs the arithmetic it feeds), so
-    * when the bounds fit a codegen'd branch chain (≤ `maxLiteralGroups`)
-    * they attach as pure literal conditionals — zero join, zero
-    * broadcast, whole-stage codegen end to end. Bigger group counts
-    * fall back to a left broadcast-hash join. Rows of groups with no
-    * bounds row (all-null groups) pass through unclamped on BOTH paths
-    * (`least`/`greatest` skip null operands; the join path is LEFT
-    * outer for the same reason). */
+  /** Clamp `valueCol` into per-group bounds: `bounds` has one row per
+    * group, (group key as a string, lo, hi) — the shape
+    * [[groupedQuantiles]] emits. The bounds attach through
+    * [[attachPerGroup]]; rows of a group with no bounds row (an all-null
+    * group) pass through unclamped, because `least`/`greatest` skip null
+    * operands. */
   def clampToBounds(df: DataFrame, groupCol: String, valueCol: String,
                     bounds: DataFrame, maxLiteralGroups: Int = 64): DataFrame = {
     require(bounds.columns.length == 3,
       s"bounds must be (group, lo, hi), got ${bounds.columns.mkString(",")}")
-    val Array(gName, loName, hiName) = bounds.columns
-    val gStr = col(groupCol).cast(StringType)
-    // the probe stays aggregate-sized whatever the real group count is
-    val probe = bounds.limit(maxLiteralGroups + 1).collect()
-    if (probe.length <= maxLiteralGroups) {
-      def attach(idx: Int): org.apache.spark.sql.Column =
-        probe.map { r =>
-          val cond = if (r.isNullAt(0)) gStr.isNull else gStr === lit(r.getString(0))
-          when(cond, if (r.isNullAt(idx)) lit(null).cast(DoubleType) else lit(r.getDouble(idx)))
-        }.reduceOption(coalesce(_, _)).getOrElse(lit(null).cast(DoubleType))
-      df.withColumn(valueCol, least(greatest(col(valueCol), attach(1)), attach(2)))
-    } else
-      df.join(broadcast(bounds.select(col(gName).as("__g"),
-            col(loName).as("__lo"), col(hiName).as("__hi"))),
-          gStr <=> col("__g"), "left_outer")
-        .withColumn(valueCol, least(greatest(col(valueCol), col("__lo")), col("__hi")))
-        .drop("__g", "__lo", "__hi")
+    attachPerGroup(df, groupCol, bounds, maxLiteralGroups)
+      .withColumn(valueCol, least(greatest(col(valueCol), col("__a0")), col("__a1")))
+      .drop("__a0", "__a1")
   }
 
   /** Grouped robust center/spread: per-group median and MAD (median
@@ -170,38 +96,52 @@ object Quantiles {
     * not at all, which is why robust scaling is the standard
     * preprocessing for corpus statistics nobody hand-cleaned.
     *
-    * Two quantile passes, each routed through [[groupedQuantiles]]'
-    * memory gate (so any group shape survives): medians, then medians
-    * of the residuals — with the group medians attached to the residual
-    * scan by the same literal-branch-chain gate as [[clampToBounds]]
-    * (≤ `maxLiteralGroups` groups; beyond that a broadcast join, which
-    * is also the regime where the join cost stops mattering relative to
-    * group size). Returns one row per group: (group, median, mad). */
+    * Two [[groupedQuantiles]] passes: the medians, then the medians of
+    * the residuals, with the group medians attached to the residual scan
+    * by [[attachPerGroup]]. A row of a group with no median (an all-null
+    * group) gets a null residual, which the second pass ignores. The
+    * driver holds O(groups) medians between the passes. Returns one row
+    * per group: (group, median, mad). */
   def groupedMad(df: DataFrame, groupCol: String, valueCol: String,
-                 maxBufferedPerGroup: Long = 4L << 20,
                  maxLiteralGroups: Int = 64): DataFrame = {
-    val med = groupedQuantiles(df, groupCol, valueCol,
-      Seq("med" -> 0.5), maxBufferedPerGroup)
+    val med = groupedQuantiles(df, groupCol, valueCol, Seq("med" -> 0.5))
     val gStr = col(groupCol).cast(StringType)
-    val probe = med.limit(maxLiteralGroups + 1).collect()
-    val resid =
-      if (probe.length <= maxLiteralGroups) {
-        val m = probe.map { r =>
-          val cond = if (r.isNullAt(0)) gStr.isNull else gStr === lit(r.getString(0))
-          when(cond, lit(r.getDouble(1)))
-        }.reduceOption(coalesce(_, _)).getOrElse(lit(null).cast(DoubleType))
-        df.select(gStr.as(groupCol),
-          abs(col(valueCol).cast(DoubleType) - m).as("__r"))
-      } else
-        df.join(broadcast(med.select(gStr.as("__g"), col("med").as("__m"))),
-            gStr <=> col("__g"), "inner")
-          .select(gStr.as(groupCol),
-            abs(col(valueCol).cast(DoubleType) - col("__m")).as("__r"))
+    val resid = attachPerGroup(df, groupCol, med, maxLiteralGroups)
+      .select(gStr.as(groupCol), abs(col(valueCol).cast(DoubleType) - col("__a0")).as("__r"))
     // null-safe final join: a null group key is a legitimate group
-    groupedQuantiles(resid, groupCol, "__r", Seq("mad" -> 0.5), maxBufferedPerGroup)
-      .join(med.select(gStr.as("__gj"), col("med")),
+    groupedQuantiles(resid, groupCol, "__r", Seq("mad" -> 0.5))
+      .join(med.select(col(groupCol).as("__gj"), col("med")),
         col(groupCol) <=> col("__gj"), "inner")
       .select(col(groupCol), col("med").as("median"), col("mad"))
+  }
+
+  /** `df` plus the double columns of `perGroup` (one row per group: the
+    * group key as a string, then the values), named `__a0`, `__a1`, …
+    * and matched null-safely on `groupCol` cast to string; a group with
+    * no row gets nulls. `perGroup` is aggregate-sized, but HOW it
+    * attaches matters: joining even a 3-row broadcast against a wide
+    * scan measured ~10x the cost of the whole clamp aggregate at sf10
+    * (6–8 s vs 0.7 s for 60M rows — the per-row string-key hash probe
+    * dwarfs the arithmetic it feeds). So up to `maxLiteralGroups` groups
+    * attach as a literal `when` chain (no join, no broadcast,
+    * whole-stage codegen end to end); more fall back to a left
+    * broadcast-hash join. */
+  private def attachPerGroup(df: DataFrame, groupCol: String, perGroup: DataFrame,
+                             maxLiteralGroups: Int): DataFrame = {
+    val names = perGroup.columns.tail.indices.map(i => s"__a$i")
+    val gStr = col(groupCol).cast(StringType)
+    // the probe stays aggregate-sized whatever the real group count is
+    val probe = perGroup.limit(maxLiteralGroups + 1).collect()
+    if (probe.length <= maxLiteralGroups)
+      df.select(col("*") +: names.zipWithIndex.map { case (name, i) =>
+        probe.map { r =>
+          val cond = if (r.isNullAt(0)) gStr.isNull else gStr === lit(r.getString(0))
+          when(cond, if (r.isNullAt(i + 1)) lit(null).cast(DoubleType) else lit(r.getDouble(i + 1)))
+        }.reduceOption(coalesce(_, _)).getOrElse(lit(null).cast(DoubleType)).as(name)
+      }: _*)
+    else
+      df.join(broadcast(perGroup.toDF("__g" +: names: _*)), gStr <=> col("__g"), "left_outer")
+        .drop("__g")
   }
 
   private def requirePs(ps: Seq[(String, Double)]): Unit = {
@@ -270,8 +210,8 @@ object Quantiles {
     * cumulative window, so the window sorts distinct values, not rows —
     * the same census discipline as [[groupedMode]]. For a value column
     * with unbounded per-group cardinality AND unit weights, prefer
-    * [[groupedQuantilesExact]] (range-partitioned, no per-group
-    * window); this operator's contract is bounded distinct values per
+    * [[groupedQuantiles]] (range-partitioned, no per-group window);
+    * this operator's contract is bounded distinct values per
     * group. Returns (group, total_w, median). Non-positive or null
     * weights are rejected per row (a zero-weight row cannot carry a
     * median). */

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -36,7 +37,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * Decimals, booleans and nested types get no stats and are simply
   * unprunable — again conservative, never wrong.
   */
-object FileSkipping {
+object FileSkipping extends Logging {
 
   /** One file's stats for one column. `min`/`max` are None when every
     * value in the file is null (`nulls == rows`). */
@@ -517,8 +518,8 @@ object FileSkipping {
       // only runtime-set confs differ, and those are settable
       spark.conf.getAll.foreach { case (k, v) => if (!s2.conf.getOption(k).contains(v)) s2.conf.set(k, v) }
       s2.conf.set(maxBitsKey, numBits.toString)
-      System.err.println(s"[bloom] $table: build session with $maxBitsKey" +
-        s"=$numBits (${perFile} rows/file at fpp=$fpp)")
+      logInfo(s"$table: bloom build session with $maxBitsKey" +
+        s"=$numBits ($perFile rows/file at fpp=$fpp)")
       s2
     } else spark
     val rows =

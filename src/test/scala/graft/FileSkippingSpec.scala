@@ -1,7 +1,12 @@
 package graft.sources
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.TestSpark
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -278,21 +283,41 @@ class FileSkippingSpec extends AnyFunSuite with Matchers {
         case _ =>
       }
     }
+    // the build-session decision is logged through log4j, never printed
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("bloom-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    val loggerName = FileSkipping.getClass.getName.stripSuffix("$")
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[Logger]
+    val level = logger.getLevel
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
     val sc = spark.sparkContext
     val callerConfs = Seq(maxBits, probe).map(k => k -> spark.conf.getOption(k))
     spark.conf.set(maxBits, "4096")
     spark.conf.set(probe, "12345678")
     org.apache.spark.TestListenerBus.drain(sc)
     sc.addSparkListener(listener)
+    capture.start()
+    logger.addAppender(capture)
+    Configurator.setLevel(loggerName, Level.INFO)
+    System.setErr(new java.io.PrintStream(err, true))
     try {
-      bloomCommit(tmp(), 1, 1000)
+      Console.withErr(err)(bloomCommit(tmp(), 1, 1000))
       org.apache.spark.TestListenerBus.drain(sc)
     } finally {
+      System.setErr(stderr)
+      Configurator.setLevel(loggerName, level)
+      logger.removeAppender(capture)
+      capture.stop()
       sc.removeSparkListener(listener)
       callerConfs.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
     builds should not be empty
     builds.forEach(conf => conf.get(probe) shouldBe Some("12345678"))
+    logged.asScala.filter(_.contains(s"bloom build session with $maxBits=")) should not be empty
+    err.size shouldBe 0
   }
 
   test("bloom lookup of an absent key returns empty (files may false-positive, rows never)") {

@@ -24,11 +24,21 @@ class QuantilesSpec extends AnyFunSuite with Matchers {
     df.collect().map(r => r.getString(0) ->
       (1 to ps.length).map(r.getDouble)).toMap
 
+  /** Spark's own exact `percentile` sort aggregate over (g, v), one
+    * shared buffer for every p, as a reference for the order-statistics
+    * route. */
+  private def nativePercentile(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Double]] = {
+    import org.apache.spark.sql.functions.{col, expr}
+    collectWide(df.groupBy(col("g").cast("string").as("g"))
+      .agg(expr(s"percentile(v, array(${ps.map(_._2).mkString(",")}))").as("qs"))
+      .select(col("g") +: ps.indices.map(col("qs").getItem(_)): _*))
+  }
+
   test("exact path matches a driver-side percentile_cont model on random data") {
     val rnd = new scala.util.Random(7)
     val rows = (1 to 5000).map(_ =>
       (s"g${rnd.nextInt(4)}", math.rint(rnd.nextDouble() * 1e6) / 100.0))
-    val out = collectWide(Quantiles.groupedQuantilesExact(
+    val out = collectWide(Quantiles.groupedQuantiles(
       rows.toDF("g", "v"), "g", "v", ps))
     val byG = rows.groupBy(_._1).view.mapValues(_.map(_._2).sorted.toVector).toMap
     out.keySet shouldBe byG.keySet
@@ -42,20 +52,45 @@ class QuantilesSpec extends AnyFunSuite with Matchers {
     val rows = (1 to 4000).map(_ =>
       (s"k${rnd.nextInt(3)}", rnd.nextInt(50).toDouble))
     val df = rows.toDF("g", "v")
-    val exact = collectWide(Quantiles.groupedQuantilesExact(df, "g", "v", ps))
-    val gated = collectWide(Quantiles.groupedQuantiles(df, "g", "v", ps))
-    gated.keySet shouldBe exact.keySet
+    val exact = collectWide(Quantiles.groupedQuantiles(df, "g", "v", ps))
+    val native = nativePercentile(df)
+    native.keySet shouldBe exact.keySet
     for (g <- exact.keys; i <- ps.indices)
-      gated(g)(i) shouldBe exact(g)(i) +- 1e-12
+      native(g)(i) shouldBe exact(g)(i) +- 1e-12
   }
 
-  test("gate routes a too-big group to the distributed path, same values") {
+  test("one 2,000-row group equals the native percentile, same values") {
     val rows = (1 to 2000).map(i => ("only", i.toDouble))
     val df = rows.toDF("g", "v")
-    val forced = collectWide(
-      Quantiles.groupedQuantiles(df, "g", "v", ps, maxBufferedPerGroup = 100))
-    val native = collectWide(Quantiles.groupedQuantiles(df, "g", "v", ps))
-    for (i <- ps.indices) forced("only")(i) shouldBe native("only")(i) +- 1e-12
+    val exact = collectWide(Quantiles.groupedQuantiles(df, "g", "v", ps))
+    val native = nativePercentile(df)
+    for (i <- ps.indices) exact("only")(i) shouldBe native("only")(i) +- 1e-12
+  }
+
+  test("thousands of 1-5-row groups with nulls match the model at 1 and 7 partitions") {
+    // the many-small-groups shape: per-group sizes 1..5, null values
+    // inside groups, one all-null group (absent) and a null key (kept)
+    val rnd = new scala.util.Random(31)
+    val rows = (0 until 4000).flatMap { g =>
+      (1 to 1 + rnd.nextInt(5)).map(_ =>
+        (Option(s"g$g"), if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(40).toDouble)))
+    } ++ Seq((Option("dead"), None), (Option("dead"), None),
+      (None, Some(3.0)), (None, None), (None, Some(-1.0)))
+    val byG = rows.collect { case (g, Some(v)) => (g, v) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toVector).toMap
+    byG.keySet should contain (None)
+    byG.keySet should not contain Option("dead")
+    val df = rows.toDF("g", "v")
+    for (parts <- Seq(1, 7)) {
+      val before = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val out = try Quantiles.groupedQuantiles(df, "g", "v", ps).collect()
+        .map(r => Option(r.getString(0)) -> (1 to ps.length).map(r.getDouble)).toMap
+      finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      out.keySet shouldBe byG.keySet
+      for ((g, vs) <- byG; ((_, p), i) <- ps.zipWithIndex)
+        out(g)(i) shouldBe refQuantile(vs, p) +- 1e-9
+    }
   }
 
   test("nulls are ignored; an all-null group is absent; null GROUP is kept") {
@@ -64,20 +99,17 @@ class QuantilesSpec extends AnyFunSuite with Matchers {
       (Option("dead"), None),
       (None: Option[String], Option(10.0)), (None: Option[String], Option(20.0)))
     val df = rows.toDF("g", "v")
-    for (out <- Seq(Quantiles.groupedQuantilesExact(df, "g", "v", Seq("p50" -> 0.5)),
-                    Quantiles.groupedQuantiles(df, "g", "v", Seq("p50" -> 0.5)))) {
-      val m = out.collect().map(r =>
-        Option(r.getString(0)) -> r.getDouble(1)).toMap
-      m.keySet shouldBe Set(Option("a"), None)
-      m(Option("a")) shouldBe 2.0 +- 1e-12
-      m(None) shouldBe 15.0 +- 1e-12
-    }
+    val m = Quantiles.groupedQuantiles(df, "g", "v", Seq("p50" -> 0.5)).collect()
+      .map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
+    m.keySet shouldBe Set(Option("a"), None)
+    m(Option("a")) shouldBe 2.0 +- 1e-12
+    m(None) shouldBe 15.0 +- 1e-12
   }
 
   test("single-element group and p in {0, 1} hit the boundary order stats") {
     val df = Seq(("s", 42.0), ("t", 1.0), ("t", 9.0)).toDF("g", "v")
     val qs = Seq("pmin" -> 0.0, "pmid" -> 0.5, "pmax" -> 1.0)
-    val out = Quantiles.groupedQuantilesExact(df, "g", "v", qs)
+    val out = Quantiles.groupedQuantiles(df, "g", "v", qs)
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
     out("s") shouldBe ((42.0, 42.0, 42.0))
     out("t")._1 shouldBe 1.0
@@ -93,7 +125,7 @@ class QuantilesSpec extends AnyFunSuite with Matchers {
     def run(inputParts: Int, rangeParts: Int) = {
       val before = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", rangeParts.toString)
-      try collectWide(Quantiles.groupedQuantilesExact(
+      try collectWide(Quantiles.groupedQuantiles(
         rows.toDF("g", "v").repartition(inputParts), "g", "v", ps))
       finally spark.conf.set("spark.sql.shuffle.partitions", before)
     }
