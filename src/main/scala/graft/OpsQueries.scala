@@ -2491,11 +2491,9 @@ object OpsQueries {
             .as("mean_view_to_click_sec"))
     }),
     "e9_funnel_ttl" -> ((s, dir) =>
-      // TTL-funnel batch parity: the converged per-user funnel after
-      // inactivity gaps > 1h evict and re-open state (= funnel over each
-      // user's LAST activity episode), collapsed to per-stage counts.
-      // The streaming-side semantics live in funnelStates(inactivityTtlMs);
-      // this is the oracle-checkable definition of what they converge to.
+      // TTL funnel: the per-user funnel after inactivity gaps > 1h
+      // re-open it (= funnel over each user's LAST activity episode),
+      // collapsed to per-stage counts.
       EventPipeline.funnelLastEpisode(Util.events(s, dir), ttlMs = 3600000L)
         .select(col("stage"), col("n_users"), col("sum_view_click_ms"))
         .orderBy("stage")),

@@ -69,22 +69,6 @@ object FileSkipping extends Logging {
     v
   }
 
-  /** [[VersionedTable.commitBatch]] + footer stats: the exactly-once
-    * streaming sink with data skipping on the read side. A replayed
-    * batch returns None and writes nothing (including stats); a crash
-    * between commit and stats write degrades that directory to
-    * unprunable until [[backfillStats]], same as [[commitWithStats]]. */
-  def commitBatchWithStats(df: DataFrame, table: String, batchId: Long,
-                           statsCols: Seq[String]): Option[Long] = {
-    val spark = df.sparkSession
-    val v = VersionedTable.commitBatch(df, table, batchId)
-    v.foreach { ver =>
-      writeStatsIfAbsent(spark, table,
-        VersionedTable.resolveDirs(spark, table, ver).last, statsCols)
-    }
-    v
-  }
-
   /** Small-file compaction as a TABLE TRANSACTION — the maintenance loop
     * [[graft.ops.Quality.auditedCommitWithStats]] opens and this closes:
     * read the latest version, rewrite its many files into few, and

@@ -168,14 +168,34 @@ object Sinks {
                          targetShards: Int = 64): JsonlExportReport = {
     require(tokensPerShard > 0 || targetShards > 0,
       "either a fixed tokensPerShard or a positive targetShards")
-    withShards(df, orderCol, tokenCol, startOffsetTokens = 0L,
-      budgetOf = total => {
-        require(total > 0, s"exportJsonlSharded: no tokens in $tokenCol")
+    val spark = df.sparkSession
+    // weight 1 is the null gate, summed in the same pass as the token
+    // subtotals: a null/uncastable token count would otherwise unbox to
+    // a 0 subtotal and flow into shards with zero budget weight — the
+    // manifest n_tokens goes null and the budget silently undercounts.
+    // An EXPORT must fail loudly, not drop or zero-weight rows.
+    val tok = df.withColumn("__tok", col(tokenCol).cast("long"))
+    OrderStatistics.prefixOffsets(tok, Seq(col(orderCol)),
+        Seq(col("__tok"), col("__tok").isNull.cast("long"))) { (parts, off) =>
+      val nNull = off.grand(1)
+      require(nNull == 0L,
+        s"jsonl export: $nNull rows have null/uncastable $tokenCol — " +
+          "filter or repair them upstream; an export must not carry zero-weight rows")
+      val total = off.grand(0)
+      require(total > 0, s"exportJsonlSharded: no tokens in $tokenCol")
+      val budget =
         if (tokensPerShard > 0) tokensPerShard
         else math.max(minShardTokens, total / targetShards)
-      }) {
-      (sharded, _, budget) =>
-        val spark = df.sparkSession
+      require(budget > 0, s"jsonl export: shard budget must be positive, got $budget")
+      // (__tok, __pid, __prev, shard), persisted for its two consumers
+      // (writer + census) and released before return
+      val sharded = parts
+        .withColumn("__prev",
+          sum("__tok").over(OrderStatistics.cumulative(col(orderCol))) - col("__tok") +
+            off.startCol(0))
+        .withColumn("shard", expr(s"__prev div ${budget}L"))
+        .persist()
+      try {
         sharded.drop("__tok", OrderStatistics.Pid, "__prev")
           .repartition(col("shard"))
           .write.mode("overwrite").partitionBy("shard").json(path)
@@ -193,99 +213,7 @@ object Sinks {
           }.sum
         JsonlExportReport(budget, census.count(),
           dataFiles(new org.apache.hadoop.fs.Path(path)), version)
-    }
-  }
-
-  /** Shared shard-assignment core for the batch export and the streaming
-    * micro-batch export: per-partition local token cumsum over
-    * `orderCol` range partitions + `OrderStatistics.prefixOffsets`
-    * (never a global single-partition window), then
-    * shard = (startOffsetTokens + global-prev) div budget. The frame
-    * handed to `use` carries (__tok, __pid, __prev, shard) and is
-    * persisted for its two consumers (writer + census); every persist
-    * releases before return. `budgetOf` sees the input's total tokens so
-    * the batch export can derive its budget from the corpus. */
-  private def withShards[T](df: DataFrame, orderCol: String, tokenCol: String,
-                            startOffsetTokens: Long, budgetOf: Long => Long)
-                           (use: (DataFrame, Long, Long) => T): T = {
-    // weight 1 is the null gate, summed in the same pass as the token
-    // subtotals: a null/uncastable token count would otherwise unbox to
-    // a 0 subtotal and flow into shards with zero budget weight — the
-    // manifest n_tokens goes null and the budget silently undercounts.
-    // An EXPORT must fail loudly, not drop or zero-weight rows.
-    val tok = df.withColumn("__tok", col(tokenCol).cast("long"))
-    OrderStatistics.prefixOffsets(tok, Seq(col(orderCol)),
-        Seq(col("__tok"), col("__tok").isNull.cast("long"))) { (parts, off) =>
-      val nNull = off.grand(1)
-      require(nNull == 0L,
-        s"jsonl export: $nNull rows have null/uncastable $tokenCol — " +
-          "filter or repair them upstream; an export must not carry zero-weight rows")
-      val total = off.grand(0)
-      // total == 0 is LEGAL here (zero-token docs still shard at a fixed
-      // budget — the streaming path must not poison-pill on an all-zero
-      // micro-batch); the batch export keeps its corpus-level total > 0
-      // sanity gate at its own call site
-      val budget = budgetOf(total)
-      require(budget > 0, s"jsonl export: shard budget must be positive, got $budget")
-      val sharded = parts
-        .withColumn("__prev",
-          sum("__tok").over(OrderStatistics.cumulative(col(orderCol))) - col("__tok") +
-            off.startCol(0) + lit(startOffsetTokens))
-        .withColumn("shard", expr(s"__prev div ${budget}L"))
-        .persist()
-      try use(sharded, total, budget) finally sharded.unpersist()
-    }
-  }
-
-  /** One micro-batch of the STREAMING JSONL export — the o15 handoff's
-    * streaming twin (drive it from `foreachBatch`, or use
-    * [[graft.streaming.EventPipeline.jsonlExportSink]]). Shard ids
-    * CONTINUE across batches: the carried token offset is the committed
-    * manifest's total, so when micro-batches deliver the corpus in
-    * `orderCol` order the assignment is IDENTICAL to one batch
-    * [[exportJsonlSharded]] run over the whole corpus (spec-pinned
-    * parity). Each batch writes under `path`/batch=`batchId` (a shard
-    * straddling a batch boundary owns one file per batch it touches) and
-    * commits its per-shard census via
-    * [[FileSkipping.commitBatchWithStats]] — exactly-once: a replayed
-    * batch is detected against the manifest's batch watermark BEFORE any
-    * file write (the carried offset derives from committed state, so the
-    * gate must precede every side effect). The budget must be FIXED —
-    * deriving it per batch would shift shard boundaries with batch
-    * sizing. Returns the committed manifest version, None on replay. */
-  def exportJsonlBatch(batch: DataFrame, path: String, orderCol: String,
-                       tokenCol: String, manifestTable: String,
-                       tokensPerShard: Long, batchId: Long): Option[Long] = {
-    require(tokensPerShard > 0,
-      "streaming jsonl export needs a fixed tokensPerShard budget")
-    val spark = batch.sparkSession
-    if (VersionedTable.lastBatchId(spark, manifestTable).exists(_ >= batchId)) None
-    else {
-      // carried offset in O(latest batch), not O(stream age): every
-      // committed census row carries the running `tokens_end` total, so
-      // the offset is one max() over ONLY the newest version's newest
-      // directory (the last batch's census slice) — never a scan of the
-      // whole accumulated manifest
-      val prevV = VersionedTable.latestVersion(spark, manifestTable)
-      val carried =
-        if (prevV == 0L) 0L
-        else {
-          val lastDir = VersionedTable.resolveDirs(spark, manifestTable, prevV).last
-          spark.read.parquet(s"$manifestTable/$lastDir")
-            .agg(coalesce(max("tokens_end"), lit(0L))).head().getLong(0)
-        }
-      withShards(batch, orderCol, tokenCol, startOffsetTokens = carried,
-        budgetOf = _ => tokensPerShard) { (sharded, total, _) =>
-        sharded.drop("__tok", OrderStatistics.Pid, "__prev")
-          .repartition(col("shard"))
-          .write.mode("overwrite").partitionBy("shard")
-          .json(s"$path/batch=$batchId")
-        val census = sharded.groupBy("shard")
-          .agg(count(lit(1)).as("n_docs"), sum("__tok").as("n_tokens"))
-          .withColumn("tokens_end", lit(carried + total))
-        FileSkipping.commitBatchWithStats(census, manifestTable, batchId,
-          statsCols = Seq("shard"))
-      }
+      } finally sharded.unpersist()
     }
   }
 

@@ -69,11 +69,10 @@ object VersionedTable {
 
   /** [[commit]] with a PINNED version number — the idempotence
     * primitive: a writer that knows which version its work should
-    * become (a streaming micro-batch keyed by batchId, a retry of a
-    * known step) calls this, and a replay of an already-committed
-    * version surfaces as [[ConcurrentCommitException]] instead of a
-    * duplicate append. `expected` must be exactly `latest + 1` — gaps
-    * would leave unreadable version numbers. */
+    * become (a retry of a known step) calls this, and a replay of an
+    * already-committed version surfaces as [[ConcurrentCommitException]]
+    * instead of a duplicate append. `expected` must be exactly
+    * `latest + 1` — gaps would leave unreadable version numbers. */
   def commitAt(df: DataFrame, table: String, expected: Long,
                mode: String = "append"): Long = {
     val spark = df.sparkSession
@@ -96,8 +95,7 @@ object VersionedTable {
   def commit(df: DataFrame, table: String, mode: String = "append"): Long =
     commitNext(df, table, mode, latestVersion(df.sparkSession, table))
 
-  private def commitNext(df: DataFrame, table: String, mode: String,
-                         prev: Long, batchId: Option[Long] = None): Long = {
+  private def commitNext(df: DataFrame, table: String, mode: String, prev: Long): Long = {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append|overwrite, got $mode")
     val spark = df.sparkSession
@@ -109,43 +107,10 @@ object VersionedTable {
       if (mode == "overwrite" || prev == 0L) Seq(dataRel)
       else parseManifest(readManifest(fs(spark, new Path(table)),
         manifestPath(table, prev)))._2 :+ dataRel
-    val bidField = batchId.map(b => s""","batchId":$b""").getOrElse("")
     val manifest =
-      s"""{"version":$next,"mode":"$mode"$bidField,"dirs":[${dirs.map("\"" + _ + "\"").mkString(",")}]}"""
+      s"""{"version":$next,"mode":"$mode","dirs":[${dirs.map("\"" + _ + "\"").mkString(",")}]}"""
     publishManifest(spark, table, next, manifest)
     next
-  }
-
-  /** Idempotent micro-batch append — the EXACTLY-ONCE sink primitive
-    * for a single checkpointed stream writing this table: versions
-    * record the `batchId` they committed, and a batch whose id is ≤ the
-    * latest recorded one is a REPLAY (post-crash re-delivery) and
-    * returns None without writing anything. A concurrent-commit loss is
-    * treated the same way (the competing writer of this table in that
-    * scenario IS the restarted incarnation of this stream). Multiple
-    * independent streams appending one table need distinct tables (or
-    * an outer coordinator) — batchId spaces would collide, which is a
-    * contract note, not a detected error. */
-  def commitBatch(df: DataFrame, table: String, batchId: Long): Option[Long] = {
-    val spark = df.sparkSession
-    val prev = latestVersion(spark, table)
-    if (lastBatchId(spark, table).exists(_ >= batchId)) None
-    else
-      try Some(commitNext(df, table, "append", prev, Some(batchId)))
-      catch { case _: ConcurrentCommitException => None }
-  }
-
-  /** The batchId the latest version recorded, if any — the replay
-    * watermark. Public so a foreachBatch sink with side effects BEFORE
-    * its commit (file writes whose layout derives from already-committed
-    * state, e.g. the streaming JSONL export's carried token offset) can
-    * detect a replayed batch before touching anything; [[commitBatch]]
-    * applies the same check internally for the commit itself. */
-  def lastBatchId(spark: SparkSession, table: String): Option[Long] = {
-    val prev = latestVersion(spark, table)
-    if (prev == 0L) None
-    else parseManifest(readManifest(fs(spark, new Path(table)),
-      manifestPath(table, prev)))._3
   }
 
   /** The atomic publish step: create-exclusive manifest write. One
@@ -216,20 +181,20 @@ object VersionedTable {
     } finally in.close()
   }
 
-  /** (mode, data dirs, batchId) from the manifest JSON. The format is
-    * this object's own fixed emission (no nesting, no escapes in dir
-    * names — `data/c<v>-<hex>` by construction, or an absolute source
-    * path written by [[cloneTable]]), so extracting the `dirs` array
-    * block and splitting its quoted entries is exact, not
-    * approximate. */
-  private def parseManifest(json: String): (String, Seq[String], Option[Long]) = {
+  /** (mode, data dirs) from the manifest JSON. The format is this
+    * object's own fixed emission (no nesting, no escapes in dir names —
+    * `data/c<v>-<hex>` by construction, or an absolute source path
+    * written by [[cloneTable]]), so extracting the `dirs` array block
+    * and splitting its quoted entries is exact, not approximate. Fields
+    * are matched by name, so a manifest carrying extra fields (older
+    * versions also wrote a `batchId`) still reads. */
+  private def parseManifest(json: String): (String, Seq[String]) = {
     val mode = "\"mode\":\"([a-z]+)\"".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse(sys.error(s"bad manifest: $json"))
     val dirsBlock = "\"dirs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse(sys.error(s"bad manifest: $json"))
     val dirs = "\"([^\"]+)\"".r.findAllMatchIn(dirsBlock).map(_.group(1)).toSeq
-    val bid = "\"batchId\":(-?\\d+)".r.findFirstMatchIn(json).map(_.group(1).toLong)
-    (mode, dirs, bid)
+    (mode, dirs)
   }
 
   /** Zero-copy CLONE — the "dev branch from prod" primitive: publish

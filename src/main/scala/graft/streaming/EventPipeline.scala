@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Structured Streaming ingest for the `events` table shape
   * (event_id, ts, user_id, event_type, value, props).
@@ -13,7 +11,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * The transforms are written against plain DataFrames so the SAME code
   * path serves batch (driver correctness gate) and streaming
   * (readStream -> transform -> writeStream): Structured Streaming's core
-  * contract. Watermarking/stateful pieces only attach in streaming mode.
+  * contract. Watermarks only attach in streaming mode; the only state a
+  * stream carries is Spark's own (windowed aggregates, dedup, interval
+  * joins) or a caller-held frame ([[maintainAggState]]) — no
+  * per-key custom state operators.
   */
 object EventPipeline {
 
@@ -284,11 +285,11 @@ object EventPipeline {
     }
   }
 
-  /** Batch sessionization (gaps-and-islands): same session semantics as
-    * [[sessionize]] but expressed with window functions so it runs on any
-    * static DataFrame and is oracle-verifiable in plain SQL. A session
-    * closes after `gapMs` of inactivity. Shuffles once on `user_id`; both
-    * windows and the final groupBy reuse that partitioning. */
+  /** Batch sessionization (gaps-and-islands), expressed with window
+    * functions so it runs on any static DataFrame and is
+    * oracle-verifiable in plain SQL. A session closes after `gapMs` of
+    * inactivity. Shuffles once on `user_id`; both windows and the final
+    * groupBy reuse that partitioning. */
   def sessionizeBatch(events: DataFrame, gapMs: Long = 30 * 60 * 1000L): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val cum = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -451,135 +452,12 @@ object EventPipeline {
       .start()
   }
 
-  /** EXACTLY-ONCE streaming append into a
-    * [[graft.sources.VersionedTable]]: each micro-batch commits as one
-    * table version carrying its batchId, and
-    * [[graft.sources.VersionedTable.commitBatch]]'s replay detection
-    * (batchId ≤ the latest recorded one → no-op) makes post-crash
-    * re-delivery invisible to readers — the at-least-once delivery of
-    * foreachBatch composes with the idempotent commit into exactly-once
-    * TABLE-VISIBLE semantics, the same construction every transactional
-    * lake sink uses. Readers get snapshot isolation and time travel per
-    * the table's contract; downstream batch jobs can diff versions
-    * (`Merge.snapshotDiff`) instead of re-reading the stream. Single
-    * checkpointed stream per table (see commitBatch's contract note). */
-  def versionedSink(stream: DataFrame, table: String): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) { graft.sources.VersionedTable.commitBatch(batch, table, batchId); () }
-      }
-      .outputMode(OutputMode.Append())
-      .start()
-
-  /** STREAMING JSONL training-data export — the o15 batch handoff as a
-    * foreachBatch sink: each micro-batch appends shards via
-    * [[graft.sources.Sinks.exportJsonlBatch]] (carried token offset off
-    * the committed manifest + `commitBatchWithStats` → exactly-once;
-    * shard ids continue across batches, so when micro-batches deliver
-    * the corpus in `orderCol` order the cumulative export equals the
-    * one-shot batch [[graft.sources.Sinks.exportJsonlSharded]] —
-    * spec-pinned parity). The budget must be fixed: a per-batch derived
-    * budget would move shard boundaries with batch sizing. */
-  def jsonlExportSink(stream: DataFrame, path: String, orderCol: String,
-                      tokenCol: String, manifestTable: String,
-                      tokensPerShard: Long): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.sources.Sinks.exportJsonlBatch(batch, path, orderCol,
-            tokenCol, manifestTable, tokensPerShard, batchId)
-          ()
-        }
-      }
-      .outputMode(OutputMode.Append())
-      .start()
-
-  final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
-                         event_type: String, value: Double)
-  final case class FunnelState(vMs: Long, cMs: Long, pMs: Long, lastMs: Long = 0L)
-  final case class FunnelRow(user_id: Long, v_ms: Option[Long], c_ms: Option[Long],
-                             p_ms: Option[Long], stage: Int)
-
-  /** Streaming strict first-occurrence funnel (the e8 batch query's
-    * streaming path): per-user state folds the FIRST view/click/purchase
-    * epoch-ms. Each fold is a per-type min — commutative and idempotent —
-    * so arrival order cannot change the converged result: an out-of-order
-    * or cross-batch late event updates the min exactly as an in-order one
-    * would, and the LAST update-mode row per user equals the batch
-    * per-user aggregation. stage: 0 = no view, 1 = view, 2 = view->click
-    * (first click strictly after first view), 3 = full funnel.
-    *
-    * State is one 32-byte quad per user. Default (`inactivityTtlMs` =
-    * None): NoTimeout — bounded by user cardinality, the same bound the
-    * batch groupBy carries. With `inactivityTtlMs = Some(ttl)` the
-    * operator becomes deployable on unbounded-churn streams: a watermark
-    * (`watermarkDelay` lateness) attaches to `ts`, and a user whose last
-    * activity is `ttl` behind the watermark is EVICTED — the timeout
-    * invocation emits the user's converged row one final time, drops the
-    * state, and a later event re-opens the funnel from zero (firsts
-    * re-derive from post-eviction events only — the documented trade).
-    * Event-time TTL, not processing-time, so replays of the same stream
-    * evict deterministically at the same points. */
-  def funnelStates(events: Dataset[Event],
-                   inactivityTtlMs: Option[Long] = None,
-                   watermarkDelay: String = "10 minutes"): Dataset[FunnelRow] = {
-    import events.sparkSession.implicits._
-    val src = inactivityTtlMs.fold(events)(_ => events.withWatermark("ts", watermarkDelay))
-    val timeoutConf =
-      if (inactivityTtlMs.isDefined) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    def row(uid: Long, s: FunnelState): FunnelRow = {
-      def opt(v: Long): Option[Long] = if (v == Long.MaxValue) None else Some(v)
-      val converted = s.vMs != Long.MaxValue && s.cMs != Long.MaxValue && s.cMs > s.vMs
-      val full = converted && s.pMs != Long.MaxValue && s.pMs > s.cMs
-      val stage = if (s.vMs == Long.MaxValue) 0 else if (full) 3 else if (converted) 2 else 1
-      FunnelRow(uid, opt(s.vMs), opt(s.cMs), opt(s.pMs), stage)
-    }
-    src
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[FunnelState, FunnelRow](timeoutConf) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            // eviction: the user's final word, then the state is gone; a
-            // later event re-opens this funnel from zero
-            val s = state.get
-            state.remove()
-            row(uid, s)
-          } else {
-            var s = state.getOption.getOrElse(
-              FunnelState(Long.MaxValue, Long.MaxValue, Long.MaxValue))
-            rows.foreach { e =>
-              val t = e.ts.getTime
-              e.event_type match {
-                case "view"     => if (t < s.vMs) s = s.copy(vMs = t)
-                case "click"    => if (t < s.cMs) s = s.copy(cMs = t)
-                case "purchase" => if (t < s.pMs) s = s.copy(pMs = t)
-                case _          => ()
-              }
-              if (t > s.lastMs) s = s.copy(lastMs = t)
-            }
-            state.update(s)
-            inactivityTtlMs.foreach { ttl =>
-              // evict when the watermark passes last-activity + ttl; the
-              // timestamp must stay ahead of the current watermark (Spark
-              // rejects a timeout already in the past), which only matters
-              // when every event in the batch was extremely late
-              state.setTimeoutTimestamp(
-                math.max(s.lastMs + ttl, state.getCurrentWatermarkMs() + 1))
-            }
-            row(uid, s)
-          }
-      }
-  }
-  /** Batch analogue of [[funnelStates]] with an inactivity TTL: the funnel
-    * a user converges to once every idle gap longer than `ttlMs` has
-    * evicted and re-opened their state — i.e. the strict first-occurrence
-    * funnel computed over each user's LAST activity episode only
-    * (gaps-and-islands: episodes split where the gap from the previous
-    * event exceeds the TTL). ALL event types count as activity — matching
-    * the streaming operator, whose `lastMs` advances on any event — while
-    * the funnel mins only consider view/click/purchase. Oracle-expressible
-    * in plain SQL, unlike the streaming operator's update stream.
+  /** Strict first-occurrence funnel with an inactivity TTL: the funnel
+    * over each user's LAST activity episode only (gaps-and-islands:
+    * episodes split where the gap from the previous event exceeds
+    * `ttlMs`, so an idle user's funnel re-opens from zero). ALL event
+    * types count as activity, while the funnel mins only consider
+    * view/click/purchase. Oracle-expressible in plain SQL.
     *
     * Scale shape: one shuffle on `user_id`; the lag/cumsum/max windows and
     * the final groupBy all reuse that single hash partitioning (no
@@ -601,10 +479,9 @@ object EventPipeline {
         min(when(col("event_type") === "view", col("__ms"))).as("v_ms"),
         min(when(col("event_type") === "click", col("__ms"))).as("c_ms"),
         min(when(col("event_type") === "purchase", col("__ms"))).as("p_ms"))
-    // stage semantics identical to funnelStates.row: 3 needs the strict
-    // view < click < purchase chain, 2 the view < click prefix; a NULL
-    // min propagates to a null comparison and falls through, exactly the
-    // Long.MaxValue-sentinel behavior of the streaming fold
+    // stage 3 needs the strict view < click < purchase chain, 2 the
+    // view < click prefix; a NULL min propagates to a null comparison
+    // and falls through
     val conv = col("c_ms") > col("v_ms")
     perUser
       .withColumn("stage",
@@ -615,61 +492,5 @@ object EventPipeline {
       .groupBy("stage").agg(
         count(lit(1)).as("n_users"),
         sum(when(conv, col("c_ms") - col("v_ms"))).as("sum_view_click_ms"))
-  }
-
-  final case class SessionState(start: Long, last: Long, n: Long, sumValue: Double)
-  final case class Session(user_id: Long, start: Timestamp, end: Timestamp,
-                           n_events: Long, sum_value: Double)
-
-  /** Session windows per user via flatMapGroupsWithState: a session closes
-    * after `gapMs` of inactivity (event-time timeout). Custom stateful
-    * processing the built-in operators can't express — the one place
-    * the engine needs KeyValueGroupedDataset state. */
-  def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(userId, new Timestamp(s.start), new Timestamp(s.last), s.n, s.sumValue))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t <= s.last + gapMs =>
-                  // In-order extend OR cross-batch in-watermark late event.
-                  // Bounds widen MONOTONICALLY: a late event (t < s.last,
-                  // possible because the state survives across batches and
-                  // the watermark admits up to 1h of disorder) must never
-                  // move the session end backwards — that would shrink the
-                  // session and pull the event-time timeout earlier.
-                  // Events earlier than start-gap are conservatively merged
-                  // too (bounded by the watermark, so at most `lateness`
-                  // early): their own session would already have violated
-                  // the gap invariant the moment state was first written.
-                  cur = Some(SessionState(math.min(s.start, t), math.max(s.last, t),
-                    s.n + 1, s.sumValue + e.value))
-                case Some(s) =>
-                  closed ::= Session(userId, new Timestamp(s.start), new Timestamp(s.last), s.n, s.sumValue)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last + gapMs)
-            }
-            closed.reverseIterator
-          }
-      }
   }
 }

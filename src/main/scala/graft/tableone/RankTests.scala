@@ -32,9 +32,8 @@ object RankTests {
     * gate the distinct-value frame is report-sized and the single
     * ordered window over it is both correct and ~3 stages cheaper;
     * above it that window is a one-task sort of a frame that grows with
-    * the data, so the bucketed 4096-way prefix-sum takes over.
-    * Overridable for the forced-path parity spec. */
-  private[tableone] var ndvGate: Long = 65536L
+    * the data, so the bucketed 4096-way prefix-sum takes over. */
+  private final val NdvGate = 65536L
 
   /** Build the ranked census, hand it to `use` (which must MATERIALIZE
     * its result — both public tests collect a one-row report), release
@@ -43,7 +42,7 @@ object RankTests {
     * not recompute the corpus scan afterwards (the brierDecomposition
     * persist-scope pattern; zero residual storage on return). */
   private def withRankedCensus[T](df: DataFrame, groupCol: String,
-                                  valueCol: String)(use: DataFrame => T): T = {
+                                  valueCol: String, ndvGate: Long)(use: DataFrame => T): T = {
     val census = df
       .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
@@ -113,14 +112,21 @@ object RankTests {
     * Returns one row: (group_lo, group_hi, n_lo, n_hi, u_lo, z,
     * rank_biserial); z is NULL when the variance degenerates (all
     * values tied). */
-  def mannWhitney(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
+  def mannWhitney(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
+    mannWhitney(df, groupCol, valueCol, NdvGate)
+
+  /** [[mannWhitney]] with the distinct-value count up to which the
+    * single ordered window ranks; specs pass 0 to force the bucketed
+    * prefix-sum on small inputs. */
+  private[tableone] def mannWhitney(df: DataFrame, groupCol: String, valueCol: String,
+                                    ndvGate: Long): DataFrame = {
     val groups = df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol).cast("string")).distinct()
       .orderBy(groupCol).collect().map(_.getString(0))
     require(groups.length == 2,
       s"mannWhitney needs exactly 2 groups in $groupCol, got ${groups.length}")
     val (gLo, gHi) = (groups(0), groups(1))
-    withRankedCensus(df, groupCol, valueCol) { cr => materialized(cr
+    withRankedCensus(df, groupCol, valueCol, ndvGate) { cr => materialized(cr
       .agg(
         // per-census-row: count of group-lo rows at this value × its
         // exact half-integer average rank
@@ -158,7 +164,7 @@ object RankTests {
     * Returns one row: (n_groups, n, h, epsilon_sq); h is NULL when the
     * tie correction degenerates (every value identical). */
   def kruskalWallis(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    withRankedCensus(df, groupCol, valueCol) { cr => materialized {
+    withRankedCensus(df, groupCol, valueCol, NdvGate) { cr => materialized {
     val perGroup = cr
       .groupBy(col("__g"))
       .agg(sum(col("__c").cast("double") * col("__r")).as("__rg"),

@@ -53,12 +53,18 @@ object Sanitize {
   /** Category row-ordering key within a variable
     * (/root/reference/tableone_pyspark.py:294-298): Yes=1, No=2, other=3,
     * values matching missing|unknown|other (case-insensitive, substring)=5,
-    * the null-fill sentinel MISSING=6; ties broken alphabetically.
+    * the null-fill sentinel MISSING=6; ties broken alphabetically. The
+    * driver-side form of the reference's Spark expression: full Unicode
+    * lower-casing as Spark's `lower` does (the Kelvin sign lowers to
+    * "k"), then an unanchored `find`, as `rlike` matches.
     */
-  def categoryOrderKey(c: Column): Column =
-    when(c === "Yes", 1)
-      .when(c === "No", 2)
-      .when(c === Missing, 6)
-      .when(lower(c).rlike("missing|unknown|other"), 5)
-      .otherwise(3)
+  def categoryOrderKey(v: String): Int = v match {
+    case "Yes"   => 1
+    case "No"    => 2
+    case Missing => 6
+    case _ if OtherLike.findFirstIn(v.toLowerCase(java.util.Locale.ROOT)).isDefined => 5
+    case _       => 3
+  }
+
+  private val OtherLike = "missing|unknown|other".r
 }

@@ -101,11 +101,10 @@ object TableOne extends Logging {
 
   /** One collected census row: variable position `c` (0 = the row
     * counter), raw stratum key `r`, continuous value `v` or category `s`,
-    * weight `w`, and `o` = [[Sanitize.categoryOrderKey]] of `s`. Not
-    * `private`: Spark's generated deserializer must reach its members,
-    * or every collect logs a failed compile and falls back to the
-    * interpreted projection. */
-  private[tableone] final case class Entry(c: Int, r: String, v: Option[Double], s: Option[String], w: Long, o: Int)
+    * and weight `w`. Not `private`: Spark's generated deserializer must
+    * reach its members, or every collect logs a failed compile and falls
+    * back to the interpreted projection. */
+  private[tableone] final case class Entry(c: Int, r: String, v: Option[Double], s: Option[String], w: Long)
 
   /** EXACT order statistics and moments of every continuous column, per
     * stratum and in total, from the distributed census's non-null
@@ -198,7 +197,6 @@ object TableOne extends Logging {
 
     // --- the census: ONE scan, ONE aggregation -------------------------
     val census = Census.of(df, cfg.stratify, contCols, catCols)
-      .withColumn("o", Sanitize.categoryOrderKey(col("s")))
     // Collects at most `atMost` + 1 census rows: one more than fits.
     def upTo(d: DataFrame, atMost: Long): Seq[Entry] =
       d.limit((atMost + 1).min(Int.MaxValue).toInt).as[Entry].collect().toSeq
@@ -223,7 +221,7 @@ object TableOne extends Logging {
       if (onDriver) {
         // sorted as the distributed route sorts: NaN greatest; the
         // grouping already turned -0.0 into 0.0
-        val tallies = firstRows.collect { case Entry(c, r, Some(v), _, w, _) => Tally[Key]((c, Some(r)), v, w, 0) }
+        val tallies = firstRows.collect { case Entry(c, r, Some(v), _, w) => Tally[Key]((c, Some(r)), v, w, 0) }
           .sorted(Ordering.by((t: Tally[Key]) => (t.k._1, t.v, t.k._2.get))(
             Ordering.Tuple3(Ordering.Int, Ordering.Double.TotalOrdering, Ordering.String)))
         (names, counters, firstRows.filter(_.s.isDefined), OrderStatistics.crossSorted(tallies, statRanks, levels))
@@ -313,7 +311,7 @@ object TableOne extends Logging {
       // (category, stratum name -> count), in the reference's category
       // order: order key, then Spark's string order
       val categories = cats.filter(_.c == idx).groupBy(_.s.get).toSeq
-        .sortBy { case (v, es) => (es.head.o, v) }(Ordering.Tuple2(Ordering.Int, SparkStringOrder))
+        .sortBy { case (v, _) => (Sanitize.categoryOrderKey(v), v) }(Ordering.Tuple2(Ordering.Int, SparkStringOrder))
         .map { case (v, es) => v -> es.groupMapReduce(e => names(e.r))(_.w)(_ + _) }
       // chi-square from the counts (the contingency table IS the pivoted
       // counts — SURVEY.md §2.9 D7), summed in a fixed category order

@@ -146,21 +146,6 @@ class FileSkippingSpec extends AnyFunSuite with Matchers {
     one.count() shouldBe rows.count(_._2 <= 7).toLong
   }
 
-  test("commitBatchWithStats: exactly-once sink carries stats; replays write nothing") {
-    val t = tmp()
-    val b1 = (1 to 50).map(i => Tuple1(i.toLong)).toDF("k").repartitionByRange(2, col("k"))
-    val b2 = (51 to 100).map(i => Tuple1(i.toLong)).toDF("k").repartitionByRange(2, col("k"))
-    FileSkipping.commitBatchWithStats(b1, t, batchId = 1L, Seq("k")) shouldBe Some(1L)
-    FileSkipping.commitBatchWithStats(b2, t, batchId = 2L, Seq("k")) shouldBe Some(2L)
-    // post-crash re-delivery of batch 2: no commit, no new version
-    FileSkipping.commitBatchWithStats(b2, t, batchId = 2L, Seq("k")) shouldBe None
-    VersionedTable.latestVersion(spark, t) shouldBe 2L
-    val (df, rep) = FileSkipping.readBetween(spark, t, "k", 60L, 70L)
-    rep.dirsWithoutStats shouldBe 0
-    rep.filesKept should be < rep.filesTotal // batch 1's files pruned entirely
-    df.count() shouldBe 11L
-  }
-
   test("chunks without usable statistics poison their column: file force-kept, others still prune") {
     // Writers legitimately omit chunk statistics (disabled, or dropped
     // for oversized binary values). A bound folded from the row groups

@@ -90,21 +90,6 @@ class VersionedTableSpec extends AnyFunSuite with Matchers {
       .map(_.getLong(0)).sorted.toSeq shouldBe Seq(1L, 2L, 3L)
   }
 
-  test("commitBatch: replayed micro-batches are invisible (exactly-once appends)") {
-    val t = tmp()
-    val b0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
-    val b1 = Seq((3L, "c")).toDF("k", "s")
-    VersionedTable.commitBatch(b0, t, batchId = 0L) shouldBe Some(1L)
-    VersionedTable.commitBatch(b1, t, batchId = 1L) shouldBe Some(2L)
-    // post-crash re-delivery of both batches: no-ops, no duplicates
-    VersionedTable.commitBatch(b1, t, batchId = 1L) shouldBe None
-    VersionedTable.commitBatch(b0, t, batchId = 0L) shouldBe None
-    VersionedTable.read(spark, t).count() shouldBe 3L
-    // the stream then moves on
-    VersionedTable.commitBatch(Seq((4L, "d")).toDF("k", "s"), t, 2L) shouldBe Some(3L)
-    VersionedTable.read(spark, t).count() shouldBe 4L
-  }
-
   test("commitAt pins a version: replays conflict, gaps are rejected") {
     val t = tmp()
     VersionedTable.commitAt(Seq((1L, "a")).toDF("k", "s"), t, expected = 1L) shouldBe 1L
@@ -112,6 +97,30 @@ class VersionedTableSpec extends AnyFunSuite with Matchers {
       VersionedTable.commitAt(Seq((1L, "a")).toDF("k", "s"), t, expected = 1L)
     an[IllegalArgumentException] should be thrownBy
       VersionedTable.commitAt(Seq((2L, "b")).toDF("k", "s"), t, expected = 3L)
+  }
+
+  test("manifests that carry a batchId field still read, list and take appends") {
+    // the layout an earlier release's micro-batch sink left behind: two
+    // append versions whose manifests also record the stream's batchId
+    val t = tmp()
+    Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(s"$t/data/c1-0000aaaa")
+    Seq((3L, "c")).toDF("k", "s").write.parquet(s"$t/data/c2-0000bbbb")
+    val vdir = Files.createDirectories(java.nio.file.Paths.get(t, "_versions"))
+    Files.writeString(vdir.resolve("v00000001.json"),
+      """{"version":1,"mode":"append","batchId":0,"dirs":["data/c1-0000aaaa"]}""")
+    Files.writeString(vdir.resolve("v00000002.json"),
+      """{"version":2,"mode":"append","batchId":1,""" +
+        """"dirs":["data/c1-0000aaaa","data/c2-0000bbbb"]}""")
+    VersionedTable.versions(spark, t) shouldBe Seq(1L -> "append", 2L -> "append")
+    VersionedTable.read(spark, t).select("k").collect().map(_.getLong(0)).sorted shouldBe
+      Array(1L, 2L, 3L)
+    VersionedTable.read(spark, t, Some(1L)).count() shouldBe 2L
+    // an append on top lists both earlier directories plus its own
+    VersionedTable.commit(Seq((4L, "d")).toDF("k", "s"), t) shouldBe 3L
+    VersionedTable.versions(spark, t).last shouldBe (3L -> "append")
+    VersionedTable.read(spark, t).select("k").collect().map(_.getLong(0)).sorted shouldBe
+      Array(1L, 2L, 3L, 4L)
+    VersionedTable.read(spark, t, Some(2L)).count() shouldBe 3L
   }
 
   test("reads of an empty or missing table fail loudly") {

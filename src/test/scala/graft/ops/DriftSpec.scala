@@ -156,20 +156,18 @@ class DriftSpec extends AnyFunSuite with Matchers {
   test("lakehouse drift monitor end to end: exactly-once sink -> snapshotDiff -> incremental PSI") {
     import graft.sources.{FileSkipping, VersionedTable}
     // the full composition the per-operator queries cover separately:
-    // micro-batches land exactly-once in a versioned table with pruning
-    // stats; the version pair is diffed; per-snapshot histogram STATES
-    // (maintained incrementally, never a corpus rescan) feed the PSI
-    // gate that flags the drifted append.
+    // batches append to a versioned table with pruning stats; the
+    // version pair is diffed; per-snapshot histogram STATES (maintained
+    // incrementally, never a corpus rescan) feed the PSI gate that flags
+    // the drifted append.
     val t = java.nio.file.Files.createTempDirectory("graft_driftmon")
       .resolve("t").toString
     val b0 = (1 to 1000).map(i => (i.toLong, (i % 100).toDouble, "src0"))
       .toDF("k", "x", "src")
     val b1 = (1001 to 1600).map(i => (i.toLong, (i % 100 + 60).toDouble, "src0"))
       .toDF("k", "x", "src")
-    FileSkipping.commitBatchWithStats(b0, t, batchId = 0L, Seq("k")) shouldBe Some(1L)
-    FileSkipping.commitBatchWithStats(b1, t, batchId = 1L, Seq("k")) shouldBe Some(2L)
-    // post-crash re-delivery: invisible, version chain untouched
-    FileSkipping.commitBatchWithStats(b1, t, batchId = 1L, Seq("k")) shouldBe None
+    FileSkipping.commitWithStats(b0, t, Seq("k")) shouldBe 1L
+    FileSkipping.commitWithStats(b1, t, Seq("k")) shouldBe 2L
     VersionedTable.latestVersion(spark, t) shouldBe 2L
     val v1 = VersionedTable.read(spark, t, Some(1L))
     val v2 = VersionedTable.read(spark, t, Some(2L))

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.TestSpark
-import graft.streaming.EventPipeline.{Event, Session}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -365,108 +364,6 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
     } finally q.stop()
   }
 
-  test("sessionize keeps exact bounds for in-watermark late events across batches") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventPipeline.sessionize(input.toDS())
-      .writeStream.format("memory").queryName("latesess").outputMode("append").start()
-    try {
-      // batch 1: in-order events; state = [10:00, 10:10], watermark -> 09:10
-      input.addData(Event(1L, ts("10:00"), 1L, "click", 1.0),
-        Event(2L, ts("10:10"), 1L, "click", 2.0))
-      q.processAllAvailable()
-      // batch 2: two in-watermark OUT-OF-ORDER events — one inside the
-      // session span (10:05) and one before its start (09:55). Neither may
-      // move the end backwards; the early one extends the start downward.
-      input.addData(Event(3L, ts("10:05"), 1L, "click", 0.5),
-        Event(4L, ts("09:55"), 1L, "click", 0.25))
-      q.processAllAvailable()
-      // batches 3-4: push the watermark past 10:40 (= max event + gap) so
-      // the event-time timeout fires and the session is emitted.
-      input.addData(Event(5L, ts("14:00"), 2L, "view", 7.0))
-      q.processAllAvailable()
-      input.addData(Event(6L, ts("14:01"), 2L, "view", 1.0))
-      q.processAllAvailable()
-      val s1 = spark.table("latesess").as[Session].collect().filter(_.user_id == 1L)
-      s1.length shouldBe 1
-      s1.head.start shouldBe ts("09:55") // extended DOWN by the early late event
-      s1.head.end shouldBe ts("10:10")   // NOT moved back by the 10:05 event
-      s1.head.n_events shouldBe 4L
-      s1.head.sum_value shouldBe 3.75
-    } finally q.stop()
-  }
-
-  test("streaming sessionize closes a session via event-time timeout") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventPipeline.sessionize(input.toDS())
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    try {
-      input.addData(Event(1L, ts("10:00"), 1L, "click", 1.0),
-        Event(2L, ts("10:10"), 1L, "click", 2.0))
-      q.processAllAvailable()
-      // push the watermark far past 10:40 (last + gap) to fire the timeout
-      input.addData(Event(3L, ts("14:00"), 2L, "view", 7.0))
-      q.processAllAvailable()
-      input.addData(Event(4L, ts("14:01"), 2L, "view", 1.0))
-      q.processAllAvailable()
-      val sessions = spark.table("sess").as[Session].collect()
-      val s1 = sessions.filter(_.user_id == 1L)
-      s1.length shouldBe 1
-      s1.head.n_events shouldBe 2L
-      s1.head.sum_value shouldBe 3.0
-      s1.head.start shouldBe ts("10:00")
-      s1.head.end shouldBe ts("10:10")
-    } finally q.stop()
-  }
-
-  test("streaming funnel converges to the batch per-user firsts, out of order") {
-    implicit val sql = spark.sqlContext
-    import EventPipeline.FunnelRow
-    val input = MemoryStream[Event]
-    val q = EventPipeline.funnelStates(input.toDS())
-      .writeStream.format("memory").queryName("funnel").outputMode("update").start()
-    try {
-      // batch 1: user 1 clicks then purchases; user 2 views only
-      input.addData(Event(1L, ts("10:30"), 1L, "click", 1.0),
-        Event(2L, ts("10:45"), 1L, "purchase", 9.0),
-        Event(3L, ts("10:00"), 2L, "view", 1.0))
-      q.processAllAvailable()
-      // batch 2: user 1's VIEW arrives LATE with the earliest ts -> the
-      // first-occurrence mins must absorb it and re-derive stage 3
-      input.addData(Event(4L, ts("10:10"), 1L, "view", 1.0))
-      q.processAllAvailable()
-      // batch 3: an EARLIER click for user 1 (still after the view);
-      // user 2 clicks BEFORE their first view -> stays stage 1
-      input.addData(Event(5L, ts("10:20"), 1L, "click", 1.0),
-        Event(6L, ts("09:50"), 2L, "click", 1.0))
-      q.processAllAvailable()
-      val last = spark.table("funnel").as[FunnelRow].collect()
-        .zipWithIndex.groupBy(_._1.user_id)
-        .map { case (u, rows) => u -> rows.maxBy(_._2)._1 }
-      last(1L) shouldBe FunnelRow(1L, Some(ts("10:10").getTime),
-        Some(ts("10:20").getTime), Some(ts("10:45").getTime), 3)
-      // click (9:50) precedes first view (10:00): viewed but not converted
-      last(2L) shouldBe FunnelRow(2L, Some(ts("10:00").getTime),
-        Some(ts("09:50").getTime), None, 1)
-      // parity with the batch derivation e8 uses (conditional min per type)
-      val all = Seq(
-        Event(1L, ts("10:30"), 1L, "click", 1.0), Event(2L, ts("10:45"), 1L, "purchase", 9.0),
-        Event(3L, ts("10:00"), 2L, "view", 1.0), Event(4L, ts("10:10"), 1L, "view", 1.0),
-        Event(5L, ts("10:20"), 1L, "click", 1.0), Event(6L, ts("09:50"), 2L, "click", 1.0)).toDF()
-      import org.apache.spark.sql.functions._
-      val batch = all.groupBy("user_id").agg(
-          min(when(col("event_type") === "view", unix_millis(col("ts")))).as("v"),
-          min(when(col("event_type") === "click", unix_millis(col("ts")))).as("c"),
-          min(when(col("event_type") === "purchase", unix_millis(col("ts")))).as("p"))
-        .collect().map(r => r.getLong(0) ->
-          (Option(r.get(1)), Option(r.get(2)), Option(r.get(3)))).toMap
-      last.foreach { case (u, fr) =>
-        (fr.v_ms, fr.c_ms, fr.p_ms) shouldBe batch(u)
-      }
-    } finally q.stop()
-  }
-
   test("funnelLastEpisode: funnel over each user's last activity episode only") {
     // user 1: episode A (10:00 view -> 10:10 click -> 10:20 purchase, full
     // funnel) then a >1h gap, episode B (12:00 view -> 12:05 click, no
@@ -491,42 +388,6 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
       (0L, 1L, None),                                    // user 3
       (1L, 1L, None),                                    // user 2
       (2L, 2L, Some(5 * 60 * 1000L + 85 * 60 * 1000L))) // users 1 (5 min) + 4 (85 min)
-  }
-
-  test("funnel inactivity TTL evicts idle users and re-opens their funnel from zero") {
-    implicit val sql = spark.sqlContext
-    import EventPipeline.FunnelRow
-    val input = MemoryStream[Event]
-    // ttl 30 min, watermark lateness 0 -> watermark = max event time seen;
-    // user 1 is evicted once the watermark passes their last activity + 30 min
-    val q = EventPipeline.funnelStates(input.toDS(),
-        inactivityTtlMs = Some(30 * 60 * 1000L), watermarkDelay = "0 seconds")
-      .writeStream.format("memory").queryName("funnel_ttl").outputMode("update").start()
-    try {
-      // batch 1: user 1 completes view -> click
-      input.addData(Event(1L, ts("10:00"), 1L, "view", 1.0),
-        Event(2L, ts("10:05"), 1L, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: unrelated user far ahead pushes the watermark past
-      // 10:05 + 30 min; the NEXT batch's timeout pass evicts user 1
-      input.addData(Event(3L, ts("11:00"), 2L, "view", 1.0))
-      q.processAllAvailable()
-      input.addData(Event(4L, ts("11:05"), 2L, "click", 1.0))
-      q.processAllAvailable()
-      // batch 3: user 1 returns with a purchase — if state survived, this
-      // would complete stage 3 (view 10:00 < click 10:05 < purchase 11:10);
-      // after eviction the funnel re-opens from zero instead: purchase
-      // only, no view -> stage 0
-      input.addData(Event(5L, ts("11:10"), 1L, "purchase", 9.0))
-      q.processAllAvailable()
-      val rows = spark.table("funnel_ttl").as[FunnelRow].collect().zipWithIndex
-      val u1 = rows.filter(_._1.user_id == 1L).map(_._1)
-      // eviction emitted the converged stage-2 row one final time
-      u1.count(r => r.stage == 2 && r.c_ms.contains(ts("10:05").getTime)) should be >= 2
-      // the post-eviction row knows nothing of the pre-eviction events
-      val last = rows.filter(_._1.user_id == 1L).maxBy(_._2)._1
-      last shouldBe FunnelRow(1L, None, None, Some(ts("11:10").getTime), 0)
-    } finally q.stop()
   }
 
   test("maintainAggState maintains HISTOGRAM state (u8's streaming twin) exactly") {
@@ -594,25 +455,6 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
         .select("event_type", "mn", "mx", "n", "s")
         .orderBy("event_type").collect().map(_.toSeq).toSeq
       got shouldBe direct
-    } finally q.stop()
-  }
-
-  test("versionedSink: each micro-batch is one table version; history time-travels") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    val t = java.nio.file.Files.createTempDirectory("graft_vsink").resolve("t").toString
-    val q = EventPipeline.versionedSink(
-      input.toDF().select("event_id", "event_type", "value"), t)
-    try {
-      input.addData(Event(1L, ts("10:00"), 1L, "click", 1.0),
-        Event(2L, ts("10:01"), 2L, "view", 2.0))
-      q.processAllAvailable()
-      input.addData(Event(3L, ts("10:02"), 3L, "click", 3.0))
-      q.processAllAvailable()
-      val vt = graft.sources.VersionedTable
-      vt.read(spark, t).count() shouldBe 3L
-      vt.versions(spark, t).map(_._2) shouldBe Seq("append", "append")
-      vt.read(spark, t, Some(1L)).count() shouldBe 2L // the first batch alone
     } finally q.stop()
   }
 
@@ -738,76 +580,6 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
     } finally q.stop()
   }
 
-  test("jsonlExportSink: micro-batched export equals the batch o15 handoff; replays are no-ops") {
-    import org.apache.spark.sql.functions.{col, sum}
-    implicit val sql = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_jexp")
-    val (pathB, manB) = (root.resolve("b").toString, root.resolve("mb").toString)
-    val (pathS, manS) = (root.resolve("s").toString, root.resolve("ms").toString)
-    // 30 docs, token counts varied enough that shards straddle the
-    // micro-batch boundaries (the continuation is the thing under test)
-    val docs = (1L to 30L).map(i => ExpDoc(i, s"doc $i", 3L + i % 7))
-    graft.sources.Sinks.exportJsonlSharded(docs.toDF(), pathB, "doc_id",
-      "n_tok", manifestTable = manB, tokensPerShard = 20L)
-    val input = MemoryStream[ExpDoc]
-    val q = EventPipeline.jsonlExportSink(input.toDF(), pathS, "doc_id",
-      "n_tok", manS, tokensPerShard = 20L)
-    try {
-      // three in-order micro-batches (the sink's stated parity contract)
-      docs.grouped(10).foreach { chunk =>
-        input.addData(chunk: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    def assignment(path: String): Map[Long, Long] =
-      spark.read.json(path)
-        .select(col("doc_id").cast("long"), col("shard").cast("long"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // identical per-document shard ids: the carried offset reproduces
-    // the batch export's global running total across batch boundaries
-    assignment(pathS) shouldBe assignment(pathB)
-    // the accumulated manifest census (shards straddling batches sum
-    // across versions) equals the batch manifest exactly
-    val vt = graft.sources.VersionedTable
-    def census(table: String): Map[Long, (Long, Long)] =
-      vt.read(spark, table)
-        .groupBy("shard").agg(sum("n_docs").as("d"), sum("n_tokens").as("t"))
-        .collect().map(r => r.getAs[Long]("shard") ->
-          ((r.getAs[Long]("d"), r.getAs[Long]("t")))).toMap
-    census(manS) shouldBe census(manB)
-    // exactly-once: a replayed batch id is rejected BEFORE any side
-    // effect — no new version, no file churn
-    val versionsBefore = vt.versions(spark, manS).size
-    graft.sources.Sinks.exportJsonlBatch(docs.take(5).toDF(), pathS,
-      "doc_id", "n_tok", manS, tokensPerShard = 20L, batchId = 0L) shouldBe None
-    vt.versions(spark, manS).size shouldBe versionsBefore
-  }
-
-  test("exportJsonlBatch: an all-zero-token micro-batch is not a poison pill") {
-    import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_jz")
-    val (path, man) = (root.resolve("s").toString, root.resolve("m").toString)
-    // zero tokens is a legitimate micro-batch state (empty/cleaned-out
-    // texts); it must export (into the current shard) and advance the
-    // batch watermark, never throw forever on re-delivery
-    val z = (1L to 3L).map(i => ExpDoc(i, "", 0L))
-    graft.sources.Sinks.exportJsonlBatch(z.toDF(), path, "doc_id", "n_tok",
-      man, tokensPerShard = 10L, batchId = 0L) shouldBe defined
-    // the carried offset is still 0, so the next batch continues shard 0
-    val n = Seq(ExpDoc(4L, "w", 25L))
-    graft.sources.Sinks.exportJsonlBatch(n.toDF(), path, "doc_id", "n_tok",
-      man, tokensPerShard = 10L, batchId = 1L) shouldBe defined
-    val back = spark.read.json(path)
-      .select(col("doc_id").cast("long"), col("shard").cast("long"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    back(1L) shouldBe 0L
-    back(4L) shouldBe 0L // prev = 0 tokens carried -> 0 div 10
-    // and a third batch sees the 25-token carry: prev 25 div 10 = shard 2
-    graft.sources.Sinks.exportJsonlBatch(Seq(ExpDoc(5L, "w", 1L)).toDF(),
-      path, "doc_id", "n_tok", man, tokensPerShard = 10L, batchId = 2L) shouldBe defined
-    spark.read.json(path).select(col("doc_id").cast("long"), col("shard").cast("long"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap.apply(5L) shouldBe 2L
-  }
-
   test("westernElectric over maintained hourly state equals the batch path (q17 twin)") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.{DataFrame, Row}
@@ -903,4 +675,5 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
 
 // top-level: Spark encoders cannot be generated for classes nested in a
 // test suite instance
-case class ExpDoc(doc_id: Long, text: String, n_tok: Long)
+final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
+                       event_type: String, value: Double)

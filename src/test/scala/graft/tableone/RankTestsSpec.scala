@@ -98,11 +98,7 @@ class RankTestsSpec extends AnyFunSuite with Matchers {
     // and the gated tiny-window path, and the census persist must
     // release (zero residual storage)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val gate0 = RankTests.ndvGate
-    val mw = try {
-      RankTests.ndvGate = 0L
-      RankTests.mannWhitney(df, "g", "x")
-    } finally RankTests.ndvGate = gate0
+    val mw = RankTests.mannWhitney(df, "g", "x", ndvGate = 0L)
     val gated = RankTests.mannWhitney(df, "g", "x")
     (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
     // path parity: the bucketed and tiny-window plans fold the same

@@ -3,7 +3,7 @@ package graft.tableone
 import graft.TestSpark
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, current_date, lit, row_number, when}
+import org.apache.spark.sql.functions.{col, current_date, lit, lower, row_number, when}
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -303,7 +303,9 @@ class TableOneGoldenSpec extends AnyFunSuite {
     // doubles as v2's ranks 1-2 (1 + 101 * 0.01 == 2 + 1 * 0.01): there
     // "😀" of v1 and "ﬁ" of v2 tie on Index and the string order decides.
     val v1 = Seq("Yes", "No", "😀", "Unknown", "other", null) ++ (0 until 98).map(i => f"c$i%02d")
-    val v2 = Seq("😀", "ﬁ", "Unknown")
+    // "UN\u212ANOWN" (Kelvin sign) lower-cases to "unknown" under full
+    // Unicode case mapping only
+    val v2 = Seq("😀", "ﬁ", "Unknown", "UN\u212ANOWN")
     val df = (0 until 208).map(i => (if (i % 2 == 0) "a" else "b", v1(i % v1.size), v2(i % v2.size)))
       .toDF("g", "v1", "v2")
     for (beautify <- Seq(false, true)) withClue(s"beautify=$beautify: ") {
@@ -316,13 +318,18 @@ class TableOneGoldenSpec extends AnyFunSuite {
       val tie = rows.filter(_.getAs[Double]("Index") == 2.0 + 1 * 0.01).map(_.getAs[String]("Values"))
       assert(tie == Seq("ﬁ", "😀"))
     }
-    // category ranks follow Spark's (order key, Values) window order
+    // category ranks follow Spark's (order key, Values) window order, the
+    // order key being the reference's own Spark expression
+    val v = col("Values")
+    val orderKey = when(v === "Yes", 1).when(v === "No", 2).when(v === "MISSING", 6)
+      .when(lower(v).rlike("missing|unknown|other"), 5).otherwise(3)
     val out = TableOne.summarize(df, TableOneConfig(Some("g"), Seq("v1", "v2")))
     val ranked = out.filter(col("Variable_type") === "category")
       .withColumn("rn", row_number().over(Window.partitionBy("Characteristics")
-        .orderBy(Sanitize.categoryOrderKey(col("Values")), col("Values"))))
+        .orderBy(orderKey, v)))
       .withColumn("want", when(col("Characteristics") === "v1", lit(1.0)).otherwise(lit(2.0)) + col("rn") * 0.01)
     assert(ranked.filter(col("Index") =!= col("want")).count() == 0L)
-    assert(ranked.count() == 107L)
+    assert(ranked.count() == 108L)
+    assert(ranked.filter(v === "UN\u212ANOWN").select("rn").as[Int].collect().toSeq == Seq(3))
   }
 }
