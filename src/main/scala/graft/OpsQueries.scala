@@ -1387,8 +1387,8 @@ object OpsQueries {
     "q5_incremental_psi" -> ((s, dir) => {
       // drift read OFF HISTOGRAM STATE, not the corpora: first-half vs
       // second-half events per event_type, 10 bins over [0, 500) — in
-      // production both states arrive via mergeState/maintainAggState
-      // and this query never rescans a corpus
+      // production both states arrive via Histograms.mergeState and
+      // this query never rescans a corpus
       val ev = table(s, dir, "events")
       val cut = to_timestamp(lit("2024-01-16 00:00:00"))
       val refH = Histograms.binned(ev.filter(col("ts") < cut),
@@ -1621,8 +1621,9 @@ object OpsQueries {
       // hourly-count distribution first-half vs second-half (the q5
       // read-off-state discipline) — every leg the already-verified
       // operator, melted into the (event_type, check_name, value)
-      // report the pager reads. The same panel reads maintainAggState-
-      // maintained streaming state (parity spec in EventPipelineSpec).
+      // report the pager reads. The same panel reads hourly counts
+      // merged batch by batch with mergeAggState (spec in
+      // EventPipelineSpec).
       val hourly = table(s, dir, "events")
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("n"))
@@ -2299,12 +2300,10 @@ object OpsQueries {
         .orderBy("doc_id")
     }),
 
-    // ---- event-stream transforms (batch = streaming code path) ---------
+    // ---- event-table transforms -----------------------------------------
     "e11_stream_anomaly" -> ((s, dir) => {
-      // online anomaly scoring (batch twin): hourly counts scored
-      // against the hour-of-day baseline profile — on a stream the
-      // identical plan runs watermarked with the profile broadcast per
-      // micro-batch (EventPipelineSpec pins stream/batch parity); every
+      // anomaly scoring: hourly counts scored against the hour-of-day
+      // baseline profile, broadcast after the aggregation; every
       // statistic is exact-integer moments so the |z| cut cannot flake
       val ev = Util.events(s, dir)
       EventPipeline.anomalyAgainstBaseline(ev, EventPipeline.hourOfDayBaseline(ev))
@@ -3015,9 +3014,9 @@ object OpsQueries {
     "a10_anomaly" -> ((s, dir) => {
       // rolling z-score outlier detection over hourly event counts —
       // the shared rollingZAnomalies read-out (exact-long window
-      // moments, self-excluding frame, <12-prior-hours skip), which the
-      // streaming twin reads identically off maintainAggState state
-      // (parity spec-pinned in EventPipelineSpec).
+      // moments, self-excluding frame, <12-prior-hours skip), which
+      // reads hourly counts merged batch by batch with mergeAggState
+      // identically (spec-pinned in EventPipelineSpec).
       val hourly = Util.events(s, dir)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("n"))
@@ -3140,9 +3139,9 @@ object OpsQueries {
     "e15_retention_cohorts" -> ((s, dir) => {
       // cohort retention grid — the shared retentionGrid read-out
       // (first-seen via mergeable min, activity via distinct
-      // (user, day), one user-key join; exact-long rate), which the
-      // streaming twin reads identically off maintainAggState
-      // (user_id, d) state (parity spec-pinned in EventPipelineSpec).
+      // (user, day), one user-key join; exact-long rate), which reads
+      // (user_id, d) counts merged batch by batch with mergeAggState
+      // identically (spec-pinned in EventPipelineSpec).
       // Capped at offsets 0-7 to keep output cardinality fixed.
       val ev = Util.events(s, dir).select(col("user_id"), to_date(col("ts")).as("d"))
       EventPipeline.retentionGrid(ev, maxOffset = 7)
@@ -7021,8 +7020,8 @@ object OpsQueries {
     "q18_monitoring_panel" ->
       // all three legs replayed over the SAME hourly CTE: q17's WE rule
       // windows, a10's self-excluding rolling z at threshold 0 folded
-      // to count/max, and q5's smoothed PSI over binColumn's exact bin
-      // expression (lo 0, hi 60, 12 bins -> alpha*nBins = 6e0)
+      // to count/max, and q5's smoothed PSI over Histograms.binned's
+      // exact bin expression (lo 0, hi 60, 12 bins -> alpha*nBins = 6e0)
       ("WITH h AS (SELECT event_type AS k, date_trunc('hour', ts) AS t, " +
         "count(*)::BIGINT AS x FROM events GROUP BY 1, 2), " +
         // --- WE leg (the q17 oracle verbatim, folded to rule counts)
@@ -7059,7 +7058,7 @@ object OpsQueries {
         "WHERE cnt >= 12 AND (ssq::DOUBLE - s::DOUBLE * s / cnt) / cnt > 0), " +
         "zr AS (SELECT k, coalesce(sum(CASE WHEN abs(zr) >= 3.0 THEN 1 END), 0)::DOUBLE AS zn, " +
         "max(abs(zr)) AS zm FROM zs GROUP BY k), " +
-        // --- PSI leg (q5's smoothing over binColumn's bin expression)
+        // --- PSI leg (q5's smoothing over Histograms.binned's bins)
         "rb AS (SELECT k, least(greatest(floor((x::DOUBLE - 0e0) / 6e1 * 12), 0), 11)::INT AS bin, " +
         "count(*)::BIGINT AS n FROM h WHERE t < TIMESTAMP '2024-01-16 00:00:00' GROUP BY 1, 2), " +
         "cb AS (SELECT k, least(greatest(floor((x::DOUBLE - 0e0) / 6e1 * 12), 0), 11)::INT AS bin, " +

@@ -134,7 +134,7 @@ object Drift {
   /** PSI read directly off two [[Histograms]] long-format states
     * (keys ++ bin, cnt) — the INCREMENTAL drift gate: maintain a
     * histogram state per corpus snapshot (constant-time refresh via
-    * `Histograms.mergeState` / `EventPipeline.maintainAggState`) and
+    * `Histograms.mergeState`) and
     * read the drift between any two states without ever rescanning a
     * corpus. Same add-`alpha` smoothing as [[psiDrift]]; bins densify
     * over 0..nBins−1 per key so empty bins smooth identically on both

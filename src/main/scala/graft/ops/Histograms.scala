@@ -37,12 +37,8 @@ object Histograms {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** The bin-assignment expression [[binned]] groups by — public so a
-    * STREAM can derive the same bin column per micro-batch and maintain
-    * histogram state through `EventPipeline.maintainAggState` with
-    * keys :+ "bin" (bin counts sum, so the streaming view converges to
-    * the batch histogram exactly — spec-pinned). */
-  def binColumn(v: Column, lo: Double, hi: Double, nBins: Int): Column = {
+  /** The bin-assignment expression [[binned]] groups by. */
+  private def binColumn(v: Column, lo: Double, hi: Double, nBins: Int): Column = {
     require(nBins >= 1, s"nBins must be >= 1, got $nBins")
     require(lo < hi, s"need lo < hi, got [$lo, $hi)")
     val raw = floor((v.cast("double") - lit(lo)) / lit(hi - lo) * nBins).cast("int")

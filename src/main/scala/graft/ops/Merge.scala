@@ -156,33 +156,6 @@ object Merge {
         }: _*)
   }
 
-  /** Incremental FREQUENCY-sketch maintenance: combine stored per-key
-    * Count-Min grids (`array<long>`, [[graft.functions.CountMin]]) with
-    * a delta batch's grids. CMS union is element-wise addition and is
-    * EXACT — merge(sketch(A), sketch(B)) is bit-identical to
-    * sketch(A ∪ B) — so unlike the HLL path there is no estimator drift
-    * across any number of maintenance steps: the state answers point
-    * frequency queries over the full history with the one-batch error
-    * bound, without ever rescanning history. Same null policy as
-    * [[mergeSketchState]]. Grids must share (depth, width, seed); the
-    * caller owns that contract. */
-  def mergeGridState(state: DataFrame, deltaAgg: DataFrame, keys: Seq[String],
-                     gridCols: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "need at least one key column")
-    require(gridCols.nonEmpty, "need at least one grid column")
-    val s = state.select(keys.map(k => col(k).as(s"__sk_$k")) ++
-      gridCols.map(c => col(c).as(s"__s_$c")): _*)
-    val d = deltaAgg.select(keys.map(k => col(k).as(s"__dk_$k")) ++
-      gridCols.map(c => col(c).as(s"__d_$c")): _*)
-    nullSafeFullOuter(s, d, keys)
-      .select(keys.map(k => coalesce(col(s"__sk_$k"), col(s"__dk_$k")).as(k)) ++
-        gridCols.map { c =>
-          val a = col(s"__s_$c"); val b = col(s"__d_$c")
-          when(a.isNull, b).when(b.isNull, a)
-            .otherwise(zip_with(a, b, (x, y) => x + y)).as(c)
-        }: _*)
-  }
-
   /** Incremental equi-join view maintenance (insert-only deltas): the
     * delta of V = A ⋈ B under appends (dA, dB) is exactly
     * dV = dA⋈B ∪ A⋈dB ∪ dA⋈dB — appending dV to the materialized V

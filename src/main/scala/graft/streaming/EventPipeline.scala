@@ -1,20 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-/** Structured Streaming ingest for the `events` table shape
-  * (event_id, ts, user_id, event_type, value, props).
-  *
-  * The transforms are written against plain DataFrames so the SAME code
-  * path serves batch (driver correctness gate) and streaming
-  * (readStream -> transform -> writeStream): Structured Streaming's core
-  * contract. Watermarks only attach in streaming mode; the only state a
-  * stream carries is Spark's own (windowed aggregates, dedup, interval
-  * joins) or a caller-held frame ([[maintainAggState]]) — no
-  * per-key custom state operators.
+/** Transforms over the `events` table shape
+  * (event_id, ts, user_id, event_type, value, props): windowed counts,
+  * smoothing, sessionization, attribution, funnels, anomaly scoring and
+  * the read-outs over an hourly or daily rollup. All are plain batch
+  * DataFrame plans. The read-outs take the rollup as their input, so a
+  * one-shot `groupBy` and state kept incrementally with
+  * [[graft.ops.Merge.mergeAggState]] read identically. [[intervalJoin]]
+  * alone also states its stream-stream contract (watermarked inputs
+  * bound its join state).
   */
 object EventPipeline {
 
@@ -37,16 +35,6 @@ object EventPipeline {
                             slide: String = "30 minutes"): DataFrame =
     events
       .groupBy(window(col("ts"), windowLength, slide).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("sum_value"))
-
-  /** Streaming variant with a watermark for state cleanup: late events
-    * beyond `lateness` are dropped, window state is purged once the
-    * watermark passes — bounded state at any scale. */
-  def streamingWindowedCounts(events: DataFrame, windowLength: String = "1 hour",
-                              lateness: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowLength).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("sum_value"))
 
@@ -89,25 +77,6 @@ object EventPipeline {
   def ewmaWeights(alpha: Double, k: Int): Seq[Double] =
     (0 until k).map(j => alpha * math.pow(1 - alpha, j))
 
-  /** Stream-static dimension enrichment: join the event stream against a
-    * small static dim table on `event_type` and aggregate the dim's
-    * weight per watermarked tumbling window. The static side is
-    * broadcast-hinted — in a stream-static join the dim is re-resolved
-    * per micro-batch with NO stream-side state, so this is the bounded
-    * way to attach reference data at any stream rate (a stream-stream
-    * join here would hold needless state for a table that never moves).
-    * Works identically on a batch frame (same code path, no watermark
-    * semantics engaged). */
-  def enrichedWindowedWeight(events: DataFrame, dim: DataFrame,
-                             windowLength: String = "1 hour",
-                             lateness: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .join(broadcast(dim), Seq("event_type"))
-      .groupBy(window(col("ts"), windowLength).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("weight")).as("sum_weight"))
-      .select(col("w.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_weight"))
-
   /** Per-(event_type, hour-of-day) baseline profile from historical
     * events: for each slot, the day-sample count / sum / sum-of-squares
     * of hourly event counts. EXACT integer moments — any engine derives
@@ -123,25 +92,18 @@ object EventPipeline {
       .agg(count(lit(1)).as("n_obs"), sum("n").as("s"),
         sum(col("n") * col("n")).as("ssq"))
 
-  /** Online anomaly detection against a static baseline profile: hourly
-    * windowed counts per event type, joined to [[hourOfDayBaseline]]'s
+  /** Anomaly detection against a baseline profile: hourly windowed
+    * counts per event type, joined to [[hourOfDayBaseline]]'s
     * (event_type, hour-of-day) moments, scored
-    * `z = (n − mean) / sqrt(var)`, and filtered to `|z| ≥ minZ`. Works
-    * on batch and streaming frames alike — on a stream the windowed
-    * aggregation is watermarked (append mode, bounded state) and the
-    * baseline joins as a BROADCAST STATIC side after the aggregation: a
-    * stateless stream-static join re-resolved per micro-batch, the
-    * bounded way to score against reference data at any stream rate.
-    * Slots with fewer than `minObs` baseline days are skipped (scoring
-    * against no history is noise, not detection); zero-variance slots
-    * likewise. */
+    * `z = (n − mean) / sqrt(var)`, and filtered to `|z| ≥ minZ`. The
+    * baseline joins broadcast after the aggregation, so scoring costs
+    * one join against |event types| × 24 rows. Slots with fewer than
+    * `minObs` baseline days are skipped (scoring against no history is
+    * noise, not detection); zero-variance slots likewise. */
   def anomalyAgainstBaseline(events: DataFrame, baseline: DataFrame,
                              windowLength: String = "1 hour",
-                             lateness: String = "30 minutes",
-                             minZ: Double = 2.0, minObs: Int = 10): DataFrame = {
-    val src =
-      if (events.isStreaming) events.withWatermark("ts", lateness) else events
-    src
+                             minZ: Double = 2.0, minObs: Int = 10): DataFrame =
+    events
       .groupBy(window(col("ts"), windowLength).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"))
@@ -155,13 +117,12 @@ object EventPipeline {
         (col("n").cast("double") - col("s").cast("double") / col("n_obs")) / sqrt(col("vr")))
       .filter(abs(col("z")) >= minZ)
       .select(col("event_type"), col("w_start"), col("n"), col("z"))
-  }
 
   /** Rolling z-score anomaly detection over an hourly rollup
     * (event_type, h, n) — the a10 batch query's scoring step, factored
     * out so the SAME derivation reads either a one-shot `groupBy`
-    * rollup or [[maintainAggState]]-maintained hourly state (the a10
-    * streaming twin; stream/batch parity spec-pinned). The trailing
+    * rollup or hourly counts merged batch by batch with
+    * [[graft.ops.Merge.mergeAggState]] (spec-pinned equal). The trailing
     * mean/var derive from window sums of exact longs, the frame
     * excludes the current row (a spike must not mask itself), and
     * short history (< `minHistory` prior hours) is skipped rather than
@@ -189,8 +150,8 @@ object EventPipeline {
     * q15 drift-panel pattern applied to the operations dashboard (r14
     * verdict #8): every production health read on one (event_type, h, n)
     * rollup, which arrives either from a one-shot `groupBy` (the q18
-    * batch query) or from [[maintainAggState]]-maintained streaming
-    * state (parity spec-pinned in EventPipelineSpec). Legs, each the
+    * query) or from hourly counts merged batch by batch with
+    * [[graft.ops.Merge.mergeAggState]] (spec-pinned equal). Legs, each the
     * already-verified operator:
     *
     *   - `we_r1..we_r4`: [[graft.ops.TimeSeries.westernElectric]] rule
@@ -240,10 +201,10 @@ object EventPipeline {
   }
 
   /** Cohort retention grid over per-(user, day) activity — the e15
-    * batch query's derivation, factored out so the SAME read-out runs
-    * over a one-shot `distinct` or over [[maintainAggState]]-maintained
-    * (user_id, d) activity state (the e15 streaming twin; stream/batch
-    * parity spec-pinned). Cohort = each user's first-seen day (min —
+    * query's derivation, factored out so the SAME read-out runs over a
+    * one-shot `distinct` or over (user_id, d) activity counts merged
+    * batch by batch with [[graft.ops.Merge.mergeAggState]] (spec-pinned
+    * equal). Cohort = each user's first-seen day (min —
     * mergeable, so maintained state converges to it); retention =
     * distinct active users at each day offset / cohort size. Input
     * needs (user_id, d) columns; extra state columns (counts) are
@@ -263,26 +224,6 @@ object EventPipeline {
       .select(col("cohort_day"), col("day_offset").cast("long").as("day_offset"),
         col("n_active"),
         (col("n_active").cast("double") / col("n_cohort")).as("retention"))
-  }
-
-  /** File-source streaming read of a testdata scale-factor directory's
-    * events table (streaming sources read directories, so the single
-    * events.parquet file is selected with a glob filter). The read schema
-    * is resolved from the file — not hardcoded — and `ts` is normalized
-    * to session-zone TimestampType with the SAME drift-tolerant branch as
-    * Util.events: the testdata generator has shipped both TIMESTAMP(NANOS)
-    * (int64 under `nanosAsLong`) and timestamp[us] (TIMESTAMP_NTZ). */
-  def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    schema("ts").dataType match {
-      case LongType           => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _                  => raw
-    }
   }
 
   /** Batch sessionization (gaps-and-islands), expressed with window
@@ -335,15 +276,6 @@ object EventPipeline {
         when(inWindow, col("__lt.id")).as("touch_id"),
         when(inWindow, unix_millis(col("ts")) - col("__lt.ms")).as("gap_ms"))
   }
-
-  /** Exactly-once-style ingest dedup for a stream: drops events whose
-    * `idCols` were already seen, with state bounded by the watermark —
-    * an id can only recur within `lateness` of the max event time, so
-    * older dedup state is purged instead of growing forever. */
-  def streamingDedup(events: DataFrame, idCols: Seq[String],
-                     lateness: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark(idCols)
 
   /** Event-time interval join: every (l, r) pair sharing `key` where
     * `r[rightTs]` lands in `[l[leftTs] + lowerMs, l[leftTs] + upperMs]`
@@ -398,58 +330,6 @@ object EventPipeline {
     l.join(r, cond, joinType)
       .withColumn(key, coalesce(col("__ij_lkey"), col("__ij_rkey")))
       .drop("__ij_lkey", "__ij_rkey")
-  }
-
-  /** Streaming ingest feeding the core summarize API (SURVEY.md §7.5):
-    * every micro-batch is summarized as a full Table 1 and handed to
-    * `sink` with its batch id. foreachBatch is the idiomatic bridge for
-    * batch-only logic (summarize collects aggregates eagerly, which a
-    * continuous query cannot) — each batch runs the same one-scan plan. */
-  def summarizePerBatch(events: DataFrame, cfg: graft.tableone.TableOneConfig)
-                       (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) sink(graft.tableone.TableOne.summarize(batch, cfg), batchId)
-      }
-      .outputMode(OutputMode.Append())
-      .start()
-
-  /** Streaming materialized-view maintenance: each micro-batch is
-    * aggregated to the view's (keys, measures) grain and merged into the
-    * caller-held state via [[graft.ops.Merge.mergeAggState]] — the
-    * streaming complement of the u6 batch operator. Batch N costs ONE
-    * delta aggregate + one key join against the current state; history
-    * is never rescanned, so the view stays cheap at any stream age.
-    *
-    * The caller owns state storage through `get`/`set` (an in-memory
-    * frame in tests, a parquet/lakehouse table in production — a storage
-    * decision, deliberately not made here). `set` MUST materialize
-    * (collect, write, or checkpoint): handing the lazy merged plan back
-    * into the next batch's `get` would chain lineage across batches
-    * without bound.
-    *
-    * @param aggs    aggregate columns applied to each batch (aliased to
-    *                the measure names `combine` references)
-    * @param combine measure -> "sum" | "min" | "max" (mergeAggState) */
-  def maintainAggState(stream: DataFrame, keys: Seq[String],
-                       aggs: Seq[Column], combine: Map[String, String])
-                      (get: () => Option[DataFrame], set: DataFrame => Unit): StreamingQuery = {
-    require(aggs.nonEmpty, "need at least one aggregate")
-    val measureOrder = combine.keys.toSeq.sorted
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-          val merged = get() match {
-            case Some(state) => graft.ops.Merge.mergeAggState(state, delta, keys, combine)
-            // normalize the first batch to mergeAggState's column order
-            case None => delta.select((keys ++ measureOrder).map(col): _*)
-          }
-          set(merged)
-        }
-      }
-      .outputMode(OutputMode.Update())
-      .start()
   }
 
   /** Strict first-occurrence funnel with an inactivity TTL: the funnel

@@ -36,7 +36,9 @@ final case class TableOneConfig(
     cols: Seq[String] = Nil,
     beautify: Boolean = false,
     pValues: Boolean = false,
-    maxStrata: Int = 1000)
+    maxStrata: Int = 1000) {
+  require(maxStrata >= 1, s"maxStrata must be >= 1, got $maxStrata")
+}
 
 /** "Table 1" descriptive-statistics engine — a from-scratch Scala Spark
   * re-expression of the reference's capabilities

@@ -97,11 +97,6 @@ class SourcesSpec extends AnyFunSuite with Matchers {
       ev.schema("ts").dataType shouldBe TimestampType
       ev.limit(1).count() shouldBe 1L
     }
-    withClue("events stream schema (via EventPipeline.readEventStream): ") {
-      val st = graft.streaming.EventPipeline.readEventStream(spark, dir)
-      st.isStreaming shouldBe true
-      st.schema("ts").dataType shouldBe TimestampType
-    }
   }
 
   test("schema evolution: mergeSchema unions v1/v2 files, old rows null-fill") {

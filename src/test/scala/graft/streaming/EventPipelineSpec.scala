@@ -3,7 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.TestSpark
+import graft.ops.{Drift, Histograms, Merge, TimeSeries}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, count, date_trunc, lit, to_date, to_timestamp}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -129,58 +132,6 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
       (2L, "2024-01-01 10:20:00.0", "2024-01-01 10:20:00.0", 1L, 5.0))
   }
 
-  test("streamingWindowedCounts emits finalized windows under a watermark") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventPipeline.streamingWindowedCounts(input.toDF(), "1 hour", "30 minutes")
-      .writeStream.format("memory").queryName("swc").outputMode("append").start()
-    try {
-      input.addData(Event(1L, ts("10:05"), 1L, "click", 1.0),
-        Event(2L, ts("10:40"), 1L, "click", 2.0))
-      q.processAllAvailable()
-      // watermark still 10:10 -> nothing final yet
-      input.addData(Event(3L, ts("12:00"), 1L, "view", 9.0))
-      q.processAllAvailable() // watermark -> 11:30 after this batch
-      input.addData(Event(4L, ts("12:01"), 1L, "view", 1.0))
-      q.processAllAvailable() // 10:00 window (end 11:00) < 11:30 -> emitted
-      val rows = spark.table("swc").collect()
-        .map(x => (x.getAs[Timestamp]("w_start").toString, x.getAs[String]("event_type"),
-          x.getAs[Long]("n"), x.getAs[Double]("sum_value")))
-      rows should contain ("2024-01-01 10:00:00.0", "click", 2L, 3.0)
-    } finally q.stop()
-  }
-
-  test("stream-static dim join: enriched windowed weights match the batch run") {
-    implicit val sql = spark.sqlContext
-    val dim = Seq(("click", 2.0), ("view", 10.0)).toDF("event_type", "weight")
-    val input = MemoryStream[Event]
-    val q = EventPipeline.enrichedWindowedWeight(input.toDF(), dim, "1 hour", "30 minutes")
-      .writeStream.format("memory").queryName("enr").outputMode("append").start()
-    try {
-      input.addData(Event(1L, ts("10:05"), 1L, "click", 1.0),
-        Event(2L, ts("10:40"), 1L, "click", 2.0),
-        Event(3L, ts("10:20"), 2L, "view", 5.0))
-      q.processAllAvailable()
-      input.addData(Event(4L, ts("12:01"), 1L, "view", 1.0))
-      q.processAllAvailable() // watermark 11:31 -> the 10:00 window finalizes
-      val got = spark.table("enr").collect()
-        .map(x => (x.getAs[Timestamp]("w_start").toString, x.getAs[String]("event_type"),
-          x.getAs[Long]("n"), x.getAs[Double]("sum_weight"))).toSet
-      got should contain ("2024-01-01 10:00:00.0", "click", 2L, 4.0)
-      got should contain ("2024-01-01 10:00:00.0", "view", 1L, 10.0)
-      // batch parity: the same code path over a batch frame, no watermark
-      val batch = EventPipeline.enrichedWindowedWeight(
-          Seq(Event(1L, ts("10:05"), 1L, "click", 1.0),
-            Event(2L, ts("10:40"), 1L, "click", 2.0),
-            Event(3L, ts("10:20"), 2L, "view", 5.0),
-            Event(4L, ts("12:01"), 1L, "view", 1.0)).toDF(), dim)
-        .collect()
-        .map(x => (x.getAs[Timestamp]("w_start").toString, x.getAs[String]("event_type"),
-          x.getAs[Long]("n"), x.getAs[Double]("sum_weight"))).toSet
-      got.subsetOf(batch) shouldBe true
-    } finally q.stop()
-  }
-
   test("intervalJoin: inclusive bounds, per-key scoping, batch/stream parity") {
     implicit val sql = spark.sqlContext
     def views(df: org.apache.spark.sql.DataFrame) = df
@@ -278,92 +229,6 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
     } finally q.stop()
   }
 
-  test("file-source stream of the events table matches the batch result") {
-    val stream = EventPipeline.readEventStream(spark, "/root/testdata/sf0.001")
-    val q = EventPipeline.windowedCounts(stream)
-      .writeStream.format("memory").queryName("filewc").outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("filewc")
-        .select("w_start", "event_type", "n", "sum_value").collect()
-        .map(_.toSeq).toSet
-      val batch = EventPipeline.windowedCounts(graft.Util.events(spark, "/root/testdata/sf0.001"))
-        .collect().map(_.toSeq).toSet
-      streamed shouldBe batch
-      streamed.size should be > 10
-    } finally q.stop()
-  }
-
-  test("stream anomaly scoring against a static baseline matches the batch twin") {
-    // baseline profile precomputed in BATCH from the same table (the
-    // production shape: a historical profile scores the live stream);
-    // the streaming side must converge to the batch scorer's rows
-    val sfDir = "/root/testdata/sf0.001"
-    val batchEvents = graft.Util.events(spark, sfDir)
-    val baseline = EventPipeline.hourOfDayBaseline(batchEvents)
-    // minObs lowered: sf0.001 spans few days, so day-sample counts per
-    // (type, hour-of-day) slot are small
-    val expected = EventPipeline.anomalyAgainstBaseline(batchEvents, baseline,
-        minZ = 1.0, minObs = 2)
-      .collect().map(_.toSeq).toSet
-    expected.size should be > 0
-    val stream = EventPipeline.readEventStream(spark, sfDir)
-    val q = EventPipeline.anomalyAgainstBaseline(stream, baseline,
-        minZ = 1.0, minObs = 2)
-      .writeStream.format("memory").queryName("sanom").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // append mode emits only watermark-finalized windows; the last
-      // open window may be withheld, so streamed ⊆ batch and covers
-      // all but at most the final window per type
-      val streamed = spark.table("sanom")
-        .select("event_type", "w_start", "n", "z").collect().map(_.toSeq).toSet
-      streamed.subsetOf(expected) shouldBe true
-      streamed.size should be >= expected.size - 4
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops replayed event ids within the watermark") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventPipeline.streamingDedup(input.toDF(), Seq("event_id"))
-      .writeStream.format("memory").queryName("sdedup").outputMode("append").start()
-    try {
-      input.addData(Event(1L, ts("10:00"), 1L, "click", 1.0),
-        Event(2L, ts("10:01"), 1L, "click", 2.0))
-      q.processAllAvailable()
-      // replay event 1 (at-least-once delivery) + one new event
-      input.addData(Event(1L, ts("10:00"), 1L, "click", 1.0),
-        Event(3L, ts("10:02"), 2L, "view", 3.0))
-      q.processAllAvailable()
-      val ids = spark.table("sdedup").select("event_id").as[Long].collect().sorted
-      ids shouldBe Array(1L, 2L, 3L)
-    } finally q.stop()
-  }
-
-  test("streaming ingest feeds the summarize API per micro-batch") {
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    val results = scala.collection.mutable.Map[Long, Array[org.apache.spark.sql.Row]]()
-    val q = EventPipeline.summarizePerBatch(input.toDF(),
-      graft.tableone.TableOneConfig(Some("event_type"), Seq("value"))) { (t1, id) =>
-      results.synchronized { results(id) = t1.collect() }
-    }
-    try {
-      input.addData(Event(1L, ts("10:00"), 1L, "click", 2.0),
-        Event(2L, ts("10:01"), 1L, "click", 4.0),
-        Event(3L, ts("10:02"), 2L, "view", 9.0))
-      q.processAllAvailable()
-      val rows = results.synchronized(results.values.head)
-      val totals = rows.find(_.getAs[String]("Values") == "ALL").get
-      totals.getAs[Double]("All_Patients") shouldBe 3.0
-      totals.getAs[Double]("click") shouldBe 2.0
-      val mean = rows.find(r => r.getAs[String]("Values") == "mean").get
-      mean.getAs[Double]("click") shouldBe 3.0
-      mean.getAs[Double]("view") shouldBe 9.0
-    } finally q.stop()
-  }
-
   test("funnelLastEpisode: funnel over each user's last activity episode only") {
     // user 1: episode A (10:00 view -> 10:10 click -> 10:20 purchase, full
     // funnel) then a >1h gap, episode B (12:00 view -> 12:05 click, no
@@ -390,286 +255,190 @@ class EventPipelineSpec extends AnyFunSuite with Matchers {
       (2L, 2L, Some(5 * 60 * 1000L + 85 * 60 * 1000L))) // users 1 (5 min) + 4 (85 min)
   }
 
-  test("maintainAggState maintains HISTOGRAM state (u8's streaming twin) exactly") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.functions.{col, count, lit}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    // same bin expression as Histograms.binned — keys become (type, bin)
-    // and the state merge is the cnt -> sum it was designed for
-    val binned = input.toDF()
-      .withColumn("bin", graft.ops.Histograms.binColumn(col("value"), 0.0, 10.0, 5))
-    val q = EventPipeline.maintainAggState(binned, Seq("event_type", "bin"),
-      Seq(count(lit(1)).as("cnt")), Map("cnt" -> "sum"))(get _, set _)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
-    try {
-      feed(Event(1L, ts("10:00"), 1L, "click", 1.0),
-        Event(2L, ts("10:01"), 2L, "click", 3.0),
-        Event(3L, ts("10:02"), 3L, "view", 9.5))
-      feed(Event(4L, ts("10:03"), 1L, "click", 3.4),  // same bin as 3.0
-        Event(5L, ts("10:04"), 2L, "click", -2.0))    // clamps into bin 0
-      feed(Event(6L, ts("10:05"), 9L, "buy", 99.0))   // clamps into bin 4
-      val got = get().get.orderBy("event_type", "bin")
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-      val direct = graft.ops.Histograms.binned(fed.toSeq.toDF(),
-          Seq("event_type"), "value", 0.0, 10.0, 5)
-        .orderBy("event_type", "bin")
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-      got shouldBe direct
-    } finally q.stop()
+  test("anomalyAgainstBaseline: thin and flat slots are skipped, the spike alone scores") {
+    def at(day: Int, hhmm: String): Timestamp =
+      Timestamp.valueOf(f"2024-01-$day%02d $hhmm:00")
+    var id = 0L
+    // `k` events of type `t` in hour 10 of `day`
+    def hour10(day: Int, t: String, k: Int): Seq[Event] =
+      (1 to k).map { m => id += 1; Event(id, at(day, f"10:$m%02d"), id, t, 1.0) }
+    // history, per (type, 10 o'clock) slot:
+    //   click: 1, 2, 1, 2 events on four days -> mean 1.5, var 0.25
+    //   view:  3 events on each of four days  -> zero variance
+    //   buy:   1, 3 events on two days        -> fewer than minObs = 3 days
+    val clickDays = Seq(1, 2, 1, 2)
+    val history = clickDays.zipWithIndex.flatMap { case (k, d) => hour10(d + 1, "click", k) } ++
+      (1 to 4).flatMap(d => hour10(d, "view", 3)) ++
+      hour10(1, "buy", 1) ++ hour10(2, "buy", 3)
+    val baseline = EventPipeline.hourOfDayBaseline(history.toDF())
+    // scored: a 5-click spike, a 2-click ordinary hour (|z| = 1), and
+    // hours that would score huge |z| in the flat and thin slots
+    val scored = (hour10(20, "click", 5) ++ hour10(21, "click", 2) ++
+      hour10(20, "view", 9) ++ hour10(20, "buy", 10)).toDF()
+    def run(minObs: Int) =
+      EventPipeline.anomalyAgainstBaseline(scored, baseline, minZ = 2.0, minObs = minObs)
+        .orderBy("event_type").collect()
+        .map(r => (r.getString(0), r.getAs[Timestamp]("w_start"), r.getLong(2), r.getDouble(3)))
+        .toSeq
+    val nObs = clickDays.size.toDouble
+    val s = clickDays.sum.toDouble
+    val ssq = clickDays.map(k => k * k).sum.toDouble
+    val z = (5 - s / nObs) / math.sqrt((ssq - s * s / nObs) / nObs)
+    z shouldBe 7.0
+    run(minObs = 3) shouldBe Seq(("click", at(20, "10:00"), 5L, z))
+    // the buy slot is skipped for its two baseline days alone: admitted
+    // at minObs = 2 it scores (10 - 2) / 1 = 8
+    run(minObs = 2) shouldBe Seq(("buy", at(20, "10:00"), 10L, 8.0), ("click", at(20, "10:00"), 5L, z))
   }
 
-  test("maintainAggState: streamed micro-batches converge to the one-shot batch aggregate") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    // caller-owned state, MATERIALIZED per the contract (collected rows)
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    val aggs = Seq(count(lit(1)).as("n"), sum(col("value")).as("s"),
-      min(col("value")).as("mn"), max(col("value")).as("mx"))
-    val combine = Map("n" -> "sum", "s" -> "sum", "mn" -> "min", "mx" -> "max")
-    val q = EventPipeline.maintainAggState(input.toDF(), Seq("event_type"),
-      aggs, combine)(get _, set _)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
-    try {
-      feed(Event(1L, ts("10:00"), 1L, "click", 2.0),
-        Event(2L, ts("10:01"), 2L, "view", 5.0))
-      feed(Event(3L, ts("10:02"), 1L, "click", -1.0))
-      feed(Event(4L, ts("10:03"), 3L, "buy", 7.0)) // key first seen mid-stream
-      val got = get().get.select("event_type", "mn", "mx", "n", "s")
-        .orderBy("event_type").collect().map(_.toSeq).toSeq
-      val direct = fed.toSeq.toDF()
-        .groupBy("event_type").agg(aggs.head, aggs.tail: _*)
-        .select("event_type", "mn", "mx", "n", "s")
-        .orderBy("event_type").collect().map(_.toSeq).toSeq
-      got shouldBe direct
-    } finally q.stop()
-  }
+  // The read-outs below take a rollup, so they read state kept
+  // incrementally — each batch aggregated to the rollup's grain and
+  // folded in with `Merge.mergeAggState` — exactly as a one-shot
+  // groupBy over every batch's events. Each batch list is split so the
+  // fold merges keys that more than one batch touches.
+
+  /** Per-batch counts `n` at the grain `keys` (added by `keyed`), folded
+    * into one state with `Merge.mergeAggState`. */
+  private def mergedCounts(batches: Seq[Seq[Event]], keys: Seq[String])
+                          (keyed: DataFrame => DataFrame): DataFrame =
+    batches
+      .map(b => keyed(b.toDF()).groupBy(keys.map(col): _*).agg(count(lit(1)).as("n")))
+      .reduce(Merge.mergeAggState(_, _, keys, Map("n" -> "sum")))
+
+  private def hourly(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("n"))
+
+  private def mergedHourly(batches: Seq[Seq[Event]]): DataFrame =
+    mergedCounts(batches, Seq("event_type", "h"))(_.withColumn("h", date_trunc("hour", col("ts"))))
 
   test("streaming drift monitor: psiFromHistograms over maintained state equals the batch path") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.functions.{col, count, lit}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    val binned = input.toDF()
-      .withColumn("bin", graft.ops.Histograms.binColumn(col("value"), 0.0, 10.0, 5))
-    val q = EventPipeline.maintainAggState(binned, Seq("event_type", "bin"),
-      Seq(count(lit(1)).as("cnt")), Map("cnt" -> "sum"))(get _, set _)
-    // the reference profile the stream drifts against
+    // the reference profile the batches drift against
     val refEvents = Seq(Event(100L, ts("09:00"), 1L, "click", 2.0),
       Event(101L, ts("09:01"), 2L, "click", 4.0),
       Event(102L, ts("09:02"), 3L, "click", 6.0))
-    val refH = graft.ops.Histograms.binned(refEvents.toDF(),
-      Seq("event_type"), "value", 0.0, 10.0, 5)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
-    try {
-      feed(Event(1L, ts("10:00"), 1L, "click", 8.0),
-        Event(2L, ts("10:01"), 2L, "click", 9.0))
-      feed(Event(3L, ts("10:02"), 3L, "click", 8.5),
-        Event(4L, ts("10:03"), 4L, "click", 1.0))
-      // drift read off the STREAMED state == drift off the batch histogram
-      val live = graft.ops.Drift.psiFromHistograms(refH, get().get,
-        Seq("event_type"), 5).head()
-      val batchH = graft.ops.Histograms.binned(fed.toSeq.toDF(),
-        Seq("event_type"), "value", 0.0, 10.0, 5)
-      val direct = graft.ops.Drift.psiFromHistograms(refH, batchH,
-        Seq("event_type"), 5).head()
-      live.getDouble(3) shouldBe direct.getDouble(3)
-      live.getLong(2) shouldBe 4L
-      live.getDouble(3) should be > 0.1 // the planted shift is visible
-    } finally q.stop()
+    def hist(es: Seq[Event]) =
+      Histograms.binned(es.toDF(), Seq("event_type"), "value", 0.0, 10.0, 5)
+    val refH = hist(refEvents)
+    val batches = Seq(
+      Seq(Event(1L, ts("10:00"), 1L, "click", 8.0),
+        Event(2L, ts("10:01"), 2L, "click", 9.0)),
+      Seq(Event(3L, ts("10:02"), 3L, "click", 8.5),
+        Event(4L, ts("10:03"), 4L, "click", 1.0)))
+    val state = batches.map(hist).reduce(Histograms.mergeState(_, _, Seq("event_type")))
+    // drift read off the MERGED state == drift off the one-shot histogram
+    val live = Drift.psiFromHistograms(refH, state, Seq("event_type"), 5).head()
+    val direct = Drift.psiFromHistograms(refH, hist(batches.flatten),
+      Seq("event_type"), 5).head()
+    live.getDouble(3) shouldBe direct.getDouble(3)
+    live.getLong(2) shouldBe 4L
+    live.getDouble(3) should be > 0.1 // the planted shift is visible
   }
 
   test("rollingZAnomalies over maintained hourly state equals the batch path (a10 twin)") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.functions.{col, count, date_trunc, lit}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    // maintain the hourly (event_type, h) rollup the a10 read-out scores
-    val keyed = input.toDF().withColumn("h", date_trunc("hour", col("ts")))
-    val q = EventPipeline.maintainAggState(keyed, Seq("event_type", "h"),
-      Seq(count(lit(1)).as("n")), Map("n" -> "sum"))(get _, set _)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
-    try {
-      // alternating 1/2-per-hour baseline for 9 hours (nonzero variance,
-      // |z| <= 1 everywhere), then a 6-event spike in hour 9; split
-      // mid-hour across batches so state merging is exercised
-      var id = 0L
-      def ev(hhmm: String): Event = { id += 1; Event(id, ts(hhmm), id % 3, "click", 1.0) }
-      feed((0 to 8).flatMap(i =>
-        ev(f"$i%02d:15") +: (if (i % 2 == 0) Seq(ev(f"$i%02d:45")) else Nil)): _*)
-      feed(ev("09:01"), ev("09:10"), ev("09:20"))
-      feed(ev("09:30"), ev("09:40"), ev("09:50"))
-      val params = (6, 4, 1.5) // window, minHistory, zThresh — spec-sized
-      def score(hourly: DataFrame): Seq[Seq[Any]] =
-        EventPipeline.rollingZAnomalies(hourly, params._1, params._2, params._3)
-          .orderBy("event_type", "h").collect().map(_.toSeq).toSeq
-      val got = score(get().get)
-      val direct = score(fed.toSeq.toDF()
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n")))
-      got shouldBe direct
-      got should not be empty // the spike actually scores
-    } finally q.stop()
+    // alternating 1/2-per-hour baseline for 9 hours (nonzero variance,
+    // |z| <= 1 everywhere), then a 6-event spike in hour 9; split
+    // mid-hour across batches so state merging is exercised
+    var id = 0L
+    def ev(hhmm: String): Event = { id += 1; Event(id, ts(hhmm), id % 3, "click", 1.0) }
+    val batches = Seq(
+      (0 to 8).flatMap(i => ev(f"$i%02d:15") +: (if (i % 2 == 0) Seq(ev(f"$i%02d:45")) else Nil)),
+      Seq(ev("09:01"), ev("09:10"), ev("09:20")),
+      Seq(ev("09:30"), ev("09:40"), ev("09:50")))
+    val params = (6, 4, 1.5) // window, minHistory, zThresh — spec-sized
+    def score(hourly: DataFrame): Seq[Seq[Any]] =
+      EventPipeline.rollingZAnomalies(hourly, params._1, params._2, params._3)
+        .orderBy("event_type", "h").collect().map(_.toSeq).toSeq
+    val got = score(mergedHourly(batches))
+    val direct = score(hourly(batches.flatten.toDF()))
+    got shouldBe direct
+    got should not be empty // the spike actually scores
   }
 
   test("retentionGrid over maintained (user, day) state equals the batch path (e15 twin)") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.functions.{col, count, lit, to_date}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    val keyed = input.toDF().withColumn("d", to_date(col("ts")))
-    val q = EventPipeline.maintainAggState(keyed, Seq("user_id", "d"),
-      Seq(count(lit(1)).as("n")), Map("n" -> "sum"))(get _, set _)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
+    var id = 0L
     def at(day: Int, hhmm: String, user: Long): Event = {
-      val t = java.sql.Timestamp.valueOf(f"2024-03-${10 + day}%02d $hhmm:00")
-      Event(fed.size + 1L, t, user, "click", 1.0)
+      id += 1
+      Event(id, Timestamp.valueOf(f"2024-03-${10 + day}%02d $hhmm:00"), user, "click", 1.0)
     }
-    try {
-      // cohort A (users 1,2) starts day 0; user 2 churns after day 1;
-      // cohort B (user 3) starts day 1; duplicate same-day activity
-      // (user 1 twice on day 0) must not double-count
-      feed(at(0, "09:00", 1L), at(0, "17:30", 1L), at(0, "10:00", 2L))
-      feed(at(1, "11:00", 1L), at(1, "12:00", 2L), at(1, "13:00", 3L))
-      feed(at(2, "09:30", 1L), at(2, "10:30", 3L))
-      def grid(activity: DataFrame): Seq[Seq[Any]] =
-        EventPipeline.retentionGrid(activity, maxOffset = 7)
-          .orderBy("cohort_day", "day_offset").collect().map(_.toSeq).toSeq
-      val got = grid(get().get)
-      val direct = grid(fed.toSeq.toDF()
-        .select(col("user_id"), to_date(col("ts")).as("d")))
-      got shouldBe direct
-      // spot-check the semantics: cohort 03-10 has 2 users, both active
-      // at offset 1, one at offset 2
-      val m = got.map(r => (r(0).toString, r(1)) -> (r(2), r(3))).toMap
-      m(("2024-03-10", 0L)) shouldBe ((2L, 1.0))
-      m(("2024-03-10", 1L)) shouldBe ((2L, 1.0))
-      m(("2024-03-10", 2L)) shouldBe ((1L, 0.5))
-      m(("2024-03-11", 1L))._1 shouldBe 1L
-    } finally q.stop()
+    // cohort A (users 1,2) starts day 0; user 2 churns after day 1;
+    // cohort B (user 3) starts day 1; duplicate same-day activity
+    // (user 1 twice on day 0) must not double-count
+    val batches = Seq(
+      Seq(at(0, "09:00", 1L), at(0, "17:30", 1L), at(0, "10:00", 2L)),
+      Seq(at(1, "11:00", 1L), at(1, "12:00", 2L), at(1, "13:00", 3L)),
+      Seq(at(2, "09:30", 1L), at(2, "10:30", 3L)))
+    def grid(activity: DataFrame): Seq[Seq[Any]] =
+      EventPipeline.retentionGrid(activity, maxOffset = 7)
+        .orderBy("cohort_day", "day_offset").collect().map(_.toSeq).toSeq
+    val got = grid(mergedCounts(batches, Seq("user_id", "d"))(_.withColumn("d", to_date(col("ts")))))
+    val direct = grid(batches.flatten.toDF()
+      .select(col("user_id"), to_date(col("ts")).as("d")))
+    got shouldBe direct
+    // spot-check the semantics: cohort 03-10 has 2 users, both active
+    // at offset 1, one at offset 2
+    val m = got.map(r => (r(0).toString, r(1)) -> (r(2), r(3))).toMap
+    m(("2024-03-10", 0L)) shouldBe ((2L, 1.0))
+    m(("2024-03-10", 1L)) shouldBe ((2L, 1.0))
+    m(("2024-03-10", 2L)) shouldBe ((1L, 0.5))
+    m(("2024-03-11", 1L))._1 shouldBe 1L
   }
 
   test("westernElectric over maintained hourly state equals the batch path (q17 twin)") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.functions.{col, count, date_trunc, lit}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    val keyed = input.toDF().withColumn("h", date_trunc("hour", col("ts")))
-    val q = EventPipeline.maintainAggState(keyed, Seq("event_type", "h"),
-      Seq(count(lit(1)).as("n")), Map("n" -> "sum"))(get _, set _)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
-    try {
-      // 19 alternating 1/2-count baseline hours, then a 12-event spike
-      // hour (one outlier among n = 10 caps |z| at (n-1)/sqrt(n) ~ 2.85,
-      // so a shorter baseline could never trip the 3-sigma rule); the
-      // spike hour is split across two micro-batches so the SPC read
-      // exercises merged state, not a single batch
-      var id = 0L
-      def ev(hhmm: String): Event = { id += 1; Event(id, ts(hhmm), id % 3, "click", 1.0) }
-      feed((0 to 18).flatMap(i =>
-        ev(f"$i%02d:15") +: (if (i % 2 == 0) Seq(ev(f"$i%02d:45")) else Nil)): _*)
-      feed((1 to 6).map(m => ev(f"19:$m%02d")): _*)
-      feed((7 to 12).map(m => ev(f"19:$m%02d")): _*)
-      def rules(hourly: DataFrame): Seq[Seq[Any]] =
-        graft.ops.TimeSeries.westernElectric(hourly, "event_type", "h", "n")
-          .orderBy("event_type").collect().map(_.toSeq).toSeq
-      val got = rules(get().get)
-      val direct = rules(fed.toSeq.toDF()
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n")))
-      got shouldBe direct
-      got.size shouldBe 1
-      // the planted spike must trip the 3-sigma rule on the maintained state
-      val r1n = got.head(4).asInstanceOf[Long]
-      r1n should be >= 1L
-    } finally q.stop()
+    // 19 alternating 1/2-count baseline hours, then a 12-event spike
+    // hour (one outlier among n = 10 caps |z| at (n-1)/sqrt(n) ~ 2.85,
+    // so a shorter baseline could never trip the 3-sigma rule); the
+    // spike hour is split across two batches so the SPC read exercises
+    // merged state, not a single batch
+    var id = 0L
+    def ev(hhmm: String): Event = { id += 1; Event(id, ts(hhmm), id % 3, "click", 1.0) }
+    val batches = Seq(
+      (0 to 18).flatMap(i => ev(f"$i%02d:15") +: (if (i % 2 == 0) Seq(ev(f"$i%02d:45")) else Nil)),
+      (1 to 6).map(m => ev(f"19:$m%02d")),
+      (7 to 12).map(m => ev(f"19:$m%02d")))
+    def rules(hourly: DataFrame): Seq[Seq[Any]] =
+      TimeSeries.westernElectric(hourly, "event_type", "h", "n")
+        .orderBy("event_type").collect().map(_.toSeq).toSeq
+    val got = rules(mergedHourly(batches))
+    val direct = rules(hourly(batches.flatten.toDF()))
+    got shouldBe direct
+    got.size shouldBe 1
+    // the planted spike must trip the 3-sigma rule on the maintained state
+    val r1n = got.head(4).asInstanceOf[Long]
+    r1n should be >= 1L
   }
 
   test("monitoringPanel over maintained hourly state equals the batch path (q18 twin)") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.{DataFrame, Row}
-    import org.apache.spark.sql.functions.{col, count, date_trunc, lit, to_timestamp}
-    implicit val sql = spark.sqlContext
-    val input = MemoryStream[Event]
-    var state: Option[(Seq[Row], org.apache.spark.sql.types.StructType)] = None
-    def get(): Option[DataFrame] =
-      state.map { case (rows, sch) => spark.createDataFrame(rows.asJava, sch) }
-    def set(df: DataFrame): Unit = state = Some((df.collect().toSeq, df.schema))
-    val keyed = input.toDF().withColumn("h", date_trunc("hour", col("ts")))
-    val q = EventPipeline.maintainAggState(keyed, Seq("event_type", "h"),
-      Seq(count(lit(1)).as("n")), Map("n" -> "sum"))(get _, set _)
-    val fed = scala.collection.mutable.ArrayBuffer[Event]()
-    def feed(es: Event*): Unit = { fed ++= es; input.addData(es: _*); q.processAllAvailable() }
-    try {
-      // the q17 twin's fixture (19 baseline hours + a split-batch spike),
-      // plus a second event type so the panel's per-type legs and the
-      // PSI key grid exercise more than one series
-      var id = 0L
-      def ev(hhmm: String, t: String): Event = { id += 1; Event(id, ts(hhmm), id % 3, t, 1.0) }
-      feed((0 to 18).flatMap(i =>
-        ev(f"$i%02d:15", "click") +: (if (i % 2 == 0) Seq(ev(f"$i%02d:45", "click")) else Nil)): _*)
-      feed((0 to 18).map(i => ev(f"$i%02d:30", "view")): _*)
-      feed((1 to 6).map(m => ev(f"19:$m%02d", "click")): _*)
-      feed((7 to 12).map(m => ev(f"19:$m%02d", "click")): _*)
-      // PSI cut mid-series so ref/cur are both populated; tiny bins so
-      // the count distribution actually spreads across them
-      val cut = to_timestamp(lit("2024-01-01 10:00:00"))
-      def panel(hourly: DataFrame): Seq[Seq[Any]] =
-        EventPipeline.monitoringPanel(hourly, cut, psiLo = 0.0, psiHi = 15.0, psiBins = 5)
-          .orderBy("event_type", "check_name").collect().map(_.toSeq).toSeq
-      val got = panel(get().get)
-      val direct = panel(fed.toSeq.toDF()
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n")))
-      got shouldBe direct
-      // 2 types x 7 checks
-      got.size shouldBe 14
-      val byKey = got.map(r => (r(0), r(1)) -> r(2)).toMap
-      // the spike hour trips the WE 3-sigma rule on the maintained state
-      byKey(("click", "we_r1")).asInstanceOf[Double] should be >= 1.0
-      // the steady view series alarms nothing
-      byKey(("view", "we_r1")) shouldBe 0.0
-      byKey(("view", "z_anomalies")) shouldBe 0.0
-      // every check emits exactly once per type
-      got.map(r => (r(0), r(1))).distinct.size shouldBe 14
-    } finally q.stop()
+    // the q17 twin's fixture (19 baseline hours + a split-batch spike),
+    // plus a second event type so the panel's per-type legs and the
+    // PSI key grid exercise more than one series
+    var id = 0L
+    def ev(hhmm: String, t: String): Event = { id += 1; Event(id, ts(hhmm), id % 3, t, 1.0) }
+    val batches = Seq(
+      (0 to 18).flatMap(i =>
+        ev(f"$i%02d:15", "click") +: (if (i % 2 == 0) Seq(ev(f"$i%02d:45", "click")) else Nil)),
+      (0 to 18).map(i => ev(f"$i%02d:30", "view")),
+      (1 to 6).map(m => ev(f"19:$m%02d", "click")),
+      (7 to 12).map(m => ev(f"19:$m%02d", "click")))
+    // PSI cut mid-series so ref/cur are both populated; tiny bins so
+    // the count distribution actually spreads across them
+    val cut = to_timestamp(lit("2024-01-01 10:00:00"))
+    def panel(hourly: DataFrame): Seq[Seq[Any]] =
+      EventPipeline.monitoringPanel(hourly, cut, psiLo = 0.0, psiHi = 15.0, psiBins = 5)
+        .orderBy("event_type", "check_name").collect().map(_.toSeq).toSeq
+    val got = panel(mergedHourly(batches))
+    val direct = panel(hourly(batches.flatten.toDF()))
+    got shouldBe direct
+    // 2 types x 7 checks
+    got.size shouldBe 14
+    val byKey = got.map(r => (r(0), r(1)) -> r(2)).toMap
+    // the spike hour trips the WE 3-sigma rule on the maintained state
+    byKey(("click", "we_r1")).asInstanceOf[Double] should be >= 1.0
+    // the steady view series alarms nothing
+    byKey(("view", "we_r1")) shouldBe 0.0
+    byKey(("view", "z_anomalies")) shouldBe 0.0
+    // every check emits exactly once per type
+    got.map(r => (r(0), r(1))).distinct.size shouldBe 14
   }
 }
 

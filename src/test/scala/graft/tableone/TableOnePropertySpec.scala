@@ -206,6 +206,16 @@ class TableOnePropertySpec extends AnyFunSuite with Matchers {
     }.getMessage should include ("distinct values")
     TableOne.summarize(df, TableOneConfig(Some("strat"), Seq("cont"), maxStrata = Int.MaxValue),
       localMaxRows = 0L).collect().length should be > 0
+    // a cap below 1 is rejected outright: on the distributed route it
+    // would collect no row counter, even for an unstratified summary
+    for (m <- Seq(0, -1); strat <- Seq(Some("strat"), None); local <- Seq(None, Some(0L))) {
+      withClue(s"maxStrata $m, stratify $strat, localMaxRows $local: ") {
+        intercept[IllegalArgumentException] {
+          val cfg = TableOneConfig(strat, Seq("cont"), maxStrata = m)
+          local.fold(TableOne.summarize(df, cfg))(TableOne.summarize(df, cfg, _))
+        }.getMessage should include ("maxStrata must be >= 1")
+      }
+    }
   }
 
   test("unstratified summary: schema is fixed and rows/percent invariants hold") {
