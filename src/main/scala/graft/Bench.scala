@@ -82,9 +82,9 @@ object Bench {
     // Steady-state measurement: one untimed pass first (JIT compilation,
     // codegen cache, parquet footers), then the timed pass. Both passes
     // execute every query fully.
-    // optional args: restrict to the named queries (debugging aid)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => args.isEmpty || args.contains(n) }
+    // optional args: restrict to the named queries (debugging aid; an
+    // unregistered name fails rather than timing nothing)
+    val ordered = SparkEntry.select(args.toSeq).map(q => q.name -> q.build).sortBy(_._1)
     // Force EVERY output column to evaluate: a bare .count() lets Catalyst
     // prune the projections, so a pure-projection query (x1, x5, m1, ...)
     // would "benchmark" as an empty scan. Hashing the full row into one

@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** `{"query": "oracle SQL", ...}`: every control character escaped, so
@@ -13,16 +13,14 @@ object Verify {
     // args: <sfDir> <outDir> [queryName...] — extra names restrict the
     // dump to those queries (local iteration aid; the driver passes two)
     val sfDir = args(0); val outDir = args(1)
-    val only = args.drop(2).toSet
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))

@@ -88,16 +88,4 @@ object CountMin {
     }
     best
   }
-
-  /** Exact sketch union: sketch(A) ++ sketch(B) cell-wise — equals the
-    * sketch of the concatenated stream. Both grids must share (depth,
-    * width, seed); the caller owns that contract (grids carry no header
-    * so the state column stays a plain `array<long>`). */
-  def merged(a: Array[Long], b: Array[Long]): Array[Long] = {
-    require(a.length == b.length, s"grid sizes differ: ${a.length} vs ${b.length}")
-    val out = new Array[Long](a.length)
-    var i = 0
-    while (i < a.length) { out(i) = a(i) + b(i); i += 1 }
-    out
-  }
 }

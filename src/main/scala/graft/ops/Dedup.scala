@@ -642,7 +642,7 @@ object Dedup {
     * docs emits n(n-1)/2 candidates, so ONE boilerplate cluster of 10^5
     * near-identical pages yields 5*10^9 pairs — the standard production
     * mitigation is to cap the bucket and let exact dedup (run first, as
-    * [[graft.OpsQueries]]'s c1 composite does) absorb mass-duplicate
+    * [[graft.queries.CurationQueries]]'s c1 composite does) absorb mass-duplicate
     * clusters. The quadratic path is therefore OPT-IN (pass <= 0), not
     * the default. With the cap, pairs whose every shared band is
     * oversized are NOT emitted — a recall trade documented here, not a

@@ -89,7 +89,7 @@ object Sinks {
     * so consecutive key values walk a space-filling curve that keeps rows
     * close in EVERY dimension close in the file order. Inputs must be
     * non-negative and < 2^bits (bucket/rank ids, not raw values — callers
-    * bucket first; [[writeZOrdered]] applies `pmod` as a safety net).
+    * bucket first).
     * Pure codegen'd bit arithmetic (`bits * dims` shift-and-or terms), no
     * shuffle, and exact integer math an external engine can replay —
     * that is what lets the o2 oracle recompute the key in SQL. */
@@ -103,29 +103,6 @@ object Sinks {
         shiftleft(shiftright(c.cast("long"), b).bitwiseAND(lit(1L)), b * k + j)
       }.reduce(_ bitwiseOR _)
     }.reduce(_ bitwiseOR _)
-  }
-
-  /** Z-order-clustered parquet write — the data-skipping layout for
-    * multi-dimensional filters: rows are range-partitioned and sorted by
-    * their Morton key, so each output file covers a small TILE of the
-    * dimension space and its parquet min/max column statistics are tight
-    * on EVERY z dimension at once (a single-column sort gives tight
-    * stats on that column only). A reader filtering on any z dimension
-    * row-group-prunes most files — at 100 TB this is the difference
-    * between a full scan and touching a few tiles. Dimension values are
-    * folded into [0, 2^bits) via `pmod`; pre-bucket (e.g. rank/quantile
-    * ids) for semantically meaningful tiles. */
-  def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-                    bits: Int = 16, numFiles: Int = 0): Unit = {
-    require(zCols.nonEmpty, "zCols must be non-empty")
-    val key = zorderKey(
-      zCols.map(c => pmod(col(c).cast("long"), lit(1L << bits))), bits)
-    val keyed = df.withColumn("__z", key)
-    val ranged =
-      if (numFiles > 0) keyed.repartitionByRange(numFiles, col("__z"))
-      else keyed.repartitionByRange(col("__z"))
-    ranged.sortWithinPartitions("__z").drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 
   /** What [[exportJsonlSharded]] did: the derived per-shard token budget,
@@ -215,17 +192,5 @@ object Sinks {
           dataFiles(new org.apache.hadoop.fs.Path(path)), version)
       } finally sharded.unpersist()
     }
-  }
-
-  /** Overwrite-by-partition append pattern (the incremental-ingest shape):
-    * replaces ONLY the partition directories present in `df`, leaving the
-    * rest of the table untouched — dynamic partition overwrite, the batch
-    * equivalent of an idempotent re-run of one ingest day. */
-  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    require(partitionCols.nonEmpty, "partitionCols must be non-empty")
-    df.repartition(partitionCols.map(col): _*)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*).parquet(path)
   }
 }

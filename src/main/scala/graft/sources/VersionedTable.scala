@@ -67,24 +67,6 @@ object VersionedTable {
       .map { v => v -> parseManifest(readManifest(f, manifestPath(table, v)))._1 }
   }
 
-  /** [[commit]] with a PINNED version number — the idempotence
-    * primitive: a writer that knows which version its work should
-    * become (a retry of a known step) calls this, and a replay of an
-    * already-committed version surfaces as [[ConcurrentCommitException]]
-    * instead of a duplicate append. `expected` must be exactly
-    * `latest + 1` — gaps would leave unreadable version numbers. */
-  def commitAt(df: DataFrame, table: String, expected: Long,
-               mode: String = "append"): Long = {
-    val spark = df.sparkSession
-    val latest = latestVersion(spark, table)
-    if (expected <= latest)
-      throw new ConcurrentCommitException(
-        s"version $expected of $table was committed by another writer")
-    require(expected == latest + 1,
-      s"expected version $expected would leave a gap (latest is $latest)")
-    commitNext(df, table, mode, latest)
-  }
-
   /** Commit `df` as the next version. `mode` is "append" (new data
     * directory + everything the previous version referenced) or
     * "overwrite" (new data directory only). Returns the committed
@@ -92,13 +74,11 @@ object VersionedTable {
     * writer claimed the version number first (retry to land on the next
     * one); the orphaned data directory a lost race leaves behind is
     * reclaimed by [[vacuum]]. */
-  def commit(df: DataFrame, table: String, mode: String = "append"): Long =
-    commitNext(df, table, mode, latestVersion(df.sparkSession, table))
-
-  private def commitNext(df: DataFrame, table: String, mode: String, prev: Long): Long = {
+  def commit(df: DataFrame, table: String, mode: String = "append"): Long = {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append|overwrite, got $mode")
     val spark = df.sparkSession
+    val prev = latestVersion(spark, table)
     val next = prev + 1
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val dataRel = s"data/c$next-$nonce"

@@ -105,38 +105,6 @@ class SinksSpec extends AnyFunSuite with Matchers {
     got.values.toSeq.distinct.size shouldBe pts.size
   }
 
-  test("z-ordered layout bounds BOTH dimensions per file; single-sort only one") {
-    // 64x64 grid, one row per cell — after layout, each file's parquet
-    // min/max span on x AND y should cover a small tile, not the full
-    // range. The single-column sort bounds x tightly but leaves y
-    // spanning the whole domain in every file: that is the data-skipping
-    // difference z-ordering exists to deliver.
-    val grid = (for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong))
-      .toDF("x", "y")
-    def fileSpans(path: String): Seq[(Long, Long)] = {
-      val withFile = spark.read.parquet(path)
-        .groupBy(input_file_name())
-        .agg(max($"x") - min($"x"), max($"y") - min($"y"))
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-      withFile
-    }
-    val zPath = tmp(); val sPath = tmp()
-    Sinks.writeZOrdered(grid, zPath, Seq("x", "y"), bits = 6, numFiles = 16)
-    grid.repartitionByRange(16, $"x").sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(sPath)
-    val zSpans = fileSpans(zPath)
-    val sSpans = fileSpans(sPath)
-    zSpans.size should be >= 8
-    // a file whose z-range straddles an aligned tile boundary can span
-    // wider than one 16x16 tile (adjacent Morton blocks may sit far
-    // apart), so the robust claim is about the AVERAGE: z files bound
-    // both dimensions well below the 63 full-domain span
-    (zSpans.map(_._1).sum.toDouble / zSpans.size) should be < 48.0
-    (zSpans.map(_._2).sum.toDouble / zSpans.size) should be < 48.0
-    // the x-sorted layout leaves y unbounded (full span) in every file
-    sSpans.foreach { case (_, dy) => dy shouldBe 63L }
-  }
-
   test("jsonl export: budget-exact shards, one file each, manifest census matches re-read") {
     val path = tmp(); val manifest = tmp()
     // 200 docs x 10 tokens = 2000 tokens; budget 300 -> shard boundaries
@@ -191,15 +159,5 @@ class SinksSpec extends AnyFunSuite with Matchers {
       manifestTable = manifest, minShardTokens = 60L, targetShards = 8)
     rep.tokensPerShard shouldBe 60L
     rep.nShards shouldBe 3L // 150 tokens / 60 = shards 0,1,2
-  }
-
-  test("dynamic partition overwrite replaces only the incoming partitions") {
-    val path = tmp()
-    Sinks.writePartitioned(data, path, Seq("g"))
-    val patch = Seq((9001L, "g1", -1.0), (9002L, "g1", -2.0)).toDF("id", "g", "v")
-    Sinks.overwritePartitions(patch, path, Seq("g"))
-    val back = spark.read.parquet(path)
-    back.filter($"g" === "g1").count() shouldBe 2 // replaced
-    back.filter($"g" =!= "g1").count() shouldBe 2000 // untouched
   }
 }

@@ -90,15 +90,6 @@ class VersionedTableSpec extends AnyFunSuite with Matchers {
       .map(_.getLong(0)).sorted.toSeq shouldBe Seq(1L, 2L, 3L)
   }
 
-  test("commitAt pins a version: replays conflict, gaps are rejected") {
-    val t = tmp()
-    VersionedTable.commitAt(Seq((1L, "a")).toDF("k", "s"), t, expected = 1L) shouldBe 1L
-    a[VersionedTable.ConcurrentCommitException] should be thrownBy
-      VersionedTable.commitAt(Seq((1L, "a")).toDF("k", "s"), t, expected = 1L)
-    an[IllegalArgumentException] should be thrownBy
-      VersionedTable.commitAt(Seq((2L, "b")).toDF("k", "s"), t, expected = 3L)
-  }
-
   test("manifests that carry a batchId field still read, list and take appends") {
     // the layout an earlier release's micro-batch sink left behind: two
     // append versions whose manifests also record the stream's batchId

@@ -34,7 +34,7 @@ class CountMinSpec extends AnyFunSuite with Matchers {
   test("merge is EXACT: sketch(A) + sketch(B) == sketch(A ++ B), bit for bit") {
     val a = (1 to 100).map(i => s"w${i % 13}")
     val b = (1 to 77).map(i => s"w${i % 31}")
-    val merged = CountMin.merged(sketchOf(a, 4, 64), sketchOf(b, 4, 64))
+    val merged = new CountMin(4, 64).merge(sketchOf(a, 4, 64), sketchOf(b, 4, 64))
     merged shouldBe sketchOf(a ++ b, 4, 64)
   }
 
@@ -55,8 +55,6 @@ class CountMinSpec extends AnyFunSuite with Matchers {
     val agg = new CountMin(2, 16)
     val g = agg.reduce(agg.reduce(agg.zero, null), "x")
     CountMin.estimate(g, 2, 16, "x") shouldBe 1L
-    an[IllegalArgumentException] should be thrownBy
-      CountMin.merged(new Array[Long](32), new Array[Long](64))
     an[IllegalArgumentException] should be thrownBy
       CountMin.estimate(new Array[Long](32), 4, 16, "x")
   }
